@@ -1,43 +1,146 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
+  /** A query's wall time split at the two markers: construction
+    * (`fn(spark, d)`, including any jobs it runs eagerly), planning
+    * (`executedPlan`) and execution (`toRdd.count`). `wall` is read from
+    * the same clock, so the three parts sum to it. */
+  private[graft] case class Split(build: Double, plan: Double, exec: Double, wall: Double)
+
+  private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The timed session: the same builder as Verify/ExplainDump (timed plans
+    * are the audited plans) at `local[SPARK_GRAFT_CPUS]`, warmed on the
+    * flagship so the first timed query is not charged for JVM start-up
+    * (codegen, parquet footer caches, JIT). */
+  private[graft] def session(): SparkSession = {
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // Partition-less Windows are statically gated to audited report-sized
+    // inputs by ExplainDump's GlobalWindowAllowed set, so WindowExec's
+    // per-instantiation WARN here is always about a ≤256-row window. Any
+    // NEW global window fails ExplainDump loudly, so silencing this one
+    // logger cannot hide a corpus-sized window.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    spark
+  }
+
+  /** Pass boundary: drop every memo and every persistent RDD, then rebuild
+    * the family memos. Returns the warm time in seconds (-1.0, a value no
+    * real duration takes, when a warm failed; the family queries then
+    * rebuild lazily and report their own errors) and the ids of the RDDs
+    * persistent after the warm, i.e. the shared state meant to survive
+    * the pass. */
+  private[graft] def resetPass(spark: SparkSession, sfDir: String): (Double, Set[Int]) = {
+    graft.operators.Dedup.releaseCaches()
+    graft.operators.Selection.releaseCaches()
+    graft.operators.Analytics.releaseCaches()
+    spark.catalog.clearCache()
+    // The census-decomposed operators localCheckpoint their bucketed
+    // streams, and checkpoint blocks pin until session end; across passes
+    // they accumulate past the storage pool and slow untouched queries
+    // through eviction and GC. Dropping them here bounds the pinned set
+    // to one pass.
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    val tb = System.nanoTime()
+    // The memos are pipeline costs shared by a family (the dedup LSH
+    // stages, the ds_cusum/ds_spc_rules lattice, the per-user windows),
+    // built here so they are not billed to whichever member runs first.
+    // NonFatal only: an OutOfMemoryError or interrupt must not be swallowed.
+    val warm =
+      try {
+        graft.operators.Dedup.warmFamilyCaches(spark, sfDir)
+        graft.operators.Selection.warmQcCaches(spark, sfDir)
+        graft.operators.Analytics.warmFamilyCaches(spark, sfDir)
+        (System.nanoTime() - tb) / 1e9
+      } catch { case scala.util.control.NonFatal(_) => -1.0 }
+    (warm, spark.sparkContext.getPersistentRDDs.keySet.toSet)
+  }
+
+  /** Times one query as a [[Split]], then unpersists every RDD it left
+    * behind (ids outside `keep`), also when it fails: those are per-query
+    * checkpoint streams, and accumulated within a pass they degrade later
+    * queries through eviction and GC. */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame, keep: Set[Int]): Split =
+    try {
+      val t0 = System.nanoTime()
+      val qe = fn(spark, sfDir).queryExecution
+      val t1 = System.nanoTime()
+      // executedPlan builds the (Adaptive)SparkPlan but runs no stages.
+      // `toRdd` must not be the marker: under AQE it eagerly executes every
+      // non-result query stage, which would book the distributed work as
+      // planning.
+      qe.executedPlan
+      val t2 = System.nanoTime()
+      // Execute the AUDITED plan (the physical plan ExplainDump gates),
+      // materializing every output row but shipping none to the driver. A
+      // plain .count() re-optimizes with only COUNT(*) as the required
+      // output, which eliminates unreferenced joins and prunes projections
+      // no aggregate consumes, so it would time a different plan.
+      qe.toRdd.count()
+      val t3 = System.nanoTime()
+      Split((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, (t3 - t0) / 1e9)
+    } finally {
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!keep.contains(id)) rdd.unpersist(false)
+      }
+    }
+
+  /** One pass: [[resetPass]], then each query in the given order through
+    * [[timeQuery]], with its jobs labelled `bench: <name>` and a
+    * `bench pass=N query=X` breadcrumb on stderr, so a mid-pass JVM death
+    * is attributable to a query from the log (stdout keeps its
+    * one-line contract). `gcEach` forces a full GC before each query,
+    * which isolates it from its predecessor's garbage. `each` gets every
+    * query's split or its failure. Returns the warm time. */
+  private[graft] def runPass(spark: SparkSession, sfDir: String, passIdx: Int,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)], gcEach: Boolean)(
+      each: (String, Either[Throwable, Split]) => Unit): Double = {
+    val (warm, keep) = resetPass(spark, sfDir)
+    val sc = spark.sparkContext
+    queries.foreach { case (name, fn) =>
+      sc.setJobDescription(s"bench: $name")
+      Console.err.println(s"bench pass=$passIdx query=$name")
+      if (gcEach) System.gc()
+      each(name,
+        try Right(timeQuery(spark, sfDir, fn, keep))
+        catch { case e: Throwable => Left(e) })
+    }
+    // the next pass's releases and warms are not the last query's jobs
+    sc.setJobDescription(null)
+    warm
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every hardware thread: the bench contract is local[32]
-    // on the 32-core driver box (SPARK_GRAFT_CPUS still overrides). The
-    // old default of 4 silently ran the recorded benches 8x
-    // under-parallelized whenever the env was unset.
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    // Per-query time = MINIMUM over this many cold-cache passes. The shared
-    // box this runs on has multi-second CPU-steal spikes (round 3's single
-    // pass recorded 159s for a workload that measures 43s clean); min-of-k
-    // is the standard noise estimator (and what the round-3 review asked
-    // for). Caches are wiped BETWEEN passes, so each pass pays the full
+    // Per-query time = MINIMUM over this many passes. The shared box this
+    // runs on has multi-second CPU-steal spikes; min-of-k is the standard
+    // noise estimator, and five passes leave it headroom when two are
+    // dirty. Caches are wiped BETWEEN passes, so each pass pays the full
     // pipeline costs exactly like a single-pass run would.
-    // 5 passes by default (r10 verdict #9: r10's three passes read
-    // 281/318/161s — two dirty — so the recorded minima leaned on one
-    // clean pass; with 5, the min estimator has headroom even when the
-    // box is bad). SPARK_GRAFT_BENCH_PASSES still overrides for the dev
-    // loop.
+    // SPARK_GRAFT_BENCH_PASSES overrides for the dev loop.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
-    // contention marker (r10 verdict #9): 1-minute /proc/loadavg sampled
-    // at each pass boundary, recorded per pass in the side file, so a
-    // dirty pass is diagnosable as box noise rather than a regression
+    // contention marker: 1-minute /proc/loadavg sampled at each pass
+    // boundary, recorded per pass in the side file, so a dirty pass is
+    // diagnosable as box noise rather than a regression
     def loadavg(): Double =
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split("\\s+")(0).toDouble
       catch { case scala.util.control.NonFatal(_) => -1.0 }
     val passLoad = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
-    // Direct contention evidence (r11 verdict #8: loadavg alone can't
-    // separate "this JVM kept the box busy" from "someone else did"):
-    // sample system-wide busy/total jiffies (/proc/stat) and THIS
-    // process's jiffies (/proc/self/stat utime+stime) at pass boundaries;
-    // ext_cpu_pct = share of the pass's total CPU capacity consumed by
-    // OTHER processes. A dirty pass now carries its own attribution — a
-    // high-ext pass is box noise, a low-ext slow pass is ours.
+    // Direct contention evidence (loadavg alone can't separate "this JVM
+    // kept the box busy" from "someone else did"): sample system-wide
+    // busy/total jiffies (/proc/stat) and THIS process's jiffies
+    // (/proc/self/stat utime+stime) at pass boundaries; ext_cpu_pct =
+    // share of the pass's total CPU capacity consumed by OTHER processes.
     def cpuSample(): (Long, Long, Long) =
       try {
         val stat = java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
@@ -49,9 +152,7 @@ object Bench {
         (total, total - idle, self(13).toLong + self(14).toLong)
       } catch { case scala.util.control.NonFatal(_) => (-1L, -1L, -1L) }
     val passExtCpu = scala.collection.mutable.ArrayBuffer[Double]()
-    // Direct kernel-side contention evidence (closes r11's pinned-cores /
-    // cgroup ask — there is no cgroup CPU quota on this box, so the two
-    // signals that actually attribute a dirty pass are):
+    // Kernel-side contention evidence:
     //  - steal_pct: hypervisor CPU steal (/proc/stat cpu field 8) as a
     //    share of the pass's total jiffies — time the VCPUs were runnable
     //    but the HOST ran someone else; no amount of in-guest core
@@ -75,39 +176,25 @@ object Bench {
       } catch { case scala.util.control.NonFatal(_) => -1L }
     val passSteal = scala.collection.mutable.ArrayBuffer[Double]()
     val passStall = scala.collection.mutable.ArrayBuffer[Long]()
-    // Same builder as Verify/ExplainDump — benched plans = audited plans.
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Partition-less Windows are statically gated to audited report-sized
-    // inputs by ExplainDump's GlobalWindowAllowed set, so WindowExec's
-    // per-instantiation WARN here is always about a ≤256-row window; the
-    // flood it produces buried real warnings in r9's bench tail. Any NEW
-    // global window fails ExplainDump loudly, so silencing this one logger
-    // cannot hide a corpus-sized window.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // Warm the JVM (codegen, parquet footer caches, JIT) on the flagship so
-    // the first timed query isn't charged for session startup.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val spark = session()
     // A failing query must not bench as "fast": a query is excluded from
     // timings (and reported under "errors") only if it failed in EVERY
     // pass; one flaky failure with a later success keeps its timing.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val succeeded = scala.collection.mutable.Set[String]()
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // execution-only minima (toRdd.count, planning excluded): at 166+
-    // queries the fixed ~0.3s/query analyze+optimize floor is ~a third of
-    // the wall headline, and a real operator regression can hide inside it.
-    // Wall stays the headline (cross-round comparable); this is the
-    // regression-sensitive view (r8 verdict #8).
+    // execution-only minima: the fixed per-query analyze+optimize floor is
+    // ~a third of the wall headline, and a real operator regression can
+    // hide inside it. Wall stays the headline (cross-round comparable);
+    // this is the regression-sensitive view.
     val bestExec = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // construction-only minima: jobs a query runs while its DataFrame is
+    // built (checkpoint loops, memo counts, heavy-key probes) land here,
+    // not in the wall − exec planning gap
+    val bestBuild = scala.collection.mutable.LinkedHashMap[String, Double]()
     val passTotals = scala.collection.mutable.ArrayBuffer[Double]()
     val passClean = scala.collection.mutable.ArrayBuffer[Boolean]()
-    // per-pass cost of pre-materializing the dedup family's shared stage
-    // outputs (LSH pair tables + component labels) — a pipeline cost shared
-    // by the whole family, warmed OUTSIDE the timed region so it no longer
-    // lands on whichever family query runs first (r8 verdict #4)
+    // per-pass cost of the family memo warms (see resetPass)
     val familyBuilds = scala.collection.mutable.ArrayBuffer[Double]()
     // full-precision per-pass per-query times, persisted to a side file so
     // cross-round drift is diagnosable per pass (the stdout headline line
@@ -115,126 +202,39 @@ object Bench {
     val passDetail = scala.collection.mutable.ArrayBuffer[
       scala.collection.mutable.LinkedHashMap[String, Double]]()
     for (passIdx <- 1 to passes) {
-      // cold caches per pass; WITHIN a pass operators manage their own
-      // hygiene: corpus-sized intermediates are unpersisted before a query
-      // returns, and the only retained tables are Dedup's memoized
-      // pipeline-stage outputs (duplicate-density-bounded, shared by the
-      // three LSH queries — wiping them mid-pass would charge the md5
-      // signature pipeline to every stage of what is one pipeline in any
-      // real deployment).
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Selection.releaseCaches()
-      graft.operators.Analytics.releaseCaches()
-      spark.catalog.clearCache()
-      // r15: the census-decomposed operators localCheckpoint their
-      // bucketed streams, and checkpoint blocks pin until session end —
-      // across 5 passes that accumulated past the storage pool
-      // (measured: untouched queries' MINS rose ~0.3-3s from eviction/GC
-      // drag; q_promo_share 0.76→3.67 with an unchanged 0.66s standalone
-      // plan). Dropping every persistent RDD at the pass boundary bounds
-      // the pinned set to one pass; Dedup's memo re-warms right below.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       val loadStart = loadavg()
       val cpuStart = cpuSample()
       val stealStart = stealSample()
       val psiStart = psiSample()
-      val tb = System.nanoTime()
-      // NonFatal only (ADVICE r9): an OutOfMemoryError/Interrupted must not
-      // be swallowed. A failed warm records -1.0 (a value no real duration
-      // can take) instead of the aborted duration, so a silent warm failure
-      // can't skew the per-pass family-build attribution — the family
-      // queries rebuild lazily and report their own errors.
-      val warmOk =
-        try {
-          graft.operators.Dedup.warmFamilyCaches(spark, sfDir)
-          // r16: the ds_cusum/ds_spc_rules shared center/spread lattice —
-          // same attribution contract as the dedup memo (a pipeline cost
-          // shared by the pair, warmed outside any one query's timer)
-          graft.operators.Selection.warmQcCaches(spark, sfDir)
-          graft.operators.Analytics.warmFamilyCaches(spark, sfDir)
-          true
-        }
-        catch { case scala.util.control.NonFatal(_) => false }
-      familyBuilds += (if (warmOk) (System.nanoTime() - tb) / 1e9 else -1.0)
-      // r15: blocks pinned AFTER the warm are per-query checkpoint streams
-      // (the census decompositions), not shared state — warmFamilyCaches
-      // has already built every memo meant to survive the pass. Snapshot
-      // the surviving ids so each query's new blocks release right after
-      // it runs; without this the within-pass accumulation (~20 sf-sized
-      // streams) degraded later queries' minima through eviction/GC.
-      val warmIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
       var passTotal = 0.0
       var clean = true
       val detail = scala.collection.mutable.LinkedHashMap[String, Double]()
-      // Per-pass DETERMINISTIC shuffle of query order (r15 verdict #2): a
-      // heavy neighbor bills its major-GC debt to whoever runs next, and
-      // with a FIXED order the same victim pays in every pass, so even
-      // min-of-k keeps the artifact (r15: text_langid_confusion 4.1s
-      // in-bench vs ~1s standalone; q_promo_share 2.7-5.0s after
-      // stream_interval_join). A different permutation per pass gives
-      // each query k different neighborhoods — the min approximates the
-      // isolated cost without paying the rejected per-query System.gc().
+      // Per-pass DETERMINISTIC shuffle of query order: a heavy neighbor
+      // bills its major-GC debt to whoever runs next, and with a FIXED
+      // order the same victim pays in every pass, so even min-of-k keeps
+      // the artifact. A different permutation per pass gives each query k
+      // different neighborhoods — the min approximates the isolated cost
+      // without a per-query System.gc(), which measured 12% slower in
+      // aggregate at sf1 (it costs the other queries their warmth). QueryTime
+      // keeps the gc(): it measures ISOLATED minima; the bench measures
+      // the workload as a workload, GC debt included.
       // Seeded by pass index: run-to-run reproducible.
       val passOrder = new scala.util.Random(passIdx).shuffle(SparkEntry.queries.toSeq)
-      passOrder.foreach { case (name, fn) =>
-        // NO per-query System.gc() (r15, tried and measured): a heavy
-        // neighbor can bill its major-GC debt to whoever runs next in
-        // hash order (q_promo_share read 2.7-5.0s straight after
-        // stream_interval_join in two runs vs 0.66-0.88s isolated), but
-        // forcing a full GC before every query recovered those ~2-3s
-        // while costing ~15-20s of warmth across the other 257 entries
-        // (sf1 aggregate 177.8->199.6). QueryTime keeps the gc() — it
-        // measures ISOLATED minima; the bench measures the workload as a
-        // workload, GC debt included.
-        // guide §1.5 (r19): label the jobs and drop a stderr breadcrumb so
-        // a mid-pass JVM death (the sf10 OOM this round) is attributable
-        // to a query from the log — measurement-neutral; stdout keeps the
-        // one-JSON-line contract (breadcrumbs go to stderr only)
-        spark.sparkContext.setJobDescription(s"bench: $name")
-        Console.err.println(s"bench pass=$passIdx query=$name")
-        val t0 = System.nanoTime()
-        try {
-          // Execute the AUDITED plan (queryExecution.toRdd = the exact
-          // physical plan ExplainDump gates), materializing every output
-          // row. A plain .count() re-optimizes with only COUNT(*) as the
-          // required output, which (r8 finding) eliminates unreferenced
-          // left joins against keyed aggregates and prunes every projection
-          // no aggregate consumes — dedup_substring benched at 0.11s under
-          // count() while its real plan costs ~3s; text_repetition's
-          // native-expression projection never ran at all. toRdd.count()
-          // is the library-consumer cost: rows produced, none shipped to
-          // the driver.
-          val qe = fn(spark, sfDir).queryExecution
-          // force analysis + optimization + initial physical planning WITHOUT
-          // executing: executedPlan builds the (Adaptive)SparkPlan but runs
-          // no stages. The floor split must NOT use `toRdd` as the marker —
-          // under AQE, evaluating toRdd eagerly executes every non-result
-          // query stage, which would book nearly all distributed work as
-          // "planning" (first cut of this split measured exec_value=9.8s
-          // against a 240s wall for exactly that reason).
-          qe.executedPlan
-          val t1 = System.nanoTime()
-          qe.toRdd.count()
-          val t2 = System.nanoTime()
-          val dt = (t2 - t0) / 1e9
-          val dtExec = (t2 - t1) / 1e9
+      familyBuilds += runPass(spark, sfDir, passIdx, passOrder, gcEach = false) {
+        case (name, Right(s)) =>
           succeeded += name
-          passTotal += dt
-          detail(name) = dt
-          if (!best.get(name).exists(_ <= dt)) best(name) = dt
-          if (!bestExec.get(name).exists(_ <= dtExec)) bestExec(name) = dtExec
-        } catch {
-          case e: Throwable =>
-            clean = false
-            // strip EVERY char that can break the single-line JSON (quotes,
-            // backslashes, all control chars) — a parse failure here zeroes
-            // the whole round's bench
-            errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-        }
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!warmIds.contains(id)) rdd.unpersist(false)
-        }
+          passTotal += s.wall
+          detail(name) = s.wall
+          if (!best.get(name).exists(_ <= s.wall)) best(name) = s.wall
+          if (!bestExec.get(name).exists(_ <= s.exec)) bestExec(name) = s.exec
+          if (!bestBuild.get(name).exists(_ <= s.build)) bestBuild(name) = s.build
+        case (name, Left(e)) =>
+          clean = false
+          // strip EVERY char that can break the single-line JSON (quotes,
+          // backslashes, all control chars) — a parse failure here zeroes
+          // the whole bench
+          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName)
+            .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
       }
       passTotals += passTotal
       passClean += clean
@@ -289,10 +289,11 @@ object Bench {
     // round 5 AND round 7. The side file is a JSON object so both views
     // live in one artifact.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_passes.json")
-    val minJson = results.map { case (k, v) => "\"" + k + "\":" + r(v, 4) }
-      .mkString("{", ",", "}")
-    val execMinJson = bestExec.filter { case (k, _) => succeeded(k) }
-      .map { case (k, v) => "\"" + k + "\":" + r(v, 4) }.mkString("{", ",", "}")
+    def minsJson(m: scala.collection.Map[String, Double]): String =
+      m.filter { case (k, _) => succeeded(k) }
+        .map { case (k, v) => "\"" + k + "\":" + r(v, 4) }.mkString("{", ",", "}")
+    val minJson = minsJson(best)
+    val execMinJson = minsJson(bestExec)
     val passesJson = passDetail.zipWithIndex.map { case (m, i) =>
       val qd = m.map { case (k, v) => "\"" + k + "\":" + r(v, 4) }.mkString("{", ",", "}")
       s"""{"pass":${i + 1},"clean":${passClean(i)},"total":${r(passTotals(i), 3)},"family_build_s":${r(familyBuilds(i), 3)},"load_1m_start":${r(passLoad(i)._1, 2)},"load_1m_end":${r(passLoad(i)._2, 2)},"ext_cpu_pct":${r(passExtCpu(i), 1)},"steal_pct":${r(passSteal(i), 2)},"cpu_stall_ms":${passStall(i)},"queries":$qd}"""
@@ -337,7 +338,10 @@ object Bench {
         m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + r(v, 4) }
           .mkString(",\n\"duckdb_per_query\":{", ",", "}"))
     }
-    val detailJson = s"""{"query_mins":$minJson,\n"query_exec_mins":$execMinJson${baselineFields.map(_._2).getOrElse("")},\n"passes":$passesJson}"""
+    // the box the numbers were taken on: a speedup needs a before and an
+    // after from the same cores and heap
+    val maxHeapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
+    val detailJson = s"""{"cpus":$cpus,"max_heap_mb":$maxHeapMb,\n"query_mins":$minJson,\n"query_exec_mins":$execMinJson,\n"query_build_mins":${minsJson(bestBuild)}${baselineFields.map(_._2).getOrElse("")},\n"passes":$passesJson}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detailJson)
     catch { case _: Throwable => () } // diagnostics only — never fail the bench
     // The LAST stdout line is a SHORT fixed-field headline (~250 chars —

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * whole matrix is ONE folded literal referenced from generated code, and
   * assignment is one fused k·dim loop — the expression tree stays O(1) in
   * k and dim, so the scan projection shape (pure map, zero corpus
-  * shuffle) survives to arbitrary quantizer sizes. CentroidShapeProbe
-  * measures both paths at production shape; NativeKernelSpec +
+  * shuffle) survives to arbitrary quantizer sizes. SCALING.md records
+  * both paths at production shape; NativeKernelSpec +
   * SimilaritySpec pin struct-for-struct equality with the greatest-of-
   * structs formulation.
   *

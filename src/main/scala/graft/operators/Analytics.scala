@@ -21,7 +21,7 @@ object Analytics {
 
   /** Dollars-as-double column → exact integer cents. */
   // r18: the cast-form quantizer — Round's per-row BigDecimal cost the
-  // four-column money scan 2.8 s vs 0.26 s at sf10 (FloorProbe; contract
+  // four-column money scan 2.8 s vs 0.26 s at sf10 (contract
   // and exactness argument in graft.functions.FastRound).
   private def cents(c: Column): Column = graft.functions.FastRound.cents(c)
 
@@ -77,7 +77,7 @@ object Analytics {
     // r18 (the q5 memoSide shape): BUILDING customers gate the
     // date-filtered orders into a materialized qualified side whose true
     // size drives static broadcast-hash — the lazy form shuffled 499 MB
-    // of orders on custkey (49 of 70 core-seconds at sf10, StageTime)
+    // of orders on custkey (49 of 70 core-seconds at sf10)
     // because the o⋈c estimate trap picked SMJ. Lineitem revenue also
     // pre-aggregates per orderkey BEFORE the join (the group keys are
     // functionally dependent on orderkey), so the post-filter fact
@@ -135,7 +135,7 @@ object Analytics {
   // shuffle_hash pin solved the ESTIMATE trap — a lazy 2-column orders
   // projection slips under AQE's broadcast estimate as SF grows — but
   // left lineitem paying a 1 GB shuffle write+read = 97 of the plan's
-  // 108 core-seconds at sf10, StageTime). With accurate stats the same
+  // 108 core-seconds at sf10). With accurate stats the same
   // plan degrades to the shuffle join by itself past the 64 MB
   // threshold, which is the 100 TB-correct fallback. Aggregation is by
   // integer nationkey; the 25-row name map joins post-agg.
@@ -323,7 +323,7 @@ object Analytics {
 
   /** r19 (r18 verdict #5): conditional SHUFFLE_HASH pin. The r18 pins on
     * the q12/q_exists fact-fact joins removed the SMJ sorts at sf10
-    * (JoinLab 10.4→4.0 s) but were UNCONDITIONAL — a join-strategy hint
+    * (10.4→4.0 s in a shape race) but were UNCONDITIONAL — a join-strategy hint
     * outranks size-based planning, so at small SF they traded a natural
     * broadcast-hash away for two exchanges (the sf0.01 plan dumps show
     * BHJ→SHJ). Pin only while the side's optimized-plan estimate exceeds
@@ -369,7 +369,7 @@ object Analytics {
     * hashpartitioning(user) satisfies ClusteredDistribution for any
     * grouping that CONTAINS user_id, so even groupBy(type, hour, user)
     * rides it. Before the memo each entry re-paid the corpus scan 2-3×
-    * (attribution: three separate events scans, StageTime r18) plus its
+    * (three separate events scans) plus its
     * own user exchange. Memo trap #1 (r17): a cached source re-aims AQE's
     * runtime broadcast at the cached size — benign here, both join sides
     * of every consumer derive from the same cached relation, so either
@@ -926,7 +926,7 @@ object Analytics {
     // r19 (the q5/q8 memoSide shape): the 6-month order window is ~7% of
     // orders, 2 narrow columns — memoized, the static planner sees its
     // TRUE size and broadcast-hashes it, so the R-lineitem probe side
-    // never exchanges for the join (PhaseTime sf10: exec 3.98 s, the
+    // never exchanges for the join (sf10: exec 3.98 s, the
     // fact-fact orderkey exchange pair dominated). Below the leaf gate
     // (sf0.1) the lazy side broadcasts off file stats anyway; past the
     // 64 MB threshold at ~100× this window the memo degrades to the
@@ -1392,7 +1392,7 @@ object Analytics {
     // Parallelism guard, post-aggregate form (r17 advice): collect_set's
     // per-user exchange compresses to <1 MB even at sf10, so AQE coalesced
     // the reduce side — set building, pair expansion and the final count
-    // all ran in ONE task (2.5 s serial at sf10, StageTime). r17 first
+    // all ran in ONE task (2.5 s serial at sf10). r17 first
     // fixed it with a raw-side repartition on user_id, which pinned N
     // tasks but carried raw (user_id, event_type) rows across the wire —
     // a corpus-sized exchange in place of combiner-compressed partial
@@ -2429,7 +2429,7 @@ object Analytics {
   // (c_nationkey != s_nationkey) runs on the integer KEYS at the customer
   // join, before any name lookup, so excluded rows never reach the final
   // joins. The two 25-row nation NAME lookups join AFTER the aggregation
-  // (r11, StageTime audit): the per-fact-row path probes only
+  // (SCALING.md): the per-fact-row path probes only
   // supplier/orders/customer, and names attach to the ≤25·25·years result
   // rows — two fewer hash probes per fact row, and the partial agg keys
   // are 3 integers instead of 2 strings + 1 integer. Money in integer
@@ -2486,7 +2486,7 @@ object Analytics {
   def qOverlapMatrix(spark: SparkSession, d: String): DataFrame = {
     // r18 single-reduce lowering: the pair table and the per-type totals
     // used to be TWO consumers of the ud exchange, each re-running the
-    // collect_set finalization (StageTime: 27 + 11.5 core-seconds on the
+    // collect_set finalization (27 + 11.5 core-seconds on the
     // same 119 MB read). The explode now starts each inner slice AT the
     // element itself, so the diagonal (a, a) rides along as the per-type
     // day-set counter — one explode, one reduce, and the totals fall out
@@ -2858,7 +2858,7 @@ object Analytics {
     * is a PACKED BIGINT `pc·2³² + suppkey`, not a struct — min over a
     * struct type falls out of whole-stage codegen into SortAggregate,
     * which SORTED the 60M-row corpus inside every map partition (70 of
-    * the query's 81 core-seconds at sf10, StageTime). The packed min is a
+    * the query's 81 core-seconds at sf10). The packed min is a
     * primitive HashAggregate. Packing is exact while pc < 2³¹ (price
     * < $21.4M; TPC-H max ~$105K) and suppkey < 2³² — both asserted by
     * the lexicographic-equivalence law: for non-negative fields,
@@ -2956,7 +2956,7 @@ object Analytics {
   /** Shared core; `pin` lets the registered entry materialize the packed
     * per-part stats through [[memoSide]] while the spec path stays lazy.
     *
-    * r18 lowering (JoinLab race, sf10): the raw 60M-row fact side used
+    * Lowering (shape race at sf10, SCALING.md): the raw 60M-row fact side used
     * to pay a partkey exchange + SMJ sort ONLY to meet the 2M-row
     * per-part stats (in-bench 4.5 s; the sort buffers also made it the
     * first victim of pass-wide memo storage pressure). Packing the
@@ -3290,7 +3290,7 @@ object Analytics {
   // the conditional counts are fully map-side-combinable onto ≤3 keys.
   // Pure BIGINT counts — no division at all.
   def q12LatePriority(spark: SparkSession, d: String): DataFrame = {
-    // r18 (JoinLab race): both sides are fact-sized, so the planner's SMJ
+    // Shape race at sf10 (SCALING.md): both sides are fact-sized, so the planner's SMJ
     // sorted 17M + 15M rows just to meet on an integer key — pinning
     // shuffle_hash (build = orders, the smaller side) runs the identical
     // exchanges without either sort: 10.4 → 4.0 s in-lab, 2.4 → 1.1 s

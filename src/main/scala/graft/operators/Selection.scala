@@ -48,10 +48,6 @@ object Selection {
 
   private def ts(s: String) = lit(s).cast("timestamp")
 
-  /** Probe access to the keyed stream (tools.QcShareProbe). */
-  private[graft] def keyedFor(spark: SparkSession, d: String): DataFrame =
-    keyed(spark, d)
-
   /** Events with corrected time and reference-format selection keys. */
   private def keyed(spark: SparkSession, d: String): DataFrame = {
     val epochSec = unix_timestamp(col("ts")) + lit(UtcOffsetSec)
@@ -229,7 +225,7 @@ object Selection {
   def dsClickToggle(spark: SparkSession, d: String): DataFrame = {
     // ONE corpus pass (r17): the EXCEPT/UNION formulation re-evaluated
     // each set per set-op — four scans of the keyed stream for a
-    // symmetric difference (StageTime at sf10). Both memberships are
+    // symmetric difference (at sf10). Both memberships are
     // row-level predicates over the same scan, so one combinable
     // (sel_key → max flag) aggregate decides "in exactly one set"; the
     // oracle keeps the textbook EXCEPT/UNION form.
@@ -1008,7 +1004,7 @@ object Selection {
     // Window BEFORE the checkpoint (r17; was checkpoint-then-window): a
     // checkpoint's LogicalRDD does not advertise the repartition's hash
     // partitioning, so the window's ENSURE_REQUIREMENTS re-shuffled the
-    // whole corpus a second time (StageTime at sf10: two 189 MB exchanges
+    // whole corpus a second time (at sf10: two 189 MB exchanges
     // back to back). Checkpointing the WINDOWED stream keeps the corpus
     // exchange count at one; the census and the join-back both read the
     // checkpoint. The explicit-N repartition (r16, the latticeOf finding)
@@ -2021,7 +2017,7 @@ object Selection {
         .select(col("compound"), col("sb"), (col("rk") - col("cum0")).as(outCol))
       // broadcast: target holds EXACTLY the one bucket per compound that
       // contains the rank — |compounds| rows. The plain equijoin shuffled
-      // the whole slope stream on (compound, sb) to meet it (r17 StageTime:
+      // the whole slope stream on (compound, sb) to meet it (at sf10:
       // a 189 MB exchange + its read were 2 of ds_trend's 3 corpus-sized
       // stages at sf10); the broadcast keeps the slice filter in the
       // checkpoint's own partitioning — zero corpus exchange.
@@ -2030,7 +2026,7 @@ object Selection {
     val l1 = bucketed(slopes, sstats.select("compound", "mn", "mx", "r", "n"))
     // the level-1 slice is ~n/256 rows but has FOUR consumers below (s2,
     // l2's join, level-2's census and join-back) and each recompute is a
-    // full pass over the slope checkpoint (r17 StageTime) — lazy
+    // full pass over the slope checkpoint — lazy
     // localCheckpoint, the dsCusumFrom storage contract
     val sel1 = pick(l1, "r", "rr").localCheckpoint(false)
     // level 2: re-bucket the selected slice by its own range (membership,
@@ -2351,8 +2347,8 @@ object Selection {
   // exchange in front of their window pairs. The lattice is built once,
   // PERSISTED, and memoized per (session, dir) exactly like Dedup's LSH
   // stage outputs (isCached → transparent recompute after eviction;
-  // releaseCaches() is the service contract between requests). QcShareProbe
-  // measured the pair 6.0 → 4.1s at sf1 with bit-exact parity; Bench warms
+  // releaseCaches() is the service contract between requests). SCALING.md
+  // records the pair at 6.0 → 4.1s at sf1 with bit-exact parity; Bench warms
   // the memo with the dedup family so the shared build is attributed as a
   // family cost, not billed to whichever of the two runs first.
   private val qcCache =
@@ -2428,8 +2424,8 @@ object Selection {
     k0.join(broadcast(dev), Seq("compound"))
       .withColumn("b", expr(s"(tu - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
       .select("compound", "b", "event_id", "cts", "vc", "t", "madx")
-      // EXPLICIT-N repartition on the bucket keys (r16, StageTime +
-      // CoalesceProbe at sf1): the window's ENSURE_REQUIREMENTS exchange
+      // EXPLICIT-N repartition on the bucket keys (ds_cusum at sf1,
+      // SCALING.md): the window's ENSURE_REQUIREMENTS exchange
       // compresses integers so well that AQE coalesces it toward ONE
       // partition and the decomposed windows run serial — exactly the
       // per-task ceiling the bucketing exists to remove (measured: 4.4 →

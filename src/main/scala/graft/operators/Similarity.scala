@@ -139,7 +139,7 @@ object Similarity {
   /** [[bestCentroid]] as the greatest of per-centroid literal structs —
     * ~k·dim literal nodes, the r7 formulation, kept ONLY as the parity
     * reference the kernel is spec'd bit-identical against (the pq_encode
-    * convention). Not a production path: CentroidShapeProbe measured it
+    * convention). Not a production path: it was measured
     * FAILING Janino compilation at k=256 (any dim ≥ 64 — the constant
     * pool/64KB method blowout), which under default configs silently
     * interprets the hottest projection on the board (the
@@ -164,7 +164,7 @@ object Similarity {
     * Window.partitionBy("vec_id") argmax this family replaced shuffled the
     * whole corpus once). r13: the kernel IS the path at every size — it
     * measured no slower at the toy 16×64 shape and is the only formulation
-    * that compiles at production shape (k ≥ 256; CentroidShapeProbe),
+    * that compiles at production shape (k ≥ 256; SCALING.md),
     * so there is no size dispatch to get wrong. */
   private[graft] def bestCentroid(cents: Seq[Array[Double]]): Column =
     bestCentroidKernel(cents)

@@ -3,6 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -31,7 +34,7 @@ import graft.sources.{Sinks, Tables}
   *
   * Run: sbt "runMain graft.tools.BucketIngestProbe <sfDir> [buckets] [planDir]"
   */
-object BucketIngestProbe {
+object BucketIngestProbe extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val buckets = if (args.length > 1) args(1).toInt else 16
@@ -126,13 +129,13 @@ object BucketIngestProbe {
       spark.sparkContext.setJobDescription(s"bucket probe: $name")
       val tp = time(pq)
       val tb = time(bk)
-      val planTxt = bk.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(planDir, s"bucket_$name.txt"), planTxt.getBytes("UTF-8"))
-      // exchanges in the executed bucketed plan (header section only, so
-      // the details section doesn't double-count)
-      val exch = bk.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Exchange"))
+      // Execute first: under AQE the plan before execution is only the
+      // initial one, and the final plan is what the layout has to win.
+      val qe = bk.queryExecution
+      qe.toRdd.count()
+      Files.write(Paths.get(planDir, s"bucket_$name.txt"),
+        qe.explainString(FormattedMode).getBytes("UTF-8"))
+      val exch = collect(qe.executedPlan) { case e: Exchange => e }.size
       println(f"BP $name%-22s parquet=$tp%7.3f s  bucketed=$tb%7.3f s  " +
         f"speedup=${tp / tb}%5.2fx  bucketed_exchanges=$exch%d")
     }

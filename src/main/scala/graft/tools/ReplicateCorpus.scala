@@ -13,7 +13,7 @@ import graft.GraftSession
   *   without being near-dups of each other, so duplicate DENSITY stays
   *   the baseline's and expected pair growth under replication is ~N,
   *   not N² (the contract the dedup family's linearity claims are
-  *   measured against; DedupProbe's doc).
+  *   measured against; SCALING.md's 10× dedup probe).
   * - `embeddings`: each copy offsets vec_id and CIRCULARLY SHIFTS the
   *   vector by the copy index — decorrelates copies (no cos≈1 twins
   *   across copies) while preserving the component distribution, so

@@ -1106,7 +1106,7 @@ class AnalyticsSpec extends SparkSpec {
     // (no persist, no InMemoryTableScan) and q12's probe side must keep
     // the static broadcast. Forcing the gate to 0 re-enables the memo;
     // disabling auto-broadcast re-engages the SHUFFLE_HASH pin (the
-    // 100 TB shape the r18 JoinLab race measured).
+    // 100 TB shape SCALING.md's join-constant race measured).
     def planOf(name: String): String =
       SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
     graft.operators.Analytics.releaseCaches()

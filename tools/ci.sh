@@ -46,6 +46,13 @@ sbt -batch "runMain graft.tools.ExplainDump $SF"
 grep -E '^## |^- (broadcast joins|shuffles|shuffle joins)' EXPLAINS.md | diff "$OUT/explains_pre.txt" - \
   || { echo "EXPLAINS.md was stale (plan-shape drift) — commit the regenerated dump and re-run"; exit 1; }
 
+echo "== QueryTime smoke: one timed QT line per named query"
+# QueryTime shares Bench's session, pass boundary and per-query split, so
+# this also runs that path at the gate's scale factor.
+qt=$(sbt -batch "runMain graft.tools.QueryTime $SF 1 ds_gaps q3_topk_revenue" 2>/dev/null \
+  | grep -c '^QT .* wall=' || true)
+[[ "$qt" == 2 ]] || { echo "QueryTime printed $qt timed QT lines, expected 2"; exit 1; }
+
 echo "== broadcast audit: forced broadcast() call sites vs audited allowlist"
 # Every sql.functions.broadcast() hint pins a build side REGARDLESS of its
 # runtime size, so each call site must be audited as size-BOUNDED (dims,

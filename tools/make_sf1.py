@@ -85,7 +85,7 @@ def main():
             parts.append(f"SELECT {sel} FROM '{src}/{t}.parquet'")
         # ONE FILE PER COPY, under a directory named <t>.parquet: a
         # single-file table serializes Spark scans — one row group is one
-        # task (r12's RowGroupProbe measured that floor at sf0.1, the
+        # task (SCALING.md's single-row-group floor at sf0.1; the
         # first sf1 cut reproduced it at 10x: text ops grew ~25x on 10x
         # data off a 1-RG documents file), and even multi-RG small files
         # stay at 1-2 splits under the 4 MB openCostInBytes floor. A real
