@@ -39,9 +39,7 @@ object Bench {
     * persistent after the warm, i.e. the shared state meant to survive
     * the pass. */
   private[graft] def resetPass(spark: SparkSession, sfDir: String): (Double, Set[Int]) = {
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Selection.releaseCaches()
-    graft.operators.Analytics.releaseCaches()
+    graft.operators.Memo.release()
     spark.catalog.clearCache()
     // The census-decomposed operators localCheckpoint their bucketed
     // streams, and checkpoint blocks pin until session end; across passes
@@ -353,7 +351,7 @@ object Bench {
     val sumOfExecMins = bestExec.filter { case (k, _) => succeeded(k) }.values.sum
     val fb = familyBuilds.map(r(_, 3)).mkString("[", ",", "]")
     println(s"""{"metric":"sum_of_query_mins","value":${r(sumOfMins, 3)},"unit":"sec","exec_value":${r(sumOfExecMins, 3)},"family_build_s":$fb,"n_queries":${results.size},"best_pass_total":${r(total, 3)},"pass_totals":$pts,"pass_median":${r(median, 3)},"passes":$passes,"errors":$es${baselineFields.map(_._1).getOrElse("")},"sf":"$sfDir"}""")
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.Memo.release()
     spark.stop()
   }
 }

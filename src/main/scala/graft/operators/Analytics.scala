@@ -221,29 +221,24 @@ object Analytics {
   // sf1-skew because AQE skew handling covers joins, not WindowExec; the
   // census-decomposed hybrid below ([[qWindowRunningSkewSafe]]) fixes it,
   // value-identical (spec-pinned), at ~1.5x on well-distributed data.
-  // r16 (r15 verdict #7): the choice is now AUTO-DETECTED — ONE
-  // column-pruned count-per-key aggregate with a limit-1 probe decides
-  // (the same heavy-key fact the hybrid's own detection pass computes),
-  // so an unskewed corpus pays only the detection count and a degenerate
-  // one never serializes a hot key into a single window task. Opt out via
-  // spark.graft.window.autoSkewSafe=false (the r15 opt-in behavior).
+  // The choice is AUTO-DETECTED: ONE column-pruned count-per-key
+  // aggregate with a limit-1 probe decides (the same heavy-key fact the
+  // hybrid's own detection pass computes), so an unskewed corpus pays only
+  // the detection count and a degenerate one never serializes a hot key
+  // into a single window task.
   def qWindowRunning(spark: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(spark, d)
-    if (autoSkewSafe(spark) && hasHeavyKeyMemo(spark, d)) qWindowRunningSkewSafe(ev)
+    if (hasHeavyKeyMemo(spark, d)) qWindowRunningSkewSafe(ev)
     else qWindowRunningFrom(ev)
   }
 
-  /** Auto-dispatching entry (r15 verdict #7): heavy key present and
-    * auto-dispatch on → the skew-safe decomposition; otherwise the plain
-    * window. Exposed DataFrame-in so the dispatch itself is spec-pinned
-    * (un-memoized — the named entries go through [[hasHeavyKeyMemo]]). */
+  /** Auto-dispatching entry: heavy key present → the skew-safe
+    * decomposition; otherwise the plain window. Exposed DataFrame-in so
+    * the dispatch itself is spec-pinned (un-memoized — the named entries
+    * go through [[hasHeavyKeyMemo]]). */
   def qWindowRunningAuto(spark: SparkSession, events: DataFrame): DataFrame =
-    if (autoSkewSafe(spark) && hasHeavyKey(events)) qWindowRunningSkewSafe(events)
+    if (hasHeavyKey(events)) qWindowRunningSkewSafe(events)
     else qWindowRunningFrom(events)
-
-  /** Default-on auto-dispatch switch for the heavy-key window variants. */
-  private def autoSkewSafe(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.window.autoSkewSafe", "true").toBoolean
 
   /** Any key at/above [[HeavyKeyRows]]? One map-side-combinable count over
     * the pruned key column, probed with limit 1 — the detection cost the
@@ -253,19 +248,11 @@ object Analytics {
       .agg(count(lit(1)).as("hn")).filter(col("hn") >= HeavyKeyRows)
       .isEmpty
 
-  /** Per-(session, dir) memo of the heavy-key verdict (r16 verdict #6 +
-    * advice): the detection aggregate is a FACT about the corpus, not
-    * cache storage — re-counting it at every windowed entry's
-    * construction was a flat tax on every run (and made plan-only
-    * consumers execute corpus jobs). Session-lifetime by design: a
-    * corpus that changes under a live session's directory re-probes on
-    * the next session (the same staleness contract every file-based
-    * memo here carries). */
-  private val heavyKeyCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
-
+  /** The heavy-key verdict as a Memo fact: the detection aggregate runs
+    * once per (session, dir) until Memo.release(), not at every windowed
+    * entry's construction (plan-only consumers then run no corpus job). */
   private def hasHeavyKeyMemo(spark: SparkSession, d: String): Boolean =
-    heavyKeyCache.getOrElseUpdate((spark, d), hasHeavyKey(Tables.events(spark, d)))
+    Memo.fact(spark, d, "heavy_key")(hasHeavyKey(Tables.events(spark, d)))
 
   /** MATERIALIZED-SIDE memo (r18, the TPC-H join-constant attack): the
     * reduced build side of a big fact join — e.g. q5's
@@ -283,13 +270,9 @@ object Analytics {
     * while the side is genuinely under the 64 MB threshold — and
     * degrades to the shuffle plan by itself the moment it isn't
     * (measured at sf10: q5 exec 6.9→2.0 s, hash exchanges 6→2, zero
-    * lineitem shuffle). Same storage contract as the Selection/Dedup
-    * memos: per (session, dir, tag), transparent recompute after
-    * eviction, releaseCaches() is the service boundary (Bench releases
-    * between passes, so every benched pass pays the honest build cost).
+    * lineitem shuffle). The side is a Memo frame counted at build, so its
+    * stats are exact before any consumer plans against it.
     */
-  private val sideCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
   /** Sum of the build plan's LEAF relation stat bytes (parquet file bytes ×
     * column-prune ratio — the same measured quantity the eventsByUser sizing
@@ -315,11 +298,12 @@ object Analytics {
     PlanStats.minLeafBytes(spark)
 
   private def memoSide(spark: SparkSession, d: String, tag: String)
-      (build: => DataFrame): DataFrame = {
-    val lazySide = build
-    if (leafStatBytes(lazySide) < memoSideMinBytes(spark)) return lazySide
-    memoSideAlways(spark, d, tag)(lazySide)
-  }
+      (build: => DataFrame): DataFrame =
+    Memo.cached[DataFrame](spark, d, tag).getOrElse {
+      val lazySide = build
+      if (leafStatBytes(lazySide) < memoSideMinBytes(spark)) lazySide
+      else Memo.frame(spark, d, tag, count = true)(lazySide)
+    }
 
   /** r19 (r18 verdict #5): conditional SHUFFLE_HASH pin. The r18 pins on
     * the q12/q_exists fact-fact joins removed the SMJ sorts at sf10
@@ -338,28 +322,6 @@ object Analytics {
     if (thr >= 0 && est <= BigInt(thr)) df else df.hint("shuffle_hash")
   }
 
-  private def memoSideAlways(spark: SparkSession, d: String, tag: String)
-      (build: => DataFrame): DataFrame = {
-    // lock covers only map update + persist REGISTRATION (no jobs):
-    // Verify drives queries from parallel futures, and holding the lock
-    // across the materializing count would serialize every memo build
-    // behind whichever runs first
-    val df = sideCache.synchronized {
-      val cached = sideCache.getOrElseUpdate((spark, d, tag), build.persist())
-      if (cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        // unpersisted behind our back (releaseCaches race / eviction):
-        // re-pin so the stats contract holds
-        cached.persist()
-      }
-      cached
-    }
-    // cheap when already materialized; restores stats after eviction.
-    // Concurrent first-counts share per-block computation in the
-    // BlockManager, so a race costs duplicate scheduling, not 2× work.
-    df.count()
-    df
-  }
-
   /** Shared PER-USER events memo (r17 verdict #3, the keyed-memo pattern
     * from the ds_* family applied to the per-user event analytics): one
     * slim projection (event_id, user_id, event_type, ts, value_c),
@@ -376,15 +338,15 @@ object Analytics {
     * broadcast or zipped co-partitioned join is exchange-free. Trap #2
     * (checkpoint drops partitioning) avoided by using persist, which
     * advertises the repartition. Warmed by Bench/QueryTime as a family
-    * build; releaseCaches() is the service boundary. */
+    * build. */
   def eventsByUser(spark: SparkSession, d: String): DataFrame =
-    // memoSideAlways, not the size-gated memoSide: consumers reference this
+    // ungated, unlike memoSide: consumers reference this
     // frame SEVERAL times inside one plan (attribution reads it 3×), so an
     // unpersisted memo would re-scan per reference; and the family-build
     // contract (warmFamilyCaches / family_build_s) bills the build outside
     // per-query timers, so the r18 sizing law (2 partitions at sf0.1)
     // already bounds its small-SF cost.
-    memoSideAlways(spark, d, "events_by_user") {
+    Memo.frame(spark, d, "events_by_user", count = true) {
       val slim = Tables.events(spark, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
           cents(col("value")).as("value_c"))
@@ -442,18 +404,8 @@ object Analytics {
     ()
   }
 
-  /** Service-boundary invalidation (r17 advice): the heavy-key verdict is
-    * a fact about the corpus under `d`, so a corpus rebuilt under the same
-    * directory mid-session must be able to re-probe — and the map keys
-    * hold SparkSession references that would otherwise live for the JVM.
-    * Wired into the same boundary that calls Selection.releaseCaches(). */
-  def releaseCaches(): Unit = {
-    heavyKeyCache.clear()
-    sideCache.synchronized {
-      sideCache.values.foreach(_.unpersist())
-      sideCache.clear()
-    }
-  }
+  /** Memo.release(), kept for callers compiled against this object. */
+  def releaseCaches(): Unit = Memo.release()
 
   /** DataFrame-in core for [[qWindowRunning]] (events needs user_id,
     * event_id, ts, value). */
@@ -483,8 +435,8 @@ object Analytics {
     * census join-back over the plain plan — the price of bounding the
     * largest window partition by one key-hour instead of one key. The
     * bucketed stream takes a LAZY localCheckpoint (census + join-back
-    * both consume it; blocks pin on first action until
-    * releaseCaches/session end), so plan construction stays job-free. */
+    * both consume it; blocks pin on first action until the caller
+    * unpersists the RDD), so plan construction stays job-free. */
   private val HeavyKeyRows = 32768L
 
   def qWindowRunningSkewSafe(events: DataFrame): DataFrame = {
@@ -787,19 +739,18 @@ object Analytics {
   // events; AQE skew handling covers joins, not WindowExec) — the
   // context-duplication hybrid below ([[qSlidingWindowSkewSafe]]) fixes
   // the degenerate case and is spec-pinned value-identical, at the price
-  // of a detection pass plus duplicated hot rows. r16: AUTO-DETECTED like
+  // of a detection pass plus duplicated hot rows. AUTO-DETECTED like
   // [[qWindowRunning]] — the column-pruned heavy-key probe picks the
-  // branch; spark.graft.window.autoSkewSafe=false restores the plain
-  // window unconditionally.
+  // branch.
   def qSlidingWindow(spark: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(spark, d)
-    if (autoSkewSafe(spark) && hasHeavyKeyMemo(spark, d)) qSlidingWindowSkewSafe(ev)
+    if (hasHeavyKeyMemo(spark, d)) qSlidingWindowSkewSafe(ev)
     else qSlidingWindowFrom(ev)
   }
 
   /** Auto-dispatching entry — see [[qWindowRunningAuto]]. */
   def qSlidingWindowAuto(spark: SparkSession, events: DataFrame): DataFrame =
-    if (autoSkewSafe(spark) && hasHeavyKey(events)) qSlidingWindowSkewSafe(events)
+    if (hasHeavyKey(events)) qSlidingWindowSkewSafe(events)
     else qSlidingWindowFrom(events)
 
   /** DataFrame-in core for [[qSlidingWindow]] (events needs user_id,
@@ -2004,9 +1955,9 @@ object Analytics {
   // max(t) — the bucketLag1 idiom), so no per-type corpus window remains;
   // everything after is one combinable groupBy. All integer epoch-millis,
   // one final division.
-  // Storage contract (r15): the bucketed stream takes a lazy
-  // localCheckpoint (census + lag window both consume it); blocks pin on
-  // first action until releaseCaches/session end.
+  // The bucketed stream takes a lazy localCheckpoint (census + lag window
+  // both consume it); blocks pin on first action until the caller
+  // unpersists the RDD or the session ends.
   def qIntervalCoverage(spark: SparkSession, d: String): DataFrame = {
     val L = ConcWindowSec * 1000L
     val ev = Tables.events(spark, d)

@@ -135,41 +135,21 @@ object Dedup {
   // dedup_minhash_lsh, dedup_ngram_jaccard and dedup_components are stages
   // of ONE pipeline (LSH candidates → exact-Jaccard verification → canonical
   // assignment) — in a real deployment they run as one job, with the stage
-  // outputs checkpointed between stages. The shared outputs are memoized per
-  // data directory so each downstream query reuses them instead of
-  // recomputing the md5-heavy signature pipeline from scratch (which tripled
-  // the cost of the family when each query rebuilt it).
+  // outputs checkpointed between stages. The stage outputs are Memo frames
+  // so each downstream query reuses them instead of recomputing the
+  // md5-heavy signature pipeline.
   //
-  // Caching contract: the retained tables (`cand`, the unfiltered `overlap`
-  // facts, `verified`, the components' `canon`) are bounded by
-  // TRUE-DUPLICATE DENSITY (bucket caps bound the candidate count), not
-  // corpus size — at 100 TB these are exactly the small stage outputs you'd
-  // persist. The corpus-sized intermediate (the distinct shingle set) is
-  // persisted only while the stage outputs materialize and unpersisted
-  // before the pipeline returns. `releaseCaches()` drops everything for
-  // callers that want a clean session.
+  // The retained tables (`cand`, the unfiltered `overlap` facts,
+  // `verified`, the components' `canon`) are bounded by TRUE-DUPLICATE
+  // DENSITY (bucket caps bound the candidate count), not corpus size — at
+  // 100 TB these are exactly the small stage outputs you'd persist. The
+  // corpus-sized intermediates (shingles, signatures) are persisted only
+  // while the stage outputs materialize and unpersisted before the build
+  // returns.
   private case class LshShared(cand: DataFrame, overlap: DataFrame, verified: DataFrame)
-  // Keyed by (SparkSession, dir), not dir alone: a cached DataFrame is bound
-  // to the session that built it, so a second or restarted session reading
-  // the same dir must rebuild rather than inherit plans tied to a stopped
-  // session (whose isCached check can throw or mislead).
-  private val lshCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), LshShared]
-  private val canonCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  /** True while `df` is still registered in the cache manager — a
-    * `spark.catalog.clearCache()` by the caller evicts memoized stage
-    * outputs, in which case the pipeline transparently recomputes. */
-  private def isCached(df: DataFrame): Boolean =
-    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-
-  def releaseCaches(): Unit = synchronized {
-    lshCache.values.foreach { s =>
-      s.cand.unpersist(); s.overlap.unpersist(); s.verified.unpersist()
-    }
-    lshCache.clear()
-    canonCache.values.foreach(_.unpersist())
-    canonCache.clear()
-  }
+  /** Memo.release(), kept for callers compiled against this object. */
+  def releaseCaches(): Unit = Memo.release()
 
   /** The four pipeline stages as PURE plans (nothing persisted) — what
     * lshShared materializes, and what the plan audit (ExplainDump) dumps so
@@ -253,28 +233,21 @@ object Dedup {
       .join(withNa, Seq("db"))
   }
 
-  private def lshShared(spark: SparkSession, d: String): LshShared = synchronized {
-    lshCache.get((spark, d))
-      .filter(s => isCached(s.cand) && isCached(s.overlap) && isCached(s.verified))
-      .getOrElse {
-        val b = buildLsh(spark, d)
-        // corpus-sized intermediates persisted only while the pair tables
-        // materialize (CacheManager substitutes by canonical plan, so every
-        // scan of these subtrees below hits the cache)
-        b.sh.persist(); b.sig.persist()
-        val cand = b.cand.persist()
-        val overlap = b.overlap.persist()
-        val verified = b.verified.persist()
-        // one action materializes ALL pair caches: verified scans overlap,
-        // overlap scans cand, and scanning a persisted input populates its
-        // cache en route
-        verified.count()
-        b.sig.unpersist(); b.sh.unpersist()
-        val s = LshShared(cand, overlap, verified)
-        lshCache((spark, d)) = s
-        s
-      }
-  }
+  private def lshShared(spark: SparkSession, d: String): LshShared =
+    Memo.frames[LshShared](spark, d, "lsh")(s => Seq(s.cand, s.overlap, s.verified)) {
+      val b = buildLsh(spark, d)
+      // corpus-sized intermediates persisted only while the pair tables
+      // materialize (CacheManager substitutes by canonical plan, so every
+      // scan of these subtrees below hits the cache)
+      b.sh.persist(); b.sig.persist()
+      val s = LshShared(b.cand.persist(), b.overlap.persist(), b.verified.persist())
+      // one action materializes ALL pair caches: verified scans overlap,
+      // overlap scans cand, and scanning a persisted input populates its
+      // cache en route
+      s.verified.count()
+      b.sig.unpersist(); b.sh.unpersist()
+      s
+    }
 
   // --- dedup_minhash_lsh --------------------------------------------------
   // Candidate pairs + estimated Jaccard = fraction of matching signature
@@ -466,7 +439,7 @@ object Dedup {
       .filter(col("sig").isNotNull)
     val sig =
       if (PlanStats.leafStatBytes(sigLazy) < PlanStats.minLeafBytes(spark)) sigLazy
-      else { val p = sigLazy.persist(); p.count(); p }
+      else Memo.frame(spark, d, s"lsh_tune_sig_${sampleMod}_$sampleRem", count = true)(sigLazy)
     val truePairs = lshShared(spark, d).verified
       .filter(col("da") % sampleMod === sampleRem && col("db") % sampleMod === sampleRem)
       .select("da", "db")
@@ -555,20 +528,12 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** The converged component mapping, O(docs with a neighbor) rows; the
+    * propagation loop is Graph.connectedComponentsFrom, shared with
+    * mm_components. */
   private def canonFor(spark: SparkSession, d: String): DataFrame =
-    canonCache.get((spark, d)).filter(isCached).getOrElse {
-      // the propagation loop (localCheckpoint-per-round plan flattening,
-      // convergence accounting) lives in Graph.connectedComponentsFrom —
-      // shared verbatim with mm_components; this wrapper only adds the
-      // family memo
-      val converged = Graph
-        .connectedComponentsFrom(lshShared(spark, d).verified.select("da", "db"))
-        .persist()
-      // register the converged mapping in the cache manager so the memo's
-      // eviction check (isCached) sees it; tiny — O(docs with a neighbor)
-      converged.count()
-      canonCache((spark, d)) = converged
-      converged
+    Memo.frame(spark, d, "lsh_canon", count = true) {
+      Graph.connectedComponentsFrom(lshShared(spark, d).verified.select("da", "db"))
     }
 
   val dedupComponentsSql: String = LshCte.replaceFirst("^WITH ", "WITH RECURSIVE ") +
@@ -1337,21 +1302,14 @@ object Dedup {
   // only the batch computes signatures, the corpus is never re-scanned,
   // and the bucketing satisfies both probe joins' distributions with zero
   // corpus-side Exchange (DedupSpec pins parity + the exchange-free plan).
-  private val indexedPrefixes =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val indexedLock = new Object
-
   def dedupIncrementalIndexed(spark: SparkSession, d: String): DataFrame = {
-    // build-once memo (same convention as the LSH family pipeline cache):
-    // the lock serializes the one-time write; every later call — further
+    // written once per (session, corpus); every later call — further
     // Verify queries, bench passes 2..N — goes straight to the probe
-    val prefix = indexedLock.synchronized {
-      indexedPrefixes.getOrElseUpdate((spark, d), {
-        val p = s"graft_lshidx_${graft.sources.Sinks.pathSlug(d)}"
-        val (bands, sigs) = incrementalIndexParts(spark, d)
-        graft.sources.Sinks.writeLshIndex(bands, sigs, p)
-        p
-      })
+    val prefix = Memo.layout(spark, d, "lshidx") {
+      val p = s"graft_lshidx_${graft.sources.Sinks.pathSlug(d)}"
+      val (bands, sigs) = incrementalIndexParts(spark, d)
+      graft.sources.Sinks.writeLshIndex(bands, sigs, p)
+      p
     }
     dedupIncrementalFromIndex(spark, d, prefix)
   }

@@ -896,11 +896,9 @@ object Selection {
     * whose values are all-distinct the histogram degenerates to corpus
     * size and this matches the old plan's cost; it never exceeds it.
     *
-    * Storage contract (r15): the value histogram takes a LAZY
-    * localCheckpoint (median derivation + deviation histogram both
-    * consume it); blocks materialize inside the first action and stay
-    * pinned until `releaseCaches()`/session end — plan construction
-    * itself runs no jobs.
+    * The value histogram takes a LAZY localCheckpoint (median derivation
+    * + deviation histogram both consume it); blocks materialize inside
+    * the first action, so plan construction itself runs no jobs.
     */
   def outlierMadFrom(k: DataFrame, idCol: String): DataFrame = {
     // report-sized after the corpus agg; checkpointed because the med
@@ -975,10 +973,9 @@ object Selection {
     * costs a corpus-side join and measured slower than this at sf1.)
     * The bucketed stream feeds both the census and the windowed main
     * stream, so it takes a LAZY localCheckpoint — blocks materialize
-    * inside the first action and stay pinned until releaseCaches/session
-    * end, the dsCusumFrom storage contract. Returns the input columns
-    * plus `li` (bucket-local rank) and `prev_<c>` per lag column, NULL on
-    * each compound's global first row — exactly
+    * inside the first action, the dsCusumFrom storage contract. Returns
+    * the input columns plus `li` (bucket-local rank) and `prev_<c>` per
+    * lag column, NULL on each compound's global first row — exactly
     * lag(c) OVER (PARTITION BY compound ORDER BY ordCols).
     * Parallelism: |compounds| × SeriesBuckets local sorts + one
     * AQE-broadcast census join. */
@@ -1170,7 +1167,7 @@ object Selection {
   /** DataFrame-in variant for library callers (and the [[GraftQC]] facade):
     * `k` needs (`idCol`, compound, value, cts: timestamp). The indexed
     * stream takes a lazy localCheckpoint (the dsCusumFrom storage
-    * contract: blocks pin on first action until releaseCaches). */
+    * contract). */
   def rollingZFrom(k: DataFrame, idCol: String): DataFrame = {
     // r19 size dispatch (same gate as memoSide/dsTrend/bucketLag1): below
     // the leaf floor the boundary-context decomposition's constants (the
@@ -1284,8 +1281,7 @@ object Selection {
   // max_by(payload, (score, −i)) takes each bucket's best split, and the
   // global pick windows over the census-sized survivors. The windowed
   // stream feeds both the census and the join-back, so it is
-  // lazily localCheckpoint'd (blocks pin on first action until
-  // releaseCaches/session end — the dsCusumFrom storage contract).
+  // lazily localCheckpoint'd (the dsCusumFrom storage contract).
   def dsChangepoint(spark: SparkSession, d: String): DataFrame =
     changepointFrom(keyedQc(spark, d).select("event_id", "compound", "value", "cts"), "event_id")
       .orderBy("compound")
@@ -1879,9 +1875,8 @@ object Selection {
   // pass 2 re-scans, joins the |compounds|-row cut table back
   // (AQE-broadcast), clamps in the map, and collapses in one combinable
   // groupBy over exact cents. n_low/n_high count strict exceedances.
-  // Storage contract (r15): the value histogram takes a lazy
-  // localCheckpoint (two consumers); blocks pin on first action until
-  // releaseCaches()/session end.
+  // The value histogram takes a lazy localCheckpoint (two consumers); the
+  // dsCusumFrom storage contract.
   def dsWinsorize(spark: SparkSession, d: String): DataFrame = {
     // VALUE-HISTOGRAM decomposition (r14, the sf1 weak set): the 5/95
     // cuts are order statistics — the value at rank ceil(q·n) equals the
@@ -1960,8 +1955,7 @@ object Selection {
   // sort. The oracle's pair-index tiebreak needs no reproduction — the
   // VALUE at a rank is invariant to how equal slopes are ordered. The
   // slope stream feeds three consumers (stats + both levels), so it is
-  // lazily localCheckpoint'd (blocks pin on first action until
-  // releaseCaches/session end — the dsCusumFrom storage contract).
+  // lazily localCheckpoint'd (the dsCusumFrom storage contract).
   def dsTrend(spark: SparkSession, d: String): DataFrame =
     dsTrendFrom(keyedQc(spark, d))
 
@@ -2340,31 +2334,18 @@ object Selection {
   def dsCusum(spark: SparkSession, d: String): DataFrame =
     dsCusumFromLattice(qcLattice(spark, d))
 
-  // --- shared center/spread lattice (r15 verdict #4) ------------------------
+  // --- shared center/spread lattice ----------------------------------------
   // ds_cusum and ds_spc_rules consume the SAME stream: the keyed series
   // with exact center t = Σvc div n, spread madx = mean|dev|, and the
   // (compound, time-bucket) key — and the same (compound, b)-partitioned
-  // exchange in front of their window pairs. The lattice is built once,
-  // PERSISTED, and memoized per (session, dir) exactly like Dedup's LSH
-  // stage outputs (isCached → transparent recompute after eviction;
-  // releaseCaches() is the service contract between requests). SCALING.md
-  // records the pair at 6.0 → 4.1s at sf1 with bit-exact parity; Bench warms
-  // the memo with the dedup family so the shared build is attributed as a
-  // family cost, not billed to whichever of the two runs first.
-  private val qcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val keyedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // exchange in front of their window pairs. Both QC streams below are
+  // Memo frames persisted lazily (blocks pin on the first action), so
+  // building a query runs no job; Bench warms them with the other family
+  // memos so the shared build is not billed to whichever consumer runs
+  // first.
 
-  private def qcIsCached(df: DataFrame): Boolean =
-    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-
-  def releaseCaches(): Unit = synchronized {
-    qcCache.values.foreach(_.unpersist())
-    qcCache.clear()
-    keyedCache.values.foreach(_.unpersist())
-    keyedCache.clear()
-  }
+  /** Memo.release(), kept for callers compiled against this object. */
+  def releaseCaches(): Unit = Memo.release()
 
   /** Pre-materialize the shared QC streams (Bench warm contract): the
     * keyed projection first (the lattice derives from it). */
@@ -2374,36 +2355,21 @@ object Selection {
     ()
   }
 
-  /** Shared KEYED-STREAM memo (r16 verdict #1): every census-decomposed
-    * QC operator (ds_rolling_z / ds_changepoint / ds_flatline / ds_trend /
+  /** The keyed-stream memo: every census-decomposed QC operator
+    * (ds_rolling_z / ds_changepoint / ds_flatline / ds_trend /
     * ds_resample / ds_gaps / ds_interp / ds_outlier_mad, and the
-    * center/spread lattice below) consumes the same five-column projection
-    * of the keyed events stream — scan + epoch correction + nothing else.
-    * Before the memo each entry re-paid that scan+parse as its dominant
-    * term (10-12.5s entries at sf10 were ~2 passes each). One persisted
-    * copy per (session, dir), same contract as the lattice memo:
-    * isCached → transparent recompute after eviction, releaseCaches() is
-    * the service boundary, Bench/QueryTime warm it outside any one
-    * query's timer so the build is a family cost. `synchronized`
-    * get-or-build (r16 advice — the lattice memo's bare TrieMap
-    * check-then-act could double-build and leak the loser's blocks). */
-  private def keyedQc(spark: SparkSession, d: String): DataFrame = synchronized {
-    keyedCache.get((spark, d)).filter(qcIsCached).getOrElse {
-      val k = keyed(spark, d)
-        .select("event_id", "compound", "cts", "ms", "value").persist()
-      keyedCache((spark, d)) = k
-      k
+    * center/spread lattice) consumes this five-column projection of the
+    * keyed events stream, so the scan + epoch correction is paid once per
+    * (session, dir). */
+  private def keyedQc(spark: SparkSession, d: String): DataFrame =
+    Memo.frame(spark, d, "qc_keyed", count = false) {
+      keyed(spark, d).select("event_id", "compound", "cts", "ms", "value")
     }
-  }
 
-  private def qcLattice(spark: SparkSession, d: String): DataFrame = synchronized {
-    qcCache.get((spark, d)).filter(qcIsCached).getOrElse {
-      val lattice = latticeOf(
-        keyedQc(spark, d).select("event_id", "compound", "cts", "value")).persist()
-      qcCache((spark, d)) = lattice
-      lattice
+  private def qcLattice(spark: SparkSession, d: String): DataFrame =
+    Memo.frame(spark, d, "qc_lattice", count = false) {
+      latticeOf(keyedQc(spark, d).select("event_id", "compound", "cts", "value"))
     }
-  }
 
   /** The un-persisted lattice plan: (compound, b, event_id, cts, vc, t,
     * madx), already repartitioned on the bucket keys. */
@@ -2442,10 +2408,10 @@ object Selection {
     * prefix-sum/prefix-min closed form against the direct sequential
     * fold S_i = max(0, S_{i−1} + d_i) on constructed series.
     *
-    * Storage contract (r15): the bucketed stream takes a lazy
-    * localCheckpoint (census + windowed main stream both consume it);
-    * blocks pin on first action until `releaseCaches()`/session end —
-    * construction runs no jobs. */
+    * Storage contract: the bucketed stream takes a lazy localCheckpoint
+    * (census + windowed main stream both consume it); blocks pin on first
+    * action until the caller unpersists the RDD or the session ends
+    * (Bench drops them after each query) — construction runs no jobs. */
   def dsCusumFrom(kIn: DataFrame): DataFrame =
     dsCusumFromLattice(latticeOf(kIn))
 
@@ -2584,10 +2550,8 @@ object Selection {
     * windowed run tests against a direct sequential scan on constructed
     * series (runs across the center, exact-8 vs longer runs, tie values).
     *
-    * Storage contract (r15): the bucketed stream takes a lazy
-    * localCheckpoint (census + windowed main stream both consume it);
-    * blocks pin on first action until `releaseCaches()`/session end —
-    * construction runs no jobs. */
+    * The bucketed stream takes a lazy localCheckpoint (census + windowed
+    * main stream both consume it); the dsCusumFrom storage contract. */
   def dsSpcRulesFrom(kIn: DataFrame): DataFrame =
     dsSpcRulesFromLattice(latticeOf(kIn))
 

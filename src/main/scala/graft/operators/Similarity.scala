@@ -410,11 +410,11 @@ object Similarity {
   }
 
   // --- ann_ivf_layout -----------------------------------------------------
-  // The PERSISTED-index ANN probe, oracle-covered end to end (r12 — the
+  // The PERSISTED-index ANN probe, oracle-covered end to end (the
   // similarity-side twin of the persisted-index dedup_incremental probe):
-  // the cell layout is
-  // written once per (session, corpus) via `Sinks.writeIvfCells`
-  // (cid-partitioned directories) and every query's probe reads ONLY its
+  // the cell layout is a Memo layout, written once per (session, corpus)
+  // to [[ivfLayoutDir]] via `Sinks.writeIvfCells` (cid-partitioned
+  // directories), and every query's probe reads ONLY its
   // NProbe `cid=` directories — partition pruning does what the in-memory
   // ann_ivf's join does, at storage level, which is the billion-vector
   // deployment shape. Probe planning is pure driver-side quantizer math
@@ -428,17 +428,14 @@ object Similarity {
   // rows out to exactly the queries that probed it, and one per-qid
   // rank window cuts top-K — overlapping probes now read shared cells
   // once instead of once per query.
-  private val ivfLayoutPaths =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val ivfLayoutLock = new Object
+  private[graft] def ivfLayoutDir(spark: SparkSession, d: String): String =
+    Memo.layoutDir(spark, d, "ivf")
 
   def annIvfLayout(spark: SparkSession, d: String): DataFrame = {
-    val path = ivfLayoutLock.synchronized {
-      ivfLayoutPaths.getOrElseUpdate((spark, d), {
-        val p = s"/tmp/graft-ivf-${graft.sources.Sinks.pathSlug(d)}"
-        graft.sources.Sinks.writeIvfCells(ivfCells(spark, d), p)
-        p
-      })
+    val path = Memo.layout(spark, d, "ivf") {
+      val p = ivfLayoutDir(spark, d)
+      graft.sources.Sinks.writeIvfCells(ivfCells(spark, d), p)
+      p
     }
     val cents = seedCentroids(spark, d)
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -637,35 +634,28 @@ object Similarity {
   // reproducible — at scale this runs on a sampled query set while the
   // index serves the rest.
   def annRecall(spark: SparkSession, d: String): DataFrame = {
-    // r19 (guide §2.3 — don't compute things twice): the exact baseline is
-    // the semi-join build side of all FIVE method branches, and an
-    // unpersisted subtree re-runs the full bruteforce (corpus × queries
-    // cosine top-k) once per branch — QueryTime sf10 measured 10.9 s, ~5×
-    // one bruteforce pass. Persist + count materializes it ONCE; the
-    // relation is NumQueries×K rows (report-sized at any SF — the query
-    // set is static), and the pass-boundary clearCache is the release.
-    // Size-gated like memoSide: below the leaf floor the five redundant
-    // bruteforces run CONCURRENTLY across idle cores and beat the
-    // serialized persist (sf0.1: 2.60 lazy vs 3.14 persisted).
+    // The exact baseline is the semi-join build side of all FIVE method
+    // branches, and an unpersisted subtree re-runs the full bruteforce
+    // (corpus × queries cosine top-k) once per branch. Above the leaf
+    // floor it is a Memo frame counted at build, so it is computed ONCE;
+    // the relation is NumQueries×K rows (report-sized at any SF — the
+    // query set is static). Size-gated like memoSide: below the floor the
+    // five redundant bruteforces run CONCURRENTLY across idle cores and
+    // beat the serialized persist (sf0.1: 2.60 lazy vs 3.14 persisted).
     val exactLazy = annBruteforce(spark, d).select(col("qid"), col("vec_id"))
     val gatePersist = PlanStats.leafStatBytes(exactLazy) >= PlanStats.minLeafBytes(spark)
-    def once(df: DataFrame): DataFrame = if (!gatePersist) df else df.persist()
-    val exact = once(exactLazy)
+    // Each frame is materialized in turn, never concurrently: bruteforce
+    // and the PQ window pipeline peaking together on top of the warm
+    // family memos exceeded the 12 GB bench heap at sf10.
+    def once(tag: String, df: DataFrame): DataFrame =
+      if (!gatePersist) df else Memo.frame(spark, d, tag, count = true)(df)
+    val exact = once("ann_recall_exact", exactLazy)
     // The PQ ranking feeds BOTH the pq branch (rank ≤ K) and the refine
     // shortlist (rank ≤ RefineM ≥ K — same window, deeper cut), so one
     // shared ranking replaces two full PQ pipelines (encode + corpus ×
     // queries ADC scoring). Report-sized: NumQueries × RefineM rows.
-    val pqTop = once(pqRanked(spark, d, RefineM).select("qid", "vec_id", "rank"))
-    if (gatePersist) {
-      // materialize SEQUENTIALLY. The concurrent variant (guide §2.6,
-      // two futures — costs max instead of sum on the wall, 8.6→6.5 s
-      // standalone at sf10) OOMed the 12 GB bench JVM at sf10: bruteforce
-      // and the PQ window pipeline peaking together on top of the warm
-      // family memos exceeded the heap the whole 259-query workload is
-      // sized for. Isolated-JVM wins that blow the shared budget are not
-      // wins (r19 sf10 bench, OutOfMemoryError at pass 1).
-      exact.count(); pqTop.count()
-    }
+    val pqTop = once("ann_recall_pq_top",
+      pqRanked(spark, d, RefineM).select("qid", "vec_id", "rank"))
     // Every query appears in the report even when the index returned NOTHING
     // that overlaps the exact top-k — recall-0 queries are the exact ones an
     // ANN evaluation exists to surface, and a groupBy over the hit rows

@@ -1063,9 +1063,9 @@ object TextAnalysis {
   // bucket its token carry-in, start_off = carry + local prefix − own
   // tokens. The old plan's per-source window serialized each source's
   // full doc stream into one task. Integer div/mod only.
-  // Storage contract (r15): the bucketed windowed stream takes a lazy
-  // localCheckpoint (census + join-back both consume it); blocks pin on
-  // first action until releaseCaches/session end.
+  // The bucketed windowed stream takes a lazy localCheckpoint (census +
+  // join-back both consume it); blocks pin on first action until the
+  // caller unpersists the RDD or the session ends.
   private val PackBudget = 256
   private val DocBuckets = 256L
 
@@ -1603,9 +1603,6 @@ object TextAnalysis {
   // windows, range-exchange write); the manifest is a |sources|-key
   // combinable groupBy over the files.
   private val ExportShards = 8
-  private val exportPaths =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val exportLock = new Object
 
   /** The curated corpus as one composed PLAN — (pos, doc_id, source,
     * n_tokens, bin_id, bin_off, text): what `Sinks.writeTrainingCorpus`
@@ -1645,14 +1642,12 @@ object TextAnalysis {
   }
 
   def pipelineExport(spark: SparkSession, d: String): DataFrame = {
-    // write-once memo per (session, corpus) — bench passes and later
+    // written once per (session, corpus) — bench passes and later
     // queries read the real persisted files, the deployment's read cost
-    val path = exportLock.synchronized {
-      exportPaths.getOrElseUpdate((spark, d), {
-        val p = s"/tmp/graft-export-${graft.sources.Sinks.pathSlug(d)}"
-        graft.sources.Sinks.writeTrainingCorpus(trainingCorpus(spark, d), p, ExportShards)
-        p
-      })
+    val path = Memo.layout(spark, d, "export") {
+      val p = Memo.layoutDir(spark, d, "export")
+      graft.sources.Sinks.writeTrainingCorpus(trainingCorpus(spark, d), p, ExportShards)
+      p
     }
     spark.read.parquet(path)
       .groupBy("source")
@@ -1777,9 +1772,9 @@ object TextAnalysis {
   //   ord(r, s) = Σ_{s'} min(c_{s'}, r−1) + |{s' ≤ s : c_{s'} ≥ r}|
   // — an exact-integer sum over |sources| broadcast rows per doc, so no
   // global sort or single-partition window anywhere at any corpus size.
-  // Storage contract (r15): the bucketed ranked stream takes a lazy
-  // localCheckpoint (census + join-back both consume it); blocks pin on
-  // first action until releaseCaches/session end.
+  // The bucketed ranked stream takes a lazy localCheckpoint (census +
+  // join-back both consume it); blocks pin on first action until the
+  // caller unpersists the RDD or the session ends.
   def docInterleave(spark: SparkSession, d: String): DataFrame = {
     val m = Tables.documents(spark, d)
       .select(col("doc_id"), col("source"),

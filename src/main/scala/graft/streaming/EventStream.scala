@@ -333,9 +333,9 @@ object EventStream {
     // join-back reassembles ph(i) = off(b) + lph(i) and
     // min_{j≤i} ph = least(prevmin(b), off(b) + lmin(i)) exactly.
     // Fixed monitoring parameters mean no stats join — just the span.
-    // Storage contract (r15): the windowed stream takes a lazy
-    // localCheckpoint (census + join-back both consume it); blocks pin
-    // on first action until releaseCaches/session end.
+    // The windowed stream takes a lazy localCheckpoint (census +
+    // join-back both consume it); blocks pin on first action until the
+    // caller unpersists the RDD or the session ends.
     val W = org.apache.spark.sql.expressions.Window
     val k0 = Tables.events(spark, d)
       .select(col("event_type"), col("event_id"), col("ts"),

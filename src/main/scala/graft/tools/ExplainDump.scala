@@ -152,7 +152,7 @@ object ExplainDump {
     // too, where the verification join's strategy is visible, and gate it:
     // the pairs×shingles intersection probe must be a shuffle join (a
     // forced broadcast there tracks duplicate density and dies at 100 TB).
-    graft.operators.Dedup.releaseCaches() // else cache substitution hides the joins
+    graft.operators.Memo.release() // else cache substitution hides the joins
     val pipe = graft.operators.Dedup.buildLsh(spark, sfDir).verified
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     if (pipe.contains("CartesianProduct"))

@@ -152,7 +152,7 @@ object Sf1DnfCheck {
       s"total drops $drops >= exact-dup lower bound $exactLb")
 
     println(s"SF1CHECK done: ${if (failed == 0) "ALL PASS" else s"$failed FAILED"}")
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.Memo.release()
     spark.stop()
     if (failed > 0) sys.exit(1)
   }

@@ -75,7 +75,7 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("window auto-dispatch picks the skew-safe branch on a hot key and honors the opt-out") {
+  test("window auto-dispatch picks the skew-safe branch on a hot key and the plain window on a cool one") {
     import spark.implicits._
     def hasJoin(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.collectFirst {
@@ -92,11 +92,6 @@ class AnalyticsSpec extends SparkSpec {
     assert(!hasJoin(Analytics.qWindowRunningAuto(spark, cool)))
     assert(hasJoin(Analytics.qSlidingWindowAuto(spark, hot)))
     assert(!hasJoin(Analytics.qSlidingWindowAuto(spark, cool)))
-    // opt-out restores the plain window even on the degenerate corpus
-    spark.conf.set("spark.graft.window.autoSkewSafe", "false")
-    try assert(!hasJoin(Analytics.qWindowRunningAuto(spark, hot)) &&
-      !hasJoin(Analytics.qSlidingWindowAuto(spark, hot)))
-    finally spark.conf.unset("spark.graft.window.autoSkewSafe")
   }
 
   test("dau/mau interval sweep equals the direct 30-day-explode formulation") {

@@ -384,7 +384,7 @@ class SimilaritySpec extends SparkSpec {
     val probedCids = (0L until 5L)
       .flatMap(q => Similarity.probeCells(spark, sf, q)).distinct
     val layoutDir = new java.io.File(
-      s"/tmp/graft-ivf-${graft.sources.Sinks.pathSlug(sf)}")
+      new org.apache.hadoop.fs.Path(Similarity.ivfLayoutDir(spark, sf)).toUri.getPath)
     def parquetFilesIn(d: java.io.File): Long =
       d.listFiles.count(_.getName.endsWith(".parquet")).toLong
     val cellDirs = layoutDir.listFiles.filter(_.getName.startsWith("cid="))

@@ -22,6 +22,18 @@ echo "== correctness: Verify -> DuckDB oracle compare at $SF"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check_oracle.py "$SF" "$OUT"
 
+echo "== correctness, large branches: Verify with the leaf-byte gate at 0"
+# sf0.01 sits below the 16 MB leaf-byte gate, so the run above checks only
+# the small branch of each size-dispatched operator. The gate's deployment
+# knob goes to the forked JVM as a -D system property (SparkConf loads
+# every spark.* property), so the same queries take the persisted and
+# checkpointed branches, where the Memo frames live.
+OUT_LARGE="$(mktemp -d /tmp/graft-verify-large-XXXX)"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
+  'set run / javaOptions += "-Dspark.graft.memoSide.minLeafBytes=0"' \
+  "runMain graft.Verify $SF $OUT_LARGE"
+python3 tools/check_oracle.py "$SF" "$OUT_LARGE"
+
 echo "== pii positive-path parity (corpus is digit-free, oracle can't see it)"
 python3 tools/check_pii_parity.py
 
