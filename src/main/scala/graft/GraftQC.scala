@@ -27,7 +27,9 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
 
   /** Load every `<compound>.json` in a directory as one keyed DataFrame —
     * compound names come from filenames, exactly like the reference's
-    * JSONFiles config map. One distributed read for all compounds.
+    * JSONFiles config map. One distributed read for all compounds, and
+    * loading runs no Spark job: the file list comes from the scan's file
+    * index, so the JSON is parsed only when a result is materialized.
     */
   def loadSeriesDir(dir: String): DataFrame = {
     val withFile = spark.read
@@ -35,13 +37,12 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
       .option("multiLine", "true")
       .json(s"$dir/*.json")
       .withColumn("_file", input_file_name())
-    // input_file_name() is a percent-encoded URI ("n butane" → "n%20butane")
-    // — decode per distinct file on the driver (#files = #compounds, small)
-    // and map back with a broadcast join, so compound names match what the
-    // user types. No UDF needed.
+    // input_file_name() is a percent-encoded URI ("n butane" → "n%20butane"),
+    // and so is every entry of inputFiles — decode each file's stem on the
+    // driver (#files = #compounds, small) and map back with a broadcast
+    // join, so compound names match what the user types. No UDF needed.
     import spark.implicits._
-    val files = withFile.select("_file").distinct().as[String].collect()
-    val mapping = files.map { f =>
+    val mapping = withFile.inputFiles.map { f =>
       val stem = f.substring(f.lastIndexOf('/') + 1).stripSuffix(".json")
       f -> java.net.URLDecoder.decode(stem, "UTF-8")
     }.toSeq.toDF("_file", "series")
@@ -80,13 +81,21 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     sel.join(box.select("compound", "sel_key"), Seq("compound", "sel_key"), "left_anti")
 
   /** Click-toggle semantics as a set op: symmetric difference
-    * (index.js:510-534).
+    * (index.js:510-534). Each input is read once: both sides are tagged
+    * (1 = `sel`, 2 = `clicks`), unioned and grouped by
+    * (`compound`, `sel_key`), and a key is kept when only one tag occurs
+    * for it — the flag aggregate `Selection.dsClickToggle` uses. So a
+    * toggle adds only the scans of `clicks` to the selection's plan, and
+    * chained toggles never re-read an earlier input. The output is
+    * distinct, and NULL keys compare equal, as in EXCEPT.
     */
-  def toggle(sel: DataFrame, clicks: DataFrame): DataFrame = {
-    val a = sel.select("compound", "sel_key")
-    val c = clicks.select("compound", "sel_key")
-    a.except(c).union(c.except(a))
-  }
+  def toggle(sel: DataFrame, clicks: DataFrame): DataFrame =
+    sel.select(col("compound"), col("sel_key"), lit(1).as("_tag"))
+      .union(clicks.select(col("compound"), col("sel_key"), lit(2).as("_tag")))
+      .groupBy("compound", "sel_key")
+      .agg(min(col("_tag")).as("_lo"), max(col("_tag")).as("_hi"))
+      .filter(col("_lo") === col("_hi"))
+      .select("compound", "sel_key")
 
   /** Per-key compound counts, the text-box view (index.js:746-755). */
   def counts(sel: DataFrame): DataFrame =

@@ -18,6 +18,12 @@ python3 tools/testdata_fingerprint.py | diff tools/testdata_fingerprint.txt - \
 echo "== compile + unit/streaming specs"
 sbt -batch test
 
+echo "== benchmark build + its checks' tests"
+# perfbench compiles against private[graft] members and the GraftQC
+# facade's signatures, so a change there must not break the benchmark.
+python3 perfbench/build.py
+python3 -m pytest -q perfbench/tests
+
 echo "== correctness: Verify -> DuckDB oracle compare at $SF"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch "runMain graft.Verify $SF $OUT"
 python3 tools/check_oracle.py "$SF" "$OUT"
