@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.net.URI
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import graft.operators.Selection
 import graft.sources.Tables
@@ -21,9 +25,16 @@ import graft.sources.Tables
   *
   * Selections are plain DataFrames of (compound, sel_key) — every operation
   * is a distributed set op, so the same session works on a laptop against
-  * example JSON and on a cluster against years of parquet.
+  * example JSON and on a cluster against years of parquet. A selection is
+  * kept as a formula over its inputs: rectangles over a loaded frame, and
+  * opaque key frames (imports, auto-QC output, anything else). However long
+  * the chain of rect / alt-drag / click edits, it compiles to one scan per
+  * loaded frame, one read of each opaque input and one aggregate. The
+  * output is distinct, NULL keys compare equal, and building a selection
+  * runs no Spark job.
   */
 class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
+  import GraftQC.{Input, Recipe}
 
   /** Load every `<compound>.json` in a directory as one keyed DataFrame —
     * compound names come from filenames, exactly like the reference's
@@ -38,13 +49,13 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
       .json(s"$dir/*.json")
       .withColumn("_file", input_file_name())
     // input_file_name() is a percent-encoded URI ("n butane" → "n%20butane"),
-    // and so is every entry of inputFiles — decode each file's stem on the
-    // driver (#files = #compounds, small) and map back with a broadcast
-    // join, so compound names match what the user types. No UDF needed.
+    // and so is every entry of inputFiles — take each file's name from its
+    // decoded URI path on the driver (#files = #compounds, small; a '+'
+    // stays a '+') and map back with a broadcast join, so compound names
+    // match what the user types. No UDF needed.
     import spark.implicits._
     val mapping = withFile.inputFiles.map { f =>
-      val stem = f.substring(f.lastIndexOf('/') + 1).stripSuffix(".json")
-      f -> java.net.URLDecoder.decode(stem, "UTF-8")
+      f -> new Path(new URI(f)).getName.stripSuffix(".json")
     }.toSeq.toDF("_file", "series")
     val raw = withFile.join(broadcast(mapping), Seq("_file")).drop("_file")
       .withColumnRenamed("flask_number", "salt")
@@ -53,49 +64,81 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
   }
 
   /** Rectangle selection: every point of `compound` inside the box becomes
-    * a selection key (index.js:243-254).
+    * a selection key (index.js:243-254). The box is one input of the
+    * selection's formula, so later edits read `data` once for all of them.
     */
   def rectSelect(data: DataFrame, compound: String,
       t0: String, t1: String, v0: Double, v1: Double): DataFrame =
-    data.filter(col("compound") === compound &&
-        col("cts") >= lit(t0).cast("timestamp") && col("cts") <= lit(t1).cast("timestamp") &&
-        col("value") >= v0 && col("value") <= v1)
-      .select("compound", "sel_key").distinct()
+    box(data, col("compound") === compound &&
+      col("cts") >= lit(t0).cast("timestamp") && col("cts") <= lit(t1).cast("timestamp") &&
+      col("value") >= v0 && col("value") <= v1)
 
   /** Rectangle selection in an arbitrary axis plane — the reference's
     * xOptions/yOptions callbacks (index.js:33-39) let the analyst plot and
     * select on any numeric attribute pair (year, lat, lon, alt, ...); the
     * selection keys that come out are identical regardless of the plane
-    * they were drawn in, so selections from different axis views compose.
+    * they were drawn in, so selections from different axis views compose,
+    * and a box in one plane shares the scan of `data` with boxes in others.
     */
   def rectSelectAxes(data: DataFrame, compound: String,
       xCol: String, x0: Double, x1: Double,
       yCol: String, y0: Double, y1: Double): DataFrame =
-    data.filter(col("compound") === compound &&
-        col(xCol) >= x0 && col(xCol) <= x1 &&
-        col(yCol) >= y0 && col(yCol) <= y1)
-      .select("compound", "sel_key").distinct()
+    box(data, col("compound") === compound &&
+      col(xCol) >= x0 && col(xCol) <= x1 &&
+      col(yCol) >= y0 && col(yCol) <= y1)
 
-  /** Alt-drag: remove from `sel` everything `box` covers (index.js:253). */
+  /** Alt-drag: remove from `sel` everything `box` covers (index.js:253) —
+    * keys in `sel` and not in `box`. Like EXCEPT, the output is distinct
+    * and NULL keys compare equal.
+    */
   def antiSelect(sel: DataFrame, box: DataFrame): DataFrame =
-    sel.join(box.select("compound", "sel_key"), Seq("compound", "sel_key"), "left_anti")
+    combine(sel, box)((a, b) => a && !b)
 
   /** Click-toggle semantics as a set op: symmetric difference
-    * (index.js:510-534). Each input is read once: both sides are tagged
-    * (1 = `sel`, 2 = `clicks`), unioned and grouped by
-    * (`compound`, `sel_key`), and a key is kept when only one tag occurs
-    * for it — the flag aggregate `Selection.dsClickToggle` uses. So a
-    * toggle adds only the scans of `clicks` to the selection's plan, and
-    * chained toggles never re-read an earlier input. The output is
-    * distinct, and NULL keys compare equal, as in EXCEPT.
+    * (index.js:510-534) — keys in exactly one of `sel` and `clicks`. The
+    * output is distinct, and NULL keys compare equal, as in EXCEPT.
     */
   def toggle(sel: DataFrame, clicks: DataFrame): DataFrame =
-    sel.select(col("compound"), col("sel_key"), lit(1).as("_tag"))
-      .union(clicks.select(col("compound"), col("sel_key"), lit(2).as("_tag")))
+    combine(sel, clicks)(_ =!= _)
+
+  private def box(data: DataFrame, pred: Column): DataFrame =
+    compile(Recipe.one(Input(data, pred)))
+
+  /** The selection whose formula is `op` of `a`'s and `b`'s formulas. */
+  private def combine(a: DataFrame, b: DataFrame)(op: (Column, Column) => Column): DataFrame = {
+    val (ra, rb) = (Recipe.of(a), Recipe.of(b))
+    val n = ra.inputs.size
+    compile(Recipe(ra.inputs ++ rb.inputs, fs => op(ra.keep(fs.take(n)), rb.keep(fs.drop(n)))))
+  }
+
+  /** One branch per distinct input frame (reference equality): the frame
+    * filtered by the OR of its inputs' predicates, projecting the keys and
+    * one flag per input — the row's predicate, or false for inputs over
+    * other frames. The union is grouped by key with `max` per flag, so a
+    * flag says whether some row of that key lies in its input, and `keep`
+    * of the flags decides the key. The recipe is tagged on the result's
+    * plan, where the next edit finds it.
+    */
+  private def compile(r: Recipe): DataFrame = {
+    val flags = r.inputs.indices.map(i => s"_in$i")
+    val frames = r.inputs.foldLeft(Vector.empty[DataFrame]) { (fs, in) =>
+      if (fs.exists(_ eq in.frame)) fs else fs :+ in.frame
+    }
+    val branches = frames.map { frame =>
+      frame.filter(r.inputs.filter(_.frame eq frame).map(_.pred).reduce(_ || _))
+        .select(col("compound") +: col("sel_key") +: r.inputs.zip(flags).map { case (in, f) =>
+          (if (in.frame eq frame) coalesce(in.pred, lit(false)) else lit(false)).as(f)
+        }: _*)
+    }
+    val seen = flags.map(f => max(f).as(f))
+    val out = branches.reduce(_ union _)
       .groupBy("compound", "sel_key")
-      .agg(min(col("_tag")).as("_lo"), max(col("_tag")).as("_hi"))
-      .filter(col("_lo") === col("_hi"))
+      .agg(seen.head, seen.tail: _*)
+      .filter(r.keep(flags.map(col)))
       .select("compound", "sel_key")
+    out.queryExecution.logical.setTagValue(GraftQC.RecipeTag, r)
+    out
+  }
 
   /** Per-key compound counts, the text-box view (index.js:746-755). */
   def counts(sel: DataFrame): DataFrame =
@@ -256,4 +299,25 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
 object GraftQC {
   /** A stored zoom window: x in the data's epoch units, y in value units. */
   final case class Limits(x0: Double, x1: Double, y0: Double, y1: Double)
+
+  /** One input of a selection: the keys of the rows of `frame` where `pred`
+    * holds. A box is a loaded frame with a rectangle predicate; any other
+    * key frame is opaque and enters whole. */
+  private final case class Input(frame: DataFrame, pred: Column)
+
+  /** A selection as a formula: a key is kept when `keep` holds of its
+    * flags, one per input, in order. */
+  private final case class Recipe(inputs: Seq[Input], keep: Seq[Column] => Column)
+
+  private object Recipe {
+    /** The selection of one input's keys. */
+    def one(in: Input): Recipe = Recipe(Seq(in), _.head)
+
+    /** The recipe GraftQC tagged on `sel`'s own plan; a frame it did not
+      * build, or one derived from such a frame, is one opaque input. */
+    def of(sel: DataFrame): Recipe =
+      sel.queryExecution.logical.getTagValue(RecipeTag).getOrElse(one(Input(sel, lit(true))))
+  }
+
+  private val RecipeTag = TreeNodeTag[Recipe]("graft.GraftQC.selection")
 }

@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The GraftQC session on a small series fixture written to a temp dir:
-  * load, rectangle and alt-drag selections, chained click toggles. Needs no
-  * reference checkout. */
+  * load, rectangle and alt-drag selections, chained click toggles, and
+  * selections mixing boxes with opaque key frames. Needs no reference
+  * checkout. */
 class GraftQCSessionSpec extends SparkSpec {
 
-  private val Compounds = Seq("ethane", "n butane", "propane")
+  // file names exercise URI decoding: a space, a '+' and a literal '%'
+  private val Compounds = Seq("ethane", "n butane", "propane", "c+d", "x%41")
   // 2005-01-01 00:00:00 UTC; keys are in corrected time (UTC-2)
   private val Base = 1104537600L
   private val PerCompound = 17
@@ -24,15 +26,16 @@ class GraftQCSessionSpec extends SparkSpec {
 
   /** One JSON array per compound. Every compound samples the same flasks at
     * the same times, so keys are shared across compounds, and flask F-5 is
-    * read twice within one minute, so it keys two rows of each compound. */
+    * read twice within one minute, so it keys two rows of each compound.
+    * Sample j is taken at latitude j. */
   private lazy val dir: Path = {
     val d = Files.createTempDirectory("graft-qc-session-")
     Compounds.zipWithIndex.foreach { case (c, i) =>
       val recs = (0 until PerCompound).map { j =>
-        (Base + j * Day, s"F-$j", 100.0 + 10 * j + i)
-      } :+ ((Base + 5 * Day + 20, "F-5", 500.0 + i))
-      val json = recs.map { case (epoch, salt, v) =>
-        s"""{"date": $epoch.0, "flask_number": "$salt", "value": $v, "lat": 10.0}"""
+        (Base + j * Day, s"F-$j", 100.0 + 10 * j + i, j)
+      } :+ ((Base + 5 * Day + 20, "F-5", 500.0 + i, 5))
+      val json = recs.map { case (epoch, salt, v, lat) =>
+        s"""{"date": $epoch.0, "flask_number": "$salt", "value": $v, "lat": $lat.0}"""
       }.mkString("[", ",\n", "]")
       Files.writeString(d.resolve(s"$c.json"), json)
     }
@@ -50,6 +53,14 @@ class GraftQCSessionSpec extends SparkSpec {
   private def rect(c: String, j0: Int, j1: Int): DataFrame =
     qc.rectSelect(data, c, at(j0 * Day), at(j1 * Day + 3600), 0.0, 1e9)
 
+  /** The keys `rect(c, j0, j1)` selects, from the fixture's layout alone. */
+  private def rectModel(c: String, j0: Int, j1: Int): Set[(String, String)] =
+    (j0 to j1.min(PerCompound - 1)).map { j =>
+      val minute = java.time.Instant.ofEpochSecond(Base - 7200 + j * Day).toString
+        .replace("T", " ").take(16)
+      (c, s"$minute F-$j")
+    }.toSet
+
   private def keys(df: DataFrame): Seq[(String, String)] =
     df.collect().toSeq.map(r => (r.getString(0), r.getString(1)))
 
@@ -64,8 +75,19 @@ class GraftQCSessionSpec extends SparkSpec {
     assert(out.toSet === symDiff(a, c))
   }
 
-  test("loadSeriesDir decodes file names, keys every row and runs no job") {
-    val group = s"load-${System.nanoTime}"
+  private def scans(df: DataFrame): Int =
+    df.queryExecution.analyzed.collectLeaves().count(_.isInstanceOf[LogicalRelation])
+
+  private val KeySchema =
+    StructType(Seq(StructField("compound", StringType), StructField("sel_key", StringType)))
+
+  private def keyFrame(rows: (String, String)*): DataFrame =
+    spark.createDataFrame(rows.map { case (c, k) => Row(c, k) }.asJava, KeySchema)
+
+  /** Runs `body` in a job group of its own, and reports whether any Spark
+    * job started in that group. */
+  private def jobsIn[T](body: => T): (T, Boolean) = {
+    val group = s"body-${System.nanoTime}"
     val marker = s"marker-${System.nanoTime}"
     val groups = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -73,22 +95,26 @@ class GraftQCSessionSpec extends SparkSpec {
         groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
     }
     spark.sparkContext.addSparkListener(listener)
-    val loaded = try {
-      spark.sparkContext.setJobGroup(group, "loadSeriesDir")
-      val df = qc.loadSeriesDir(dir.toString)
+    try {
+      spark.sparkContext.setJobGroup(group, "body")
+      val out = body
       spark.sparkContext.setJobGroup(marker, "marker")
       spark.range(1).count()
       // listener events arrive in order: once the marker job is seen, any
-      // job the load started has been seen too
+      // job the body started has been seen too
       val deadline = System.nanoTime + TimeUnit.SECONDS.toNanos(30)
       while (!groups.contains(marker) && System.nanoTime < deadline) Thread.sleep(20)
       assert(groups.contains(marker))
-      df
+      (out, groups.contains(group))
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(!groups.asScala.exists(_ == group), "loadSeriesDir ran a Spark job")
+  }
+
+  test("loadSeriesDir decodes file names, keys every row and runs no job") {
+    val (loaded, ranJob) = jobsIn(qc.loadSeriesDir(dir.toString))
+    assert(!ranJob, "loadSeriesDir ran a Spark job")
 
     val compounds = loaded.select("compound").distinct().collect().map(_.getString(0)).toSet
     assert(compounds === Compounds.toSet)
@@ -123,26 +149,109 @@ class GraftQCSessionSpec extends SparkSpec {
   }
 
   test("toggle treats NULL keys as equal, as EXCEPT does") {
-    val schema = StructType(Seq(StructField("compound", StringType), StructField("sel_key", StringType)))
-    def sel(rows: (String, String)*): DataFrame =
-      spark.createDataFrame(rows.map { case (c, k) => Row(c, k) }.asJava, schema)
-    val a = sel(("x", "k1"), ("x", null), (null, null))
-    val c = sel(("x", null), ("x", "k2"), ("y", null))
+    val a = keyFrame(("x", "k1"), ("x", null), (null, null))
+    val c = keyFrame(("x", null), ("x", "k2"), ("y", null))
     assert(keys(qc.toggle(a, c)).toSet === Set(("x", "k1"), (null, null), ("x", "k2"), ("y", null)))
     assertToggle(a, c)
   }
 
-  test("k chained toggles plan k + 2 file scans") {
+  test("a rect, an alt-drag and k chained toggles plan one file scan") {
     val k = 4
     var sel = qc.antiSelect(rect("ethane", 0, 12), rect("ethane", 3, 5))
-    var model = keys(sel).toSet
+    var model = rectModel("ethane", 0, 12) -- rectModel("ethane", 3, 5)
     (0 until k).foreach { i =>
-      val click = rect("ethane", 2 * i, 2 * i + 3)
-      model = (model -- keys(click)) ++ (keys(click).toSet -- model)
-      sel = qc.toggle(sel, click)
+      val click = rectModel("ethane", 2 * i, 2 * i + 3)
+      model = (model -- click) ++ (click -- model)
+      sel = qc.toggle(sel, rect("ethane", 2 * i, 2 * i + 3))
     }
-    val scans = sel.queryExecution.analyzed.collectLeaves().count(_.isInstanceOf[LogicalRelation])
-    assert(scans === k + 2)
+    assert(scans(sel) === 1)
     assert(keys(sel).toSet === model)
+  }
+
+  test("64 chained toggles match a set model") {
+    val rng = new scala.util.Random(7)
+    var sel = rect("propane", 0, 6)
+    var model = rectModel("propane", 0, 6)
+    (0 until 64).foreach { _ =>
+      val c = Compounds(rng.nextInt(Compounds.size))
+      val j0 = rng.nextInt(PerCompound)
+      val j1 = j0 + rng.nextInt(3)
+      val click = rectModel(c, j0, j1)
+      model = (model -- click) ++ (click -- model)
+      sel = qc.toggle(sel, rect(c, j0, j1))
+    }
+    val out = keys(sel)
+    assert(out.size === out.toSet.size)
+    assert(out.toSet === model)
+    assert(scans(sel) === 1)
+  }
+
+  test("boxes mix with opaque key frames") {
+    assert(keys(rect("c+d", 1, 4)).toSet === rectModel("c+d", 1, 4))
+    // an imported selection, toggled and trimmed with boxes
+    val imported = qc.importSelections(qc.exportJson(rect("ethane", 0, 8)))
+    val t = qc.antiSelect(qc.toggle(imported, rect("ethane", 5, 12)), rect("ethane", 11, 11))
+    assert(keys(t).toSet ===
+      ((rectModel("ethane", 0, 4) ++ rectModel("ethane", 9, 12)) -- rectModel("ethane", 11, 11)))
+    // a unionByName of two compounds' rects is opaque: read once, whole
+    val both = rect("ethane", 2, 6).unionByName(rect("x%41", 0, 3))
+    val mixed = qc.antiSelect(qc.toggle(both, rect("ethane", 4, 9)), rect("x%41", 2, 2))
+    assert(keys(mixed).toSet === rectModel("ethane", 2, 3) ++ rectModel("ethane", 7, 9) ++
+      rectModel("x%41", 0, 1) ++ rectModel("x%41", 3, 3))
+    // NULL keys: the frame of the NULL toggle test against a box
+    val nulls = keyFrame(("x", null), (null, null), ("ethane", null), ("ethane", "k1"))
+    val withNulls = qc.antiSelect(qc.toggle(nulls, rect("ethane", 0, 2)), keyFrame((null, null)))
+    assert(keys(withNulls).toSet ===
+      Set(("x", null), ("ethane", null), ("ethane", "k1")) ++ rectModel("ethane", 0, 2))
+  }
+
+  test("boxes over two loaded frames plan two scans") {
+    val other = qc.loadSeriesDir(dir.toString)
+    val sel = qc.toggle(rect("ethane", 0, 6),
+      qc.rectSelect(other, "ethane", at(4 * Day), at(9 * Day + 3600), 0.0, 1e9))
+    assert(scans(sel) === 2)
+    assert(keys(sel).toSet === rectModel("ethane", 0, 3) ++ rectModel("ethane", 7, 9))
+  }
+
+  test("an alternate-axis box composes with a time-plane box") {
+    // lat j on day j: the (lat, value) box covers days 3-8, except the
+    // second F-5 read (value 500+) — its key is selected by day 5's first read
+    val byAxis = qc.rectSelectAxes(data, "n butane", "lat", 3.0, 8.0, "value", 0.0, 400.0)
+    assert(keys(byAxis).toSet === rectModel("n butane", 3, 8))
+    val manual = data.filter(col("compound") === "n butane" &&
+        col("lat") >= 3.0 && col("lat") <= 8.0 && col("value") <= 400.0)
+      .select("compound", "sel_key").distinct()
+    assert(keys(manual).toSet === keys(byAxis).toSet)
+    val t = qc.toggle(qc.antiSelect(rect("n butane", 0, 12), byAxis), rect("n butane", 6, 14))
+    assert(keys(t).toSet === rectModel("n butane", 0, 2) ++ rectModel("n butane", 6, 8) ++
+      rectModel("n butane", 13, 14))
+    assert(scans(t) === 1)
+    assert(keys(qc.toggle(byAxis, byAxis)).isEmpty)
+  }
+
+  test("antiSelect output is distinct and treats NULL keys as equal") {
+    val a = keyFrame(("x", "k1"), ("x", "k1"), ("x", null), ("x", null), (null, null), ("y", "k2"))
+    val b = keyFrame(("x", null), ("y", "k2"), ("z", "k3"))
+    val out = keys(qc.antiSelect(a, b))
+    assert(out.size === out.toSet.size, "antiSelect output is not distinct")
+    assert(out.toSet === Set(("x", "k1"), (null, null)))
+    val dup = qc.antiSelect(rect("propane", 0, 9).union(rect("propane", 0, 9)), rect("propane", 3, 4))
+    assert(keys(dup).sorted === (rectModel("propane", 0, 9) -- rectModel("propane", 3, 4)).toSeq.sorted)
+  }
+
+  test("building a 6-edit chain runs no job") {
+    val day6 = rectModel("ethane", 6, 6).head._2
+    val (chain, ranJob) = jobsIn {
+      var cur = rect("ethane", 0, 10)
+      cur = qc.antiSelect(cur, rect("ethane", 2, 3))
+      cur = qc.toggle(cur, rect("ethane", 2, 2))
+      cur = qc.toggle(cur, qc.rectSelectAxes(data, "ethane", "lat", 12.0, 14.0, "value", 0.0, 1e9))
+      cur = qc.antiSelect(cur, qc.importSelections(s"""{"$day6": ["ethane"]}"""))
+      qc.toggle(cur, rect("propane", 1, 1))
+    }
+    assert(!ranJob, "building a selection ran a Spark job")
+    assert(keys(chain).toSet ===
+      rectModel("ethane", 0, 10) -- rectModel("ethane", 3, 3) -- rectModel("ethane", 6, 6) ++
+      rectModel("ethane", 12, 14) ++ rectModel("propane", 1, 1))
   }
 }
