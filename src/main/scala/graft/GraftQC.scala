@@ -3,8 +3,7 @@ package graft
 import java.net.URI
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Selection
 import graft.sources.Tables
@@ -28,13 +27,13 @@ import graft.sources.Tables
   * example JSON and on a cluster against years of parquet. A selection is
   * kept as a formula over its inputs: rectangles over a loaded frame, and
   * opaque key frames (imports, auto-QC output, anything else). However long
-  * the chain of rect / alt-drag / click edits, it compiles to one scan per
+  * the chain of rect / alt-drag / click edits, it plans one scan per
   * loaded frame, one read of each opaque input and one aggregate. The
   * output is distinct, NULL keys compare equal, and building a selection
-  * runs no Spark job.
+  * runs no Spark job. The builders are `Selection.box` / `anti` /
+  * `toggle`, which the registry's `ds_*` selection queries use too.
   */
 class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
-  import GraftQC.{Input, Recipe}
 
   /** Load every `<compound>.json` in a directory as one keyed DataFrame —
     * compound names come from filenames, exactly like the reference's
@@ -46,7 +45,11 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     val withFile = spark.read
       .schema(Tables.seriesSchema)
       .option("multiLine", "true")
-      .json(s"$dir/*.json")
+      // a name filter, not a "$dir/*.json" glob: Spark probes the path it
+      // is given for a streaming-sink log, and on a glob path that probe
+      // fails and logs a warning with a stack trace
+      .option("pathGlobFilter", "*.json")
+      .json(dir)
       .withColumn("_file", input_file_name())
     // input_file_name() is a percent-encoded URI ("n butane" → "n%20butane"),
     // and so is every entry of inputFiles — take each file's name from its
@@ -69,7 +72,7 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     */
   def rectSelect(data: DataFrame, compound: String,
       t0: String, t1: String, v0: Double, v1: Double): DataFrame =
-    box(data, col("compound") === compound &&
+    Selection.box(data, col("compound") === compound &&
       col("cts") >= lit(t0).cast("timestamp") && col("cts") <= lit(t1).cast("timestamp") &&
       col("value") >= v0 && col("value") <= v1)
 
@@ -83,7 +86,7 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
   def rectSelectAxes(data: DataFrame, compound: String,
       xCol: String, x0: Double, x1: Double,
       yCol: String, y0: Double, y1: Double): DataFrame =
-    box(data, col("compound") === compound &&
+    Selection.box(data, col("compound") === compound &&
       col(xCol) >= x0 && col(xCol) <= x1 &&
       col(yCol) >= y0 && col(yCol) <= y1)
 
@@ -91,54 +94,13 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * keys in `sel` and not in `box`. Like EXCEPT, the output is distinct
     * and NULL keys compare equal.
     */
-  def antiSelect(sel: DataFrame, box: DataFrame): DataFrame =
-    combine(sel, box)((a, b) => a && !b)
+  def antiSelect(sel: DataFrame, box: DataFrame): DataFrame = Selection.anti(sel, box)
 
   /** Click-toggle semantics as a set op: symmetric difference
     * (index.js:510-534) — keys in exactly one of `sel` and `clicks`. The
     * output is distinct, and NULL keys compare equal, as in EXCEPT.
     */
-  def toggle(sel: DataFrame, clicks: DataFrame): DataFrame =
-    combine(sel, clicks)(_ =!= _)
-
-  private def box(data: DataFrame, pred: Column): DataFrame =
-    compile(Recipe.one(Input(data, pred)))
-
-  /** The selection whose formula is `op` of `a`'s and `b`'s formulas. */
-  private def combine(a: DataFrame, b: DataFrame)(op: (Column, Column) => Column): DataFrame = {
-    val (ra, rb) = (Recipe.of(a), Recipe.of(b))
-    val n = ra.inputs.size
-    compile(Recipe(ra.inputs ++ rb.inputs, fs => op(ra.keep(fs.take(n)), rb.keep(fs.drop(n)))))
-  }
-
-  /** One branch per distinct input frame (reference equality): the frame
-    * filtered by the OR of its inputs' predicates, projecting the keys and
-    * one flag per input — the row's predicate, or false for inputs over
-    * other frames. The union is grouped by key with `max` per flag, so a
-    * flag says whether some row of that key lies in its input, and `keep`
-    * of the flags decides the key. The recipe is tagged on the result's
-    * plan, where the next edit finds it.
-    */
-  private def compile(r: Recipe): DataFrame = {
-    val flags = r.inputs.indices.map(i => s"_in$i")
-    val frames = r.inputs.foldLeft(Vector.empty[DataFrame]) { (fs, in) =>
-      if (fs.exists(_ eq in.frame)) fs else fs :+ in.frame
-    }
-    val branches = frames.map { frame =>
-      frame.filter(r.inputs.filter(_.frame eq frame).map(_.pred).reduce(_ || _))
-        .select(col("compound") +: col("sel_key") +: r.inputs.zip(flags).map { case (in, f) =>
-          (if (in.frame eq frame) coalesce(in.pred, lit(false)) else lit(false)).as(f)
-        }: _*)
-    }
-    val seen = flags.map(f => max(f).as(f))
-    val out = branches.reduce(_ union _)
-      .groupBy("compound", "sel_key")
-      .agg(seen.head, seen.tail: _*)
-      .filter(r.keep(flags.map(col)))
-      .select("compound", "sel_key")
-    out.queryExecution.logical.setTagValue(GraftQC.RecipeTag, r)
-    out
-  }
+  def toggle(sel: DataFrame, clicks: DataFrame): DataFrame = Selection.toggle(sel, clicks)
 
   /** Per-key compound counts, the text-box view (index.js:746-755). */
   def counts(sel: DataFrame): DataFrame =
@@ -159,11 +121,11 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     Selection.importSelections(spark, json)
 
   /** README's "automated filtering": drop selected points from the raw
-    * data. Selection side broadcast — the raw data never shuffles.
+    * data. No build side is forced: an imported selection is broadcast by
+    * its size estimate, and auto-QC output, which grows with the data, is
+    * planned by its size like any other join input.
     */
-  def applyFilter(data: DataFrame, sel: DataFrame): DataFrame =
-    data.join(broadcast(sel.select("compound", "sel_key")),
-      Seq("compound", "sel_key"), "left_anti")
+  def applyFilter(data: DataFrame, sel: DataFrame): DataFrame = Selection.applyFilter(data, sel)
 
   /** Materialize the QC'd dataset as compound-partitioned parquet — the
     * batch analogue of the reference's per-compound JSON files, and the
@@ -299,25 +261,4 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
 object GraftQC {
   /** A stored zoom window: x in the data's epoch units, y in value units. */
   final case class Limits(x0: Double, x1: Double, y0: Double, y1: Double)
-
-  /** One input of a selection: the keys of the rows of `frame` where `pred`
-    * holds. A box is a loaded frame with a rectangle predicate; any other
-    * key frame is opaque and enters whole. */
-  private final case class Input(frame: DataFrame, pred: Column)
-
-  /** A selection as a formula: a key is kept when `keep` holds of its
-    * flags, one per input, in order. */
-  private final case class Recipe(inputs: Seq[Input], keep: Seq[Column] => Column)
-
-  private object Recipe {
-    /** The selection of one input's keys. */
-    def one(in: Input): Recipe = Recipe(Seq(in), _.head)
-
-    /** The recipe GraftQC tagged on `sel`'s own plan; a frame it did not
-      * build, or one derived from such a frame, is one opaque input. */
-    def of(sel: DataFrame): Recipe =
-      sel.queryExecution.logical.getTagValue(RecipeTag).getOrElse(one(Input(sel, lit(true))))
-  }
-
-  private val RecipeTag = TreeNodeTag[Recipe]("graft.GraftQC.selection")
 }

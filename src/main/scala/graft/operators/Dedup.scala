@@ -161,13 +161,6 @@ object Dedup {
   private[graft] def buildLsh(spark: SparkSession, d: String): LshBuild =
     buildLshFrom(Tables.documents(spark, d))
 
-  /** DataFrame-in variant of the near-dup pipeline for library callers
-    * composing their own jobs: `docs` needs (doc_id, text); the returned
-    * plans are unpersisted — persist/checkpoint the stage outputs you reuse
-    * (the (SparkSession, dir) query entries do exactly that via the memo).
-    */
-  def nearDupPairsFrom(docs: DataFrame): DataFrame = buildLshFrom(docs).verified
-
   private[graft] def buildLshFrom(docs: DataFrame): LshBuild = {
     val sh = shingles(docs)
     // signatures via the native minhash_sig expression: the whole 16-perm

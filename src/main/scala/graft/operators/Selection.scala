@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -27,10 +28,10 @@ import graft.sources.Tables
   *    mid ± limit/2 (index.js:230-240, config xZoomLimit = 31 days)
   *  - numeric axis rounding floor/ceil to yAxisRound = 50 (index.js:277-317)
   *
-  * Scale design: selections are DataFrames of (compound, sel_key) — set
-  * union/difference/toggle are distributed set ops partitioned by key, and
-  * `ds_apply_filter` is a broadcast left-anti join (a selection list is
-  * always ≪ the raw data, so the fact table never shuffles).
+  * Scale design: a selection is a DataFrame of distinct (compound, sel_key)
+  * keys, built for the registry and for [[graft.GraftQC]] by one compiler
+  * ([[box]], [[anti]], [[toggle]]): edits over one keyed frame plan one scan
+  * of it and one aggregate. [[applyFilter]] forces no build side.
   */
 object Selection {
 
@@ -84,6 +85,89 @@ object Selection {
       .withColumn("cts", timestamp_seconds((col("epoch") + lit(3600L * utcOffsetHours)).cast("long")))
       .withColumn("key_m", date_format(col("cts"), "yyyy-MM-dd HH:mm"))
       .withColumn("sel_key", concat(col("key_m"), lit(" "), col("salt")))
+
+  // --- selection compiler -------------------------------------------------
+  /** One input of a selection: the keys of the rows of `frame` where `pred`
+    * holds. A box is a keyed frame with a rectangle predicate; any other
+    * key frame is opaque and enters whole. */
+  private final case class Input(frame: DataFrame, pred: Column)
+
+  /** A selection as a formula: a key is kept when `keep` holds of its
+    * flags, one per input, in order. */
+  private final case class Recipe(inputs: Seq[Input], keep: Seq[Column] => Column)
+
+  private object Recipe {
+    /** The recipe tagged on `sel`'s own plan; a frame [[box]] or
+      * [[combine]] did not build, or one derived from such a frame, is one
+      * opaque input. */
+    def of(sel: DataFrame): Recipe = sel.queryExecution.logical.getTagValue(RecipeTag)
+      .getOrElse(Recipe(Seq(Input(sel, lit(true))), _.head))
+  }
+
+  private val RecipeTag = TreeNodeTag[Recipe]("graft.operators.Selection.selection")
+
+  /** Rectangle selection (index.js:243-254): the distinct keys of the rows
+    * of `frame` where `pred` holds. Selections built from boxes over one
+    * frame instance scan it once, so build a query's boxes over one frame. */
+  private[graft] def box(frame: DataFrame, pred: Column): DataFrame =
+    tagged(frame.filter(pred).select("compound", "sel_key").distinct(),
+      Recipe(Seq(Input(frame, pred)), _.head))
+
+  /** Alt-drag (index.js:253): keys in `a` and not in `b`. Like EXCEPT, the
+    * output is distinct and NULL keys compare equal. */
+  private[graft] def anti(a: DataFrame, b: DataFrame): DataFrame =
+    combine(a, b)((x, y) => x && !y)
+
+  /** Click toggle (index.js:510-534): the symmetric difference, keys in
+    * exactly one of `a` and `b`. Distinct, NULL keys equal. */
+  private[graft] def toggle(a: DataFrame, b: DataFrame): DataFrame =
+    combine(a, b)(_ =!= _)
+
+  /** The selection whose formula is `op` of `a`'s and `b`'s formulas. */
+  private def combine(a: DataFrame, b: DataFrame)(op: (Column, Column) => Column): DataFrame = {
+    val (ra, rb) = (Recipe.of(a), Recipe.of(b))
+    val n = ra.inputs.size
+    compile(Recipe(ra.inputs ++ rb.inputs, fs => op(ra.keep(fs.take(n)), rb.keep(fs.drop(n)))))
+  }
+
+  /** One branch per distinct input frame (reference equality): the frame
+    * filtered by the OR of its inputs' predicates, projecting the keys and
+    * one flag per input — the row's predicate, or false for inputs over
+    * other frames. The union is grouped by key with `max` per flag, so a
+    * flag says whether some row of that key lies in its input, and `keep`
+    * of the flags decides the key. Building runs no Spark job.
+    */
+  private def compile(r: Recipe): DataFrame = {
+    val flags = r.inputs.indices.map(i => s"_in$i")
+    val frames = r.inputs.foldLeft(Vector.empty[DataFrame]) { (fs, in) =>
+      if (fs.exists(_ eq in.frame)) fs else fs :+ in.frame
+    }
+    val branches = frames.map { frame =>
+      frame.filter(r.inputs.filter(_.frame eq frame).map(_.pred).reduce(_ || _))
+        .select(col("compound") +: col("sel_key") +: r.inputs.zip(flags).map { case (in, f) =>
+          (if (in.frame eq frame) coalesce(in.pred, lit(false)) else lit(false)).as(f)
+        }: _*)
+    }
+    val seen = flags.map(f => max(f).as(f))
+    val out = branches.reduce(_ union _)
+      .groupBy("compound", "sel_key")
+      .agg(seen.head, seen.tail: _*)
+      .filter(r.keep(flags.map(col)))
+      .select("compound", "sel_key")
+    tagged(out, r)
+  }
+
+  /** `sel` with `r` tagged on its own plan, where the next edit finds it. */
+  private def tagged(sel: DataFrame, r: Recipe): DataFrame = {
+    sel.queryExecution.logical.setTagValue(RecipeTag, r)
+    sel
+  }
+
+  /** Drop a selection's keys from `data` (the README's automated
+    * filtering). No build side is forced: a selection can grow with the
+    * data, and the planner broadcasts one whose size estimate is small. */
+  def applyFilter(data: DataFrame, sel: DataFrame): DataFrame =
+    data.join(sel.select("compound", "sel_key"), Seq("compound", "sel_key"), "left_anti")
 
   /** Render a selection DataFrame as the reference's sorted JSON export —
     * BYTE-IDENTICAL to `getJSONfile` (index.js:818-836): JS
@@ -180,7 +264,6 @@ object Selection {
     col("compound") === "error" &&
       col("cts") >= ts("2024-01-08 00:00:00") && col("cts") <= ts("2024-01-18 00:00:00") &&
       col("value") >= 100.0 && col("value") <= 300.0
-  private def rectA(df: DataFrame): DataFrame = df.filter(rectAPred)
   private val RectASqlWhere =
     """compound = 'error'
       |  AND cts >= TIMESTAMP '2024-01-08 00:00:00' AND cts <= TIMESTAMP '2024-01-18 00:00:00'
@@ -188,7 +271,7 @@ object Selection {
 
   // --- ds_rect_select -----------------------------------------------------
   def dsRectSelect(spark: SparkSession, d: String): DataFrame =
-    rectA(keyed(spark, d)).select("compound", "sel_key").distinct().orderBy("sel_key")
+    box(keyed(spark, d), rectAPred).orderBy("sel_key")
 
   val dsRectSelectSql: String = KeyedCte +
     s"""
@@ -198,15 +281,13 @@ object Selection {
 
   // --- ds_rect_antiselect -------------------------------------------------
   // Selection from rect A minus the points inside alt-rect B
-  // (index.js:253 removeOnDupe, 516-526).
+  // (index.js:253 removeOnDupe, 516-526). Both boxes are over one keyed
+  // frame, so this is one scan and one aggregate.
   def dsRectAntiselect(spark: SparkSession, d: String): DataFrame = {
     val k = keyed(spark, d)
-    val a = rectA(k).select("compound", "sel_key").distinct()
-    val b = k.filter(
-      col("cts") >= ts("2024-01-10 00:00:00") && col("cts") <= ts("2024-01-14 00:00:00") &&
-        col("value") >= 150.0 && col("value") <= 300.0)
-      .select("compound", "sel_key").distinct()
-    a.join(b, Seq("compound", "sel_key"), "left_anti").orderBy("sel_key")
+    val rectB = col("cts") >= ts("2024-01-10 00:00:00") && col("cts") <= ts("2024-01-14 00:00:00") &&
+      col("value") >= 150.0 && col("value") <= 300.0
+    anti(box(k, rectAPred), box(k, rectB)).orderBy("sel_key")
   }
 
   val dsRectAntiselectSql: String = KeyedCte +
@@ -221,26 +302,15 @@ object Selection {
 
   // --- ds_click_toggle ----------------------------------------------------
   // Symmetric difference: clicking an already-selected point removes it,
-  // clicking an unselected one adds it (index.js:510-534).
+  // clicking an unselected one adds it (index.js:510-534). Both boxes are
+  // over one keyed frame, so the toggle is one scan and one aggregate; the
+  // oracle keeps the textbook EXCEPT/UNION form.
   def dsClickToggle(spark: SparkSession, d: String): DataFrame = {
-    // ONE corpus pass (r17): the EXCEPT/UNION formulation re-evaluated
-    // each set per set-op — four scans of the keyed stream for a
-    // symmetric difference (at sf10). Both memberships are
-    // row-level predicates over the same scan, so one combinable
-    // (sel_key → max flag) aggregate decides "in exactly one set"; the
-    // oracle keeps the textbook EXCEPT/UNION form.
-    val clickPred = col("compound") === "error" && col("event_id") % 7 === 0 &&
+    val k = keyed(spark, d)
+    val click = col("compound") === "error" && col("event_id") % 7 === 0 &&
       col("cts") >= ts("2024-01-05 00:00:00") && col("cts") <= ts("2024-01-25 00:00:00") &&
       col("value") >= 50.0 && col("value") <= 320.0
-    keyed(spark, d)
-      .select(col("sel_key"),
-        when(rectAPred, 1L).otherwise(0L).as("a"),
-        when(clickPred, 1L).otherwise(0L).as("c"))
-      .filter(col("a") + col("c") > 0L)
-      .groupBy("sel_key").agg(max(col("a")).as("a"), max(col("c")).as("c"))
-      .filter(col("a") =!= col("c"))
-      .select(lit("error").as("compound"), col("sel_key"))
-      .orderBy("sel_key")
+    toggle(box(k, rectAPred), box(k, click)).orderBy("sel_key")
   }
 
   val dsClickToggleSql: String = KeyedCte + s""",
@@ -257,8 +327,7 @@ object Selection {
 
   // selection used by the by-date / counts / export / apply / clear family:
   // outlier box value > 280 across all compounds (salted keys).
-  private def outlierSel(spark: SparkSession, d: String): DataFrame =
-    keyed(spark, d).filter(col("value") > 280.0)
+  private def outlierPred: Column = col("value") > 280.0
   private val OutlierSqlWhere = "value > 280.0"
 
   // --- ds_sel_by_date -----------------------------------------------------
@@ -266,7 +335,7 @@ object Selection {
   // (index.js:797-813) keyed by the minute key (no salt → collisions across
   // compounds are the interesting part).
   def dsSelByDate(spark: SparkSession, d: String): DataFrame =
-    outlierSel(spark, d).select("key_m", "compound").distinct()
+    keyed(spark, d).filter(outlierPred).select("key_m", "compound").distinct()
       .groupBy("key_m")
       .agg(array_join(sort_array(collect_set(col("compound"))), ",").as("compounds"))
       .orderBy("key_m")
@@ -279,7 +348,7 @@ object Selection {
   // --- ds_sel_counts ------------------------------------------------------
   // Text box shows `key (countOfCompounds)` (index.js:746-755).
   def dsSelCounts(spark: SparkSession, d: String): DataFrame =
-    outlierSel(spark, d).select("key_m", "compound").distinct()
+    keyed(spark, d).filter(outlierPred).select("key_m", "compound").distinct()
       .groupBy("key_m").agg(count(lit(1)).as("ct"))
       .select(col("key_m"), col("ct"),
         concat(col("key_m"), lit(" ("), col("ct").cast("string"), lit(")")).as("display"))
@@ -294,7 +363,7 @@ object Selection {
   // --- ds_sel_export ------------------------------------------------------
   // Sorted export: salted key → sorted [compounds] (index.js:818-836).
   def dsSelExport(spark: SparkSession, d: String): DataFrame =
-    outlierSel(spark, d).select("sel_key", "compound").distinct()
+    box(keyed(spark, d), outlierPred)
       .groupBy("sel_key")
       .agg(array_join(sort_array(collect_set(col("compound"))), ",").as("compounds"))
       .orderBy("sel_key")
@@ -305,19 +374,12 @@ object Selection {
     |FROM s GROUP BY sel_key ORDER BY sel_key""".stripMargin
 
   // --- ds_apply_filter ----------------------------------------------------
-  // The README's downstream purpose: apply the exported selection list to
-  // the raw data (anti-join) to produce the QC'd dataset. NO forced
-  // broadcast: this instantiation's selection is MACHINE-generated
-  // (ds_outlier_mad flags ~11% of the corpus here), so its size scales
-  // with the data — a hint would pin an O(corpus) build side at 100 TB.
-  // AQE broadcasts it when the observed size is small and shuffles
-  // otherwise, exactly like dedup_apply's anti-join. The analyst-sized
-  // GraftQC.applyFilter facade keeps its hint: ITS selection is bounded by
-  // the facade's hand-curated-list contract, not by the data.
+  // The README's downstream purpose: apply the selection list to the raw
+  // data to produce the QC'd dataset. This machine-generated selection
+  // grows with the data, so AQE broadcasts it only while it is small.
   def dsApplyFilter(spark: SparkSession, d: String): DataFrame = {
     val k = keyed(spark, d)
-    val sel = outlierSel(spark, d).select("compound", "sel_key").distinct()
-    k.join(sel, Seq("compound", "sel_key"), "left_anti")
+    applyFilter(k, box(k, outlierPred))
       .select("event_id", "compound", "sel_key", "value")
       .orderBy("event_id")
   }
@@ -361,8 +423,7 @@ object Selection {
   // broadcast hint on the imported side is the designed plan at any SF.
   def dsSelImport(spark: SparkSession, d: String): DataFrame = {
     val k = keyed(spark, d)
-    val sel = k.filter(col("value") > 320.0).select("compound", "sel_key").distinct()
-    val json = exportJson(sel)
+    val json = exportJson(box(k, col("value") > 320.0))
     val imported = importSelections(spark, json).withColumn("_hit", lit(1))
     k.join(broadcast(imported), Seq("compound", "sel_key"), "left")
       .groupBy("compound")
@@ -420,8 +481,7 @@ object Selection {
   // consistent — keys whose compound set empties disappear
   // (index.js:843-860).
   def dsClearCompound(spark: SparkSession, d: String): DataFrame =
-    outlierSel(spark, d).filter(col("compound") =!= "error")
-      .select("sel_key", "compound").distinct()
+    box(keyed(spark, d), outlierPred && col("compound") =!= "error")
       .groupBy("sel_key")
       .agg(array_join(sort_array(collect_set(col("compound"))), ",").as("compounds"),
         count(lit(1)).as("ct"))
@@ -882,29 +942,26 @@ object Selection {
     * `k` needs (`idCol`, compound, value) where `idCol` is any column that
     * totally orders ties deterministically.
     *
-    * Shape (r14 replan, the sf1 weak set): both medians are order
-    * statistics, so they come from the per-compound VALUE HISTOGRAM — the
-    * median is the smallest value whose cumulative count reaches
-    * (n+1) div 2, and the deviation median is the same statistic over the
-    * |v − med| histogram derived from the value histogram (counts merge,
-    * the corpus is never re-ranked). The corpus pays one
-    * map-side-combinable groupBy (per-partition partials capped by the
-    * value lattice — measurement data is lattice-bounded, the
-    * ds_histogram argument) plus one final scan that attaches (med, mad)
-    * and filters; the r10 window-chain plan row_number'd every corpus row
-    * inside |compounds| partitions, twice. For a pathological caller
-    * whose values are all-distinct the histogram degenerates to corpus
-    * size and this matches the old plan's cost; it never exceeds it.
+    * Shape: both medians are order statistics, so they come from the
+    * per-compound VALUE HISTOGRAM — the median is the smallest value whose
+    * cumulative count reaches (n+1) div 2, and the deviation median is the
+    * same statistic over the |v − med| histogram derived from the value
+    * histogram (counts merge, no corpus row is ranked). The corpus pays
+    * one map-side-combinable groupBy (per-partition partials capped by the
+    * value lattice — measurement data is lattice-bounded, the ds_histogram
+    * argument) plus one final scan that attaches (med, mad) and filters.
+    * If every value is distinct the histogram is corpus-sized, and the
+    * cost is that of ranking the corpus by value once.
     *
-    * The value histogram takes a LAZY localCheckpoint (median derivation
-    * + deviation histogram both consume it); blocks materialize inside
-    * the first action, so plan construction itself runs no jobs.
+    * The median and the deviation histogram both read the value
+    * histogram, inside the one broadcast `madT` subtree, so its shuffle
+    * runs once and the second read is a reused exchange. Nothing is
+    * persisted, so a call leaves no RDD behind, and building the plan runs
+    * no job.
     */
   def outlierMadFrom(k: DataFrame, idCol: String): DataFrame = {
-    // report-sized after the corpus agg; checkpointed because the med
-    // derivation and the dev histogram both consume it
+    // report-sized after the corpus agg
     val hist = k.groupBy("compound", "value").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
     val wAll = Window.partitionBy("compound")
     val cw = Window.partitionBy("compound").orderBy("value")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -926,10 +983,9 @@ object Selection {
       .agg(max(col("med")).as("med"),
         min(when(col("cum") >= expr("(n + 1) div 2"), col("dev"))).as("mad"))
     // broadcast: |compounds|-row aggregate (the dsHistogram bounds
-    // contract). r17: the hint became REQUIRED once the corpus side reads
-    // from the keyed-stream memo — the cached size is small enough that
-    // AQE otherwise broadcast-slips the CORPUS side (BuildLeft, the q5/q9
-    // class: fine at sf1, a driver-killer at 100 TB)
+    // contract). The hint is required: when `k` reads the keyed-stream
+    // memo, its cached size can be small enough that AQE would otherwise
+    // broadcast the corpus side, which does not fit a driver at 100 TB
     k.join(broadcast(madT), Seq("compound"))
       .withColumn("dev", abs(col("value") - col("med")))
       .filter(col("dev") > lit(3.0) * col("mad"))

@@ -1081,7 +1081,7 @@ class AnalyticsSpec extends SparkSpec {
       // guard on: the clean corpus still constructs (and computes) fine
       assert(Analytics.qPromoShare(spark, sf).collect().nonEmpty)
       // guard on + violating corpus: loud failure at construction
-      val dir = java.nio.file.Files.createTempDirectory("graft-fkviol-").toString
+      val dir = scratchDir("fkviol-").toString
       import spark.implicits._
       graft.sources.Tables.lineitem(spark, sf)
         .withColumn("l_partkey", col("l_partkey") + lit(1000000000L))

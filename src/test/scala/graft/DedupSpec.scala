@@ -46,7 +46,7 @@ class DedupSpec extends SparkSpec {
     // pathological corpus: 200 byte-identical docs — every band bucket they
     // share holds 200 > cap(50) members, so the guard must refuse the
     // C(200,2) = 19,900 garbage pairs; exact dedup handles true duplicates
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew-").toString
+    val dir = scratchDir("skew-").toString
     import spark.implicits._
     val hot = (0L until 200L).map(i =>
       (i, "the same exact boilerplate text repeated verbatim on every mirror page of the crawl"))

@@ -7,7 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -29,7 +34,7 @@ class GraftQCSessionSpec extends SparkSpec {
     * read twice within one minute, so it keys two rows of each compound.
     * Sample j is taken at latitude j. */
   private lazy val dir: Path = {
-    val d = Files.createTempDirectory("graft-qc-session-")
+    val d = scratchDir("qc-session-")
     Compounds.zipWithIndex.foreach { case (c, i) =>
       val recs = (0 until PerCompound).map { j =>
         (Base + j * Day, s"F-$j", 100.0 + 10 * j + i, j)
@@ -77,6 +82,13 @@ class GraftQCSessionSpec extends SparkSpec {
 
   private def scans(df: DataFrame): Int =
     df.queryExecution.analyzed.collectLeaves().count(_.isInstanceOf[LogicalRelation])
+
+  /** Every node of an executed plan, through AQE's query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
 
   private val KeySchema =
     StructType(Seq(StructField("compound", StringType), StructField("sel_key", StringType)))
@@ -253,5 +265,35 @@ class GraftQCSessionSpec extends SparkSpec {
     assert(keys(chain).toSet ===
       rectModel("ethane", 0, 10) -- rectModel("ethane", 3, 3) -- rectModel("ethane", 6, 6) ++
       rectModel("ethane", 12, 14) ++ rectModel("propane", 1, 1))
+  }
+
+  test("applyFilter broadcasts an imported selection and drops exactly its keys") {
+    // day 5 holds the two F-5 reads that share a key
+    val picked = rectModel("ethane", 3, 5) ++ rectModel("c+d", 0, 0) ++ rectModel("n butane", 16, 16)
+    val json = picked.groupBy(_._2).map { case (key, cs) =>
+      cs.map(c => "\"" + c._1 + "\"").mkString("\"" + key + "\": [", ", ", "]")
+    }.mkString("{", ", ", "}")
+    val filtered = qc.applyFilter(data, qc.importSelections(json))
+    val kept = keys(filtered.select("compound", "sel_key"))
+    val all = keys(data.select("compound", "sel_key"))
+    assert(all.size - kept.size === picked.size + 1)
+    assert(kept.sorted === all.filterNot(picked).sorted)
+    assert(nodes(filtered.queryExecution.executedPlan).exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }, "the imported selection was not broadcast")
+  }
+
+  test("outliers reuses the value histogram's shuffle and persists nothing") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = qc.outliers(data)
+    // per compound, only the second F-5 read (500 + i) is > 3 MADs out
+    val flagged = out.collect().map(_.getAs[Double]("value")).sorted.toSeq
+    assert(flagged === Compounds.indices.map(500.0 + _))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
+    assert(nodes(out.queryExecution.executedPlan).exists {
+      case r: ReusedExchangeExec => r.child.isInstanceOf[ShuffleExchangeLike]
+      case _ => false
+    }, "the value histogram was computed twice")
   }
 }

@@ -42,7 +42,7 @@ class GraftQCSpec extends SparkSpec {
   test("writeFiltered lays out compound-partitioned parquet and survives a pruned read") {
     val sel = qc.rectSelect(data, "ethane",
       "2004-10-01 00:00:00", "2009-01-01 00:00:00", 2000.0, 1e9)
-    val out = java.nio.file.Files.createTempDirectory("graft-qcd-").toString
+    val out = scratchDir("qcd-").toString
     qc.writeFiltered(data, sel, out)
     // physical layout: one directory per compound
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)

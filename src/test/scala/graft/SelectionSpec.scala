@@ -45,6 +45,14 @@ class SelectionSpec extends SparkSpec {
     assert(t.except(expected).count() === 0 && expected.except(t).count() === 0)
   }
 
+  test("rect anti-select and click toggle each read events once") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    Seq("ds_rect_antiselect", "ds_click_toggle").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.analyzed
+      assert(plan.collectLeaves().count(_.isInstanceOf[LogicalRelation]) === 1, name)
+    }
+  }
+
   test("apply_filter removes exactly the selected (compound, key) rows") {
     val total = graft.sources.Tables.events(spark, sf).count()
     val kept = Selection.dsApplyFilter(spark, sf).count()

@@ -317,7 +317,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted IVF cell layout: nprobe=2 probe is a partition-pruned read matching the in-memory path") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft-ivf-").toString
+    val out = scratchDir("ivf-").toString
     graft.sources.Sinks.writeIvfCells(Similarity.ivfCells(spark, sf), out)
     val qid = 3L
     val cids = Similarity.probeCells(spark, sf, qid)

@@ -3,23 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sources.{Sinks, Tables}
 
-class SinksSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class SinksSpec extends SparkSpec {
 
-  // every written artifact lives under one managed root, deleted after
-  // the suite (r12 review: the training-corpus test reintroduced the
-  // /tmp litter the r11 StreamingSpec fix removed; the older tests had
-  // the same leak)
-  private val tmpRoot = java.nio.file.Files.createTempDirectory("graft-sinks-")
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(tmpRoot, prefix).toString
-
-  override def afterAll(): Unit = {
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmpRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    } finally super.afterAll()
-  }
+  // every written artifact lives under the suite's scratch root
+  private def tmpDir(prefix: String): String = scratchDir(prefix).toString
 
   test("daily-partitioned writes give partition-pruned reads") {
     val path = tmpDir("part-")

@@ -6,20 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.EventStream
 
-class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
-
-  /** Managed root for the per-batch staging dirs (ADVICE r11: the debounce
-    * tests left /tmp/graft-debounce-* behind); deleted recursively after
-    * the suite. */
-  private val tmpRoot = Files.createTempDirectory("graft-stream-batches-")
-
-  override def afterAll(): Unit = {
-    try {
-      import scala.jdk.CollectionConverters._
-      Files.walk(tmpRoot).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    } finally super.afterAll()
-  }
+class StreamingSpec extends SparkSpec {
 
   /** Stages micro-batches into one directory with each batch's files
     * pinned to a strictly increasing mtime clock: the file stream source
@@ -29,7 +16,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     * mtimes are coarse).
     */
   private final class BatchStager {
-    val dirPath: java.nio.file.Path = Files.createTempDirectory(tmpRoot, "batch-")
+    val dirPath: java.nio.file.Path = scratchDir("batch-")
     val dir: String = dirPath.toString
     private var batchNo = 0
     private val stamped = scala.collection.mutable.Set.empty[java.nio.file.Path]
@@ -44,7 +31,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   private def stageEventsDir(): String = {
-    val dir = Files.createTempDirectory("graft-stream-").toString
+    val dir = scratchDir("stream-").toString
     val src = Paths.get(s"$sf/events.parquet")
     Files.copy(src, Paths.get(dir, "events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir
@@ -73,7 +60,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // the footer; this stages a nanos-long copy of the SAME events and
     // proves the stream result is identical to the batch rollup — both
     // physical encodings land on one logical contract.
-    val dir = Files.createTempDirectory("graft-nanos-").toString
+    val dir = scratchDir("nanos-").toString
     graft.sources.Tables.events(spark, sf)
       .select(col("event_id"), expr("unix_micros(ts) * 1000").as("ts"),
         col("user_id"), col("event_type"), col("value"), col("props"))
@@ -400,7 +387,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("foreachBatch sink writes day-partitioned parquet idempotently per batch") {
     val dir = stageEventsDir()
-    val out = java.nio.file.Files.createTempDirectory("graft-fb-").toString
+    val out = scratchDir("fb-").toString
     val stream = EventStream.eventsStream(spark, dir)
     // the production sink pattern: every micro-batch lands as date-partitioned
     // parquet (Sinks layout), keyed by batch for idempotent replay

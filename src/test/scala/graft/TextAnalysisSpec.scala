@@ -210,8 +210,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("documentsJsonl round-trips the documents model and feeds the same operators") {
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-jsonl-").toString
+    val dir = scratchDir("jsonl-").toString
     val docs = graft.sources.Tables.documents(spark, sf).limit(50)
     docs.write.mode("overwrite").json(dir)
     val back = graft.sources.Tables.documentsJsonl(spark, dir)
@@ -269,7 +268,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("decontaminate's external-eval contract: a jsonl benchmark suite gives the slice result") {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-eval-jsonl-").toString
+    val dir = scratchDir("eval-jsonl-").toString
     val docs = graft.sources.Tables.documents(spark, sf)
     // the production shape: the eval suite arrives as an EXTERNAL jsonl
     // table (here: the same % 100 slice exported, so the result must match

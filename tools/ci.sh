@@ -5,6 +5,8 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-verify-XXXX)"
+OUT_LARGE="$(mktemp -d /tmp/graft-verify-large-XXXX)"
+trap 'rm -rf "$OUT" "$OUT_LARGE"' EXIT
 
 echo "== testdata fingerprint: gate record must match the data it ran against"
 # The r8 postmortem: the driver regenerated /root/testdata (ts nanos→micros)
@@ -34,7 +36,6 @@ echo "== correctness, large branches: Verify with the leaf-byte gate at 0"
 # knob goes to the forked JVM as a -D system property (SparkConf loads
 # every spark.* property), so the same queries take the persisted and
 # checkpointed branches, where the Memo frames live.
-OUT_LARGE="$(mktemp -d /tmp/graft-verify-large-XXXX)"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
   'set run / javaOptions += "-Dspark.graft.memoSide.minLeafBytes=0"' \
   "runMain graft.Verify $SF $OUT_LARGE"
