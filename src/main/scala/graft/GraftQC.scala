@@ -1,11 +1,17 @@
 package graft
 
 import java.net.URI
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Selection
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import graft.operators.{PlanStats, Selection}
 import graft.sources.Tables
 
 /** User-facing facade for the DataSelector workflow: load series JSON, make
@@ -32,14 +38,27 @@ import graft.sources.Tables
   * output is distinct, NULL keys compare equal, and building a selection
   * runs no Spark job. The builders are `Selection.box` / `anti` /
   * `toggle`, which the registry's `ds_*` selection queries use too.
+  *
+  * Below the leaf-byte gate, [[loadSeriesDir]] parses the files once, at
+  * load, with Spark's JSON parser, running no job and persisting no RDD;
+  * every later interaction works on those rows, and files changed after
+  * loading are not seen (the reference behaves the same). At or above the
+  * gate the loaded frame is a lazy scan of the files.
   */
 class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
 
   /** Load every `<compound>.json` in a directory as one keyed DataFrame —
     * compound names come from filenames, exactly like the reference's
-    * JSONFiles config map. One distributed read for all compounds, and
-    * loading runs no Spark job: the file list comes from the scan's file
-    * index, so the JSON is parsed only when a result is materialized.
+    * JSONFiles config map. Loading runs no Spark job and persists nothing.
+    *
+    * Below the leaf-byte gate (`PlanStats.minLeafBytes`, compared with the
+    * file sizes in the scan's file index) the files are parsed once, here,
+    * on the driver, by Spark's JSON parser, and the keyed rows are returned
+    * as a local relation: no later interaction re-reads a file, and files
+    * changed after loading are not seen, as in the reference, which parses
+    * its JSON once at page load. At or above the gate, and whenever a file
+    * does not parse to a list of records, the result is the lazy multiLine
+    * scan, which re-reads the files each time a result is materialized.
     */
   def loadSeriesDir(dir: String): DataFrame = {
     val withFile = spark.read
@@ -50,20 +69,54 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
       // fails and logs a warning with a stack trace
       .option("pathGlobFilter", "*.json")
       .json(dir)
-      .withColumn("_file", input_file_name())
     // input_file_name() is a percent-encoded URI ("n butane" → "n%20butane"),
     // and so is every entry of inputFiles — take each file's name from its
-    // decoded URI path on the driver (#files = #compounds, small; a '+'
-    // stays a '+') and map back with a broadcast join, so compound names
-    // match what the user types. No UDF needed.
-    import spark.implicits._
-    val mapping = withFile.inputFiles.map { f =>
+    // decoded URI path on the driver (a '+' stays a '+') and look it up in
+    // a literal map (one entry per compound), so compound names match what
+    // the user types
+    val files = withFile.inputFiles.toSeq.map { f =>
       f -> new Path(new URI(f)).getName.stripSuffix(".json")
-    }.toSeq.toDF("_file", "series")
-    val raw = withFile.join(broadcast(mapping), Seq("_file")).drop("_file")
+    }
+    val names = typedLit(files.toMap)
+    val scan = keyed(withFile.withColumn("series", names(input_file_name())))
+    if (PlanStats.leafStatBytes(withFile) >= PlanStats.minLeafBytes(spark)) scan
+    else parsedOnce(files, scan.schema).getOrElse(scan)
+  }
+
+  /** The raw series model keyed as every selection expects it. */
+  private def keyed(raw: DataFrame): DataFrame =
+    Selection.keyedSeries(raw
       .withColumnRenamed("flask_number", "salt")
-      .withColumnRenamed("date", "epoch")
-    Selection.keyedSeries(raw, utcOffsetHours).withColumnRenamed("series", "compound")
+      .withColumnRenamed("date", "epoch"), utcOffsetHours)
+      .withColumnRenamed("series", "compound")
+
+  /** The keyed rows of `files` (URI → compound) as a local relation with
+    * `schema`, the scan's. Each file is parsed by `from_json` with the
+    * scan's schema, and then keyed, each over a local relation that the
+    * optimizer folds on the driver, so no job runs. None when a file is not
+    * UTF-8 or its `from_json` is NULL or holds a NULL record: there the
+    * scan's PERMISSIVE reader defines the rows (one all-NULL row for a
+    * non-JSON file), and `from_json` does not give them.
+    */
+  private def parsedOnce(files: Seq[(String, String)], schema: StructType): Option[DataFrame] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val texts = files.map { case (f, compound) =>
+      val p = new Path(new URI(f))
+      val in = p.getFileSystem(conf).open(p)
+      val bytes = try in.readAllBytes() finally in.close()
+      Try(StandardCharsets.UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)).toString)
+        .toOption.map(Row(compound, _))
+    }
+    if (texts.contains(None)) return None
+    val textSchema = StructType(Seq(StructField("series", StringType), StructField("text", StringType)))
+    val parsed = spark.createDataFrame(texts.flatten.asJava, textSchema)
+      .select(col("series"), from_json(col("text"), ArrayType(Tables.seriesSchema)))
+      .collect().toSeq
+    if (parsed.exists(r => r.isNullAt(1) || r.getSeq[Row](1).contains(null))) return None
+    val raw = parsed.flatMap(r => r.getSeq[Row](1).map(rec => Row.fromSeq(rec.toSeq :+ r.getString(0))))
+    val rows = keyed(spark.createDataFrame(raw.asJava, Tables.seriesSchema.add("series", StringType)))
+      .collect().toSeq
+    Some(spark.createDataFrame(rows.asJava, schema))
   }
 
   /** Rectangle selection: every point of `compound` inside the box becomes

@@ -1,16 +1,17 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
@@ -18,8 +19,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The GraftQC session on a small series fixture written to a temp dir:
   * load, rectangle and alt-drag selections, chained click toggles, and
-  * selections mixing boxes with opaque key frames. Needs no reference
-  * checkout. */
+  * selections mixing boxes with opaque key frames, on both of
+  * `loadSeriesDir`'s branches (parsed once at load, and the lazy scan).
+  * Needs no reference checkout. */
 class GraftQCSessionSpec extends SparkSpec {
 
   // file names exercise URI decoding: a space, a '+' and a literal '%'
@@ -33,30 +35,63 @@ class GraftQCSessionSpec extends SparkSpec {
     * the same times, so keys are shared across compounds, and flask F-5 is
     * read twice within one minute, so it keys two rows of each compound.
     * Sample j is taken at latitude j. */
-  private lazy val dir: Path = {
-    val d = scratchDir("qc-session-")
+  private lazy val dir: Path = fixture("qc-session-", Map.empty)
+
+  /** The fixture with records the reader keeps in PERMISSIVE mode: one
+    * whose `value` has the wrong type (read as NULL), one with fields
+    * missing, and a file holding one JSON object instead of an array. */
+  private lazy val mixedDir: Path = {
+    val d = fixture("qc-mixed-", Map(
+      "ethane" -> Seq(s"""{"date": ${Base + 3 * Day + 60}.0, "flask_number": "F-W", "value": "n/a", "lat": 3.0}"""),
+      "propane" -> Seq(s"""{"date": ${Base + 7 * Day + 60}.0, "flask_number": "F-M"}""")))
+    Files.writeString(d.resolve("single.json"),
+      s"""{"date": ${Base + 2 * Day}.0, "flask_number": "F-S", "value": 42.0, "lat": 2.0}""")
+    d
+  }
+
+  /** One JSON array file per compound, with `extra` records appended. */
+  private def fixture(prefix: String, extra: Map[String, Seq[String]]): Path = {
+    val d = scratchDir(prefix)
     Compounds.zipWithIndex.foreach { case (c, i) =>
       val recs = (0 until PerCompound).map { j =>
         (Base + j * Day, s"F-$j", 100.0 + 10 * j + i, j)
       } :+ ((Base + 5 * Day + 20, "F-5", 500.0 + i, 5))
-      val json = recs.map { case (epoch, salt, v, lat) =>
+      val json = (recs.map { case (epoch, salt, v, lat) =>
         s"""{"date": $epoch.0, "flask_number": "$salt", "value": $v, "lat": $lat.0}"""
-      }.mkString("[", ",\n", "]")
+      } ++ extra.getOrElse(c, Nil)).mkString("[", ",\n", "]")
       Files.writeString(d.resolve(s"$c.json"), json)
     }
     d
   }
 
+  private val GateKey = "spark.graft.memoSide.minLeafBytes"
+
+  /** `body` with the leaf-byte gate at 0, where `loadSeriesDir` returns
+    * the lazy scan. */
+  private def atGateZero[T](body: => T): T = {
+    spark.conf.set(GateKey, "0")
+    try body finally spark.conf.unset(GateKey)
+  }
+
   private lazy val qc = new GraftQC(spark, utcOffsetHours = -2)
   private lazy val data = qc.loadSeriesDir(dir.toString)
+  private lazy val scanData = atGateZero(qc.loadSeriesDir(dir.toString))
+
+  /** Whether `df` reads the rows parsed at load, and no file. */
+  private def parsedAtLoad(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+
+  /** A frame's rows as sorted strings: a multiset that NaN and NULL
+    * compare equal in. */
+  private def rowSet(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
 
   /** Corrected time `sec` seconds after the fixture's first sample. */
   private def at(sec: Long): String =
     java.time.Instant.ofEpochSecond(Base - 7200 + sec).toString.replace("T", " ").stripSuffix("Z")
 
   /** Every point of compound `c` sampled on days `j0` to `j1`. */
-  private def rect(c: String, j0: Int, j1: Int): DataFrame =
-    qc.rectSelect(data, c, at(j0 * Day), at(j1 * Day + 3600), 0.0, 1e9)
+  private def rect(c: String, j0: Int, j1: Int, on: DataFrame = data): DataFrame =
+    qc.rectSelect(on, c, at(j0 * Day), at(j1 * Day + 3600), 0.0, 1e9)
 
   /** The keys `rect(c, j0, j1)` selects, from the fixture's layout alone. */
   private def rectModel(c: String, j0: Int, j1: Int): Set[(String, String)] =
@@ -80,8 +115,10 @@ class GraftQCSessionSpec extends SparkSpec {
     assert(out.toSet === symDiff(a, c))
   }
 
+  /** Reads of the series: leaves that carry its `value` column, the JSON
+    * relation or the rows parsed at load, and not key frames. */
   private def scans(df: DataFrame): Int =
-    df.queryExecution.analyzed.collectLeaves().count(_.isInstanceOf[LogicalRelation])
+    df.queryExecution.analyzed.collectLeaves().count(_.output.exists(_.name == "value"))
 
   /** Every node of an executed plan, through AQE's query stages. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -99,12 +136,27 @@ class GraftQCSessionSpec extends SparkSpec {
   /** Runs `body` in a job group of its own, and reports whether any Spark
     * job started in that group. */
   private def jobsIn[T](body: => T): (T, Boolean) = {
+    val (out, ranJob, _) = observe(body)
+    (out, ranJob)
+  }
+
+  /** Runs `body` in a job group of its own, and reports whether any Spark
+    * job started in that group and the input bytes its tasks read. */
+  private def observe[T](body: => T): (T, Boolean, Long) = {
     val group = s"body-${System.nanoTime}"
     val marker = s"marker-${System.nanoTime}"
     val groups = new ConcurrentLinkedQueue[String]()
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val bytesRead = new AtomicLong
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = String.valueOf(e.properties.getProperty("spark.jobGroup.id"))
+        if (g == group) e.stageIds.foreach(stages.add(_))
+        groups.add(g)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -113,11 +165,11 @@ class GraftQCSessionSpec extends SparkSpec {
       spark.sparkContext.setJobGroup(marker, "marker")
       spark.range(1).count()
       // listener events arrive in order: once the marker job is seen, any
-      // job the body started has been seen too
+      // job the body started, and each of its tasks' ends, has been seen too
       val deadline = System.nanoTime + TimeUnit.SECONDS.toNanos(30)
       while (!groups.contains(marker) && System.nanoTime < deadline) Thread.sleep(20)
       assert(groups.contains(marker))
-      (out, groups.contains(group))
+      (out, groups.contains(group), bytesRead.get)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
@@ -167,17 +219,19 @@ class GraftQCSessionSpec extends SparkSpec {
     assertToggle(a, c)
   }
 
-  test("a rect, an alt-drag and k chained toggles plan one file scan") {
+  test("a rect, an alt-drag and k chained toggles plan one scan on both branches") {
     val k = 4
-    var sel = qc.antiSelect(rect("ethane", 0, 12), rect("ethane", 3, 5))
-    var model = rectModel("ethane", 0, 12) -- rectModel("ethane", 3, 5)
-    (0 until k).foreach { i =>
-      val click = rectModel("ethane", 2 * i, 2 * i + 3)
-      model = (model -- click) ++ (click -- model)
-      sel = qc.toggle(sel, rect("ethane", 2 * i, 2 * i + 3))
+    for (on <- Seq(data, scanData)) {
+      var sel = qc.antiSelect(rect("ethane", 0, 12, on), rect("ethane", 3, 5, on))
+      var model = rectModel("ethane", 0, 12) -- rectModel("ethane", 3, 5)
+      (0 until k).foreach { i =>
+        val click = rectModel("ethane", 2 * i, 2 * i + 3)
+        model = (model -- click) ++ (click -- model)
+        sel = qc.toggle(sel, rect("ethane", 2 * i, 2 * i + 3, on))
+      }
+      assert(scans(sel) === 1)
+      assert(keys(sel).toSet === model)
     }
-    assert(scans(sel) === 1)
-    assert(keys(sel).toSet === model)
   }
 
   test("64 chained toggles match a set model") {
@@ -219,10 +273,13 @@ class GraftQCSessionSpec extends SparkSpec {
 
   test("boxes over two loaded frames plan two scans") {
     val other = qc.loadSeriesDir(dir.toString)
-    val sel = qc.toggle(rect("ethane", 0, 6),
-      qc.rectSelect(other, "ethane", at(4 * Day), at(9 * Day + 3600), 0.0, 1e9))
-    assert(scans(sel) === 2)
-    assert(keys(sel).toSet === rectModel("ethane", 0, 3) ++ rectModel("ethane", 7, 9))
+    val otherScan = atGateZero(qc.loadSeriesDir(dir.toString))
+    for ((first, second) <- Seq((data, other), (scanData, otherScan), (data, scanData))) {
+      val sel = qc.toggle(rect("ethane", 0, 6, first),
+        qc.rectSelect(second, "ethane", at(4 * Day), at(9 * Day + 3600), 0.0, 1e9))
+      assert(scans(sel) === 2)
+      assert(keys(sel).toSet === rectModel("ethane", 0, 3) ++ rectModel("ethane", 7, 9))
+    }
   }
 
   test("an alternate-axis box composes with a time-plane box") {
@@ -295,5 +352,98 @@ class GraftQCSessionSpec extends SparkSpec {
       case r: ReusedExchangeExec => r.child.isInstanceOf[ShuffleExchangeLike]
       case _ => false
     }, "the value histogram was computed twice")
+  }
+
+  test("both branches load the same rows with the same schema") {
+    val snap = qc.loadSeriesDir(mixedDir.toString)
+    val scan = atGateZero(qc.loadSeriesDir(mixedDir.toString))
+    assert(parsedAtLoad(snap) && !parsedAtLoad(scan))
+    assert(snap.schema === scan.schema)
+    assert(rowSet(snap) === rowSet(scan))
+    // the wrong-typed value reads as NULL, the missing fields as NULL, and
+    // the lone object as one record
+    assert(snap.count() === Compounds.size * (PerCompound + 1) + 3)
+    assert(snap.filter(col("salt") === "F-W" && col("value").isNull && col("lat") === 3.0).count() === 1)
+    assert(snap.filter(col("salt") === "F-M" && col("value").isNull && col("lat").isNull).count() === 1)
+    assert(snap.filter(col("compound") === "single").select("value").collect().toSeq ===
+      Seq(Row(42.0)))
+  }
+
+  test("a file the parser does not read as records loads through the scan") {
+    val bad = scratchDir("qc-bad-")
+    Files.writeString(bad.resolve("bad.json"), "this is not JSON")
+    val loaded = qc.loadSeriesDir(bad.toString)
+    assert(!parsedAtLoad(loaded))
+    val rows = loaded.collect()
+    assert(rows.length === 1)
+    val row = rows.head
+    assert(row.getAs[String]("compound") === "bad")
+    assert(row.schema.fieldNames.filter(_ != "compound").forall(f => row.isNullAt(row.fieldIndex(f))))
+    // a NULL record: the reader keeps none of the file's records
+    val nullRec = scratchDir("qc-null-record-")
+    Files.writeString(nullRec.resolve("ethane.json"), """[{"date": 1.0, "value": 2.0}, null]""")
+    val withNull = qc.loadSeriesDir(nullRec.toString)
+    assert(!parsedAtLoad(withNull))
+    assert(rowSet(withNull) === rowSet(atGateZero(qc.loadSeriesDir(nullRec.toString))))
+    // bytes that are not UTF-8: the reader, not a lenient decode, defines the rows
+    val notUtf8 = scratchDir("qc-not-utf8-")
+    Files.write(notUtf8.resolve("ethane.json"),
+      """[{"date": 1.0, "flask_number": "F-?", "value": 2.0}]""".getBytes("UTF-8").map {
+        case '?' => 0xff.toByte
+        case b => b
+      })
+    val latin = qc.loadSeriesDir(notUtf8.toString)
+    assert(!parsedAtLoad(latin))
+    assert(rowSet(latin) === rowSet(atGateZero(qc.loadSeriesDir(notUtf8.toString))))
+  }
+
+  test("an empty directory loads an empty frame with the scan's schema on both branches") {
+    val empty = scratchDir("qc-empty-")
+    val snap = qc.loadSeriesDir(empty.toString)
+    val scan = atGateZero(qc.loadSeriesDir(empty.toString))
+    assert(snap.schema === scan.schema)
+    assert(snap.schema.fieldNames.toSeq === data.schema.fieldNames.toSeq)
+    assert(snap.count() === 0 && scan.count() === 0)
+  }
+
+  test("the series methods return the same rows on both branches") {
+    val snap = qc.loadSeriesDir(mixedDir.toString)
+    val scan = atGateZero(qc.loadSeriesDir(mixedDir.toString))
+    val methods: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "resample" -> qc.resample, "histogram" -> qc.histogram,
+      "changepoint" -> qc.changepoint, "flatline" -> qc.flatline,
+      "resolution" -> qc.resolution, "interp" -> qc.interp,
+      "gaps" -> qc.gaps, "rollingZ" -> qc.rollingZ, "outliers" -> qc.outliers)
+    methods.foreach { case (name, m) =>
+      assert(rowSet(m(snap)) === rowSet(m(scan)), name)
+    }
+    val (zs, zc) = (qc.zoomSession(snap), qc.zoomSession(scan))
+    (Compounds :+ "single").foreach(c => assert(zs.current(c) === zc.current(c), c))
+    val sel = rect("ethane", 2, 9, snap)
+    val (outSnap, outScan) = (scratchDir("qc-write-snap-").toString, scratchDir("qc-write-scan-").toString)
+    qc.writeFiltered(snap, sel, outSnap)
+    qc.writeFiltered(scan, rect("ethane", 2, 9, scan), outScan)
+    val back = rowSet(spark.read.parquet(outSnap))
+    assert(back === rowSet(spark.read.parquet(outScan)))
+    assert(back.size === snap.count() - rectModel("ethane", 2, 9).size - 1)
+  }
+
+  test("below the gate, rect and applyFilter counts after load read no input bytes and persist nothing") {
+    val imported = qc.importSelections(qc.exportJson(rect("c+d", 0, 3)))
+    val expected = (rectModel("ethane", 1, 6).size.toLong,
+      Compounds.size * (PerCompound + 1) - rectModel("c+d", 0, 3).size.toLong)
+    for (d <- Seq(dir, mixedDir)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val loaded = qc.loadSeriesDir(d.toString)
+      val (counts, _, bytes) = observe {
+        (rect("ethane", 1, 6, loaded).count(), qc.applyFilter(loaded, imported).count())
+      }
+      assert(bytes === 0L, s"counts over $d read input bytes")
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
+      if (d == dir) assert(counts === expected)
+    }
+    val (scanned, _, bytes) = observe(rect("ethane", 1, 6, scanData).count())
+    assert(bytes > 0L, "the scan branch read no input bytes")
+    assert(scanned === expected._1)
   }
 }
