@@ -42,7 +42,13 @@ import graft.sources.Tables
   * Below the leaf-byte gate, [[loadSeriesDir]] parses the files once, at
   * load, with Spark's JSON parser, running no job and persisting no RDD;
   * every later interaction works on those rows, and files changed after
-  * loading are not seen (the reference behaves the same). At or above the
+  * loading are not seen (the reference behaves the same). The rows sit in
+  * one partition, so each edit, commit view, auto-QC call and filter runs
+  * as one job with no shuffle (a broadcast join adds its own job). That
+  * relies on the optimizer rule `GraftExtensions` installs in a
+  * `GraftSession` ([[graft.functions.PushProjectBelowCoalesce]]): it
+  * folds a selection's box predicates and flag columns into the rows on
+  * the driver instead of compiling them into each job. At or above the
   * gate the loaded frame is a lazy scan of the files.
   */
 class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
@@ -54,11 +60,13 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * Below the leaf-byte gate (`PlanStats.minLeafBytes`, compared with the
     * file sizes in the scan's file index) the files are parsed once, here,
     * on the driver, by Spark's JSON parser, and the keyed rows are returned
-    * as a local relation: no later interaction re-reads a file, and files
-    * changed after loading are not seen, as in the reference, which parses
-    * its JSON once at page load. At or above the gate, and whenever a file
-    * does not parse to a list of records, the result is the lazy multiLine
-    * scan, which re-reads the files each time a result is materialized.
+    * as a local relation in one partition: no later interaction re-reads a
+    * file or plans a shuffle, and files changed after loading are not seen,
+    * as in the reference, which parses its JSON once at page load. At or
+    * above the gate, and whenever a file does not parse to a list of
+    * records (logged as a WARN naming the files), the result is the lazy
+    * multiLine scan, which re-reads the files each time a result is
+    * materialized.
     */
   def loadSeriesDir(dir: String): DataFrame = {
     val withFile = spark.read
@@ -91,32 +99,40 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
       .withColumnRenamed("series", "compound")
 
   /** The keyed rows of `files` (URI → compound) as a local relation with
-    * `schema`, the scan's. Each file is parsed by `from_json` with the
-    * scan's schema, and then keyed, each over a local relation that the
-    * optimizer folds on the driver, so no job runs. None when a file is not
-    * UTF-8 or its `from_json` is NULL or holds a NULL record: there the
-    * scan's PERMISSIVE reader defines the rows (one all-NULL row for a
-    * non-JSON file), and `from_json` does not give them.
+    * `schema`, the scan's, coalesced to one partition. Each file is parsed
+    * by `from_json` with the scan's schema, and then keyed, each over a
+    * local relation that the optimizer folds on the driver, so no job runs.
+    * None when a file is not UTF-8 or its `from_json` is NULL or holds a
+    * NULL record: there the scan's PERMISSIVE reader defines the rows (one
+    * all-NULL row for a non-JSON file), and `from_json` does not give them.
+    * One WARN names those files.
     */
   private def parsedOnce(files: Seq[(String, String)], schema: StructType): Option[DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val texts = files.map { case (f, compound) =>
+    val (notUtf8, texts) = files.partitionMap { case (f, compound) =>
       val p = new Path(new URI(f))
       val in = p.getFileSystem(conf).open(p)
       val bytes = try in.readAllBytes() finally in.close()
       Try(StandardCharsets.UTF_8.newDecoder().decode(ByteBuffer.wrap(bytes)).toString)
-        .toOption.map(Row(compound, _))
+        .toOption.map(Row(f, compound, _)).toRight(f)
     }
-    if (texts.contains(None)) return None
-    val textSchema = StructType(Seq(StructField("series", StringType), StructField("text", StringType)))
-    val parsed = spark.createDataFrame(texts.flatten.asJava, textSchema)
-      .select(col("series"), from_json(col("text"), ArrayType(Tables.seriesSchema)))
+    val textSchema = StructType(Seq("file", "series", "text").map(StructField(_, StringType)))
+    val parsed = spark.createDataFrame(texts.asJava, textSchema)
+      .select(col("file"), col("series"), from_json(col("text"), ArrayType(Tables.seriesSchema)))
       .collect().toSeq
-    if (parsed.exists(r => r.isNullAt(1) || r.getSeq[Row](1).contains(null))) return None
-    val raw = parsed.flatMap(r => r.getSeq[Row](1).map(rec => Row.fromSeq(rec.toSeq :+ r.getString(0))))
+    val unread = notUtf8 ++ parsed.collect {
+      case r if r.isNullAt(2) || r.getSeq[Row](2).contains(null) => r.getString(0)
+    }
+    if (unread.nonEmpty) {
+      GraftQC.log.warn("Not a UTF-8 JSON array of records, so the series load through Spark's " +
+        "JSON reader, which may read each of these files as one all-NULL row: " +
+        unread.map(f => new Path(new URI(f)).toString).mkString(", "))
+      return None
+    }
+    val raw = parsed.flatMap(r => r.getSeq[Row](2).map(rec => Row.fromSeq(rec.toSeq :+ r.getString(1))))
     val rows = keyed(spark.createDataFrame(raw.asJava, Tables.seriesSchema.add("series", StringType)))
       .collect().toSeq
-    Some(spark.createDataFrame(rows.asJava, schema))
+    Some(spark.createDataFrame(rows.asJava, schema).coalesce(1))
   }
 
   /** Rectangle selection: every point of `compound` inside the box becomes
@@ -168,10 +184,11 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * selection DataFrame — the inverse of [[exportJson]], so a selection
     * file produced by the reference tool (or by graft) drives
     * [[applyFilter]] directly. Parsed on the driver: exports are small by
-    * contract; the result is distributed for the join.
+    * contract, so the rows stay in one partition, where reading them alone
+    * plans no shuffle, and a join broadcasts them.
     */
   def importSelections(json: String): DataFrame =
-    Selection.importSelections(spark, json)
+    Selection.importSelections(spark, json).coalesce(1)
 
   /** README's "automated filtering": drop selected points from the raw
     * data. No build side is forced: an imported selection is broadcast by
@@ -312,6 +329,8 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
 }
 
 object GraftQC {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftQC])
+
   /** A stored zoom window: x in the data's epoch units, y in value units. */
   final case class Limits(x0: Double, x1: Double, y0: Double, y1: Double)
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.GraftLocalFileSystem
 
 /** Session factory with the knobs every graft job needs.
   *
@@ -11,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * and `date_format` output are deployment-independent — the reference's
   * entire data model is epoch-seconds plus an explicit UTC offset
   * (/root/reference/index.js:401), so nothing may depend on machine TZ.
+  *
+  * The session also installs `GraftExtensions` (graft's SQL functions and
+  * its optimizer rule) and, for `file:` paths, `GraftLocalFileSystem`,
+  * which sets file modes in-process instead of starting a `chmod`.
   */
 object GraftSession {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
@@ -37,6 +42,10 @@ object GraftSession {
       // multi-tenant SQL endpoint.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      // `file:` paths go to Hadoop's local filesystem with in-process
+      // permission setting: without libhadoop the stock one starts a chmod
+      // process for each file and directory a local write creates
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
 
   def local(cores: Int = 32): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()

@@ -94,10 +94,11 @@ case class CosineSim(left: Expression, right: Expression)
 /** Injects graft's native functions into any session built with
   * `spark.sql.extensions=graft.functions.GraftExtensions` — after which
   * plain SQL and `expr("cosine_sim(a, b)")` resolve to the codegen'd
-  * expression.
+  * expression — and graft's optimizer rule, [[PushProjectBelowCoalesce]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => PushProjectBelowCoalesce)
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),

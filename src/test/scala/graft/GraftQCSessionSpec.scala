@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.LocalFileSystem
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
@@ -104,10 +111,10 @@ class GraftQCSessionSpec extends SparkSpec {
   private def keys(df: DataFrame): Seq[(String, String)] =
     df.collect().toSeq.map(r => (r.getString(0), r.getString(1)))
 
-  private def symDiff(a: DataFrame, c: DataFrame): Set[(String, String)] = {
-    val (ka, kc) = (keys(a).toSet, keys(c).toSet)
-    (ka -- kc) ++ (kc -- ka)
-  }
+  private def xor[K](a: Set[K], b: Set[K]): Set[K] = (a -- b) ++ (b -- a)
+
+  private def symDiff(a: DataFrame, c: DataFrame): Set[(String, String)] =
+    xor(keys(a).toSet, keys(c).toSet)
 
   private def assertToggle(a: DataFrame, c: DataFrame): Unit = {
     val out = keys(qc.toggle(a, c))
@@ -136,27 +143,39 @@ class GraftQCSessionSpec extends SparkSpec {
   /** Runs `body` in a job group of its own, and reports whether any Spark
     * job started in that group. */
   private def jobsIn[T](body: => T): (T, Boolean) = {
-    val (out, ranJob, _) = observe(body)
-    (out, ranJob)
+    val (out, seen) = observe(body)
+    (out, seen.jobs > 0)
   }
 
-  /** Runs `body` in a job group of its own, and reports whether any Spark
-    * job started in that group and the input bytes its tasks read. */
-  private def observe[T](body: => T): (T, Boolean, Long) = {
+  /** What the jobs started in one job group did: how many jobs and stages,
+    * the input bytes their tasks read, and the records they wrote to
+    * shuffles. */
+  private final case class Observed(jobs: Int, stages: Int, bytesRead: Long, shuffleRecords: Long)
+
+  /** Runs `body` in a job group of its own, and reports what the jobs it
+    * started did. */
+  private def observe[T](body: => T): (T, Observed) = {
     val group = s"body-${System.nanoTime}"
     val marker = s"marker-${System.nanoTime}"
     val groups = new ConcurrentLinkedQueue[String]()
     val stages = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new AtomicLong
     val bytesRead = new AtomicLong
+    val shuffleRecords = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val g = String.valueOf(e.properties.getProperty("spark.jobGroup.id"))
-        if (g == group) e.stageIds.foreach(stages.add(_))
+        if (g == group) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add(_))
+        }
         groups.add(g)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
           bytesRead.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+          shuffleRecords.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -169,12 +188,33 @@ class GraftQCSessionSpec extends SparkSpec {
       val deadline = System.nanoTime + TimeUnit.SECONDS.toNanos(30)
       while (!groups.contains(marker) && System.nanoTime < deadline) Thread.sleep(20)
       assert(groups.contains(marker))
-      (out, groups.contains(group), bytesRead.get)
+      (out, Observed(jobs.get.toInt, stages.size, bytesRead.get, shuffleRecords.get))
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
   }
+
+  /** `body`'s result and the WARN messages `GraftQC` logged while it ran. */
+  private def warningsOf[T](body: => T): (T, Seq[String]) = {
+    val warnings = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-qc-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == classOf[GraftQC].getName && e.getLevel == Level.WARN)
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    appender.start()
+    root.addAppender(appender)
+    try (body, warnings.asScala.toSeq) finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
+  /** Whether an executed plan holds a shuffle exchange. */
+  private def shuffles(df: DataFrame): Boolean =
+    nodes(df.queryExecution.executedPlan).exists(_.isInstanceOf[ShuffleExchangeLike])
 
   test("loadSeriesDir decodes file names, keys every row and runs no job") {
     val (loaded, ranJob) = jobsIn(qc.loadSeriesDir(dir.toString))
@@ -342,16 +382,93 @@ class GraftQCSessionSpec extends SparkSpec {
   }
 
   test("outliers reuses the value histogram's shuffle and persists nothing") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val out = qc.outliers(data)
-    // per compound, only the second F-5 read (500 + i) is > 3 MADs out
-    val flagged = out.collect().map(_.getAs[Double]("value")).sorted.toSeq
-    assert(flagged === Compounds.indices.map(500.0 + _))
-    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
-    assert(nodes(out.queryExecution.executedPlan).exists {
-      case r: ReusedExchangeExec => r.child.isInstanceOf[ShuffleExchangeLike]
-      case _ => false
-    }, "the value histogram was computed twice")
+    // the scan plans the histogram's shuffle and reuses it; the rows parsed
+    // at load sit in one partition, where no shuffle is planned at all
+    for (on <- Seq(scanData, data)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = qc.outliers(on)
+      // per compound, only the second F-5 read (500 + i) is > 3 MADs out
+      val flagged = out.collect().map(_.getAs[Double]("value")).sorted.toSeq
+      assert(flagged === Compounds.indices.map(500.0 + _))
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
+      if (on eq scanData) assert(nodes(out.queryExecution.executedPlan).exists {
+        case r: ReusedExchangeExec => r.child.isInstanceOf[ShuffleExchangeLike]
+        case _ => false
+      }, "the value histogram was computed twice")
+      else assert(!shuffles(out), "outliers over the parsed rows planned a shuffle")
+    }
+  }
+
+  test("below the gate, each edit, commit view and import runs one job with no shuffle") {
+    val anti = qc.antiSelect(rect("ethane", 0, 12), rect("ethane", 3, 5))
+    val chain = qc.toggle(qc.toggle(anti, rect("ethane", 5, 7)), rect("ethane", 10, 14))
+    val chainOnScan = qc.toggle(qc.toggle(
+      qc.antiSelect(rect("ethane", 0, 12, scanData), rect("ethane", 3, 5, scanData)),
+      rect("ethane", 5, 7, scanData)), rect("ethane", 10, 14, scanData))
+    val views: Seq[(String, DataFrame => Any)] = Seq(
+      "count" -> (_.count()), "counts" -> (s => rowSet(qc.counts(s))), "exportJson" -> qc.exportJson)
+    views.foreach { case (name, view) =>
+      val (out, seen) = observe(view(chain))
+      assert(seen.jobs === 1 && seen.stages === 1, s"$name ran $seen")
+      assert(seen.shuffleRecords === 0L, name)
+      assert(out === view(chainOnScan), name)
+    }
+    val model = xor(xor(rectModel("ethane", 0, 12) -- rectModel("ethane", 3, 5),
+      rectModel("ethane", 5, 7)), rectModel("ethane", 10, 14))
+    assert(keys(chain).toSet === model)
+    val json = qc.exportJson(chain)
+    val (imported, seen) = observe(qc.importSelections(json).count())
+    assert(seen.jobs === 1 && seen.stages === 1 && seen.shuffleRecords === 0L, s"import ran $seen")
+    assert(imported === model.size)
+  }
+
+  test("below the gate, auto-QC, applyFilter and writeFiltered plan no shuffle") {
+    val ethane = data.filter(col("compound") === "ethane")
+    val ethaneOnScan = scanData.filter(col("compound") === "ethane")
+    val sel = qc.toggle(rect("ethane", 2, 9), rect("propane", 0, 3))
+    val selOnScan = qc.toggle(rect("ethane", 2, 9, scanData), rect("propane", 0, 3, scanData))
+    val frames: Seq[(String, DataFrame, DataFrame)] = Seq(
+      ("outliers", qc.outliers(ethane), qc.outliers(ethaneOnScan)),
+      ("gaps", qc.gaps(ethane), qc.gaps(ethaneOnScan)),
+      ("rollingZ", qc.rollingZ(ethane), qc.rollingZ(ethaneOnScan)),
+      ("applyFilter", qc.applyFilter(data, sel), qc.applyFilter(scanData, selOnScan)))
+    frames.foreach { case (name, df, onScan) =>
+      val (rows, seen) = observe(rowSet(df))
+      assert(!shuffles(df) && seen.shuffleRecords === 0L, s"$name planned a shuffle")
+      assert(rows === rowSet(onScan), name)
+    }
+    val (out, outOnScan) = (scratchDir("qc-write-").toString, scratchDir("qc-write-scan-").toString)
+    val (_, seen) = observe(qc.writeFiltered(data, sel, out))
+    assert(seen.shuffleRecords === 0L, "writeFiltered planned a shuffle")
+    qc.writeFiltered(scanData, selOnScan, outOnScan)
+    assert(rowSet(spark.read.parquet(out)) === rowSet(spark.read.parquet(outOnScan)))
+  }
+
+  test("a second click at new coordinates compiles at most the driver's fold predicate") {
+    val sel = qc.antiSelect(rect("propane", 0, 14), rect("propane", 4, 6))
+    keys(qc.toggle(sel, rect("propane", 1, 2)))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val clicked = keys(qc.toggle(sel, rect("propane", 8, 11)))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before <= 1)
+    assert(clicked.toSet ===
+      xor(rectModel("propane", 0, 14) -- rectModel("propane", 4, 6), rectModel("propane", 8, 11)))
+  }
+
+  test("writeFiltered sets the mode bits a write through the stock local filesystem sets") {
+    val sel = rect("c+d", 0, 5)
+    val (graft, stock) = (scratchDir("qc-modes-graft-"), scratchDir("qc-modes-stock-"))
+    qc.writeFiltered(data, sel, graft.toString)
+    qc.applyFilter(data, sel).write.mode("overwrite")
+      .option("fs.file.impl", classOf[LocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+      .partitionBy("compound").parquet(stock.toString)
+    /** (path with part-file ids masked, mode) of everything under `root`. */
+    def modes(root: Path): Seq[(String, String)] =
+      Files.walk(root).iterator().asScala.toSeq.map { f =>
+        root.relativize(f).toString.replaceAll("part-[0-9a-f-]+(\\.c[0-9]+)?", "part") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+      }.sorted
+    assert(modes(graft).nonEmpty && modes(graft) === modes(stock))
   }
 
   test("both branches load the same rows with the same schema") {
@@ -372,8 +489,9 @@ class GraftQCSessionSpec extends SparkSpec {
   test("a file the parser does not read as records loads through the scan") {
     val bad = scratchDir("qc-bad-")
     Files.writeString(bad.resolve("bad.json"), "this is not JSON")
-    val loaded = qc.loadSeriesDir(bad.toString)
+    val (loaded, warnings) = warningsOf(qc.loadSeriesDir(bad.toString))
     assert(!parsedAtLoad(loaded))
+    assert(warnings.size === 1 && warnings.head.contains(bad.resolve("bad.json").toString), warnings)
     val rows = loaded.collect()
     assert(rows.length === 1)
     val row = rows.head
@@ -382,8 +500,10 @@ class GraftQCSessionSpec extends SparkSpec {
     // a NULL record: the reader keeps none of the file's records
     val nullRec = scratchDir("qc-null-record-")
     Files.writeString(nullRec.resolve("ethane.json"), """[{"date": 1.0, "value": 2.0}, null]""")
-    val withNull = qc.loadSeriesDir(nullRec.toString)
+    val (withNull, nullWarnings) = warningsOf(qc.loadSeriesDir(nullRec.toString))
     assert(!parsedAtLoad(withNull))
+    assert(nullWarnings.size === 1 &&
+      nullWarnings.head.contains(nullRec.resolve("ethane.json").toString), nullWarnings)
     assert(rowSet(withNull) === rowSet(atGateZero(qc.loadSeriesDir(nullRec.toString))))
     // bytes that are not UTF-8: the reader, not a lenient decode, defines the rows
     val notUtf8 = scratchDir("qc-not-utf8-")
@@ -392,8 +512,10 @@ class GraftQCSessionSpec extends SparkSpec {
         case '?' => 0xff.toByte
         case b => b
       })
-    val latin = qc.loadSeriesDir(notUtf8.toString)
+    val (latin, latinWarnings) = warningsOf(qc.loadSeriesDir(notUtf8.toString))
     assert(!parsedAtLoad(latin))
+    assert(latinWarnings.size === 1 &&
+      latinWarnings.head.contains(notUtf8.resolve("ethane.json").toString), latinWarnings)
     assert(rowSet(latin) === rowSet(atGateZero(qc.loadSeriesDir(notUtf8.toString))))
   }
 
@@ -435,15 +557,15 @@ class GraftQCSessionSpec extends SparkSpec {
     for (d <- Seq(dir, mixedDir)) {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val loaded = qc.loadSeriesDir(d.toString)
-      val (counts, _, bytes) = observe {
+      val (counts, seen) = observe {
         (rect("ethane", 1, 6, loaded).count(), qc.applyFilter(loaded, imported).count())
       }
-      assert(bytes === 0L, s"counts over $d read input bytes")
+      assert(seen.bytesRead === 0L, s"counts over $d read input bytes")
       assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === before)
       if (d == dir) assert(counts === expected)
     }
-    val (scanned, _, bytes) = observe(rect("ethane", 1, 6, scanData).count())
-    assert(bytes > 0L, "the scan branch read no input bytes")
+    val (scanned, seen) = observe(rect("ethane", 1, 6, scanData).count())
+    assert(seen.bytesRead > 0L, "the scan branch read no input bytes")
     assert(scanned === expected._1)
   }
 }

@@ -6,7 +6,19 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-verify-XXXX)"
 OUT_LARGE="$(mktemp -d /tmp/graft-verify-large-XXXX)"
-trap 'rm -rf "$OUT" "$OUT_LARGE"' EXIT
+VLOG="$(mktemp -d /tmp/graft-verify-log-XXXX)"
+trap 'rm -rf "$OUT" "$OUT_LARGE" "$VLOG"' EXIT
+
+# Verify logs at WARN. An optimizer batch that stops converging (say, an
+# injected GraftExtensions rule that another rule keeps undoing on some
+# registry plan) shows only as Spark's "Max iterations (N) reached for
+# batch" warning, and the plan it leaves may still be correct.
+converged() {
+  if grep -E 'Max iterations \([0-9]+\) reached for batch' "$1"; then
+    echo "an optimizer batch reached its iteration limit during Verify ($1)"
+    exit 1
+  fi
+}
 
 echo "== testdata fingerprint: gate record must match the data it ran against"
 # The r8 postmortem: the driver regenerated /root/testdata (ts nanos→micros)
@@ -27,8 +39,10 @@ python3 perfbench/build.py
 python3 -m pytest -q perfbench/tests
 
 echo "== correctness: Verify -> DuckDB oracle compare at $SF"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch "runMain graft.Verify $SF $OUT"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 \
+  | tee "$VLOG/small.log"
 python3 tools/check_oracle.py "$SF" "$OUT"
+converged "$VLOG/small.log"
 
 echo "== correctness, large branches: Verify with the leaf-byte gate at 0"
 # sf0.01 sits below the 16 MB leaf-byte gate, so the run above checks only
@@ -38,8 +52,9 @@ echo "== correctness, large branches: Verify with the leaf-byte gate at 0"
 # checkpointed branches, where the Memo frames live.
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
   'set run / javaOptions += "-Dspark.graft.memoSide.minLeafBytes=0"' \
-  "runMain graft.Verify $SF $OUT_LARGE"
+  "runMain graft.Verify $SF $OUT_LARGE" 2>&1 | tee "$VLOG/large.log"
 python3 tools/check_oracle.py "$SF" "$OUT_LARGE"
+converged "$VLOG/large.log"
 
 echo "== pii positive-path parity (corpus is digit-free, oracle can't see it)"
 python3 tools/check_pii_parity.py
