@@ -57,8 +57,8 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * compound names come from filenames, exactly like the reference's
     * JSONFiles config map. Loading runs no Spark job and persists nothing.
     *
-    * Below the leaf-byte gate (`PlanStats.minLeafBytes`, compared with the
-    * file sizes in the scan's file index) the files are parsed once, here,
+    * Below the leaf-byte gate (`PlanStats.atScale` on the scan, whose
+    * reading is the file sizes in its file index) the files are parsed once, here,
     * on the driver, by Spark's JSON parser, and the keyed rows are returned
     * as a local relation in one partition: no later interaction re-reads a
     * file or plans a shuffle, and files changed after loading are not seen,
@@ -87,7 +87,7 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     }
     val names = typedLit(files.toMap)
     val scan = keyed(withFile.withColumn("series", names(input_file_name())))
-    if (PlanStats.leafStatBytes(withFile) >= PlanStats.minLeafBytes(spark)) scan
+    if (PlanStats.atScale(withFile)) scan
     else parsedOnce(files, scan.schema).getOrElse(scan)
   }
 

@@ -74,7 +74,7 @@ object Analytics {
   // forced broadcast would hit Spark's 8 GB relation limit at large SF.
   // Top-k is a total sort of |groups| rows only.
   def q3TopkRevenue(spark: SparkSession, d: String): DataFrame = {
-    // r18 (the q5 memoSide shape): BUILDING customers gate the
+    // r18 (the q5 materialized-side shape): BUILDING customers gate the
     // date-filtered orders into a materialized qualified side whose true
     // size drives static broadcast-hash — the lazy form shuffled 499 MB
     // of orders on custkey (49 of 70 core-seconds at sf10)
@@ -89,7 +89,7 @@ object Analytics {
     // custkey stats the static planner broadcast-hashes it INTO the
     // orders scan, so orders never exchanges; the qualified output then
     // shuffle-hash joins the revenue partials co-partitioned on orderkey.
-    val cB = memoSide(spark, d, "q3_building_custkeys") {
+    val cB = Memo.atScale(spark, d, "q3_building_custkeys") {
       Tables.customer(spark, d)
         .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
     }
@@ -130,7 +130,7 @@ object Analytics {
   // scale) → hard broadcast; the rest of the star is REDUCED first:
   // EUROPE customers gate the date-filtered orders, producing a qualified
   // (o_orderkey, c_nationkey) side that is ~6 % of orders — materialized
-  // via [[memoSide]] so the static planner sees its true size and joins
+  // via `Memo.atScale` so the static planner sees its true size and joins
   // lineitem broadcast-hash, with zero fact-side exchange (r18; the r16
   // shuffle_hash pin solved the ESTIMATE trap — a lazy 2-column orders
   // projection slips under AQE's broadcast estimate as SF grows — but
@@ -144,7 +144,7 @@ object Analytics {
     val n = Tables.nation(spark, d).select("n_nationkey", "n_name", "n_regionkey")
     val nEur = n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
       .select("n_nationkey")
-    val qual = memoSide(spark, d, "q5_qual_orders") {
+    val qual = Memo.atScale(spark, d, "q5_qual_orders") {
       val cEur = Tables.customer(spark, d).select("c_custkey", "c_nationkey")
         .join(broadcast(nEur), col("c_nationkey") === nEur("n_nationkey"))
         .select("c_custkey", "c_nationkey")
@@ -221,14 +221,14 @@ object Analytics {
   // sf1-skew because AQE skew handling covers joins, not WindowExec; the
   // census-decomposed hybrid below ([[qWindowRunningSkewSafe]]) fixes it,
   // value-identical (spec-pinned), at ~1.5x on well-distributed data.
-  // The choice is AUTO-DETECTED: ONE column-pruned count-per-key
+  // The choice is AUTO-DETECTED at scale: ONE column-pruned count-per-key
   // aggregate with a limit-1 probe decides (the same heavy-key fact the
   // hybrid's own detection pass computes), so an unskewed corpus pays only
   // the detection count and a degenerate one never serializes a hot key
-  // into a single window task.
+  // into a single window task. Below the leaf-byte gate no probe runs.
   def qWindowRunning(spark: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(spark, d)
-    if (hasHeavyKeyMemo(spark, d)) qWindowRunningSkewSafe(ev)
+    if (heavyKeyAtScale(ev, hasHeavyKeyMemo(spark, d))) qWindowRunningSkewSafe(ev)
     else qWindowRunningFrom(ev)
   }
 
@@ -237,12 +237,20 @@ object Analytics {
     * the dispatch itself is spec-pinned (un-memoized — the named entries
     * go through [[hasHeavyKeyMemo]]). */
   def qWindowRunningAuto(spark: SparkSession, events: DataFrame): DataFrame =
-    if (hasHeavyKey(events)) qWindowRunningSkewSafe(events)
+    if (heavyKeyAtScale(events, hasHeavyKey(events))) qWindowRunningSkewSafe(events)
     else qWindowRunningFrom(events)
+
+  /** The skew-safe branch needs a heavy key, and a key can only be heavy at
+    * scale: below the leaf-byte gate one key's window is bounded by the gate
+    * itself, so the `probe` (a corpus job) runs only when
+    * [[PlanStats.atScale]] holds. */
+  private def heavyKeyAtScale(events: DataFrame, probe: => Boolean): Boolean =
+    PlanStats.atScale(events) && probe
 
   /** Any key at/above [[HeavyKeyRows]]? One map-side-combinable count over
     * the pruned key column, probed with limit 1 — the detection cost the
-    * auto dispatch pays on every corpus (measured ≈ a count(*) by key). */
+    * auto dispatch pays on every corpus at scale (measured ≈ a count(*) by
+    * key). */
   private def hasHeavyKey(events: DataFrame): Boolean =
     !events.select("user_id").groupBy("user_id")
       .agg(count(lit(1)).as("hn")).filter(col("hn") >= HeavyKeyRows)
@@ -254,56 +262,18 @@ object Analytics {
   private def hasHeavyKeyMemo(spark: SparkSession, d: String): Boolean =
     Memo.fact(spark, d, "heavy_key")(hasHeavyKey(Tables.events(spark, d)))
 
-  /** MATERIALIZED-SIDE memo (r18, the TPC-H join-constant attack): the
-    * reduced build side of a big fact join — e.g. q5's
-    * date-filtered-orders ⋈ EUROPE-customers — is corpus-DERIVED but
-    * orders-of-magnitude smaller than the fact scan it gates. Planned
-    * lazily, Catalyst only has file-size-scaled ESTIMATES for it, so the
-    * static planner keeps a sort-merge join and the fact table pays a
-    * full shuffle WRITE even when AQE later converts the read side
-    * (AQE's SMJ→BHJ conversion cannot unschedule the map stage). A
-    * forced broadcast() is banned here — the side grows with SF and
-    * would build corpus-proportional driver state at 100 TB (the
-    * broadcast-allowlist contract). The honest mechanism is ACCURATE
-    * STATS: persist + materialize the side, so InMemoryRelation reports
-    * its true size and the static planner picks broadcast-hash exactly
-    * while the side is genuinely under the 64 MB threshold — and
-    * degrades to the shuffle plan by itself the moment it isn't
-    * (measured at sf10: q5 exec 6.9→2.0 s, hash exchanges 6→2, zero
-    * lineitem shuffle). The side is a Memo frame counted at build, so its
-    * stats are exact before any consumer plans against it.
-    */
-
-  /** Sum of the build plan's LEAF relation stat bytes (parquet file bytes ×
-    * column-prune ratio — the same measured quantity the eventsByUser sizing
-    * law reads). This is what the memo's cost AND its payoff both scale
-    * with: the persist's build job re-scans exactly these leaves, and the
-    * fact exchange the accurate stats remove is bounded by them. Join/agg
-    * OUTPUT stats are useless here — without CBO column stats Catalyst
-    * multiplies join children, so a 2 MB o⋈c side "estimates" at hundreds
-    * of GB at any SF. (Shared impl: [[PlanStats]].) */
-  private def leafStatBytes(df: DataFrame): Long = PlanStats.leafStatBytes(df)
-
-  /** r19 (r18 verdict #2): below this many leaf bytes the memo choreography
-    * (persist registration + materializing count() job + per-consumer
-    * InMemoryTableScan) costs more than the exchange it removes — measured
-    * at sf0.1 (11 MB lineitem): q8 0.76×, q3 0.89×, q17 ~0.75× vs the lazy
-    * r17 shapes. Below the gate the LAZY side is returned: at that scale
-    * the static planner's file-size estimates are themselves under the
-    * 64 MB broadcast threshold, so the plan keeps the broadcast-hash shape
-    * without paying the persist. Above it (sf1's 176 MB lineitem, sf10,
-    * any production corpus) the persist is the mechanism that earns the
-    * static BHJ — unchanged. Deployment knob, bytes. */
-  private def memoSideMinBytes(spark: SparkSession): Long =
-    PlanStats.minLeafBytes(spark)
-
-  private def memoSide(spark: SparkSession, d: String, tag: String)
-      (build: => DataFrame): DataFrame =
-    Memo.cached[DataFrame](spark, d, tag).getOrElse {
-      val lazySide = build
-      if (leafStatBytes(lazySide) < memoSideMinBytes(spark)) lazySide
-      else Memo.frame(spark, d, tag, count = true)(lazySide)
-    }
+  // Materialized join sides (`Memo.atScale`): the reduced build side of a
+  // big fact join (q5's date-filtered orders ⋈ EUROPE customers) is
+  // corpus-derived but far smaller than the fact scan it gates. Planned
+  // lazily, Catalyst has only file-size estimates for it, so the static
+  // planner keeps a sort-merge join and the fact table pays a full shuffle
+  // write even when AQE later converts the join. A forced broadcast hint is
+  // banned (the side grows with the corpus). At scale the side is
+  // persisted and counted at build, so InMemoryRelation reports its true
+  // size and the planner picks broadcast-hash exactly while the side is
+  // under the broadcast threshold (sf10: q5 exec 6.9 → 2.0 s, no lineitem
+  // shuffle). Below the gate the lazy side already plans a broadcast and
+  // the persist only costs (sf0.1: q8 0.76×, q3 0.89×, q17 ~0.75×).
 
   /** r19 (r18 verdict #5): conditional SHUFFLE_HASH pin. The r18 pins on
     * the q12/q_exists fact-fact joins removed the SMJ sorts at sf10
@@ -340,7 +310,7 @@ object Analytics {
     * advertises the repartition. Warmed by Bench/QueryTime as a family
     * build. */
   def eventsByUser(spark: SparkSession, d: String): DataFrame =
-    // ungated, unlike memoSide: consumers reference this
+    // ungated, unlike the materialized sides: consumers reference this
     // frame SEVERAL times inside one plan (attribution reads it 3×), so an
     // unpersisted memo would re-scan per reference; and the family-build
     // contract (warmFamilyCaches / family_build_s) bills the build outside
@@ -380,8 +350,8 @@ object Analytics {
       slim.repartition(n, col("user_id"))
     }
 
-  /** The memo's 5-column events projection, scale-dispatched (r19): BELOW
-    * the memoSide leaf-byte gate a single-consumer per-user window query
+  /** The memo's 5-column events projection, scale-dispatched: BELOW
+    * the leaf-byte gate a single-consumer per-user window query
     * is faster reading the raw scan (the InMemoryTableScan constant plus
     * the sizing law's ~2 memo partitions beat a 2 MB scan's exchange —
     * QueryTime sf0.1: q_twap 0.36 raw vs 0.48 memo); ABOVE it the memo's
@@ -392,8 +362,7 @@ object Analytics {
     val slim = Tables.events(spark, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
         cents(col("value")).as("value_c"))
-    if (leafStatBytes(slim) < memoSideMinBytes(spark)) slim
-    else eventsByUser(spark, d)
+    if (PlanStats.atScale(slim)) eventsByUser(spark, d) else slim
   }
 
   /** Pre-materialize the shared per-user events memo (Bench warm
@@ -744,13 +713,13 @@ object Analytics {
   // branch.
   def qSlidingWindow(spark: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(spark, d)
-    if (hasHeavyKeyMemo(spark, d)) qSlidingWindowSkewSafe(ev)
+    if (heavyKeyAtScale(ev, hasHeavyKeyMemo(spark, d))) qSlidingWindowSkewSafe(ev)
     else qSlidingWindowFrom(ev)
   }
 
   /** Auto-dispatching entry — see [[qWindowRunningAuto]]. */
   def qSlidingWindowAuto(spark: SparkSession, events: DataFrame): DataFrame =
-    if (hasHeavyKey(events)) qSlidingWindowSkewSafe(events)
+    if (heavyKeyAtScale(events, hasHeavyKey(events))) qSlidingWindowSkewSafe(events)
     else qSlidingWindowFrom(events)
 
   /** DataFrame-in core for [[qSlidingWindow]] (events needs user_id,
@@ -874,7 +843,7 @@ object Analytics {
       .filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
         (cents(col("l_extendedprice")) * (lit(100L) - cents(col("l_discount")))).as("rev_c4"))
-    // r19 (the q5/q8 memoSide shape): the 6-month order window is ~7% of
+    // r19 (the q5/q8 materialized-side shape): the 6-month order window is ~7% of
     // orders, 2 narrow columns — memoized, the static planner sees its
     // TRUE size and broadcast-hashes it, so the R-lineitem probe side
     // never exchanges for the join (sf10: exec 3.98 s, the
@@ -882,7 +851,7 @@ object Analytics {
     // (sf0.1) the lazy side broadcasts off file stats anyway; past the
     // 64 MB threshold at ~100× this window the memo degrades to the
     // shuffle join it replaced.
-    val o = memoSide(spark, d, "q10_window_orders") {
+    val o = Memo.atScale(spark, d, "q10_window_orders") {
       Tables.orders(spark, d)
         .filter(col("o_orderdate") >= ts("1996-01-01 00:00:00") &&
           col("o_orderdate") < ts("1996-07-01 00:00:00"))
@@ -924,7 +893,7 @@ object Analytics {
   private val LargeOrderQtyC = 25000L // sum(l_quantity) > 250, in cents
 
   def q18LargeOrders(spark: SparkSession, d: String): DataFrame = {
-    // r18 measured rejection (SCALING.md): memoSide on the threshold
+    // r18 measured rejection (SCALING.md): a materialized side on the threshold
     // survivors gives the joins accurate stats (orders' 203 MB exchange
     // becomes a broadcast probe — exec dropped to 0.4 s), but the memo's
     // eager materialization serializes the whole lineitem aggregate that
@@ -1629,7 +1598,7 @@ object Analytics {
   // per partition, nothing to combine — the cost IS the exchange).
   // r18 follow-up (the q17Core lowering, same race): pack the per-part
   // stats to ONE BIGINT — sum_qc·2²⁰ | cnt — and materialize through
-  // [[memoSide]], so the static planner broadcast-hashes the ~32 MB side
+  // `Memo.atScale`, so the static planner broadcast-hashes the ~32 MB side
   // and the 60M-row fact stream never exchanges or sorts. Packing bound:
   // cnt < 2²⁰ lines per part (TPC-H holds ~30 at every SF) and
   // sum_qc ≤ 5000·cnt cents < 2⁴³ — exact integer compare throughout
@@ -1638,7 +1607,7 @@ object Analytics {
     val l = Tables.lineitem(spark, d)
       .select("l_partkey", "l_quantity", "l_extendedprice")
     val p = Tables.part(spark, d).select("p_partkey", "p_brand")
-    val stats = memoSide(spark, d, "qcorr_perpart_packed") {
+    val stats = Memo.atScale(spark, d, "qcorr_perpart_packed") {
       l.groupBy(col("l_partkey").as("s_partkey"))
         .agg((sum(cents(col("l_quantity"))) * lit(1L << 20) + count(lit(1))).as("packed"))
     }
@@ -2756,7 +2725,7 @@ object Analytics {
     // flows through a single map-side-combinable (year, month) aggregate
     // carrying both sums. Zero-promo months fall out as exact 0 from the
     // `otherwise`, matching the old coalesce.
-    val promoKeys = memoSide(spark, d, "promo_partkeys") {
+    val promoKeys = Memo.atScale(spark, d, "promo_partkeys") {
       Tables.part(spark, d)
         .filter(col("p_type") === "PROMO").select(col("p_partkey"))
     }
@@ -2905,7 +2874,7 @@ object Analytics {
     q17Core(lineitem, part, identity)
 
   /** Shared core; `pin` lets the registered entry materialize the packed
-    * per-part stats through [[memoSide]] while the spec path stays lazy.
+    * per-part stats through `Memo.atScale` while the spec path stays lazy.
     *
     * Lowering (shape race at sf10, SCALING.md): the raw 60M-row fact side used
     * to pay a partkey exchange + SMJ sort ONLY to meet the 2M-row
@@ -2917,7 +2886,7 @@ object Analytics {
     * total 2.3 s incl. the memo build vs 7.3-8.9 s for the lazy form
     * and 5.6 s for a shuffle_hash pin (same race). Past the threshold
     * the identical plan degrades to the shuffle join by itself (the
-    * memoSide contract). Packing bound: cnt < 2²⁴ lines per part (TPC-H
+    * materialized-side contract). Packing bound: cnt < 2²⁴ lines per part (TPC-H
     * holds ~30 at every SF) and sum_qty < 2³⁹ (≤ 50·cnt) — both orders
     * of magnitude above any honest corpus; the quantities are
     * non-negative so the packed compare is exact integer arithmetic
@@ -2943,7 +2912,7 @@ object Analytics {
 
   def q17SmallQtyRevenue(spark: SparkSession, d: String): DataFrame =
     q17Core(Tables.lineitem(spark, d), Tables.part(spark, d),
-      memoSide(spark, d, "q17_perpart_packed")(_))
+      Memo.atScale(spark, d, "q17_perpart_packed")(_))
 
   val q17SmallQtyRevenueSql: String =
     """WITH l AS (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
@@ -3058,7 +3027,7 @@ object Analytics {
   private val Q8Type = "PROMO"
 
   def q8MarketShare(spark: SparkSession, d: String): DataFrame = {
-    // r18 (the q5 memoSide shape): ASIA customers gate the date-filtered
+    // r18 (the q5 materialized-side shape): ASIA customers gate the date-filtered
     // orders into a materialized (o_orderkey, o_year) side — accurate
     // stats drive static broadcast-hash, so the PROMO-filtered lineitem
     // stream joins it with zero fact-side exchange; past the 64 MB
@@ -3066,7 +3035,7 @@ object Analytics {
     // The memo's orders⋈customer join is pinned shuffle_hash (the q5
     // estimate trap: never build an orders-side hash on the driver).
     val p = Tables.part(spark, d).filter(col("p_type") === Q8Type).select("p_partkey")
-    val qual = memoSide(spark, d, "q8_qual_orders") {
+    val qual = Memo.atScale(spark, d, "q8_qual_orders") {
       val asiaN = Tables.nation(spark, d)
         .join(Tables.region(spark, d).filter(col("r_name") === Q8Region),
           col("n_regionkey") === col("r_regionkey"))

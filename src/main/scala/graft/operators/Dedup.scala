@@ -426,13 +426,12 @@ object Dedup {
     // left join against the verified set (unique per (da, db) by
     // construction, one row per candidate pair) marks hits, a single
     // aggregate counts both.
-    val sigLazy = Tables.documents(spark, d)
-      .filter(col("doc_id") % sampleMod === sampleRem)
-      .select(col("doc_id"), expr("minhash_sig(text)").as("sig"))
-      .filter(col("sig").isNotNull)
-    val sig =
-      if (PlanStats.leafStatBytes(sigLazy) < PlanStats.minLeafBytes(spark)) sigLazy
-      else Memo.frame(spark, d, s"lsh_tune_sig_${sampleMod}_$sampleRem", count = true)(sigLazy)
+    val sig = Memo.atScale(spark, d, s"lsh_tune_sig_${sampleMod}_$sampleRem") {
+      Tables.documents(spark, d)
+        .filter(col("doc_id") % sampleMod === sampleRem)
+        .select(col("doc_id"), expr("minhash_sig(text)").as("sig"))
+        .filter(col("sig").isNotNull)
+    }
     val truePairs = lshShared(spark, d).verified
       .filter(col("da") % sampleMod === sampleRem && col("db") % sampleMod === sampleRem)
       .select("da", "db")

@@ -74,6 +74,17 @@ private[graft] object Memo {
       df
     }
 
+  /** A frame worth pinning only at scale: the live entry under the key if
+    * there is one, before anything is built or measured; otherwise the plan
+    * `build`, persisted and counted at build when [[PlanStats.atScale]],
+    * returned lazy and unowned when not. */
+  def atScale(spark: SparkSession, dir: String, tag: String)
+      (build: => DataFrame): DataFrame =
+    cached[DataFrame](spark, dir, tag).getOrElse {
+      val df = build
+      if (PlanStats.atScale(df)) frame(spark, dir, tag, count = true)(df) else df
+    }
+
   /** The live value under the key, if any; builds nothing. */
   def cached[A](spark: SparkSession, dir: String, tag: String): Option[A] =
     slots.get(Key(spark, dir, tag)).map(_.entry).filter(live).map(_.value.asInstanceOf[A])

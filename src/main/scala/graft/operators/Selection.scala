@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -1034,25 +1034,20 @@ object Selection {
     * lag column, NULL on each compound's global first row — exactly
     * lag(c) OVER (PARTITION BY compound ORDER BY ordCols).
     * Parallelism: |compounds| × SeriesBuckets local sorts + one
-    * AQE-broadcast census join. */
+    * AQE-broadcast census join.
+    *
+    * Without `atScale` (the caller's [[PlanStats.atScale]] on its input,
+    * before the join with its span aggregate) the same lag is one plain
+    * per-compound window; `li` is then the global rank, which no external
+    * consumer reads. */
   private def bucketLag1(rows: DataFrame, ordCols: Seq[String],
-      lagCols: Seq[String]): DataFrame = {
+      lagCols: Seq[String], atScale: Boolean): DataFrame = {
     val ord = ordCols.map(col)
-    // r19 size dispatch (same gate as memoSide/dsTrend): below the leaf
-    // floor the decomposition's constants — the checkpoint's construction-
-    // time toRdd planning pass, the census window, the handoff join —
-    // cost more than they save, and a plain per-compound window is exact
-    // (li = bucket-local rank degenerates to the global rank when the
-    // whole compound is one bucket; no external consumer reads li).
-    // Above it the bucketed form stays: per-compound corpus windows are
-    // the 100 TB single-task skew hazard this decomposition removes.
-    if (PlanStats.leafStatBytes(rows) < PlanStats.minLeafBytes(rows.sparkSession)) {
-      val w = Window.partitionBy("compound").orderBy(ord: _*)
-      return lagCols.foldLeft(
-        rows.withColumn("li", row_number().over(w))) {
-        (df, c) => df.withColumn(s"prev_$c", lag(col(c), 1).over(w))
+    def lagged(in: DataFrame, w: WindowSpec, suffix: String): DataFrame =
+      lagCols.foldLeft(in.withColumn("li", row_number().over(w))) {
+        (df, c) => df.withColumn(s"prev_$c$suffix", lag(col(c), 1).over(w))
       }
-    }
+    if (!atScale) return lagged(rows, Window.partitionBy("compound").orderBy(ord: _*), "")
     val lw = Window.partitionBy("compound", "b").orderBy(ord: _*)
     // Window BEFORE the checkpoint (r17; was checkpoint-then-window): a
     // checkpoint's LogicalRDD does not advertise the repartition's hash
@@ -1062,12 +1057,10 @@ object Selection {
     // exchange count at one; the census and the join-back both read the
     // checkpoint. The explicit-N repartition (r16, the latticeOf finding)
     // still pins the decomposition's parallelism against AQE coalescing.
-    val local = lagCols.foldLeft(
+    val local = lagged(
       rows.repartition(rows.sparkSession.conf.get(
-          "spark.sql.shuffle.partitions").toInt, col("compound"), col("b"))
-        .withColumn("li", row_number().over(lw))) {
-      (df, c) => df.withColumn(s"prev_${c}_l", lag(col(c), 1).over(lw))
-    }.localCheckpoint(false)
+        "spark.sql.shuffle.partitions").toInt, col("compound"), col("b")),
+      lw, "_l").localCheckpoint(false)
     val census = local.groupBy("compound", "b")
       .agg(max_by(struct(lagCols.map(col): _*), struct(ord: _*)).as("last_row"))
     val cw = Window.partitionBy("compound").orderBy("b")
@@ -1108,7 +1101,7 @@ object Selection {
     // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
     val rows = k.join(broadcast(spans), Seq("compound"))
       .withColumn("b", expr(s"(sec - tmin) * $SeriesBuckets div (span + 1)"))
-    bucketLag1(rows, Seq("cts", idCol), Seq("sec", idCol))
+    bucketLag1(rows, Seq("cts", idCol), Seq("sec", idCol), PlanStats.atScale(kIn))
       .filter(col("prev_sec").isNotNull)
       .withColumn("gap_sec", col("sec") - col("prev_sec"))
       .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
@@ -1157,7 +1150,7 @@ object Selection {
     // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
     val rows = k.join(broadcast(spans), Seq("compound"))
       .withColumn("b", expr(s"(sec - tmin) * $SeriesBuckets div (span + 1)"))
-    bucketLag1(rows, Seq("cts", idCol), Seq("sec", idCol, "vc"))
+    bucketLag1(rows, Seq("cts", idCol), Seq("sec", idCol, "vc"), PlanStats.atScale(kIn))
       .filter(col("prev_sec").isNotNull)
       .withColumn("gap_sec", col("sec") - col("prev_sec"))
       .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
@@ -1225,22 +1218,16 @@ object Selection {
     * stream takes a lazy localCheckpoint (the dsCusumFrom storage
     * contract). */
   def rollingZFrom(k: DataFrame, idCol: String): DataFrame = {
-    // r19 size dispatch (same gate as memoSide/dsTrend/bucketLag1): below
-    // the leaf floor the boundary-context decomposition's constants (the
-    // checkpoint's construction-time toRdd planning pass, the census, the
-    // context explode-join) dwarf the corpus, and a plain per-compound
-    // window produces the IDENTICAL lag chain (the 16-term IEEE fold is
-    // the same expression tree either way). Above it the decomposition
-    // stays — a per-compound corpus window is the 100 TB single-task
-    // hazard it removes.
+    // the 15-lag chain, over one per-compound window below the gate and
+    // per (compound, bucket) over context + own rows above it: the same
+    // expression tree either way
+    def lagChain(in: DataFrame, w: WindowSpec): DataFrame =
+      (1 until RollW).foldLeft(in)((df, j) => df.withColumn(s"l$j", lag(col("value"), j).over(w)))
     val lagged: DataFrame =
-      if (PlanStats.leafStatBytes(k) < PlanStats.minLeafBytes(k.sparkSession)) {
+      if (!PlanStats.atScale(k)) {
         val w = Window.partitionBy("compound").orderBy(col("cts"), col(idCol))
-        (1 until RollW).foldLeft(
-          k.select(col("compound"), col(idCol), col("value"), col("cts"))
-            .withColumn("i", row_number().over(w).cast("long"))) {
-          (df, j) => df.withColumn(s"l$j", lag(col("value"), j).over(w))
-        }
+        lagChain(k.select(col("compound"), col(idCol), col("value"), col("cts"))
+          .withColumn("i", row_number().over(w).cast("long")), w)
       } else {
         val k0 = k.withColumn("tu", unix_micros(col("cts")))
         val stats = k0.groupBy("compound").agg(
@@ -1274,10 +1261,8 @@ object Selection {
           .join(census.select(col("compound"), col("start").as("tstart"), col("b").as("tb")),
             Seq("compound", "tstart"))
           .select(baseCols :+ col("tb").as("gb") :+ lit(true).as("ctx"): _*)
-        val ord = Window.partitionBy("compound", "gb").orderBy("i")
-        (1 until RollW).foldLeft(ownK.union(ctxK)) { (df, j) =>
-          df.withColumn(s"l$j", lag(col("value"), j).over(ord))
-        }.filter(!col("ctx"))
+        lagChain(ownK.union(ctxK), Window.partitionBy("compound", "gb").orderBy("i"))
+          .filter(!col("ctx"))
       }
     val nD = RollW.toDouble
     val s = (1 until RollW).foldLeft(col("value"))((acc, j) => acc + col(s"l$j"))
@@ -1763,7 +1748,7 @@ object Selection {
     val rows = k.join(broadcast(spans), Seq("compound"))
       .withColumn("b", expr(s"(ms - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
       .drop("tmin", "tmax")
-    bucketLag1(rows, Seq("ms", "event_id"), Seq("vc"))
+    bucketLag1(rows, Seq("ms", "event_id"), Seq("vc"), PlanStats.atScale(k))
       .withColumn("pv", col("prev_vc"))
       .filter(col("pv").isNotNull)
       .groupBy("compound")
@@ -2020,16 +2005,11 @@ object Selection {
     * but not the median) is pinned on a constructed series. */
   def dsTrendFrom(k: DataFrame): DataFrame = {
     val k0 = k.select(col("compound"), col("ms"), col("event_id"), col("value"))
-    // r19 size dispatch: below the leaf-byte gate the radix-selection
-    // machinery (two bucketed levels, three lazy checkpoints — each one a
-    // construction-time toRdd planning pass) costs ~1.6 s of CONSTANTS at
-    // sf0.1 against a 0.1 s corpus; the plain per-compound window median
-    // is exact there (the discrete median is the VALUE at rank ⌈n/2⌉,
-    // invariant to equal-slope tie order — same argument the radix form
-    // relies on). Above the gate the radix path stays: per-compound
-    // corpus windows are the 100 TB skew hazard it exists to avoid.
-    if (PlanStats.leafStatBytes(k0) < PlanStats.minLeafBytes(k.sparkSession))
-      return dsTrendNaive(k0)
+    // below the gate the plain per-compound window median is exact (the
+    // discrete median is the VALUE at rank ⌈n/2⌉, invariant to equal-slope
+    // tie order, the argument the radix form relies on) and skips the
+    // radix form's three checkpoints (~1.6 s of constants at sf0.1)
+    if (!PlanStats.atScale(k)) return dsTrendNaive(k0)
     val spans = k0.groupBy("compound").agg(
       min(col("ms")).as("tmin"), max(col("ms")).as("tmax"))
     // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
@@ -2040,7 +2020,7 @@ object Selection {
     // join-back) — dropping it re-derived the slope per consumer from the
     // bucketLag1 checkpoint and measured WORSE at sf10 (6.4 vs 4.7s,
     // r17 probe), so the third materialization round stays
-    val slopes = bucketLag1(rows, Seq("ms", "event_id"), Seq("ms", "value"))
+    val slopes = bucketLag1(rows, Seq("ms", "event_id"), Seq("ms", "value"), atScale = true)
       .filter(col("prev_ms").isNotNull && col("ms") > col("prev_ms"))
       .select(col("compound"),
         ((col("value") - col("prev_value")) / (col("ms") - col("prev_ms")).cast("double")
@@ -2489,22 +2469,9 @@ object Selection {
       .withColumn("h", expr("madx * 4"))
       .withColumn("dh", col("vc") - col("t") - col("k"))
       .withColumn("dl", col("t") - col("k") - col("vc"))
-    // r19 size dispatch (same gate as memoSide/dsTrend/rollingZ/spc):
-    // below the leaf floor the prefix-sum/prefix-min closed form runs as
-    // ONE per-compound window — no checkpoint (a construction-time toRdd
-    // planning pass), no census, no join-back; above it the bucket
-    // decomposition stays (per-compound corpus windows are the 100 TB
-    // single-task hazard).
-    if (PlanStats.leafStatBytes(rows) <
-        PlanStats.minLeafBytes(lattice.sparkSession)) {
-      val w = Window.partitionBy("compound").orderBy("cts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return rows
-        .withColumn("ph", sum(col("dh")).over(w))
-        .withColumn("pl", sum(col("dl")).over(w))
-        .withColumn("sh", col("ph") - least(min(col("ph")).over(w), lit(0L)))
-        .withColumn("sl", col("pl") - least(min(col("pl")).over(w), lit(0L)))
-        .select(col("compound"), col("event_id"), col("h"),
+    // the high/low unpivot of the two CUSUM statistics sh and sl
+    def alarms(p: DataFrame): DataFrame =
+      p.select(col("compound"), col("event_id"), col("h"),
           explode(array(
             struct(lit("high").as("side"), col("sh").as("s")),
             struct(lit("low").as("side"), col("sl").as("s")))).as("x"))
@@ -2512,6 +2479,15 @@ object Selection {
           col("x.side").as("side"), col("x.s").as("s"), col("h"))
         .filter(col("s") > col("h"))
         .orderBy("compound", "event_id", "side")
+    // below the gate the closed form is one per-compound window
+    if (!PlanStats.atScale(lattice)) {
+      val w = Window.partitionBy("compound").orderBy("cts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      return alarms(rows
+        .withColumn("ph", sum(col("dh")).over(w))
+        .withColumn("pl", sum(col("dl")).over(w))
+        .withColumn("sh", col("ph") - least(min(col("ph")).over(w), lit(0L)))
+        .withColumn("sl", col("pl") - least(min(col("pl")).over(w), lit(0L))))
     }
     val lw = Window.partitionBy("compound", "b").orderBy("cts", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2545,14 +2521,7 @@ object Selection {
         least(least(col("pmh"), col("offh") + col("lmh")), lit(0L)))
       .withColumn("sl", col("offl") + col("lpl") -
         least(least(col("pml"), col("offl") + col("lml")), lit(0L)))
-    p.select(col("compound"), col("event_id"), col("h"),
-        explode(array(
-          struct(lit("high").as("side"), col("sh").as("s")),
-          struct(lit("low").as("side"), col("sl").as("s")))).as("x"))
-      .select(col("compound"), col("event_id"),
-        col("x.side").as("side"), col("x.s").as("s"), col("h"))
-      .filter(col("s") > col("h"))
-      .orderBy("compound", "event_id", "side")
+    alarms(p)
   }
 
   val dsCusumSql: String = KeyedCte +
@@ -2629,27 +2598,17 @@ object Selection {
     val rows = lattice.withColumn("side",
       when(col("vc") > col("t"), lit(1L))
         .when(col("vc") < col("t"), lit(-1L)).otherwise(lit(0L)))
-    // r19 size dispatch (same gate as memoSide/dsTrend/rollingZ): below
-    // the leaf floor the plain per-compound sort evaluates the identical
-    // ROWS-bounded run windows without the two checkpoints (each a
-    // construction-time toRdd planning pass), the census, or the context
-    // explode-join; above it the decomposition stays (per-compound corpus
-    // windows are the 100 TB single-task hazard).
-    if (PlanStats.leafStatBytes(rows) <
-        PlanStats.minLeafBytes(lattice.sparkSession)) {
-      val ord = Window.partitionBy("compound").orderBy("cts", "event_id")
-      val w8 = ord.rowsBetween(-7, Window.currentRow)
-      val w6 = ord.rowsBetween(-5, Window.currentRow)
-      return rows
-        .withColumn("i", row_number().over(ord).cast("long"))
-        .withColumn("prev", lag(col("vc"), 1).over(ord))
+    // the run-rule columns over the rows in `ord` order, and the report
+    def ruleColumns(in: DataFrame, ord: WindowSpec): DataFrame =
+      in.withColumn("prev", lag(col("vc"), 1).over(ord))
         .withColumn("mv",
           when(col("prev").isNull, lit(0L))
             .when(col("vc") > col("prev"), lit(1L))
             .when(col("vc") < col("prev"), lit(-1L)).otherwise(lit(0L)))
-        .withColumn("s8", sum(col("side")).over(w8))
-        .withColumn("m6", sum(col("mv")).over(w6))
-        .groupBy("compound").agg(
+        .withColumn("s8", sum(col("side")).over(ord.rowsBetween(-7, Window.currentRow)))
+        .withColumn("m6", sum(col("mv")).over(ord.rowsBetween(-5, Window.currentRow)))
+    def report(scored: DataFrame): DataFrame =
+      scored.groupBy("compound").agg(
           count(lit(1)).as("n_points"),
           sum(when(abs(col("vc") - col("t")) > col("madx") * 3, 1L)
             .otherwise(0L)).as("n_rule1"),
@@ -2658,6 +2617,10 @@ object Selection {
           sum(when(col("i") >= 7 && abs(col("m6")) === 6, 1L)
             .otherwise(0L)).as("n_rule3"))
         .orderBy("compound")
+    // below the gate the run windows are one per-compound sort
+    if (!PlanStats.atScale(lattice)) {
+      val ord = Window.partitionBy("compound").orderBy("cts", "event_id")
+      return report(ruleColumns(rows.withColumn("i", row_number().over(ord).cast("long")), ord))
     }
     val lw = Window.partitionBy("compound", "b").orderBy("cts", "event_id")
     // localCheckpoint on the two shared stages (census + join-back, then
@@ -2685,27 +2648,8 @@ object Selection {
       .join(census.select(col("compound"), col("start").as("tstart"), col("b").as("tb")),
         Seq("compound", "tstart"))
       .select(baseCols.map(col) :+ col("tb").as("gb") :+ lit(true).as("ctx"): _*)
-    val ord = Window.partitionBy("compound", "gb").orderBy("i")
-    val w8 = ord.rowsBetween(-7, Window.currentRow)
-    val w6 = ord.rowsBetween(-5, Window.currentRow)
-    val p = ownK.union(ctxK)
-      .withColumn("prev", lag(col("vc"), 1).over(ord))
-      .withColumn("mv",
-        when(col("prev").isNull, lit(0L))
-          .when(col("vc") > col("prev"), lit(1L))
-          .when(col("vc") < col("prev"), lit(-1L)).otherwise(lit(0L)))
-      .withColumn("s8", sum(col("side")).over(w8))
-      .withColumn("m6", sum(col("mv")).over(w6))
-    p.filter(!col("ctx"))
-      .groupBy("compound").agg(
-        count(lit(1)).as("n_points"),
-        sum(when(abs(col("vc") - col("t")) > col("madx") * 3, 1L)
-          .otherwise(0L)).as("n_rule1"),
-        sum(when(col("i") >= 8 && abs(col("s8")) === 8, 1L)
-          .otherwise(0L)).as("n_rule2"),
-        sum(when(col("i") >= 7 && abs(col("m6")) === 6, 1L)
-          .otherwise(0L)).as("n_rule3"))
-      .orderBy("compound")
+    report(ruleColumns(ownK.union(ctxK), Window.partitionBy("compound", "gb").orderBy("i"))
+      .filter(!col("ctx")))
   }
 
   val dsSpcRulesSql: String = KeyedCte +

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.sources.Tables
 
 /** §2.4 similarity search over `embeddings` (64-dim float vectors).
@@ -639,23 +640,22 @@ object Similarity {
     // (corpus × queries cosine top-k) once per branch. Above the leaf
     // floor it is a Memo frame counted at build, so it is computed ONCE;
     // the relation is NumQueries×K rows (report-sized at any SF — the
-    // query set is static). Size-gated like memoSide: below the floor the
-    // five redundant bruteforces run CONCURRENTLY across idle cores and
-    // beat the serialized persist (sf0.1: 2.60 lazy vs 3.14 persisted).
-    val exactLazy = annBruteforce(spark, d).select(col("qid"), col("vec_id"))
-    val gatePersist = PlanStats.leafStatBytes(exactLazy) >= PlanStats.minLeafBytes(spark)
-    // Each frame is materialized in turn, never concurrently: bruteforce
-    // and the PQ window pipeline peaking together on top of the warm
-    // family memos exceeded the 12 GB bench heap at sf10.
-    def once(tag: String, df: DataFrame): DataFrame =
-      if (!gatePersist) df else Memo.frame(spark, d, tag, count = true)(df)
-    val exact = once("ann_recall_exact", exactLazy)
+    // query set is static). Below the floor the five redundant
+    // bruteforces run CONCURRENTLY across idle cores and beat the
+    // serialized persist (sf0.1: 2.60 lazy vs 3.14 persisted).
+    val exact = Memo.atScale(spark, d, "ann_recall_exact")(
+      annBruteforce(spark, d).select(col("qid"), col("vec_id")))
     // The PQ ranking feeds BOTH the pq branch (rank ≤ K) and the refine
     // shortlist (rank ≤ RefineM ≥ K — same window, deeper cut), so one
     // shared ranking replaces two full PQ pipelines (encode + corpus ×
-    // queries ADC scoring). Report-sized: NumQueries × RefineM rows.
-    val pqTop = once("ann_recall_pq_top",
-      pqRanked(spark, d, RefineM).select("qid", "vec_id", "rank"))
+    // queries ADC scoring). Report-sized: NumQueries × RefineM rows. It is
+    // pinned exactly when the baseline is, and after it: bruteforce and
+    // the PQ window pipeline peaking together on top of the warm family
+    // memos exceeded the 12 GB bench heap at sf10.
+    def pqLazy = pqRanked(spark, d, RefineM).select("qid", "vec_id", "rank")
+    val pqTop =
+      if (exact.storageLevel == StorageLevel.NONE) pqLazy
+      else Memo.frame(spark, d, "ann_recall_pq_top", count = true)(pqLazy)
     // Every query appears in the report even when the index returned NOTHING
     // that overlaps the exact top-k — recall-0 queries are the exact ones an
     // ANN evaluation exists to surface, and a groupBy over the hit rows

@@ -7,6 +7,14 @@ import graft.{GraftSession, SparkEntry}
 /** Dumps `explain("formatted")` for every query into EXPLAINS.md and fails
   * loudly on plan smells: a CartesianProduct anywhere, or a missing
   * broadcast/pushdown where the operator's design promises one.
+  *
+  * Every query is audited twice: at the session's leaf-byte gate (the
+  * default unless `spark.graft.memoSide.minLeafBytes` is set) and at gate 0,
+  * where each size-dispatched operator takes its at-scale form
+  * ([[graft.operators.PlanStats]]). EXPLAINS.md records the gate-0 plans.
+  * The bounded-cardinality window rule applies to the gate-0 plans only:
+  * below the gate a per-compound window's input is bounded by the gate
+  * itself. Every other rule applies at both settings.
   * Run: sbt "runMain graft.tools.ExplainDump /root/testdata/sf0.01"
   */
 object ExplainDump {
@@ -106,47 +114,72 @@ object ExplainDump {
     }
   }
 
+  private val GateKey = "spark.graft.memoSide.minLeafBytes"
+
+  /** Audit failures of query `name`'s plan; `atScale` adds the
+    * bounded-cardinality window rule. */
+  private def audit(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+      plan: String, atScale: Boolean): Seq[String] = {
+    var bad = List.empty[String]
+    if (plan.contains("CartesianProduct"))
+      bad ::= s"$name: CartesianProduct in plan"
+    if (MustBroadcast(name) && !plan.contains("Broadcast"))
+      bad ::= s"$name: expected a broadcast join"
+    if (MustPushFilter(name) && !plan.contains("PushedFilters: ["))
+      bad ::= s"$name: expected PushedFilters at the scan"
+    // Global-window gate: a Window with an empty partitionSpec moves ALL
+    // its input to one task. Allowed only on audited report-sized inputs.
+    val globalWindows = qe.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+        if w.partitionSpec.isEmpty => w
+    }
+    if (globalWindows.nonEmpty && !GlobalWindowAllowed(name))
+      bad ::= s"$name: partition-less Window outside the audited allowlist"
+    // Bounded-keys gate: a window partitioned ONLY by bounded-cardinality
+    // columns with no Aggregate below it runs corpus-sized partitions.
+    val boundedWins = if (atScale) boundedOnlyCorpusWindows(qe.optimizedPlan) else Nil
+    if (boundedWins.nonEmpty && !BoundedWindowAllowed.contains(name))
+      bad ::= s"$name: corpus-fed Window partitioned only by bounded-cardinality " +
+        s"columns (${boundedWins.mkString("; ")}) — decompose over (key, time-bucket) " +
+        "or audit it into BoundedWindowAllowed"
+    bad.reverse
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.local(8)
     val sb = new StringBuilder
-    sb.append("# EXPLAINS — physical plans at sf0.01 (auto-generated by graft.tools.ExplainDump)\n\n")
+    sb.append("# EXPLAINS — physical plans at sf0.01, leaf-byte gate 0 (auto-generated by graft.tools.ExplainDump)\n\n")
+    sb.append("Every query is audited at the default leaf-byte gate and at gate 0;\n")
+    sb.append("the plans below are the gate-0 ones, where every size-dispatched\n")
+    sb.append("operator takes its at-scale form.\n\n")
     sb.append("Audit gates: no `CartesianProduct` anywhere; `BroadcastHashJoin`/\n")
     sb.append("`BroadcastNestedLoopJoin` present where the design promises a broadcast;\n")
     sb.append("`PushedFilters` non-empty where a filter must reach the parquet scan;\n")
     sb.append("no partition-less Window outside the audited report-sized allowlist;\n")
-    sb.append("no corpus-fed Window partitioned only by bounded-cardinality columns\n")
-    sb.append("(compound/event_type/strm/source) outside the audited allowlist.\n\n")
-    var bad = List.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    sb.append("at gate 0 only, no corpus-fed Window partitioned only by bounded-cardinality\n")
+    sb.append("columns (compound/event_type/strm/source) outside the audited allowlist.\n\n")
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    def planOf(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame) = {
       val qe = fn(spark, sfDir).queryExecution
-      val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-      if (plan.contains("CartesianProduct"))
-        bad ::= s"$name: CartesianProduct in plan"
-      if (MustBroadcast(name) && !plan.contains("Broadcast"))
-        bad ::= s"$name: expected a broadcast join"
-      if (MustPushFilter(name) && !plan.contains("PushedFilters: ["))
-        bad ::= s"$name: expected PushedFilters at the scan"
-      // Global-window gate: a Window with an empty partitionSpec moves ALL
-      // its input to one task. Allowed only on audited report-sized inputs.
-      val globalWindows = qe.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      }
-      if (globalWindows.nonEmpty && !GlobalWindowAllowed(name))
-        bad ::= s"$name: partition-less Window outside the audited allowlist"
-      // Bounded-keys gate: a window partitioned ONLY by bounded-cardinality
-      // columns with no Aggregate below it runs corpus-sized partitions.
-      val boundedWins = boundedOnlyCorpusWindows(qe.optimizedPlan)
-      if (boundedWins.nonEmpty && !BoundedWindowAllowed.contains(name))
-        bad ::= s"$name: corpus-fed Window partitioned only by bounded-cardinality " +
-          s"columns (${boundedWins.mkString("; ")}) — decompose over (key, time-bucket) " +
-          "or audit it into BoundedWindowAllowed"
+      (qe, qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+    }
+    var bad = queries.flatMap { case (name, fn) =>
+      val (qe, plan) = planOf(fn)
+      audit(name, qe, plan, atScale = false).map(_ + " (default gate)")
+    }.toList
+    // the gate-0 pass starts from an empty memo, as a session run at gate 0 does
+    graft.operators.Memo.release()
+    val gate = spark.conf.getOption(GateKey)
+    spark.conf.set(GateKey, "0")
+    try queries.foreach { case (name, fn) =>
+      val (qe, plan) = planOf(fn)
+      bad ++= audit(name, qe, plan, atScale = true)
       sb.append(s"## $name\n\n")
       sb.append(s"- broadcast joins: ${"BroadcastHashJoin".r.findAllIn(plan).size}\n")
       sb.append(s"- shuffles (Exchange): ${"Exchange ".r.findAllIn(plan).size}\n")
       sb.append("\n```\n").append(plan.linesIterator.take(60).mkString("\n")).append("\n```\n\n")
-    }
+    } finally gate.fold(spark.conf.unset(GateKey))(spark.conf.set(GateKey, _))
     // The three LSH queries read memoized pipeline-stage outputs, so their
     // own plans are InMemoryTableScans; dump the UN-memoized pipeline plan
     // too, where the verification join's strategy is visible, and gate it:

@@ -87,11 +87,53 @@ class AnalyticsSpec extends SparkSpec {
     val cool = (0 until 100).map { i =>
       (i.toLong % 7, i.toLong, new java.sql.Timestamp(1700000000000L + i * 1000L), 1.0)
     }.toDF("user_id", "event_id", "ts", "value")
-    // hot corpus → the census decomposition (joins present); cool → plain
-    assert(hasJoin(Analytics.qWindowRunningAuto(spark, hot)))
-    assert(!hasJoin(Analytics.qWindowRunningAuto(spark, cool)))
-    assert(hasJoin(Analytics.qSlidingWindowAuto(spark, hot)))
-    assert(!hasJoin(Analytics.qSlidingWindowAuto(spark, cool)))
+    // at scale (gate 0): hot corpus → the census decomposition (joins
+    // present); cool → plain
+    try {
+      spark.conf.set("spark.graft.memoSide.minLeafBytes", "0")
+      assert(hasJoin(Analytics.qWindowRunningAuto(spark, hot)))
+      assert(!hasJoin(Analytics.qWindowRunningAuto(spark, cool)))
+      assert(hasJoin(Analytics.qSlidingWindowAuto(spark, hot)))
+      assert(!hasJoin(Analytics.qSlidingWindowAuto(spark, cool)))
+    } finally spark.conf.unset("spark.graft.memoSide.minLeafBytes")
+    // below the default gate one key's window is bounded by the gate, so
+    // the 40k-row hot input takes the plain window and no probe job runs
+    assert(jobsDuring {
+      assert(!hasJoin(Analytics.qWindowRunningAuto(spark, hot)))
+      assert(!hasJoin(Analytics.qSlidingWindowAuto(spark, hot)))
+    } === 0)
+    // resolving the table reads its parquet footer in a job, once per session
+    Tables.events(spark, "/root/testdata/sf0.01")
+    Analytics.releaseCaches()
+    assert(jobsDuring(SparkEntry.queries("q_window_running")(spark, "/root/testdata/sf0.01")) === 0,
+      "building q_window_running below the gate must run no job")
+  }
+
+  /** How many Spark jobs `body` started. */
+  private def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-${System.nanoTime}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "body")
+      body
+      spark.sparkContext.setJobGroup(s"$group-end", "marker")
+      spark.range(1).count()
+      // listener events arrive in order: once the marker job is seen, every
+      // job the body started has been seen too
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(s"$group-end") && System.nanoTime < deadline) Thread.sleep(20)
+      assert(groups.contains(s"$group-end"))
+      groups.toArray.count(_ == group)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("dau/mau interval sweep equals the direct 30-day-explode formulation") {

@@ -105,4 +105,55 @@ class MemoSpec extends SparkSpec {
       Memo.release()
     }
   }
+
+  test("Memo.atScale returns a live frame before it builds or measures anything") {
+    Memo.release()
+    val builds = new AtomicInteger()
+    def side = Memo.atScale(spark, "memo-spec-gated", "side") {
+      builds.incrementAndGet()
+      spark.range(100).toDF("id")
+    }
+    assert(side.storageLevel === StorageLevel.NONE, "below the gate the plan stays lazy")
+    side
+    assert(builds.get === 2, "a lazy side is not owned, so every call builds it")
+    try {
+      spark.conf.set("spark.graft.memoSide.minLeafBytes", "0")
+      val pinned = side
+      assert(pinned.storageLevel !== StorageLevel.NONE)
+      assert(side eq pinned)
+      assert(builds.get === 3, "a live entry must be returned without building its plan")
+    } finally {
+      spark.conf.unset("spark.graft.memoSide.minLeafBytes")
+      Memo.release()
+    }
+  }
+
+  test("the leaf-byte reading of a QC memo consumer does not change when the memo is warmed") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.operators.{PlanStats, Selection}
+    val d = "/root/testdata/sf0.01"
+    Memo.release()
+    Selection.dsRollingZ(spark, d)
+    Selection.dsSpcRules(spark, d)
+    // fresh frames each time, as each query builds its own: a frame's plan
+    // caches the stats it was first read with
+    def consumers = Seq(
+      Memo.cached[DataFrame](spark, d, "qc_keyed").get.select("event_id", "compound", "value", "cts"),
+      Memo.cached[DataFrame](spark, d, "qc_lattice").get.select("*"))
+    def loaded(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.collectLeaves()
+      .collect { case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded }
+      .reduce(_ && _)
+    try {
+      assert(!consumers.exists(loaded))
+      val cold = consumers.map(PlanStats.leafStatBytes)
+      Selection.warmQcCaches(spark, d)
+      assert(consumers.forall(loaded))
+      assert(consumers.map(PlanStats.leafStatBytes) === cold)
+      // the lattice built over a warm keyed stream, as a warmed pass does
+      Memo.release()
+      Selection.warmQcCaches(spark, d)
+      assert(consumers.map(PlanStats.leafStatBytes) === cold)
+    } finally Memo.release()
+  }
 }

@@ -18,6 +18,19 @@ import org.apache.spark.sql.functions.timestamp_seconds
   * Seeds are fixed so failures reproduce.
   */
 class RandomizedDecompositionSpec extends SparkSpec {
+  /** `body(atScale)` at the default leaf-byte gate, where these small
+    * series take the plain per-compound window, and at gate 0, where they
+    * take the census and boundary-context decompositions. */
+  private def atBothGates(body: Boolean => Unit): Unit =
+    Seq(false, true).foreach { atScale =>
+      if (atScale) spark.conf.set("spark.graft.memoSide.minLeafBytes", "0")
+      try body(atScale) finally spark.conf.unset("spark.graft.memoSide.minLeafBytes")
+    }
+
+  /** Whether `df` reads a checkpointed stream: the decomposed branch. */
+  private def decomposed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves()
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
 
   test("randomized: quality-tier cuts equal the sort-based derivation on 10 seeded corpora") {
     import spark.implicits._
@@ -419,7 +432,7 @@ class RandomizedDecompositionSpec extends SparkSpec {
   }
   test("randomized: CUSUM closed form equals the sequential max-fold on 10 seeded series") {
     import spark.implicits._
-    (1 to 10).foreach { seed =>
+    atBothGates { atScale => (1 to 10).foreach { seed =>
       val rnd = new Random(seed + 500)
       val compounds = Seq("co", "ch4")
       // step-change series: baseline then a shifted regime → real alarms
@@ -435,7 +448,9 @@ class RandomizedDecompositionSpec extends SparkSpec {
       val df = rows.toDF("event_id", "compound", "sec", "value")
         .select(col("event_id"), col("compound"),
           timestamp_seconds(col("sec")).as("cts"), col("value"))
-      val got = graft.operators.Selection.dsCusumFrom(df).collect()
+      val cusum = graft.operators.Selection.dsCusumFrom(df)
+      assert(decomposed(cusum) === atScale, s"seed=$seed atScale=$atScale")
+      val got = cusum.collect()
         .map(r => (r.getString(0), r.getAs[Long]("event_id"), r.getString(2)) ->
           ((r.getAs[Long]("s"), r.getAs[Long]("h")))).toMap
       val expected = rows.groupBy(_._2).flatMap { case (c, g) =>
@@ -455,13 +470,13 @@ class RandomizedDecompositionSpec extends SparkSpec {
           }
         }
       }
-      assert(got === expected, s"seed=$seed")
-    }
+      assert(got === expected, s"seed=$seed atScale=$atScale")
+    }}
   }
 
   test("randomized: SPC run rules equal the direct sequential scan on 10 seeded series") {
     import spark.implicits._
-    (1 to 10).foreach { seed =>
+    atBothGates { atScale => (1 to 10).foreach { seed =>
       val rnd = new Random(seed + 700)
       val compounds = Seq("co2", "ch4", "o3")
       val rows = compounds.flatMap { c =>
@@ -482,7 +497,9 @@ class RandomizedDecompositionSpec extends SparkSpec {
       val df = rows.toDF("event_id", "compound", "sec", "value")
         .select(col("event_id"), col("compound"),
           timestamp_seconds(col("sec")).as("cts"), col("value"))
-      val got = graft.operators.Selection.dsSpcRulesFrom(df).collect()
+      val spc = graft.operators.Selection.dsSpcRulesFrom(df)
+      assert(decomposed(spc) === atScale, s"seed=$seed atScale=$atScale")
+      val got = spc.collect()
         .map(r => r.getString(0) -> ((r.getAs[Long]("n_points"),
           r.getAs[Long]("n_rule1"), r.getAs[Long]("n_rule2"),
           r.getAs[Long]("n_rule3")))).toMap
@@ -501,10 +518,10 @@ class RandomizedDecompositionSpec extends SparkSpec {
           math.abs(mv.slice(i - 5, i + 1).sum) == 6).toLong
         c -> ((n.toLong, r1, r2, r3))
       }
-      assert(got === expected, s"seed=$seed")
+      assert(got === expected, s"seed=$seed atScale=$atScale")
       // the ramps must actually fire rule 3 somewhere across the board
       assert(expected.values.map(_._4).sum > 0, s"seed=$seed produced no rule-3 runs")
-    }
+    }}
   }
 
   test("randomized: bounded k-core peel equals the sequential peel on 10 seeded graphs") {

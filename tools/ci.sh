@@ -100,6 +100,16 @@ grep -rh "broadcast(" src/main/scala --include='*.scala' \
   | sed 's/^[[:space:]]*//' | sort -u | diff tools/broadcast_allowlist.txt - \
   || { echo "broadcast allowlist drift — audit the new call site"; exit 1; }
 
+echo "== scale-gate audit: the leaf-byte gate is read only through PlanStats"
+# PlanStats.atScale is the one scale decision. A gate written by hand
+# elsewhere reads its own quantity (a warmed memo's size, a self-join's
+# doubled input) and lets one operator's branch drift from the others'.
+if grep -rn "minLeafBytes(\|leafStatBytes(" src/main/scala --include='*.scala' \
+    | grep -v '/PlanStats\.scala:'; then
+  echo "leaf-byte gate outside PlanStats — call PlanStats.atScale on the operator's input"
+  exit 1
+fi
+
 
 echo "== bench-artifact staleness gate"
 # r17 verdict #1 (and r16 before it): the committed sf10 bench pair twice
