@@ -1382,23 +1382,20 @@ object Analytics {
   // per-type time order; ordering (t, delta, event_id) closes intervals
   // BEFORE opening coincident ones (half-open [ts, ts+10m) semantics)
   // and is a total order, so the running sum is deterministic.
-  // Scale shape (r15, the bounded-window audit): the ±1 stream is a pure
-  // flat map (2 rows per event); the running sum DECOMPOSES over
-  // (event_type, time-bucket) groups — bucket-local running sums, a
-  // bucket census (|types| × SweepBuckets rows) of per-bucket delta sums
-  // whose exclusive prefix hands each bucket its carry-in, and
-  // max_concurrent = max over buckets of (carry-in + local max). The old
-  // plan's single per-type window serialized each type's full mark
-  // stream into one task. Bucketing on the mark time keeps equal-time
-  // rows together, so the (t, delta, event_id) total order never splits
-  // across buckets. All integer; the census windows are aggregate-fed.
+  // Scale shape: the ±1 stream is a pure flat map (2 rows per event); the
+  // running sum DECOMPOSES over (event_type, time-bucket) groups
+  // (RangeBuckets) — bucket-local running sums, a bucket census of
+  // per-bucket delta sums whose exclusive prefix hands each bucket its
+  // carry-in, and max_concurrent = max over buckets of (carry-in + local
+  // max). All integer; the census windows are aggregate-fed. The census
+  // reads the window directly, so the window's own exchange feeds it and
+  // nothing is checkpointed.
   private val ConcWindowSec = 600L
-  private val SweepBuckets = 256L
 
   def qConcurrency(spark: SparkSession, d: String): DataFrame = {
-    // r16 (sf10 triage): COLLAPSE marks to one row per (type, µs) BEFORE
-    // the windowed sweep. Sound because the (t, delta, event_id) total
-    // order closes intervals before opening coincident ones: within one
+    // COLLAPSE marks to one row per (type, µs) BEFORE the windowed sweep.
+    // Sound because the (t, delta, event_id) total order closes intervals
+    // before opening coincident ones: within one
     // timestamp the running value only dips (closes) then climbs to the
     // group end, so no intermediate value exceeds a group-end prefix sum
     // and max over group ends IS the fine-grained max. The collapse is a
@@ -1406,8 +1403,7 @@ object Analytics {
     // events/µs at sf10 replica density; any real burst) never reach the
     // sort — the windowed stream is |distinct (type, µs)|-sized, the
     // fine mark count rides along as `cnt` for n_intervals. The ±1 marks
-    // come from ONE scan via a 2-array explode (the old unionAll paid
-    // the events scan twice). sf10: 26.7 → ~8s standalone.
+    // come from ONE scan via a 2-array explode.
     val marks = Tables.events(spark, d)
       .select(col("event_type"), unix_micros(col("ts")).as("t0"))
       .select(col("event_type"), explode(array(
@@ -1417,20 +1413,16 @@ object Analytics {
       .select(col("event_type"), col("m.tu"), col("m.delta"))
     val g = marks.groupBy("event_type", "tu")
       .agg(sum(col("delta")).as("net"), count(lit(1)).as("cnt"))
-    val spans = g.groupBy("event_type").agg(
-      min(col("tu")).as("tmin"), max(col("tu")).as("tmax"))
-    val rows = g.join(spans, Seq("event_type"))
-      .withColumn("b", expr(s"(tu - tmin) * $SweepBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax")
+    // unhinted: below the broadcast threshold the planner broadcasts the
+    // collapsed marks and keeps the spans' partitioning
+    val rows = RangeBuckets.assign(g, "event_type", "tu", hint = false)
     val lw = Window.partitionBy("event_type", "b").orderBy(col("tu"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val census = rows.withColumn("ls", sum(col("net")).over(lw))
       .groupBy("event_type", "b")
       .agg(max(col("ls")).as("lmax"), sum(col("net")).as("sb"),
         sum(col("cnt")).as("cnt"))
-    val ow = Window.partitionBy("event_type").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    census.withColumn("off", coalesce(sum(col("sb")).over(ow), lit(0L)))
+    census.withColumn("off", RangeBuckets.offset(col("sb"), "event_type"))
       .groupBy("event_type")
       .agg(max(col("off") + col("lmax")).as("max_concurrent"),
         (sum(col("cnt")) / 2).cast("long").as("n_intervals"))
@@ -1912,7 +1904,7 @@ object Analytics {
   // the total wall-clock each type was "active" — the utilization number
   // behind SLA and on-call dashboards, and the classic merge-overlapping-
   // intervals problem done as one sweep instead of a self-join.
-  // LAG-1 reduction (r15, the bounded-window audit): because every
+  // LAG-1 reduction: because every
   // interval has the SAME length L, the running max of interval ends over
   // the (t, event_id) order is simply lag(t) + L — so the whole sweep
   // collapses to consecutive-pair arithmetic: covered = Σ min(gap, L) + L
@@ -1921,22 +1913,16 @@ object Analytics {
   // L), and n_segments = 1 + #(gaps > L). The lag decomposes over
   // (event_type, time-bucket) groups with a census handoff (each bucket's
   // first row takes its predecessor from the previous non-empty bucket's
-  // max(t) — the bucketLag1 idiom), so no per-type corpus window remains;
-  // everything after is one combinable groupBy. All integer epoch-millis,
-  // one final division.
-  // The bucketed stream takes a lazy localCheckpoint (census + lag window
-  // both consume it); blocks pin on first action until the caller
-  // unpersists the RDD or the session ends.
+  // max(t), as in RangeBuckets.lag1), so no per-type corpus window
+  // remains; everything after is one combinable groupBy. All integer
+  // epoch-millis, one final division. The bucketed stream is checkpointed
+  // before the lag window (census + window both read it), with no
+  // repartition: the window's own exchange partitions it.
   def qIntervalCoverage(spark: SparkSession, d: String): DataFrame = {
     val L = ConcWindowSec * 1000L
     val ev = Tables.events(spark, d)
       .select(col("event_type"), unix_millis(col("ts")).as("t"), col("event_id"))
-    val spans = ev.groupBy("event_type").agg(
-      min(col("t")).as("tmin"), max(col("t")).as("tmax"))
-    val rows = ev.join(spans, Seq("event_type"))
-      .withColumn("b", expr(s"(t - tmin) * $SweepBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax")
-      .localCheckpoint(false)
+    val rows = RangeBuckets.assign(ev, "event_type", "t").localCheckpoint(false)
     val lw = Window.partitionBy("event_type", "b").orderBy("t", "event_id")
     val census = rows.groupBy("event_type", "b").agg(max(col("t")).as("lt"))
     val hand = census

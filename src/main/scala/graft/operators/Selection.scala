@@ -37,14 +37,6 @@ object Selection {
 
   private val UtcOffsetSec = -2 * 3600L // config.js UTCCorrection = -2
 
-  /** Time-range buckets per compound for the decomposed sequential
-    * operators (ds_cusum, ds_spc_rules): per-series parallelism =
-    * |compounds| × SeriesBuckets, so a low-cardinality corpus (this one
-    * has 5 compounds; a 100 TB deployment with few sensors has the same
-    * shape) no longer serializes each compound into one task. The census
-    * tables these decompositions join back are |compounds| × SeriesBuckets
-    * rows — metadata-sized at any SF. */
-  private val SeriesBuckets = 256L
   private val ZoomLimitMs = 31L * 24 * 3600 * 1000 // config.js xZoomLimit
 
   private def ts(s: String) = lit(s).cast("timestamp")
@@ -112,6 +104,12 @@ object Selection {
   private[graft] def box(frame: DataFrame, pred: Column): DataFrame =
     tagged(frame.filter(pred).select("compound", "sel_key").distinct(),
       Recipe(Seq(Input(frame, pred)), _.head))
+
+  /** The selection `keep` of the boxes `preds` over one keyed frame, one
+    * flag per box in order: what chaining [[box]]es with [[anti]] and
+    * [[toggle]] compiles to, without building the boxes' own frames. */
+  private def boxes(frame: DataFrame, preds: Column*)(keep: Seq[Column] => Column): DataFrame =
+    compile(Recipe(preds.map(Input(frame, _)), keep))
 
   /** Alt-drag (index.js:253): keys in `a` and not in `b`. Like EXCEPT, the
     * output is distinct and NULL keys compare equal. */
@@ -287,7 +285,7 @@ object Selection {
     val k = keyed(spark, d)
     val rectB = col("cts") >= ts("2024-01-10 00:00:00") && col("cts") <= ts("2024-01-14 00:00:00") &&
       col("value") >= 150.0 && col("value") <= 300.0
-    anti(box(k, rectAPred), box(k, rectB)).orderBy("sel_key")
+    boxes(k, rectAPred, rectB)(fs => fs(0) && !fs(1)).orderBy("sel_key")
   }
 
   val dsRectAntiselectSql: String = KeyedCte +
@@ -310,7 +308,7 @@ object Selection {
     val click = col("compound") === "error" && col("event_id") % 7 === 0 &&
       col("cts") >= ts("2024-01-05 00:00:00") && col("cts") <= ts("2024-01-25 00:00:00") &&
       col("value") >= 50.0 && col("value") <= 320.0
-    toggle(box(k, rectAPred), box(k, click)).orderBy("sel_key")
+    boxes(k, rectAPred, click)(fs => fs(0) =!= fs(1)).orderBy("sel_key")
   }
 
   val dsClickToggleSql: String = KeyedCte + s""",
@@ -504,8 +502,7 @@ object Selection {
   // target (the first compound in order = this.compounds[0], the sorted
   // config list). The engine content is deliberately small: a refresh must
   // carry NO residual state, so the whole answer is one combinable
-  // groupBy plus a broadcast 1-row min — the degenerate-state contract
-  // the r11 verdict listed as the one nominal surface gap.
+  // groupBy plus a broadcast 1-row min — the degenerate-state contract.
   def dsTotalRefresh(spark: SparkSession, d: String): DataFrame = {
     val ext = keyed(spark, d).groupBy("compound").agg(
       date_format(min(col("cts")), "yyyy-MM-dd'T'00:00").as("x_min_s"),
@@ -587,33 +584,24 @@ object Selection {
   // analyst interaction counts — partitioned by compound, no joins over
   // the raw data.
 
-  /** The compound's first `lim` rows by (ms, event_id) WITHOUT a
-    * corpus-sized per-compound rank window (r14 verdict #2's flagged
-    * class): every global top-`lim` row is necessarily within the
-    * top-`lim` of its own (compound, time-bucket), so a bucket-local rank
-    * prunes the corpus to ≤ lim × SeriesBuckets candidates per compound
-    * and only the candidates pay the per-compound sort. Returns the input
-    * columns plus the global rank `i` (1-based long), rows with i ≤ lim. */
+  /** The compound's first `lim` rows by (ms, event_id) without a
+    * corpus-sized per-compound rank window: every global top-`lim` row is
+    * within the top-`lim` of its own (compound, time-bucket), so a
+    * bucket-local rank prunes the corpus to ≤ lim × Buckets candidates per
+    * compound and only the candidates pay the per-compound sort. Returns
+    * the input columns plus the global rank `i` (1-based long), rows with
+    * i ≤ lim. */
   private def firstActions(k: DataFrame, lim: Int): DataFrame = {
-    val stats = k.groupBy("compound").agg(
-      min(col("ms")).as("tmin"), max(col("ms")).as("tmax"))
-    val rows = k.join(stats, Seq("compound"))
-      .withColumn("b", expr(s"(ms - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax")
-    // BUCKET-CENSUS PRUNE BEFORE ANY SORT (r16 sf10 triage): the old
-    // shape ran the bucket-local row_number over the ENTIRE stream —
-    // a full corpus shuffle+sort to keep 12 rows per compound (9.5-10.5s
-    // at sf10, and a 100 TB sort for a 60-row report). A bucket can hold
-    // one of the first `lim` rows only if the count of all EARLIER
-    // buckets is < lim, so the count census (map-side combinable,
-    // |compounds|·SeriesBuckets rows through the exchange) names the
-    // surviving buckets — usually just each compound's first — and the
-    // corpus meets only a broadcast semi-join filter at the scan; the
-    // row_number windows then sort ~n/SeriesBuckets survivors, not n.
-    val cw = Window.partitionBy("compound").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
+    // unhinted: the planner broadcasts whichever side its estimates make
+    // smaller (below the broadcast threshold, the keyed rows)
+    val rows = RangeBuckets.assign(k, "compound", "ms", hint = false)
+    // Census prune before any sort: a bucket can hold one of the first
+    // `lim` rows only if the earlier buckets hold fewer than `lim`, so the
+    // count census (map-side combinable) names the surviving buckets,
+    // usually each compound's first, and the corpus meets a broadcast
+    // semi-join at the scan; the windows then sort ~n/Buckets survivors.
     val keep = rows.groupBy("compound", "b").agg(count(lit(1)).as("cb"))
-      .withColumn("cum0", coalesce(sum(col("cb")).over(cw), lit(0L)))
+      .withColumn("cum0", RangeBuckets.offset(col("cb"), "compound"))
       .filter(col("cum0") < lim)
       .select("compound", "b")
     val pruned = rows.join(broadcast(keep), Seq("compound", "b"))
@@ -856,8 +844,8 @@ object Selection {
     // compound on the BASE stream (bucket-pruned, see firstActions) and
     // cut to the 12 surviving actions BEFORE the 8-way plane explode: the
     // corpus never pays a per-compound sort, and the explode runs over
-    // ≤12 rows per compound (r11 verdict #1; the oracle keeps the
-    // per-plane rank, provably equal).
+    // ≤12 rows per compound (the oracle keeps the per-plane rank,
+    // provably equal).
     val top = firstActions(base, 12)
     val a = top.select(col("compound"), col("i"),
       explode(array(lattice.map(p =>
@@ -1008,73 +996,6 @@ object Selection {
       |FROM dev JOIN mad ON dev.compound = mad.compound
       |WHERE dev > 3.0 * mad ORDER BY event_id""".stripMargin
 
-  // --- bucketLag1 ----------------------------------------------------------
-  /** Global per-compound lag-1 decomposed over (compound, time-bucket)
-    * groups (r14 verdict #1 — kill the per-compound window class), so a
-    * few-sensor corpus no longer serializes each sensor's full series into
-    * one task. `rows` must already carry a bucket id `b` that is
-    * non-decreasing along the `ordCols` total order (any floor of the
-    * ordering's leading time column qualifies).
-    *
-    * Scheme: CENSUS HANDOFF — bucket-local lag covers every row except
-    * each bucket's first; those take their predecessor from a bucket
-    * census (≤ |compounds| × SeriesBuckets rows, metadata-sized) that
-    * carries each NON-EMPTY bucket's last row one census position forward
-    * with a lag over the census. Correct across sparse regions by
-    * construction: the census only holds non-empty buckets, so the lag
-    * lands on the previous non-empty one. (Two rejected designs: a
-    * context-DUPLICATION variant that re-emits every row into bucket b+1
-    * ships context into EMPTY buckets and orphans everything after a hole
-    * — caught by the sf0.001 oracle; patching it with dense census ids
-    * costs a corpus-side join and measured slower than this at sf1.)
-    * The bucketed stream feeds both the census and the windowed main
-    * stream, so it takes a LAZY localCheckpoint — blocks materialize
-    * inside the first action, the dsCusumFrom storage contract. Returns
-    * the input columns plus `li` (bucket-local rank) and `prev_<c>` per
-    * lag column, NULL on each compound's global first row — exactly
-    * lag(c) OVER (PARTITION BY compound ORDER BY ordCols).
-    * Parallelism: |compounds| × SeriesBuckets local sorts + one
-    * AQE-broadcast census join.
-    *
-    * Without `atScale` (the caller's [[PlanStats.atScale]] on its input,
-    * before the join with its span aggregate) the same lag is one plain
-    * per-compound window; `li` is then the global rank, which no external
-    * consumer reads. */
-  private def bucketLag1(rows: DataFrame, ordCols: Seq[String],
-      lagCols: Seq[String], atScale: Boolean): DataFrame = {
-    val ord = ordCols.map(col)
-    def lagged(in: DataFrame, w: WindowSpec, suffix: String): DataFrame =
-      lagCols.foldLeft(in.withColumn("li", row_number().over(w))) {
-        (df, c) => df.withColumn(s"prev_$c$suffix", lag(col(c), 1).over(w))
-      }
-    if (!atScale) return lagged(rows, Window.partitionBy("compound").orderBy(ord: _*), "")
-    val lw = Window.partitionBy("compound", "b").orderBy(ord: _*)
-    // Window BEFORE the checkpoint (r17; was checkpoint-then-window): a
-    // checkpoint's LogicalRDD does not advertise the repartition's hash
-    // partitioning, so the window's ENSURE_REQUIREMENTS re-shuffled the
-    // whole corpus a second time (at sf10: two 189 MB exchanges
-    // back to back). Checkpointing the WINDOWED stream keeps the corpus
-    // exchange count at one; the census and the join-back both read the
-    // checkpoint. The explicit-N repartition (r16, the latticeOf finding)
-    // still pins the decomposition's parallelism against AQE coalescing.
-    val local = lagged(
-      rows.repartition(rows.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions").toInt, col("compound"), col("b")),
-      lw, "_l").localCheckpoint(false)
-    val census = local.groupBy("compound", "b")
-      .agg(max_by(struct(lagCols.map(col): _*), struct(ord: _*)).as("last_row"))
-    val cw = Window.partitionBy("compound").orderBy("b")
-    val hand = census
-      .withColumn("hand", lag(col("last_row"), 1).over(cw))
-      .select(col("compound") +: col("b") +:
-        lagCols.map(c => col(s"hand.$c").as(s"prev_${c}_h")): _*)
-    val joined = local.join(hand, Seq("compound", "b"))
-    lagCols.foldLeft(joined) { (df, c) =>
-      df.withColumn(s"prev_$c",
-        when(col("li") === 1, col(s"prev_${c}_h")).otherwise(col(s"prev_${c}_l")))
-    }.drop(lagCols.map(c => s"prev_${c}_l") ++ lagCols.map(c => s"prev_${c}_h"): _*)
-  }
-
   // --- ds_gaps ------------------------------------------------------------
   // Coverage-gap detection — the other automated QC report a time-series
   // operator owes its users: per compound, consecutive-sample gaps larger
@@ -1083,10 +1004,8 @@ object Selection {
   // would go silent at 100× the sampling rate), and it reduces to a pure
   // INTEGER cross-multiplication — gap·(n−1) > 4·(span) on epoch seconds —
   // so no division ever happens and both engines agree exactly.
-  // Scale: the consecutive-pair lag is the bucketLag1 decomposition
-  // (|compounds| × SeriesBuckets local sorts, census handoff); the
-  // |compounds|-sized spacing table doubles as the bucket-bound source and
-  // joins hint-free (AQE broadcasts it).
+  // Scale: the consecutive-pair lag is RangeBuckets.lag1, and the
+  // per-compound spacing aggregate is the bucket span's.
   def dsGaps(spark: SparkSession, d: String): DataFrame =
     gapsFrom(keyedQc(spark, d).select("event_id", "compound", "cts"), "event_id")
       .orderBy("compound", "gap_end_id")
@@ -1095,13 +1014,10 @@ object Selection {
     * `k` needs (`idCol`, compound, cts: timestamp). */
   def gapsFrom(kIn: DataFrame, idCol: String): DataFrame = {
     val k = kIn.withColumn("sec", unix_timestamp(col("cts")))
-    val spans = k.groupBy("compound").agg(
-      (max(col("sec")) - min(col("sec"))).as("span"), count(lit(1)).as("n"),
-      min(col("sec")).as("tmin"))
-    // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
-    val rows = k.join(broadcast(spans), Seq("compound"))
-      .withColumn("b", expr(s"(sec - tmin) * $SeriesBuckets div (span + 1)"))
-    bucketLag1(rows, Seq("cts", idCol), Seq("sec", idCol), PlanStats.atScale(kIn))
+    val rows = RangeBuckets.assign(k, "compound", "sec",
+      Seq((max(col("sec")) - min(col("sec"))).as("span"), count(lit(1)).as("n")))
+    RangeBuckets.lag1(rows, "compound", Seq("cts", idCol), Seq("sec", idCol),
+      PlanStats.atScale(kIn))
       .filter(col("prev_sec").isNotNull)
       .withColumn("gap_sec", col("sec") - col("prev_sec"))
       .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
@@ -1126,13 +1042,11 @@ object Selection {
   // Gap repair — the ACTION on what ds_gaps detects: for every flagged
   // coverage gap (same relative-threshold rule: gap·(n−1) > 4·span), emit
   // one synthetic sample at the integer midpoint time, linearly
-  // interpolated between the bracketing real samples. Same bucketLag1
-  // shape as ds_gaps (bucket-local lag + census handoff, report-sized
-  // span join — hint-free, AQE broadcasts the |compounds|-row side); the
-  // arithmetic is exact integers (cents, epoch seconds, positive midpoint
-  // halving) up to ONE fixed double tree both engines evaluate
-  // identically: prev + (next−prev)·frac, frac = one division of exact
-  // integer-valued doubles. Downstream, union-ing these rows back under
+  // interpolated between the bracketing real samples. Same lag as
+  // ds_gaps; the arithmetic is exact integers (cents, epoch seconds,
+  // positive midpoint halving) up to ONE fixed double tree both engines
+  // evaluate identically: prev + (next−prev)·frac, frac = one division of
+  // exact integer-valued doubles. Downstream, union-ing these rows back under
   // the raw series is the standard grid-repair step before resampling.
   def dsInterp(spark: SparkSession, d: String): DataFrame =
     interpFrom(keyedQc(spark, d).select("event_id", "compound", "cts", "value"), "event_id")
@@ -1144,13 +1058,10 @@ object Selection {
       .select(col(idCol), col("compound"), col("cts"),
         graft.functions.FastRound.cents(col("value")).as("vc"))
       .withColumn("sec", unix_timestamp(col("cts")))
-    val spans = k.groupBy("compound").agg(
-      (max(col("sec")) - min(col("sec"))).as("span"), count(lit(1)).as("n"),
-      min(col("sec")).as("tmin"))
-    // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
-    val rows = k.join(broadcast(spans), Seq("compound"))
-      .withColumn("b", expr(s"(sec - tmin) * $SeriesBuckets div (span + 1)"))
-    bucketLag1(rows, Seq("cts", idCol), Seq("sec", idCol, "vc"), PlanStats.atScale(kIn))
+    val rows = RangeBuckets.assign(k, "compound", "sec",
+      Seq((max(col("sec")) - min(col("sec"))).as("span"), count(lit(1)).as("n")))
+    RangeBuckets.lag1(rows, "compound", Seq("cts", idCol), Seq("sec", idCol, "vc"),
+      PlanStats.atScale(kIn))
       .filter(col("prev_sec").isNotNull)
       .withColumn("gap_sec", col("sec") - col("prev_sec"))
       .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
@@ -1198,15 +1109,10 @@ object Selection {
   // flag comparison dev² > 9·var avoids sqrt in the predicate; the
   // reported sd is one correctly-rounded sqrt of identical operands
   // (clamped at 0 against cancellation).
-  // Scale (r14 verdict #1): the ROWS-16 trailing window is the
-  // dsSpcRulesFrom boundary-context decomposition — rows split into
-  // (compound, time-bucket) groups, a census assigns global indices, and
-  // each row within 15 of its bucket's END (li > cb − 15; rows deeper
-  // inside a bucket can never precede a later bucket's start by ≤ 15)
-  // re-emits as non-scoring context into any bucket whose start lies in
-  // (i, i+15] — so the candidate-start explode is census-sized, not 15×
-  // corpus. The 16-lag chain then evaluates per (compound, bucket) over
-  // context + own rows, value-identical to the single per-compound sort.
+  // Scale: the ROWS-16 trailing window is the boundary-context
+  // decomposition (RangeBuckets.withContext, 15 rows back): the 16-lag
+  // chain evaluates per (compound, bucket) over context + own rows,
+  // value-identical to the single per-compound sort.
   private val RollW = 16
 
   def dsRollingZ(spark: SparkSession, d: String): DataFrame =
@@ -1214,9 +1120,7 @@ object Selection {
       .orderBy("compound", "event_id")
 
   /** DataFrame-in variant for library callers (and the [[GraftQC]] facade):
-    * `k` needs (`idCol`, compound, value, cts: timestamp). The indexed
-    * stream takes a lazy localCheckpoint (the dsCusumFrom storage
-    * contract). */
+    * `k` needs (`idCol`, compound, value, cts: timestamp). */
   def rollingZFrom(k: DataFrame, idCol: String): DataFrame = {
     // the 15-lag chain, over one per-compound window below the gate and
     // per (compound, bucket) over context + own rows above it: the same
@@ -1229,39 +1133,15 @@ object Selection {
         lagChain(k.select(col("compound"), col(idCol), col("value"), col("cts"))
           .withColumn("i", row_number().over(w).cast("long")), w)
       } else {
-        val k0 = k.withColumn("tu", unix_micros(col("cts")))
-        val stats = k0.groupBy("compound").agg(
-          min(col("tu")).as("tmin"), max(col("tu")).as("tmax"))
-        // broadcast(stats): |compounds|-row aggregate — see outlierMadFrom
-        val rows = k0.join(broadcast(stats), Seq("compound"))
-          .withColumn("b", expr(s"(tu - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-          .drop("tmin", "tmax", "tu")
+        val rows = RangeBuckets.assign(k.withColumn("tu", unix_micros(col("cts"))),
+          "compound", "tu").drop("tu")
         val lw = Window.partitionBy("compound", "b").orderBy(col("cts"), col(idCol))
-        // localCheckpoint: `local` feeds the census AND the join-back.
-        // explicit-N bucket repartition (r17, the latticeOf/bucketLag1 guard):
-        // without it AQE coalesces the window's well-compressed
-        // ENSURE_REQUIREMENTS exchange toward ONE partition, the checkpoint
-        // inherits that partitioning, and every consumer runs serial
-        val local = rows
-          .repartition(rows.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions").toInt, col("compound"), col("b"))
-          .withColumn("li", row_number().over(lw).cast("long"))
-          .localCheckpoint(false)
-        val cw = Window.partitionBy("compound").orderBy("b")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val census = local.groupBy("compound", "b").agg(count(lit(1)).as("cb"))
-          .withColumn("start", coalesce(sum(col("cb")).over(cw), lit(0L)) + 1L)
-          .select("compound", "b", "start", "cb")
-        val own = local.join(census, Seq("compound", "b"))
-          .withColumn("i", col("start") + col("li") - 1L)
-        val baseCols = Seq(col("compound"), col(idCol), col("value"), col("cts"), col("i"))
-        val ownK = own.select(baseCols :+ col("b").as("gb") :+ lit(false).as("ctx"): _*)
-        val ctxK = own.filter(col("li") > col("cb") - (RollW - 1))
-          .withColumn("tstart", explode(expr(s"sequence(i + 1, i + ${RollW - 1})")))
-          .join(census.select(col("compound"), col("start").as("tstart"), col("b").as("tb")),
-            Seq("compound", "tstart"))
-          .select(baseCols :+ col("tb").as("gb") :+ lit(true).as("ctx"): _*)
-        lagChain(ownK.union(ctxK), Window.partitionBy("compound", "gb").orderBy("i"))
+        val (own, census) = RangeBuckets.indexed(
+          RangeBuckets.local(rows, "compound")(_.withColumn("li", row_number().over(lw).cast("long"))),
+          "compound")
+        val cols = Seq(col("compound"), col(idCol), col("value"), col("cts"), col("i"))
+        lagChain(RangeBuckets.withContext(own, census, "compound", cols, RollW - 1),
+          Window.partitionBy("compound", "gb").orderBy("i"))
           .filter(!col("ctx"))
       }
     val nD = RollW.toDouble
@@ -1314,15 +1194,12 @@ object Selection {
   // i·(n−i); per-row score doubles come from ONE division of identical
   // exact operands in both engines, and the argmax breaks ties by
   // earliest split. Reported means: one division each, identical order.
-  // Scale (r14 verdict #1): the row index and prefix sum decompose over
-  // (compound, time-bucket) windows exactly as dsCusumFrom —
-  // i = ioff(b) + li, S_i = soff(b) + ls — with the census offsets
-  // (|compounds| × SeriesBuckets rows) joined back AQE-broadcast. The
-  // argmax never re-sorts the corpus: a map-side-combinable
-  // max_by(payload, (score, −i)) takes each bucket's best split, and the
-  // global pick windows over the census-sized survivors. The windowed
-  // stream feeds both the census and the join-back, so it is
-  // lazily localCheckpoint'd (the dsCusumFrom storage contract).
+  // Scale: the row index and prefix sum decompose over (compound,
+  // time-bucket) windows, i = ioff(b) + li and S_i = soff(b) + ls, with
+  // the census offsets joined back. The argmax never re-sorts the corpus:
+  // a map-side-combinable max_by(payload, (score, −i)) takes each bucket's
+  // best split, and the global pick windows over the census-sized
+  // survivors.
   def dsChangepoint(spark: SparkSession, d: String): DataFrame =
     changepointFrom(keyedQc(spark, d).select("event_id", "compound", "value", "cts"), "event_id")
       .orderBy("compound")
@@ -1335,29 +1212,17 @@ object Selection {
       .select(col("compound"), col(idCol), col("cts"),
         graft.functions.FastRound.cents(col("value")).as("vc"))
       .withColumn("tu", unix_micros(col("cts")))
-    val stats = k0.groupBy("compound").agg(
-      count(lit(1)).as("n"), sum(col("vc")).as("sn"),
-      min(col("tu")).as("tmin"), max(col("tu")).as("tmax"))
-    // broadcast(stats): |compounds|-row aggregate — see outlierMadFrom
-    val rows = k0.join(broadcast(stats), Seq("compound"))
-      .withColumn("b", expr(s"(tu - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax", "tu")
+    val rows = RangeBuckets.assign(k0, "compound", "tu",
+      Seq(count(lit(1)).as("n"), sum(col("vc")).as("sn"))).drop("tu")
     val lw = Window.partitionBy("compound", "b").orderBy(col("cts"), col(idCol))
-    // explicit-N bucket repartition — the latticeOf/bucketLag1 AQE-coalesce
-    // guard (see rollingZFrom)
-    val local = rows
-      .repartition(rows.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions").toInt, col("compound"), col("b"))
+    val local = RangeBuckets.local(rows, "compound")(_
       .withColumn("li", row_number().over(lw).cast("long"))
       .withColumn("ls", sum(col("vc"))
-        .over(lw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint(false)
-    val cw = Window.partitionBy("compound").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
+        .over(lw.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
     val census = local.groupBy("compound", "b").agg(
       count(lit(1)).as("cb"), sum(col("vc")).as("sb"))
-      .withColumn("ioff", coalesce(sum(col("cb")).over(cw), lit(0L)))
-      .withColumn("soff", coalesce(sum(col("sb")).over(cw), lit(0L)))
+      .withColumn("ioff", RangeBuckets.offset(col("cb"), "compound"))
+      .withColumn("soff", RangeBuckets.offset(col("sb"), "compound"))
       .select("compound", "b", "ioff", "soff")
     val scored = local.join(census, Seq("compound", "b"))
       .withColumn("i", col("ioff") + col("li"))
@@ -1366,7 +1231,7 @@ object Selection {
       .withColumn("num", abs(col("s") * (col("n") - col("i")) - (col("sn") - col("s")) * col("i")))
       .withColumn("score", col("num").cast("double") / (col("i") * (col("n") - col("i"))).cast("double"))
     // bucket-best via max_by on the (score, −i) order — max score, then
-    // earliest split — then one window over ≤ SeriesBuckets survivors
+    // earliest split — then one window over ≤ Buckets survivors
     val best = scored.groupBy("compound", "b").agg(max_by(
       struct(col(idCol), col("cts"), col("i"), col("s"), col("n"), col("sn"), col("score")),
       struct(col("score"), (-col("i")).as("ni"))).as("w"))
@@ -1417,8 +1282,8 @@ object Selection {
   // is written as the identical IEEE sequence in both engines over exact
   // integer second differences; a sample landing on a mark makes the
   // numerator exactly 0 → v0 exactly, no special case.
-  // Scale (r14 verdict #1): both directional passes decompose over
-  // (compound, time-bucket) groups — the running `last` carries run
+  // Scale: both directional passes decompose over (compound,
+  // time-bucket) groups — the running `last` carries run
   // bucket-locally, each bucket's carry-OUT (its last sample seen, per
   // direction) lands in a census, and a census-level running `last`
   // (ignoreNulls, so sample-less buckets are skipped exactly) hands each
@@ -1440,49 +1305,38 @@ object Selection {
     val samples = kIn
       .groupBy("compound", "sec").agg(expr("max_by(value, tie)").as("v"))
     val spans = samples.groupBy("compound")
-      .agg(min(col("sec")).as("mn"), max(col("sec")).as("mx"))
+      .agg(min(col("sec")).as("tmin"), max(col("sec")).as("tmax"))
     val grid = spans
       // a span too short to contain an aligned mark makes the first mark
-      // exceed mx — Spark's sequence() THROWS on start > stop (DuckDB's
+      // exceed tmax — Spark's sequence() THROWS on start > stop (DuckDB's
       // range() is just empty), so such compounds must be filtered first
-      .filter(expr(s"((mn + ${s - 1}) div $s) * $s <= mx"))
+      .filter(expr(s"((tmin + ${s - 1}) div $s) * $s <= tmax"))
       .select(col("compound"),
-        explode(expr(s"sequence(((mn + ${s - 1}) div $s) * $s, mx, $s)")).as("sec"))
+        explode(expr(s"sequence(((tmin + ${s - 1}) div $s) * $s, tmax, $s)")).as("sec"))
     val unioned = samples.select(col("compound"), col("sec"), lit(0).as("kind"), col("v"))
       .unionByName(grid.select(col("compound"), col("sec"), lit(1).as("kind"),
         lit(null).cast("double").as("v")))
     // bucket by sec (grid marks lie inside the sample span, so the sample
-    // mn/mx bound the union); b depends on sec alone, so same-second
-    // sample/mark pairs stay in one bucket and both sort orders remain
-    // bucket-decomposable
-    // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
-    val rows = unioned.join(broadcast(spans.select("compound", "mn", "mx")), Seq("compound"))
-      .withColumn("b", expr(s"(sec - mn) * $SeriesBuckets div (mx - mn + 1)"))
-      .drop("mn", "mx")
+    // span bounds the union); same-second sample/mark pairs share a
+    // bucket, so both sort orders remain bucket-decomposable
+    val rows = RangeBuckets.bucketed(unioned, spans, "compound", "sec")
     val wAsc = Window.partitionBy("compound", "b").orderBy(col("sec").asc, col("kind").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // at an equal second the DESC scan must see the grid mark BEFORE the
     // sample (kind desc), so "next" is strictly after the mark — otherwise
     // a sample on a mark would be both neighbors (t1 − t0 = 0).
-    // NOTE (r10): a `first(...) OVER (ROWS CURRENT ROW TO UNBOUNDED
+    // A `first(...) OVER (ROWS CURRENT ROW TO UNBOUNDED
     // FOLLOWING)` on the ascending sort looks cheaper (one sort, not two)
     // but is O(n²) — Spark's UnboundedFollowing frame re-scans the
     // partition tail for EVERY row (133s vs 1.1s at sf0.1, measured). The
     // second sort + running `last` is the linear formulation.
     val wDesc = Window.partitionBy("compound", "b").orderBy(col("sec").desc, col("kind").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // localCheckpoint: `local` feeds the carry census AND the join-back
-    // (lazy; blocks pin on first action — the dsCusumFrom storage contract).
-    // explicit-N bucket repartition — the latticeOf/bucketLag1 AQE-coalesce
-    // guard (see rollingZFrom)
-    val local = rows
-      .repartition(rows.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions").toInt, col("compound"), col("b"))
+    val local = RangeBuckets.local(rows, "compound")(_
       .withColumn("lpv", last(col("v"), ignoreNulls = true).over(wAsc))
       .withColumn("lps", last(when(col("kind") === 0, col("sec")), ignoreNulls = true).over(wAsc))
       .withColumn("lnv", last(col("v"), ignoreNulls = true).over(wDesc))
-      .withColumn("lns", last(when(col("kind") === 0, col("sec")), ignoreNulls = true).over(wDesc))
-      .localCheckpoint(false)
+      .withColumn("lns", last(when(col("kind") === 0, col("sec")), ignoreNulls = true).over(wDesc)))
     // carry-outs: the asc running state at the bucket's last row in asc
     // order, and the desc running state at its last row in desc order
     // (= min (sec, kind)); nulled to a NULL STRUCT when the bucket holds
@@ -1494,13 +1348,9 @@ object Selection {
         struct(-col("sec"), -col("kind"))).as("dc"))
       .withColumn("acN", when(col("ac.lps").isNotNull, col("ac")))
       .withColumn("dcN", when(col("dc.lns").isNotNull, col("dc")))
-    val cwPrev = Window.partitionBy("compound").orderBy(col("b").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cwNext = Window.partitionBy("compound").orderBy(col("b").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
     val carryIn = carries
-      .withColumn("ai", last(col("acN"), ignoreNulls = true).over(cwPrev))
-      .withColumn("di", last(col("dcN"), ignoreNulls = true).over(cwNext))
+      .withColumn("ai", last(col("acN"), ignoreNulls = true).over(RangeBuckets.earlier("compound")))
+      .withColumn("di", last(col("dcN"), ignoreNulls = true).over(RangeBuckets.later("compound")))
       .select(col("compound"), col("b"),
         col("ai.lpv").as("cpv"), col("ai.lps").as("cps"),
         col("di.lnv").as("cnv"), col("di.lns").as("cns"))
@@ -1733,22 +1583,15 @@ object Selection {
   // op sees the same operands in the same order. Integer headroom: |cents|
   // ≤ 5.7e4 here, so Σv² < n·3.3e9 — the per-compound sums stay under 2^63
   // up to ~2.8e9 rows per compound; beyond that, quantize coarser.
-  // Scale: the consecutive pairs come from the bucketLag1 decomposition
-  // (|compounds| × SeriesBuckets local sorts — never one task per
-  // compound), and the six sums are order-free integers, so the final
-  // groupBy combines map-side and shuffles |compounds| rows.
+  // Scale: the consecutive pairs come from RangeBuckets.lag1, and the six
+  // sums are order-free integers, so the final groupBy combines map-side
+  // and shuffles |compounds| rows.
   def dsAutocorr(spark: SparkSession, d: String): DataFrame = {
-    // keyedQc + broadcast(spans): the shared-memo contract and its
-    // bounded-stats pin (see the memo scaladoc and outlierMadFrom)
     val k = keyedQc(spark, d)
       .select(col("compound"), col("ms"), col("event_id"),
         graft.functions.FastRound.cents(col("value")).as("vc"))
-    val spans = k.groupBy("compound").agg(
-      min(col("ms")).as("tmin"), max(col("ms")).as("tmax"))
-    val rows = k.join(broadcast(spans), Seq("compound"))
-      .withColumn("b", expr(s"(ms - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax")
-    bucketLag1(rows, Seq("ms", "event_id"), Seq("vc"), PlanStats.atScale(k))
+    RangeBuckets.lag1(RangeBuckets.assign(k, "compound", "ms"), "compound",
+        Seq("ms", "event_id"), Seq("vc"), PlanStats.atScale(k))
       .withColumn("pv", col("prev_vc"))
       .filter(col("pv").isNotNull)
       .groupBy("compound")
@@ -1917,9 +1760,9 @@ object Selection {
   // (AQE-broadcast), clamps in the map, and collapses in one combinable
   // groupBy over exact cents. n_low/n_high count strict exceedances.
   // The value histogram takes a lazy localCheckpoint (two consumers); the
-  // dsCusumFrom storage contract.
+  // RangeBuckets storage contract.
   def dsWinsorize(spark: SparkSession, d: String): DataFrame = {
-    // VALUE-HISTOGRAM decomposition (r14, the sf1 weak set): the 5/95
+    // VALUE-HISTOGRAM decomposition: the 5/95
     // cuts are order statistics — the value at rank ceil(q·n) equals the
     // smallest value whose cumulative count reaches that rank — and every
     // reported aggregate (clip counts, winsorized mean) is a function of
@@ -1987,16 +1830,15 @@ object Selection {
   // order, a data value both engines pick identically (the q_percentiles
   // contract; no interpolation to drift). Robust: a sensor spike corrupts
   // 2 of n slopes, not the mean.
-  // Scale (r14 verdict #1): the consecutive pairs come from bucketLag1
-  // (never one task per compound), and the median is a two-level RADIX
-  // SELECTION instead of a per-compound corpus rank window: slopes are
-  // range-bucketed, a census (|compounds| × SeriesBuckets rows) locates
-  // the bucket holding rank ⌈n/2⌉, the selected ~n/256 slice re-buckets
-  // once more, and only the final ~n/65536 slice pays a per-compound
-  // sort. The oracle's pair-index tiebreak needs no reproduction — the
-  // VALUE at a rank is invariant to how equal slopes are ordered. The
-  // slope stream feeds three consumers (stats + both levels), so it is
-  // lazily localCheckpoint'd (the dsCusumFrom storage contract).
+  // Scale: the consecutive pairs come from RangeBuckets.lag1, and the
+  // median is a two-level RADIX SELECTION instead of a per-compound corpus
+  // rank window: slopes are range-bucketed, a census (|compounds| ×
+  // Buckets rows) locates the bucket holding rank ⌈n/2⌉, the selected
+  // ~n/256 slice re-buckets once more, and only the final ~n/65536 slice
+  // pays a per-compound sort. The oracle's pair-index tiebreak needs no
+  // reproduction — the VALUE at a rank is invariant to how equal slopes
+  // are ordered. The slope stream feeds three consumers (stats + both
+  // levels), so it is lazily checkpointed too.
   def dsTrend(spark: SparkSession, d: String): DataFrame =
     dsTrendFrom(keyedQc(spark, d))
 
@@ -2010,17 +1852,11 @@ object Selection {
     // tie order, the argument the radix form relies on) and skips the
     // radix form's three checkpoints (~1.6 s of constants at sf0.1)
     if (!PlanStats.atScale(k)) return dsTrendNaive(k0)
-    val spans = k0.groupBy("compound").agg(
-      min(col("ms")).as("tmin"), max(col("ms")).as("tmax"))
-    // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
-    val rows = k0.join(broadcast(spans), Seq("compound"))
-      .withColumn("b", expr(s"(ms - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax")
     // slopes checkpoint: three consumers (sstats, level-1 census, level-1
-    // join-back) — dropping it re-derived the slope per consumer from the
-    // bucketLag1 checkpoint and measured WORSE at sf10 (6.4 vs 4.7s,
-    // r17 probe), so the third materialization round stays
-    val slopes = bucketLag1(rows, Seq("ms", "event_id"), Seq("ms", "value"), atScale = true)
+    // join-back) — re-deriving the slope per consumer from the lag's
+    // checkpoint measured slower at sf10 (6.4 vs 4.7 s)
+    val slopes = RangeBuckets.lag1(RangeBuckets.assign(k0, "compound", "ms"), "compound",
+        Seq("ms", "event_id"), Seq("ms", "value"), atScale = true)
       .filter(col("prev_ms").isNotNull && col("ms") > col("prev_ms"))
       .select(col("compound"),
         ((col("value") - col("prev_value")) / (col("ms") - col("prev_ms")).cast("double")
@@ -2028,8 +1864,6 @@ object Selection {
       .localCheckpoint(false)
     // level 1: range-bucket the slope space, census locates the median's
     // bucket and its within-bucket residual rank rr
-    val cw = Window.partitionBy("compound").orderBy("sb")
-      .rowsBetween(Window.unboundedPreceding, -1)
     val sstats = slopes.groupBy("compound").agg(
       count(lit(1)).as("n"), min(col("slope")).as("mn"), max(col("slope")).as("mx"))
       .withColumn("r", expr("(n + 1) div 2"))
@@ -2037,27 +1871,26 @@ object Selection {
       sl.join(broadcast(st), Seq("compound"))
         .withColumn("sb", when(col("mx") > col("mn"),
           least(floor((col("slope") - col("mn")) / (col("mx") - col("mn"))
-            * SeriesBuckets).cast("long"), lit(SeriesBuckets - 1))).otherwise(lit(0L)))
+            * RangeBuckets.Buckets).cast("long"), lit(RangeBuckets.Buckets - 1)))
+          .otherwise(lit(0L)))
     def pick(sl: DataFrame, rankCol: String, outCol: String): DataFrame = {
       val census = sl.groupBy("compound", "sb")
         .agg(count(lit(1)).as("cb"), max(col(rankCol)).as("rk"))
-        .withColumn("cum0", coalesce(sum(col("cb")).over(cw), lit(0L)))
+        .withColumn("cum0", RangeBuckets.offset(col("cb"), "compound", "sb"))
       val target = census
         .filter(col("cum0") < col("rk") && col("cum0") + col("cb") >= col("rk"))
         .select(col("compound"), col("sb"), (col("rk") - col("cum0")).as(outCol))
       // broadcast: target holds EXACTLY the one bucket per compound that
       // contains the rank — |compounds| rows. The plain equijoin shuffled
-      // the whole slope stream on (compound, sb) to meet it (at sf10:
-      // a 189 MB exchange + its read were 2 of ds_trend's 3 corpus-sized
-      // stages at sf10); the broadcast keeps the slice filter in the
+      // the whole slope stream on (compound, sb) to meet it (at sf10 a
+      // 189 MB exchange and its read); the broadcast keeps the slice filter in the
       // checkpoint's own partitioning — zero corpus exchange.
       sl.drop(rankCol).join(broadcast(target), Seq("compound", "sb"))
     }
     val l1 = bucketed(slopes, sstats.select("compound", "mn", "mx", "r", "n"))
     // the level-1 slice is ~n/256 rows but has FOUR consumers below (s2,
     // l2's join, level-2's census and join-back) and each recompute is a
-    // full pass over the slope checkpoint — lazy
-    // localCheckpoint, the dsCusumFrom storage contract
+    // full pass over the slope checkpoint, so it is checkpointed too
     val sel1 = pick(l1, "r", "rr").localCheckpoint(false)
     // level 2: re-bucket the selected slice by its own range (membership,
     // not bounds, defines the slice — re-deriving mn/mx is exact); a slice
@@ -2119,14 +1952,12 @@ object Selection {
   // cents) within a compound — a real measurement repeating exactly is the
   // classic frozen-transducer signature, invisible to range and outlier
   // checks because the stuck value is usually in-range. Run construction
-  // is gaps-and-islands DECOMPOSED over (compound, time-bucket) groups
-  // (r14 verdict #1): the change flag comes from the bucketLag1 context-
-  // duplication idiom, runs collapse into bucket-local SEGMENTS with one
-  // combinable groupBy, and only each bucket's boundary segments (its
-  // lrun=0 head, which by construction CONTINUES the previous bucket's
-  // run, and its last segment, which may continue forward) enter a
-  // census-sized chain-merge window (≤ 2 × SeriesBuckets rows per
-  // compound); interior segments are already maximal runs and pass
+  // is gaps-and-islands DECOMPOSED over (compound, time-bucket) groups:
+  // the change flag is bucket-local, runs collapse into bucket-local
+  // SEGMENTS with one combinable groupBy, and only each bucket's boundary
+  // segments (its head, which may continue the previous bucket's run, and
+  // its last segment, which may continue forward) enter a census-sized
+  // chain-merge window (≤ 2 × Buckets rows per compound); interior segments are already maximal runs and pass
   // through untouched. No global run id is ever materialized, so there
   // is no corpus checkpoint and no per-compound corpus window — a
   // sensor stuck across the whole corpus just collapses every bucket to
@@ -2140,13 +1971,8 @@ object Selection {
   def dsFlatlineFrom(k: DataFrame): DataFrame = {
     val k0 = k.select(col("compound"), col("ms"), col("event_id"),
       graft.functions.FastRound.cents(col("value")).as("vc"))
-    val spans = k0.groupBy("compound").agg(
-      min(col("ms")).as("tmin"), max(col("ms")).as("tmax"))
-    // broadcast(spans): |compounds|-row aggregate — see outlierMadFrom
-    val rows = k0.join(broadcast(spans), Seq("compound"))
-      .withColumn("b", expr(s"(ms - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-      .drop("tmin", "tmax")
-    // NO context handoff is needed here, unlike the bucketLag1 family: a
+    val rows = RangeBuckets.assign(k0, "compound", "ms")
+    // NO context handoff is needed here, unlike RangeBuckets.lag1: a
     // run is "consecutive EQUAL values", so whether a bucket's first
     // segment continues the previous bucket's last one is decidable at
     // the chain level by comparing the two segments' values — globally
@@ -2155,11 +1981,9 @@ object Selection {
     // local run start.
     val lw = Window.partitionBy("compound", "b").orderBy("ms", "event_id")
     val prev = lag(col("vc"), 1).over(lw)
-    // explicit-N bucket repartition — the latticeOf/bucketLag1 AQE-coalesce
-    // guard (see rollingZFrom)
-    val st = rows
-      .repartition(rows.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions").toInt, col("compound"), col("b"))
+    // the checkpoint comes after the segment collapse below, not after
+    // the window: the window's output is still corpus-sized
+    val st = RangeBuckets.partitioned(rows, "compound")
       .withColumn("chg", when(prev.isNull || prev =!= col("vc"), 1L).otherwise(0L))
       .withColumn("firstRow", prev.isNull)
       .withColumn("lrun", sum(col("chg"))
@@ -2193,7 +2017,7 @@ object Selection {
       // duplicate-density-sized (the corpus never reaches this point un-
       // collapsed); checkpointed because interior and chains both consume
       // it — without this the Union recomputes the whole scan→window
-      // subtree per branch (lazy checkpoint; storage contract as dsCusumFrom)
+      // subtree per branch (the RangeBuckets storage contract)
       .localCheckpoint(false)
     val interior = marked.filter(!col("isHead") && !col("isTail"))
       .select("compound", "n_samples", "rv", "start_ms")
@@ -2363,8 +2187,8 @@ object Selection {
   // k = meanabsdev div 2, band h = 4·meanabsdev — so prefix sums are
   // order-free BIGINTs and the flags are engine-exact. Scale shape: one
   // per-compound aggregate joined back, then the prefix-sum/prefix-min
-  // pair decomposed over (compound, time-bucket) windows + a bucket
-  // census join (see dsCusumFrom) so per-series length no longer bounds
+  // pair decomposed over (compound, time-bucket) windows and a bucket
+  // census (RangeBuckets.cusum), so per-series length no longer bounds
   // parallelism; a 2-way side unpivot AFTER the windows, and only points
   // past the band reach the output.
   def dsCusum(spark: SparkSession, d: String): DataFrame =
@@ -2374,7 +2198,7 @@ object Selection {
   // ds_cusum and ds_spc_rules consume the SAME stream: the keyed series
   // with exact center t = Σvc div n, spread madx = mean|dev|, and the
   // (compound, time-bucket) key — and the same (compound, b)-partitioned
-  // exchange in front of their window pairs. Both QC streams below are
+  // exchange in front of their bucket-local windows. Both QC streams below are
   // Memo frames persisted lazily (blocks pin on the first action), so
   // building a query runs no job; Bench warms them with the other family
   // memos so the shared build is not billed to whichever consumer runs
@@ -2408,7 +2232,7 @@ object Selection {
     }
 
   /** The un-persisted lattice plan: (compound, b, event_id, cts, vc, t,
-    * madx), already repartitioned on the bucket keys. */
+    * madx), partitioned on the bucket keys. */
   private def latticeOf(kIn: DataFrame): DataFrame = {
     val k0 = kIn
       .select(col("event_id"), col("compound"), col("cts"),
@@ -2418,110 +2242,38 @@ object Selection {
       count(lit(1)).as("n"), sum(col("vc")).as("sv"),
       min(col("tu")).as("tmin"), max(col("tu")).as("tmax"))
       .withColumn("t", expr("sv div n"))
-    // broadcast: |compounds|-row aggregates — see outlierMadFrom
-    val dev = k0.join(broadcast(stats.select("compound", "t", "n", "tmin", "tmax")), Seq("compound"))
+    val dev = RangeBuckets.perKey(k0, stats.select("compound", "t", "n", "tmin", "tmax"), "compound")
       .groupBy("compound").agg(max(col("t")).as("t"),
         expr("sum(abs(vc - t)) div max(n)").as("madx"),
         max(col("tmin")).as("tmin"), max(col("tmax")).as("tmax"))
-    k0.join(broadcast(dev), Seq("compound"))
-      .withColumn("b", expr(s"(tu - tmin) * $SeriesBuckets div (tmax - tmin + 1)"))
-      .select("compound", "b", "event_id", "cts", "vc", "t", "madx")
-      // EXPLICIT-N repartition on the bucket keys (ds_cusum at sf1,
-      // SCALING.md): the window's ENSURE_REQUIREMENTS exchange
-      // compresses integers so well that AQE coalesces it toward ONE
-      // partition and the decomposed windows run serial — exactly the
-      // per-task ceiling the bucketing exists to remove (measured: 4.4 →
-      // 3.0s with coalescing scoped off). A user repartition with an
-      // explicit partition count is never coalesced; N = the session's
-      // configured shuffle parallelism, so cluster deployments keep
-      // their knob.
-      .repartition(kIn.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions").toInt, col("compound"), col("b"))
+    RangeBuckets.partitioned(RangeBuckets.bucketed(k0, dev, "compound", "tu")
+      .select("compound", "b", "event_id", "cts", "vc", "t", "madx"), "compound")
   }
 
   /** DataFrame-in core for [[dsCusum]] (`kIn` needs event_id, compound,
     * cts: timestamp, value) — exposed so the randomized spec can pin the
     * prefix-sum/prefix-min closed form against the direct sequential
-    * fold S_i = max(0, S_{i−1} + d_i) on constructed series.
-    *
-    * Storage contract: the bucketed stream takes a lazy localCheckpoint
-    * (census + windowed main stream both consume it); blocks pin on first
-    * action until the caller unpersists the RDD or the session ends
-    * (Bench drops them after each query) — construction runs no jobs. */
+    * fold S_i = max(0, S_{i−1} + d_i) on constructed series. */
   def dsCusumFrom(kIn: DataFrame): DataFrame =
     dsCusumFromLattice(latticeOf(kIn))
 
   private def dsCusumFromLattice(lattice: DataFrame): DataFrame = {
-    // RANGE-BUCKET DECOMPOSITION (r13 verdict #4): a per-compound window
-    // serializes each compound into ONE task — with |compounds| = 5 that
-    // is 1M rows per task at sf1 and 20 TB per task at 100 TB. The prefix
-    // sum and prefix min both decompose over time-range buckets: within
-    // each (compound, bucket) the windows run locally, a bucket census
-    // (|compounds|·SeriesBuckets rows — metadata-sized) carries exclusive
-    // per-bucket offsets (Σ of earlier buckets' sums) and the running min
-    // of earlier buckets' full prefixes, and the join back (AQE
-    // broadcasts the census) reassembles the exact global values:
-    //   ph(i)       = off(b) + lph(i)
-    //   min_{j≤i}ph = least(prevmin(b), off(b) + lmin(i))
-    // Parallelism is |compounds|·SeriesBuckets instead of |compounds|.
     val rows = lattice
       .withColumn("k", expr("madx div 2"))
       .withColumn("h", expr("madx * 4"))
       .withColumn("dh", col("vc") - col("t") - col("k"))
       .withColumn("dl", col("t") - col("k") - col("vc"))
     // the high/low unpivot of the two CUSUM statistics sh and sl
-    def alarms(p: DataFrame): DataFrame =
-      p.select(col("compound"), col("event_id"), col("h"),
-          explode(array(
-            struct(lit("high").as("side"), col("sh").as("s")),
-            struct(lit("low").as("side"), col("sl").as("s")))).as("x"))
-        .select(col("compound"), col("event_id"),
-          col("x.side").as("side"), col("x.s").as("s"), col("h"))
-        .filter(col("s") > col("h"))
-        .orderBy("compound", "event_id", "side")
-    // below the gate the closed form is one per-compound window
-    if (!PlanStats.atScale(lattice)) {
-      val w = Window.partitionBy("compound").orderBy("cts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return alarms(rows
-        .withColumn("ph", sum(col("dh")).over(w))
-        .withColumn("pl", sum(col("dl")).over(w))
-        .withColumn("sh", col("ph") - least(min(col("ph")).over(w), lit(0L)))
-        .withColumn("sl", col("pl") - least(min(col("pl")).over(w), lit(0L))))
-    }
-    val lw = Window.partitionBy("compound", "b").orderBy("cts", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // localCheckpoint: `local` feeds BOTH the census and the join-back —
-    // without it Spark recomputes the scan+joins+window subtree once per
-    // consumer (measured slower than the un-decomposed plan at sf1)
-    val local = rows
-      .withColumn("lph", sum(col("dh")).over(lw))
-      .withColumn("lpl", sum(col("dl")).over(lw))
-      .withColumn("lmh", min(col("lph")).over(lw))
-      .withColumn("lml", min(col("lpl")).over(lw))
-      // only what census + join-back read — the checkpoint write is the
-      // wall cost here, so no carrier columns ride along
-      .select("compound", "b", "event_id", "h", "dh", "dl",
-        "lph", "lpl", "lmh", "lml")
-      .localCheckpoint(false)
-    val cw = Window.partitionBy("compound").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val census = local.groupBy("compound", "b").agg(
-      sum(col("dh")).as("sdh"), sum(col("dl")).as("sdl"),
-      min(col("lph")).as("bmh"), min(col("lpl")).as("bml"))
-      .withColumn("offh", coalesce(sum(col("sdh")).over(cw), lit(0L)))
-      .withColumn("offl", coalesce(sum(col("sdl")).over(cw), lit(0L)))
-      .withColumn("pmh", min(col("offh") + col("bmh")).over(cw))
-      .withColumn("pml", min(col("offl") + col("bml")).over(cw))
-      .select("compound", "b", "offh", "offl", "pmh", "pml")
-    // least() skips NULLs, so a first bucket (pmh/pml NULL) reduces to its
-    // own local prefix min exactly
-    val p = local.join(census, Seq("compound", "b"))
-      .withColumn("sh", col("offh") + col("lph") -
-        least(least(col("pmh"), col("offh") + col("lmh")), lit(0L)))
-      .withColumn("sl", col("offl") + col("lpl") -
-        least(least(col("pml"), col("offl") + col("lml")), lit(0L)))
-    alarms(p)
+    RangeBuckets.cusum(rows, "compound", Seq("cts", "event_id"), Seq("event_id", "h"),
+        PlanStats.atScale(lattice))
+      .select(col("compound"), col("event_id"), col("h"),
+        explode(array(
+          struct(lit("high").as("side"), col("sh").as("s")),
+          struct(lit("low").as("side"), col("sl").as("s")))).as("x"))
+      .select(col("compound"), col("event_id"),
+        col("x.side").as("side"), col("x.s").as("s"), col("h"))
+      .filter(col("s") > col("h"))
+      .orderBy("compound", "event_id", "side")
   }
 
   val dsCusumSql: String = KeyedCte +
@@ -2573,28 +2325,17 @@ object Selection {
   /** DataFrame-in core for [[dsSpcRules]] (`kIn` needs event_id, compound,
     * cts: timestamp, value) — exposed so the randomized spec can pin the
     * windowed run tests against a direct sequential scan on constructed
-    * series (runs across the center, exact-8 vs longer runs, tie values).
-    *
-    * The bucketed stream takes a lazy localCheckpoint (census + windowed
-    * main stream both consume it); the dsCusumFrom storage contract. */
+    * series (runs across the center, exact-8 vs longer runs, tie values). */
   def dsSpcRulesFrom(kIn: DataFrame): DataFrame =
     dsSpcRulesFromLattice(latticeOf(kIn))
 
   private def dsSpcRulesFromLattice(lattice: DataFrame): DataFrame = {
-    // RANGE-BUCKET DECOMPOSITION with boundary context (r13 verdict #4):
-    // unlike ds_cusum's unbounded prefixes, the run tests are ROWS-bounded
-    // (8/6/lag-1), so each row's flags depend on AT MOST its 7 global
-    // predecessors. Rows are split into (compound, time-bucket) groups; a
-    // bucket census assigns each bucket its first GLOBAL row index
-    // (start = 1 + Σ earlier bucket counts), every row learns its global
-    // index i = start + local_rank − 1, and each row is re-emitted as
-    // non-scoring CONTEXT into any bucket whose start lies in (i, i+7] —
-    // an equi-join of the 7 exploded candidate starts against the census,
-    // which is exact even when an intervening bucket holds fewer than 7
-    // rows (context then comes from further back). The run windows then
-    // evaluate locally per (compound, bucket) over context + own rows —
-    // identical values to the single per-compound sort, at
-    // |compounds| × SeriesBuckets parallelism.
+    // Boundary-context decomposition: unlike ds_cusum's unbounded
+    // prefixes, the run tests are ROWS-bounded (8/6/lag-1), so each row's
+    // flags depend on at most its 7 global predecessors, which
+    // RangeBuckets.withContext re-emits into the row's bucket; the run
+    // windows then evaluate per (compound, bucket) over context + own
+    // rows, identical values to the single per-compound sort.
     val rows = lattice.withColumn("side",
       when(col("vc") > col("t"), lit(1L))
         .when(col("vc") < col("t"), lit(-1L)).otherwise(lit(0L)))
@@ -2623,32 +2364,20 @@ object Selection {
       return report(ruleColumns(rows.withColumn("i", row_number().over(ord).cast("long")), ord))
     }
     val lw = Window.partitionBy("compound", "b").orderBy("cts", "event_id")
-    // localCheckpoint on the two shared stages (census + join-back, then
-    // scoring rows + exploded context candidates): without it each
-    // consumer recomputes the whole scan+join+window subtree (measured 2x
-    // slower than the un-decomposed plan at sf1)
+    // the lattice is already partitioned on (compound, b); both shared
+    // stages (census + join-back, then scoring rows + context candidates)
+    // are checkpointed, since recomputing them per consumer measured 2x
+    // slower than the un-decomposed plan at sf1
     val local = rows.withColumn("li", row_number().over(lw))
       .select("compound", "b", "event_id", "vc", "t", "madx", "side", "li")
       .localCheckpoint(false)
-    val cw = Window.partitionBy("compound").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val census = local.groupBy("compound", "b").agg(count(lit(1)).as("cb"))
-      .withColumn("start", coalesce(sum(col("cb")).over(cw), lit(0L)) + 1L)
-      .select("compound", "b", "start", "cb")
-    val own = local.join(census, Seq("compound", "b"))
-      .withColumn("i", col("start") + col("li") - 1L)
+    val (indexed, census) = RangeBuckets.indexed(local, "compound")
+    val own = indexed
       .select("compound", "b", "cb", "li", "event_id", "vc", "t", "madx", "side", "i")
       .localCheckpoint(false)
-    val baseCols = Seq("compound", "event_id", "vc", "t", "madx", "side", "i")
-    val ownK = own.select(baseCols.map(col) :+ col("b").as("gb") :+ lit(false).as("ctx"): _*)
-    // only a row within 7 of its bucket's END can precede a later
-    // bucket's start by ≤ 7 — the explode is census-sized, not 7× corpus
-    val ctxK = own.filter(col("li") > col("cb") - 7)
-      .withColumn("tstart", explode(expr("sequence(i + 1, i + 7)")))
-      .join(census.select(col("compound"), col("start").as("tstart"), col("b").as("tb")),
-        Seq("compound", "tstart"))
-      .select(baseCols.map(col) :+ col("tb").as("gb") :+ lit(true).as("ctx"): _*)
-    report(ruleColumns(ownK.union(ctxK), Window.partitionBy("compound", "gb").orderBy("i"))
+    val cols = Seq("compound", "event_id", "vc", "t", "madx", "side", "i").map(col)
+    report(ruleColumns(RangeBuckets.withContext(own, census, "compound", cols, 7),
+        Window.partitionBy("compound", "gb").orderBy("i"))
       .filter(!col("ctx")))
   }
 

@@ -1056,35 +1056,25 @@ object TextAnalysis {
   // its bin, its offset inside the bin, and whether it straddles a bin
   // boundary. Assignment is a pure function of (source, doc_id order,
   // token counts) — reproducible across engines and reruns.
-  // Scale (r15, the bounded-window audit): the per-source running token
-  // sum DECOMPOSES over (source, doc_id-range bucket) groups — the
-  // dsCusumFrom census idiom: bucket-local prefix sums, a bucket census
-  // (|sources| × DocBuckets rows) whose exclusive prefix hands each
-  // bucket its token carry-in, start_off = carry + local prefix − own
-  // tokens. The old plan's per-source window serialized each source's
-  // full doc stream into one task. Integer div/mod only.
-  // The bucketed windowed stream takes a lazy localCheckpoint (census +
-  // join-back both consume it); blocks pin on first action until the
-  // caller unpersists the RDD or the session ends.
+  // Scale: the per-source running token sum DECOMPOSES over (source,
+  // doc_id-range bucket) groups (RangeBuckets): bucket-local prefix sums,
+  // a bucket census whose exclusive prefix hands each bucket its token
+  // carry-in, start_off = carry + local prefix − own tokens. Integer
+  // div/mod only. The windowed stream is checkpointed (census + join-back
+  // both read it) without a repartition: the window's own exchange
+  // partitions it.
   private val PackBudget = 256
-  private val DocBuckets = 256L
 
   def docPack(spark: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(spark, d)
       .select(col("doc_id"), col("source"), size(words).cast("long").as("n_tokens"))
-    val spans = base.groupBy("source").agg(
-      min(col("doc_id")).as("dmin"), max(col("doc_id")).as("dmax"))
     val lw = Window.partitionBy("source", "b").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = base.join(spans, Seq("source"))
-      .withColumn("b", expr(s"(doc_id - dmin) * $DocBuckets div (dmax - dmin + 1)"))
-      .drop("dmin", "dmax")
+    val local = RangeBuckets.assign(base, "source", "doc_id")
       .withColumn("lsum", sum(col("n_tokens")).over(lw))
       .localCheckpoint(false)
-    val cw = Window.partitionBy("source").orderBy("b")
-      .rowsBetween(Window.unboundedPreceding, -1)
     val census = local.groupBy("source", "b").agg(sum(col("n_tokens")).as("sb"))
-      .withColumn("off", coalesce(sum(col("sb")).over(cw), lit(0L)))
+      .withColumn("off", RangeBuckets.offset(col("sb"), "source"))
       .select("source", "b", "off")
     local.join(census, Seq("source", "b"))
       .withColumn("start_off", col("off") + col("lsum") - col("n_tokens"))
@@ -1821,13 +1811,13 @@ object TextAnalysis {
   // the per-stratum curation step a mixture recipe runs BEFORE doc_mixture
   // samples across strata (a global top-K would let one high-quality
   // source crowd out every other stratum).
-  // Scale shape (r15, the bounded-window audit): a bucket-local top-K
-  // prune runs first — every global top-K row of a source is necessarily
-  // within the top-K of its own (source, doc_id-hash bucket) for ANY
-  // partition into buckets, so the corpus pays only |sources| × DocBuckets
-  // LOCAL sorts and at most K × DocBuckets candidates per source reach
-  // the final per-source rank window (the firstActions idiom; audited in
-  // ExplainDump's BoundedWindowAllowed). A skewed stratum bounds a
+  // Scale shape: a bucket-local top-K prune runs first — every global
+  // top-K row of a source is necessarily within the top-K of its own
+  // (source, doc_id-hash bucket) for ANY partition into buckets, so the
+  // corpus pays only |sources| × Buckets LOCAL sorts and at most
+  // K × Buckets candidates per source reach the final per-source rank
+  // window (the firstActions idiom; audited in ExplainDump's
+  // BoundedWindowAllowed). A skewed stratum bounds a
   // bucket-local sort, never a whole-source task.
   private val StratK = 20
 
@@ -1835,7 +1825,7 @@ object TextAnalysis {
     val m = scoredDocs(Tables.documents(spark, d), col("doc_id"), col("source"))
     val lw = Window.partitionBy("source", "b").orderBy(desc("iq"), col("doc_id"))
     val w = Window.partitionBy("source").orderBy(desc("iq"), col("doc_id"))
-    m.withColumn("b", pmod(col("doc_id"), lit(DocBuckets)))
+    m.withColumn("b", pmod(col("doc_id"), lit(RangeBuckets.Buckets)))
       .withColumn("lr", row_number().over(lw))
       .filter(col("lr") <= StratK)
       .withColumn("rank", row_number().over(w).cast("long"))

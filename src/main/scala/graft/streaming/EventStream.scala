@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.RangeBuckets
 import graft.sources.Tables
 
 /** §2.7 streaming: the hourly rollup is ONE transform applied to either a
@@ -149,8 +150,8 @@ object EventStream {
     // "all but each user's last session" as ONE window over the session
     // table (exactly the oracle's formulation): the max-session-id window
     // reuses the sessionizer's existing user_id partitioning, so this adds
-    // ZERO exchanges — the r12 replan replacing a groupBy + anti-join pair
-    // that re-shuffled the session table twice for the same answer
+    // ZERO exchanges, where a groupBy + anti-join pair re-shuffled the
+    // session table twice for the same answer
     val all = graft.operators.Analytics.sessionsUnordered(spark, d)
     val w = Window.partitionBy("user_id")
     all.withColumn("last_sid", max(col("session_id")).over(w))
@@ -239,7 +240,7 @@ object EventStream {
   }
 
   /** The deterministic output contract of the stateful debounce above —
-    * the `stream_sessions` treatment applied to it (r11 verdict #3): every
+    * the `stream_sessions` treatment applied to it: every
     * decision emits immediately and no state waits on a timeout, so for
     * EVENT-TIME-ORDERED arrival (what a watermarked production input
     * guarantees, and what the replay corpus satisfies) a bounded
@@ -318,69 +319,23 @@ object EventStream {
   private[graft] val CusumT = 5000L // target (cents): the fleet-wide level
   private[graft] val CusumK = 2000L // slack: drifts under k/point don't accumulate
   private[graft] val CusumH = 20000L // decision band
-  private val CusumBuckets = 256L // time-range buckets of the batch decomposition
 
   /** The deterministic batch expression the oracle verifies — ds_cusum's
-    * prefix-sum/prefix-min closed form with the FIXED monitoring
-    * parameters, keyed by event_type. Alert rows: every point whose
-    * accumulated one-sided drift clears the band. */
+    * prefix-sum/prefix-min closed form ([[RangeBuckets.cusum]],
+    * decomposed over (event_type, time-bucket) groups) with the FIXED
+    * monitoring parameters, keyed by event_type. Alert rows: every point
+    * whose accumulated one-sided drift clears the band. */
   def streamCusum(spark: SparkSession, d: String): DataFrame = {
-    // RANGE-BUCKET DECOMPOSITION (r15, the bounded-window audit — the
-    // dsCusumFrom idiom keyed by event_type): the prefix sum and prefix
-    // min decompose over (event_type, time-bucket) groups; a bucket
-    // census (|types| × CusumBuckets rows) carries exclusive offsets and
-    // the running min of earlier buckets' full prefixes, and the
-    // join-back reassembles ph(i) = off(b) + lph(i) and
-    // min_{j≤i} ph = least(prevmin(b), off(b) + lmin(i)) exactly.
-    // Fixed monitoring parameters mean no stats join — just the span.
-    // The windowed stream takes a lazy localCheckpoint (census +
-    // join-back both consume it); blocks pin on first action until the
-    // caller unpersists the RDD or the session ends.
-    val W = org.apache.spark.sql.expressions.Window
     val k0 = Tables.events(spark, d)
       .select(col("event_type"), col("event_id"), col("ts"),
         graft.functions.FastRound.cents(col("value")).as("vc"))
       .withColumn("tu", unix_micros(col("ts")))
-    val spans = k0.groupBy("event_type").agg(
-      min(col("tu")).as("tmin"), max(col("tu")).as("tmax"))
-    val rows = k0.join(spans, Seq("event_type"))
-      .withColumn("b", expr(s"(tu - tmin) * $CusumBuckets div (tmax - tmin + 1)"))
+    val rows = RangeBuckets.assign(k0, "event_type", "tu")
       .withColumn("dh", col("vc") - CusumT - CusumK)
       .withColumn("dl", lit(CusumT - CusumK) - col("vc"))
-      // explicit-N bucket repartition (r16, the Selection.latticeOf
-      // finding): AQE coalesces the well-compressed integer exchange
-      // toward one partition and the decomposed window runs serial —
-      // a user repartition with an explicit count is never coalesced
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("event_type"), col("b"))
-    val lw = W.partitionBy("event_type", "b").orderBy("ts", "event_id")
-      .rowsBetween(W.unboundedPreceding, W.currentRow)
-    val local = rows
-      .withColumn("lph", sum(col("dh")).over(lw))
-      .withColumn("lpl", sum(col("dl")).over(lw))
-      .withColumn("lmh", min(col("lph")).over(lw))
-      .withColumn("lml", min(col("lpl")).over(lw))
-      .select("event_type", "b", "event_id", "dh", "dl",
-        "lph", "lpl", "lmh", "lml")
-      .localCheckpoint(false)
-    val cw = W.partitionBy("event_type").orderBy("b")
-      .rowsBetween(W.unboundedPreceding, -1)
-    val census = local.groupBy("event_type", "b").agg(
-      sum(col("dh")).as("sdh"), sum(col("dl")).as("sdl"),
-      min(col("lph")).as("bmh"), min(col("lpl")).as("bml"))
-      .withColumn("offh", coalesce(sum(col("sdh")).over(cw), lit(0L)))
-      .withColumn("offl", coalesce(sum(col("sdl")).over(cw), lit(0L)))
-      .withColumn("pmh", min(col("offh") + col("bmh")).over(cw))
-      .withColumn("pml", min(col("offl") + col("bml")).over(cw))
-      .select("event_type", "b", "offh", "offl", "pmh", "pml")
-    // least() skips NULLs: a first bucket (pmh/pml NULL) reduces to its
-    // own local prefix min exactly
-    val p = local.join(census, Seq("event_type", "b"))
-      .withColumn("sh", col("offh") + col("lph") -
-        least(least(col("pmh"), col("offh") + col("lmh")), lit(0L)))
-      .withColumn("sl", col("offl") + col("lpl") -
-        least(least(col("pml"), col("offl") + col("lml")), lit(0L)))
-    p.select(col("event_type"), col("event_id"),
+    RangeBuckets.cusum(RangeBuckets.partitioned(rows, "event_type"), "event_type",
+        Seq("ts", "event_id"), Seq("event_id"), atScale = true)
+      .select(col("event_type"), col("event_id"),
         explode(array(
           struct(lit("high").as("side"), col("sh").as("s")),
           struct(lit("low").as("side"), col("sl").as("s")))).as("x"))
@@ -570,8 +525,8 @@ object EventStream {
   }
 
   // --- stream_interval_join (batch-parity verification entry) --------------
-  /** The 10th streaming oracle promotion (r13, verdict #5 — the last
-    * spec-only streaming shape with a deterministic batch twin): under
+  /** The streaming oracle entry for the last spec-only streaming shape
+    * with a deterministic batch twin: under
     * AvailableNow replay an append-mode stream-stream join emits exactly
     * the join predicate's matches once the watermark passes, so
     * [[errorWindowJoin]]'s pair set is a pure function of the data — the

@@ -78,7 +78,7 @@ object ExplainDump {
       "boundary-segment census — ≤ 2 segments per non-empty (compound, " +
       "bucket), duplicate-density-sized; Aggregate hidden behind the checkpoint"),
     "select_stratified" -> ("final per-source rank runs after the bucket-local " +
-      "top-K prune (lr <= K filter) — ≤ K × DocBuckets candidate rows per source"),
+      "top-K prune (lr <= K filter) — ≤ K × RangeBuckets.Buckets candidate rows per source"),
     "ds_trend" -> ("the final per-compound sort runs over the TWO-LEVEL " +
       "radix-selected slice (~n/65536 rows per compound — the level-2 " +
       "bucket that holds the median rank); the bounding joins read the " +
@@ -115,6 +115,19 @@ object ExplainDump {
   }
 
   private val GateKey = "spark.graft.memoSide.minLeafBytes"
+
+  /** `plan` with what differs between two runs of one tree replaced by a
+    * placeholder: expression ids, RDD ids, AQE query-stage ids, codegen
+    * ids, `plan_id`s, lambda class names and source line numbers. A
+    * regenerated EXPLAINS.md then differs only where a plan did. */
+  private def normalized(plan: String): String = plan
+    .replaceAll("#\\d+", "#n")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[n]")
+    .replaceAll("(QueryStage\\n(?:Output [^\\n]*\\n)?Arguments: )\\d+", "$1n")
+    .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : n]")
+    .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=n]")
+    .replaceAll("\\$\\$Lambda[^\\s,\\])]*", "\\$\\$Lambda")
+    .replaceAll("(\\.scala):\\d+", "$1:n")
 
   /** Audit failures of query `name`'s plan; `atScale` adds the
     * bounded-cardinality window rule. */
@@ -178,7 +191,8 @@ object ExplainDump {
       sb.append(s"## $name\n\n")
       sb.append(s"- broadcast joins: ${"BroadcastHashJoin".r.findAllIn(plan).size}\n")
       sb.append(s"- shuffles (Exchange): ${"Exchange ".r.findAllIn(plan).size}\n")
-      sb.append("\n```\n").append(plan.linesIterator.take(60).mkString("\n")).append("\n```\n\n")
+      sb.append("\n```\n").append(normalized(plan).linesIterator.take(60).mkString("\n"))
+        .append("\n```\n\n")
     } finally gate.fold(spark.conf.unset(GateKey))(spark.conf.set(GateKey, _))
     // The three LSH queries read memoized pipeline-stage outputs, so their
     // own plans are InMemoryTableScans; dump the UN-memoized pipeline plan
@@ -196,7 +210,8 @@ object ExplainDump {
     sb.append(s"- broadcast joins: ${"BroadcastHashJoin".r.findAllIn(pipe).size}\n")
     sb.append(s"- shuffle joins: ${"SortMergeJoin".r.findAllIn(pipe).size + "ShuffledHashJoin".r.findAllIn(pipe).size}\n")
     sb.append(s"- shuffles (Exchange): ${"Exchange ".r.findAllIn(pipe).size}\n")
-    sb.append("\n```\n").append(pipe.linesIterator.take(80).mkString("\n")).append("\n```\n\n")
+    sb.append("\n```\n").append(normalized(pipe).linesIterator.take(80).mkString("\n"))
+      .append("\n```\n\n")
     if (bad.nonEmpty) {
       sb.append("## AUDIT FAILURES\n\n")
       bad.foreach(m => sb.append(s"- $m\n"))

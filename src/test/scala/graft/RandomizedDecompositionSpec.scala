@@ -524,6 +524,56 @@ class RandomizedDecompositionSpec extends SparkSpec {
     }}
   }
 
+  test("randomized: gated lag and ROWS operators return the plain window's rows when decomposed, on 10 seeded series") {
+    import spark.implicits._
+    (1 to 10).foreach { seed =>
+      val rnd = new Random(seed + 900)
+      def value(): Double =
+        (if (rnd.nextInt(12) == 0) 90000 else 10000 + rnd.nextInt(3000)) / 100.0
+      // span 256·c − 1 seconds puts bucket edges between seconds m·c − 1
+      // and m·c; equal timestamps pile up on both sides of some edges and
+      // most buckets stay empty
+      val c = 1 + rnd.nextInt(3)
+      val edges = Seq.fill(6 + rnd.nextInt(10))(1 + rnd.nextInt(255))
+      val edge = Seq(0L, 256L * c - 1) ++ edges.flatMap { m =>
+        Seq.fill(1 + rnd.nextInt(3))(m * c - 1L) ++ Seq.fill(1 + rnd.nextInt(3))(m.toLong * c)
+      } ++ Seq.fill(20 + rnd.nextInt(40))(rnd.nextInt(256 * c).toLong)
+      // two dense clusters far apart: every bucket between them is empty
+      val clusters = Seq.fill(20 + rnd.nextInt(30))(rnd.nextInt(600).toLong) ++
+        Seq.fill(20 + rnd.nextInt(30))(1000000L + rnd.nextInt(600))
+      val pair = Seq(0L, if (seed % 2 == 0) 0L else 1L + rnd.nextInt(5000))
+      val series = Seq("edge" -> edge, "clusters" -> clusters, "pair" -> pair, "solo" -> Seq(7L))
+      val rows = series.zipWithIndex.flatMap { case ((name, secs), ci) =>
+        secs.zipWithIndex.map { case (t, i) => (ci * 1000L + i, name, 1700000000L + t, value()) }
+      }
+      val df = rows.toDF("event_id", "compound", "sec", "value")
+        .select(col("event_id"), col("compound"), timestamp_seconds(col("sec")).as("cts"),
+          (col("sec") * 1000L).as("ms"), col("value"))
+      val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "gapsFrom" -> (() => graft.operators.Selection.gapsFrom(
+          df.select("event_id", "compound", "cts"), "event_id")),
+        "interpFrom" -> (() => graft.operators.Selection.interpFrom(
+          df.select("event_id", "compound", "cts", "value"), "event_id")),
+        "rollingZFrom" -> (() => graft.operators.Selection.rollingZFrom(
+          df.select("event_id", "compound", "value", "cts"), "event_id")),
+        "dsTrendFrom" -> (() => graft.operators.Selection.dsTrendFrom(df)))
+      val byGate = scala.collection.mutable.Map.empty[(String, Boolean), Seq[String]]
+      atBothGates { atScale =>
+        ops.foreach { case (name, op) =>
+          val out = op()
+          assert(decomposed(out) === atScale, s"$name seed=$seed atScale=$atScale")
+          byGate((name, atScale)) = out.collect().map(_.toString).toSeq.sorted
+        }
+      }
+      ops.foreach { case (name, _) =>
+        assert(byGate((name, true)) === byGate((name, false)), s"$name seed=$seed")
+      }
+      // the series exercise the operators, not just their empty results
+      assert(byGate(("gapsFrom", false)).nonEmpty && byGate(("rollingZFrom", false)).nonEmpty,
+        s"seed=$seed")
+    }
+  }
+
   test("randomized: bounded k-core peel equals the sequential peel on 10 seeded graphs") {
     import spark.implicits._
     def brute(edges: Set[(Long, Long)], rounds: Int):

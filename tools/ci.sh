@@ -110,6 +110,17 @@ if grep -rn "minLeafBytes(\|leafStatBytes(" src/main/scala --include='*.scala' \
   exit 1
 fi
 
+echo "== range-bucket audit: bucket ids are assigned only in RangeBuckets"
+# RangeBuckets owns the (key, time-bucket) decomposition: the bucket id,
+# its bucket count and the explicit-N exchange in front of the bucket-local
+# windows. A bucket id written by hand elsewhere drifts from the census
+# that carries values between its buckets.
+if grep -rn "Buckets div" src/main/scala --include='*.scala' \
+    | grep -v '/RangeBuckets\.scala:'; then
+  echo "range-bucket id outside RangeBuckets — call RangeBuckets.assign"
+  exit 1
+fi
+
 
 echo "== bench-artifact staleness gate"
 # r17 verdict #1 (and r16 before it): the committed sf10 bench pair twice
