@@ -1913,7 +1913,7 @@ object Analytics {
   // L), and n_segments = 1 + #(gaps > L). The lag decomposes over
   // (event_type, time-bucket) groups with a census handoff (each bucket's
   // first row takes its predecessor from the previous non-empty bucket's
-  // max(t), as in RangeBuckets.lag1), so no per-type corpus window
+  // max(t), the width-1 case of RangeBuckets.lags), so no per-type corpus window
   // remains; everything after is one combinable groupBy. All integer
   // epoch-millis, one final division. The bucketed stream is checkpointed
   // before the lag window (census + window both read it), with no

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -19,31 +21,35 @@ import org.apache.spark.sql.functions._
   *    later bucket, rows with equal t share a bucket, and ordering by
   *    (b, t, …) is ordering by (t, …). A bucket-local window over that
   *    order sees a contiguous stretch of the series.
-  *  - [[local]]: the bucket-local windows, on a stream partitioned by
-  *    [[partitioned]] and then checkpointed. The partition count N is the
-  *    session's `spark.sql.shuffle.partitions`, given explicitly: the
-  *    window's own exchange carries well-compressed integers, AQE
-  *    coalesces it toward one partition and the decomposed window runs
-  *    serial, while a repartition with an explicit count is never
-  *    coalesced. The window runs before the checkpoint because the
+  *  - [[local]]: the bucket-local windows, on a stream partitioned on
+  *    (key, b) and then checkpointed. The stream is [[partitioned]], or a
+  *    persisted memo built partitioned (its scan keeps the partitioning).
+  *    The partition count N is the session's `spark.sql.shuffle.partitions`,
+  *    given explicitly: the window's own exchange carries well-compressed
+  *    integers, AQE coalesces it toward one partition and the decomposed
+  *    window runs serial, while a repartition with an explicit count is
+  *    never coalesced. The window runs before the checkpoint because the
   *    checkpoint's `LogicalRDD` does not advertise its partitioning: a
   *    window read from a checkpoint shuffles the corpus again.
   *  - The carry: a census is an aggregate per (key, b), at most
   *    |keys| × Buckets rows at any scale, and [[earlier]] is the window
   *    over the key's earlier buckets in which a census computes each
-  *    bucket's carry-in ([[offset]], a running min, a last non-null).
-  *    Joined back on (key, b), the census turns local values into global
-  *    ones.
+  *    bucket's carry-in ([[offset]], a running min, a last non-null, the
+  *    last rows of [[lags]]). Joined back on (key, b), the census turns
+  *    local values into global ones, and nothing after the local window
+  *    moves the corpus.
   *
   * Storage contract: [[local]] takes a lazy `localCheckpoint`, because the
-  * windowed stream feeds both the census and the join-back. Building the
-  * frame plans the windowed subtree (under AQE that runs the shuffle
-  * stages below it); the checkpoint's blocks are written by the first
-  * action that reads them and stay until the caller unpersists the RDD or
-  * the session ends. In a bench pass `Bench.timeQuery` unpersists what
-  * each query left. Nothing else owns them: `qc_batch`'s traced pass
-  * books its three at-scale QC queries' checkpoints as leaked RDDs, until
-  * a per-query memo scope owns them.
+  * windowed stream feeds both the census and the join-back; a decomposed
+  * operator takes one per local window ([[lags]] and [[cusum]] one each),
+  * plus any its own multi-consumer stages need. Building the frame plans
+  * the windowed subtree (under AQE that runs the shuffle stages below it,
+  * none when the stream is a warmed memo); the checkpoint's blocks are
+  * written by the first action that reads them and stay until the caller
+  * unpersists the RDD or the session ends. In a bench pass
+  * `Bench.timeQuery` unpersists what each query left. Nothing else owns
+  * them: `qc_batch`'s traced pass books its three at-scale QC queries'
+  * checkpoints as leaked RDDs, until a per-query memo scope owns them.
   */
 private[graft] object RangeBuckets {
   /** Buckets per key: the parallelism of a decomposed scan, and the bound
@@ -77,10 +83,10 @@ private[graft] object RangeBuckets {
     rows.repartition(rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       col(key), col("b"))
 
-  /** The bucket-local `windows` over `rows` partitioned on (key, b), lazily
-    * checkpointed. */
-  def local(rows: DataFrame, key: String)(windows: DataFrame => DataFrame): DataFrame =
-    windows(partitioned(rows, key)).localCheckpoint(false)
+  /** The bucket-local `windows` over `rows`, a stream partitioned on
+    * (key, b), lazily checkpointed. */
+  def local(rows: DataFrame)(windows: DataFrame => DataFrame): DataFrame =
+    windows(rows).localCheckpoint(false)
 
   /** The census window of `key`'s buckets before the current one, in
     * `bucket` order. */
@@ -96,64 +102,68 @@ private[graft] object RangeBuckets {
   def offset(c: Column, key: String, bucket: String = "b"): Column =
     coalesce(sum(c).over(earlier(key, bucket)), lit(0L))
 
-  /** Bucket-local rank `li` plus the census: `own` is `local` with the
-    * global 1-based row index i = start(b) + li − 1, and `census` holds
-    * (key, b, start, cb), cb the bucket's row count. */
-  def indexed(local: DataFrame, key: String): (DataFrame, DataFrame) = {
-    val census = local.groupBy(key, "b").agg(count(lit(1)).as("cb"))
-      .withColumn("start", offset(col("cb"), key) + 1L)
-      .select(key, "b", "start", "cb")
-    (local.join(census, Seq(key, "b")).withColumn("i", col("start") + col("li") - 1L), census)
-  }
+  /** The name of lag `j` of column `c` in the output of [[lags]]. */
+  def lagName(c: String, j: Int): String = s"${c}_lag$j"
 
-  /** The rows of `own` (from [[indexed]]) as groups `gb` for a ROWS-bounded
-    * window reaching `width` rows back: each row in its own bucket
-    * (ctx = false), and each row within `width` of its bucket's end again
-    * as non-scoring context (ctx = true) in every bucket whose start lies
-    * in (i, i + width]. Only such rows can precede a later bucket's start
-    * by ≤ width, so the explode is census-sized, and the match against
-    * the census starts stays exact when a bucket in between holds fewer
-    * than `width` rows. A window over (key, gb) ordered by i then gives
-    * each own row the values of the per-key window. */
-  def withContext(own: DataFrame, census: DataFrame, key: String, cols: Seq[Column],
-      width: Int): DataFrame = {
-    val ownK = own.select(cols :+ col("b").as("gb") :+ lit(false).as("ctx"): _*)
-    val ctxK = own.filter(col("li") > col("cb") - width)
-      .withColumn("tstart", explode(expr(s"sequence(i + 1, i + $width)")))
-      .join(census.select(col(key), col("start").as("tstart"), col("b").as("tb")),
-        Seq(key, "tstart"))
-      .select(cols :+ col("tb").as("gb") :+ lit(true).as("ctx"): _*)
-    ownK.union(ctxK)
-  }
-
-  /** Per-key lag-1 of `lagCols` in `ordCols` order: the input columns plus
-    * `li` and `prev_<c>` per lag column, NULL on each key's first row —
-    * lag(c) OVER (PARTITION BY key ORDER BY ordCols). `rows` carries `b`
-    * from [[assign]] on the leading order column.
+  /** The ROWS-bounded carry: per-key lags 1 to `width` of each of `cols`
+    * in `ord` order, lag(c, j) OVER (PARTITION BY key ORDER BY ord), NULL
+    * where the key has fewer than j earlier rows, named [[lagName]](c, j),
+    * plus the 1-based row index `i` = row_number() over the same window.
+    * The other columns of `rows` pass through. Below the scale gate
+    * (`atScale`, the caller's [[PlanStats.atScale]] on its input) it is
+    * one plain per-key window.
     *
-    * At scale the lag is bucket-local, and each bucket's first row takes
-    * its predecessor from a census of each non-empty bucket's last row,
-    * lagged one census row: the census holds only non-empty buckets, so
-    * the lag lands on the previous non-empty one. Below the scale gate
-    * (`atScale`, the caller's [[PlanStats.atScale]] on its input) it is one
-    * plain per-key window, and `li` is the global rank. */
-  def lag1(rows: DataFrame, key: String, ordCols: Seq[String], lagCols: Seq[String],
+    * At scale `rows` carries `b` from [[assign]] on the leading order
+    * column and is partitioned on (key, b). The lag chain and the local
+    * rank li run in the [[local]] window. A census row per non-empty
+    * (key, b), the bucket's last row, holds its row count cb and its last
+    * min(cb, width) rows, the last one first, read from that row's lags.
+    * A bucket's carry-in is the concatenation of the tails of the `width`
+    * non-empty buckets before it, nearest first:
+    * each holds at least one row, so together they reach `width` rows back
+    * wherever the key has that many. Joined back under the census
+    * broadcast, the row at local rank li takes lag j from its own bucket
+    * when li > j and from carry-in element j − li otherwise. */
+  def lags(rows: DataFrame, key: String, ord: Seq[Column], cols: Seq[String], width: Int,
       atScale: Boolean): DataFrame = {
-    val ord = ordCols.map(col)
-    def lagged(in: DataFrame, w: WindowSpec, suffix: String): DataFrame =
-      lagCols.foldLeft(in.withColumn("li", row_number().over(w))) {
-        (df, c) => df.withColumn(s"prev_$c$suffix", lag(col(c), 1).over(w))
-      }
-    if (!atScale) return lagged(rows, Window.partitionBy(key).orderBy(ord: _*), "")
-    val here = local(rows, key)(lagged(_, Window.partitionBy(key, "b").orderBy(ord: _*), "_l"))
-    val hand = here.groupBy(key, "b")
-      .agg(max_by(struct(lagCols.map(col): _*), struct(ord: _*)).as("last_row"))
-      .withColumn("hand", lag(col("last_row"), 1).over(Window.partitionBy(key).orderBy("b")))
-      .select(col(key) +: col("b") +: lagCols.map(c => col(s"hand.$c").as(s"prev_${c}_h")): _*)
-    lagCols.foldLeft(here.join(hand, Seq(key, "b"))) { (df, c) =>
-      df.withColumn(s"prev_$c",
-        when(col("li") === 1, col(s"prev_${c}_h")).otherwise(col(s"prev_${c}_l")))
-    }.drop(lagCols.map(c => s"prev_${c}_l") ++ lagCols.map(c => s"prev_${c}_h"): _*)
+    def chained(in: DataFrame, w: WindowSpec): DataFrame =
+      in.withColumns(ListMap(cols.flatMap(c =>
+        (1 to width).map(j => lagName(c, j) -> lag(col(c), j).over(w))): _*))
+    if (!atScale) {
+      val w = Window.partitionBy(key).orderBy(ord: _*)
+      return chained(rows.withColumn("i", row_number().over(w).cast("long")), w)
+    }
+    val lw = Window.partitionBy(key, "b").orderBy(ord: _*)
+    val here = local(rows)(in => chained(in.withColumn("li", row_number().over(lw)), lw)
+      .withColumn("last", lead(col("li"), 1).over(lw).isNull))
+    // the row `j` back from the bucket's last row, as a struct of `cols`
+    def back(j: Int): Column =
+      struct(cols.map(c => (if (j == 0) col(c) else col(lagName(c, j))).as(c)): _*)
+    val cw = Window.partitionBy(key).orderBy("b")
+    // a bucket's last row holds its count and, in its local lags, its
+    // tail. Each group holds that one row; grouping keeps the census an
+    // aggregate output, which is how ExplainDump's bounded-window audit
+    // tells the census window below from a window over the corpus
+    val census = here.filter(col("last")).groupBy(key, "b").agg(
+        max(col("li")).cast("long").as("cb"),
+        max(slice(array((0 until width).map(back): _*), lit(1), least(col("li"), lit(width))))
+          .as("tail"))
+      .withColumn("start", offset(col("cb"), key) + 1L)
+      // a key's first buckets have fewer than `width` predecessors: their
+      // NULL tails drop out of the concatenation
+      .withColumn("carry", slice(flatten(array_compact(array(
+        (1 to width).map(m => lag(col("tail"), m).over(cw)): _*))), 1, width))
+      .select(key, "b", "start", "carry")
+    val carried = struct(cols.flatMap(c => (1 to width).map(j =>
+      when(col("li") > j, col(lagName(c, j)))
+        .otherwise(get(col("carry"), lit(j) - col("li")).getField(c)).as(lagName(c, j)))): _*)
+    // the lags leave through a one-row generator: a consumer's filter over
+    // them stays above it instead of being rewritten, through the join,
+    // into a join condition that evaluates every switch it references
+    // (ds_rolling_z's flag test holds the 16-term sums four times)
+    here.join(broadcast(census), Seq(key, "b"))
+      .select((rows.columns.map(col) :+ (col("start") + col("li") - 1L).as("i")) :+
+        inline(array(carried)): _*)
   }
 
   /** The two-sided CUSUM statistics sh and sl per row of `rows`, from its
@@ -183,13 +193,12 @@ private[graft] object RangeBuckets {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // only what the census and the join-back read: the checkpoint write is
     // the wall cost here
-    val here = rows
+    val here = local(rows)(_
       .withColumn("lph", sum(col("dh")).over(lw))
       .withColumn("lpl", sum(col("dl")).over(lw))
       .withColumn("lmh", min(col("lph")).over(lw))
       .withColumn("lml", min(col("lpl")).over(lw))
-      .select((Seq(key, "b") ++ keep ++ Seq("dh", "dl", "lph", "lpl", "lmh", "lml")).map(col): _*)
-      .localCheckpoint(false)
+      .select((Seq(key, "b") ++ keep ++ Seq("dh", "dl", "lph", "lpl", "lmh", "lml")).map(col): _*))
     val census = here.groupBy(key, "b").agg(
       sum(col("dh")).as("sdh"), sum(col("dl")).as("sdl"),
       min(col("lph")).as("bmh"), min(col("lpl")).as("bml"))

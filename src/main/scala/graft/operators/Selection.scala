@@ -1004,25 +1004,59 @@ object Selection {
   // would go silent at 100× the sampling rate), and it reduces to a pure
   // INTEGER cross-multiplication — gap·(n−1) > 4·(span) on epoch seconds —
   // so no division ever happens and both engines agree exactly.
-  // Scale: the consecutive-pair lag is RangeBuckets.lag1, and the
-  // per-compound spacing aggregate is the bucket span's.
-  def dsGaps(spark: SparkSession, d: String): DataFrame =
-    gapsFrom(keyedQc(spark, d).select("event_id", "compound", "cts"), "event_id")
-      .orderBy("compound", "gap_end_id")
+  // Scale: the consecutive-pair lag is RangeBuckets.lags at width 1. The
+  // registry reads it from the QC lattice and joins the per-compound
+  // spacing aggregate (the lattice's stats) after the carry; a library
+  // caller's series gets it from its own bucket span.
+  def dsGaps(spark: SparkSession, d: String): DataFrame = {
+    val k = keyedQc(spark, d)
+    (if (!PlanStats.atScale(k)) gapsFrom(k.select("event_id", "compound", "cts"), "event_id")
+     else {
+       val l = qcLattice(spark, d)
+       gapsOf(consecutive(l.rows.select("compound", "b", "event_id", "cts")
+           .withColumn("sec", unix_timestamp(col("cts"))), "event_id", Seq("sec", "event_id"),
+           atScale = true), Some(l.spacing), "event_id")
+     }).orderBy("compound", "gap_end_id")
+  }
 
   /** DataFrame-in variant for library callers (and the [[GraftQC]] facade):
     * `k` needs (`idCol`, compound, cts: timestamp). */
   def gapsFrom(kIn: DataFrame, idCol: String): DataFrame = {
     val k = kIn.withColumn("sec", unix_timestamp(col("cts")))
+    gapsOf(spacedPairs(k, idCol, Seq("sec", idCol), PlanStats.atScale(kIn)), None, idCol)
+  }
+
+  /** The consecutive pairs of a library caller's series `k` (with `sec`):
+    * its rows with the spacing columns (span: seconds from first to last
+    * sample, n: samples), bucketed by its own span, and the lag-1s of
+    * `cols`. */
+  private def spacedPairs(k: DataFrame, idCol: String, cols: Seq[String],
+      atScale: Boolean): DataFrame = {
     val rows = RangeBuckets.assign(k, "compound", "sec",
       Seq((max(col("sec")) - min(col("sec"))).as("span"), count(lit(1)).as("n")))
-    RangeBuckets.lag1(rows, "compound", Seq("cts", idCol), Seq("sec", idCol),
-      PlanStats.atScale(kIn))
-      .filter(col("prev_sec").isNotNull)
-      .withColumn("gap_sec", col("sec") - col("prev_sec"))
-      .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
-      .select(col("compound"), col(s"prev_$idCol").as("gap_start_id"),
+    consecutive(if (atScale) RangeBuckets.partitioned(rows, "compound") else rows, idCol, cols,
+      atScale)
+  }
+
+  /** The lag-1s of `cols` over each compound's (cts, `idCol`) order. */
+  private def consecutive(rows: DataFrame, idCol: String, cols: Seq[String],
+      atScale: Boolean): DataFrame =
+    RangeBuckets.lags(rows, "compound", Seq(col("cts"), col(idCol)), cols, 1, atScale)
+
+  /** The gaps core over the consecutive pairs of (sec, `idCol`), which
+    * carry the spacing columns unless `spacing` is given. */
+  private def gapsOf(pairs: DataFrame, spacing: Option[DataFrame], idCol: String): DataFrame =
+    gapPairs(pairs, spacing)
+      .select(col("compound"), col(RangeBuckets.lagName(idCol, 1)).as("gap_start_id"),
         col(idCol).as("gap_end_id"), col("gap_sec"))
+
+  /** The consecutive pairs whose gap_sec breaks the spacing rule, the
+    * spacing columns joined when they come separately. */
+  private def gapPairs(pairs: DataFrame, spacing: Option[DataFrame]): DataFrame = {
+    val p = pairs.filter(col("sec_lag1").isNotNull)
+    spacing.fold(p)(RangeBuckets.perKey(p, _, "compound"))
+      .withColumn("gap_sec", col("sec") - col("sec_lag1"))
+      .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
   }
 
   val dsGapsSql: String = KeyedCte +
@@ -1048,8 +1082,17 @@ object Selection {
   // evaluate identically: prev + (next−prev)·frac, frac = one division of
   // exact integer-valued doubles. Downstream, union-ing these rows back under
   // the raw series is the standard grid-repair step before resampling.
-  def dsInterp(spark: SparkSession, d: String): DataFrame =
-    interpFrom(keyedQc(spark, d).select("event_id", "compound", "cts", "value"), "event_id")
+  def dsInterp(spark: SparkSession, d: String): DataFrame = {
+    val k = keyedQc(spark, d)
+    if (!PlanStats.atScale(k))
+      interpFrom(k.select("event_id", "compound", "cts", "value"), "event_id")
+    else {
+      val l = qcLattice(spark, d)
+      interpOf(consecutive(l.rows.select("compound", "b", "event_id", "cts", "vc")
+          .withColumn("sec", unix_timestamp(col("cts"))), "event_id", Seq("sec", "event_id", "vc"),
+          atScale = true), Some(l.spacing), "event_id")
+    }
+  }
 
   /** DataFrame-in variant for library callers (and the [[GraftQC]] facade):
     * `kIn` needs (`idCol`, compound, cts: timestamp, value). */
@@ -1058,21 +1101,20 @@ object Selection {
       .select(col(idCol), col("compound"), col("cts"),
         graft.functions.FastRound.cents(col("value")).as("vc"))
       .withColumn("sec", unix_timestamp(col("cts")))
-    val rows = RangeBuckets.assign(k, "compound", "sec",
-      Seq((max(col("sec")) - min(col("sec"))).as("span"), count(lit(1)).as("n")))
-    RangeBuckets.lag1(rows, "compound", Seq("cts", idCol), Seq("sec", idCol, "vc"),
-      PlanStats.atScale(kIn))
-      .filter(col("prev_sec").isNotNull)
-      .withColumn("gap_sec", col("sec") - col("prev_sec"))
-      .filter(col("gap_sec") * (col("n") - 1) > lit(4L) * col("span"))
-      .withColumn("mid_sec", expr("(prev_sec + sec) div 2"))
-      .select(col("compound"), col(s"prev_$idCol").as("gap_start_id"),
+    interpOf(spacedPairs(k, idCol, Seq("sec", idCol, "vc"), PlanStats.atScale(kIn)), None, idCol)
+  }
+
+  /** The interpolation core over the consecutive pairs of (sec, `idCol`,
+    * vc), which carry the spacing columns unless `spacing` is given. */
+  private def interpOf(pairs: DataFrame, spacing: Option[DataFrame], idCol: String): DataFrame =
+    gapPairs(pairs, spacing)
+      .withColumn("mid_sec", expr("(sec_lag1 + sec) div 2"))
+      .select(col("compound"), col(RangeBuckets.lagName(idCol, 1)).as("gap_start_id"),
         col(idCol).as("gap_end_id"), col("mid_sec"),
-        ((col("prev_vc").cast("double") + (col("vc") - col("prev_vc")).cast("double")
-          * ((col("mid_sec") - col("prev_sec")).cast("double")
+        ((col("vc_lag1").cast("double") + (col("vc") - col("vc_lag1")).cast("double")
+          * ((col("mid_sec") - col("sec_lag1")).cast("double")
             / col("gap_sec").cast("double"))) / 100.0).as("interp_value"))
       .orderBy("compound", "gap_end_id")
-  }
 
   val dsInterpSql: String = KeyedCte +
     """,
@@ -1109,45 +1151,46 @@ object Selection {
   // flag comparison dev² > 9·var avoids sqrt in the predicate; the
   // reported sd is one correctly-rounded sqrt of identical operands
   // (clamped at 0 against cancellation).
-  // Scale: the ROWS-16 trailing window is the boundary-context
-  // decomposition (RangeBuckets.withContext, 15 rows back): the 16-lag
-  // chain evaluates per (compound, bucket) over context + own rows,
-  // value-identical to the single per-compound sort.
+  // Scale: the ROWS-16 trailing window is the ROWS-bounded carry
+  // (RangeBuckets.lags, 15 rows back): the 15-lag chain runs per
+  // (compound, bucket), and each bucket's first 15 rows take the lags they
+  // miss from the census of the buckets before it, value-identical to the
+  // single per-compound sort. The registry reads the QC lattice, which is
+  // already partitioned on (compound, bucket).
   private val RollW = 16
 
-  def dsRollingZ(spark: SparkSession, d: String): DataFrame =
-    rollingZFrom(keyedQc(spark, d).select("event_id", "compound", "value", "cts"), "event_id")
+  def dsRollingZ(spark: SparkSession, d: String): DataFrame = {
+    val k = keyedQc(spark, d)
+    val atScale = PlanStats.atScale(k)
+    rollingZOf(
+      if (atScale) qcLattice(spark, d).rows.select("compound", "b", "event_id", "value", "cts")
+      else k.select("compound", "event_id", "value", "cts"),
+      "event_id", atScale)
       .orderBy("compound", "event_id")
+  }
 
   /** DataFrame-in variant for library callers (and the [[GraftQC]] facade):
     * `k` needs (`idCol`, compound, value, cts: timestamp). */
   def rollingZFrom(k: DataFrame, idCol: String): DataFrame = {
-    // the 15-lag chain, over one per-compound window below the gate and
-    // per (compound, bucket) over context + own rows above it: the same
-    // expression tree either way
-    def lagChain(in: DataFrame, w: WindowSpec): DataFrame =
-      (1 until RollW).foldLeft(in)((df, j) => df.withColumn(s"l$j", lag(col("value"), j).over(w)))
-    val lagged: DataFrame =
-      if (!PlanStats.atScale(k)) {
-        val w = Window.partitionBy("compound").orderBy(col("cts"), col(idCol))
-        lagChain(k.select(col("compound"), col(idCol), col("value"), col("cts"))
-          .withColumn("i", row_number().over(w).cast("long")), w)
-      } else {
-        val rows = RangeBuckets.assign(k.withColumn("tu", unix_micros(col("cts"))),
-          "compound", "tu").drop("tu")
-        val lw = Window.partitionBy("compound", "b").orderBy(col("cts"), col(idCol))
-        val (own, census) = RangeBuckets.indexed(
-          RangeBuckets.local(rows, "compound")(_.withColumn("li", row_number().over(lw).cast("long"))),
-          "compound")
-        val cols = Seq(col("compound"), col(idCol), col("value"), col("cts"), col("i"))
-        lagChain(RangeBuckets.withContext(own, census, "compound", cols, RollW - 1),
-          Window.partitionBy("compound", "gb").orderBy("i"))
-          .filter(!col("ctx"))
-      }
+    val atScale = PlanStats.atScale(k)
+    val rows = k.select(col("compound"), col(idCol), col("value"), col("cts"))
+    rollingZOf(
+      if (!atScale) rows
+      else RangeBuckets.partitioned(RangeBuckets.assign(rows.withColumn("tu", unix_micros(col("cts"))),
+        "compound", "tu").drop("tu"), "compound"),
+      idCol, atScale)
+  }
+
+  /** The rolling-z core over (compound, `idCol`, value, cts), partitioned
+    * on (compound, b) at scale. The 15-lag chain is the same expression
+    * tree at either gate. */
+  private def rollingZOf(rows: DataFrame, idCol: String, atScale: Boolean): DataFrame = {
+    val lagged = RangeBuckets.lags(rows, "compound", Seq(col("cts"), col(idCol)), Seq("value"),
+      RollW - 1, atScale)
+    def l(j: Int): Column = col(RangeBuckets.lagName("value", j))
     val nD = RollW.toDouble
-    val s = (1 until RollW).foldLeft(col("value"))((acc, j) => acc + col(s"l$j"))
-    val ss = (1 until RollW).foldLeft(col("value") * col("value"))(
-      (acc, j) => acc + col(s"l$j") * col(s"l$j"))
+    val s = (1 until RollW).foldLeft(col("value"))((acc, j) => acc + l(j))
+    val ss = (1 until RollW).foldLeft(col("value") * col("value"))((acc, j) => acc + l(j) * l(j))
     lagged.filter(col("i") >= RollW)
       .withColumn("s", s).withColumn("ss", ss)
       .withColumn("mean", col("s") / nD)
@@ -1200,9 +1243,16 @@ object Selection {
   // a map-side-combinable max_by(payload, (score, −i)) takes each bucket's
   // best split, and the global pick windows over the census-sized
   // survivors.
-  def dsChangepoint(spark: SparkSession, d: String): DataFrame =
-    changepointFrom(keyedQc(spark, d).select("event_id", "compound", "value", "cts"), "event_id")
-      .orderBy("compound")
+  def dsChangepoint(spark: SparkSession, d: String): DataFrame = {
+    val k = keyedQc(spark, d)
+    (if (!PlanStats.atScale(k))
+      changepointFrom(k.select("event_id", "compound", "value", "cts"), "event_id")
+     else {
+       val l = qcLattice(spark, d)
+       changepointOf(l.rows.select("compound", "b", "event_id", "cts", "vc"),
+         Some(l.stats.select(col("compound"), col("n"), col("sv").as("sn"))), "event_id")
+     }).orderBy("compound")
+  }
 
   /** DataFrame-in variant for library callers (and the [[GraftQC]] facade):
     * `k` needs (`idCol`, compound, value, cts: timestamp); the boundary id
@@ -1212,10 +1262,17 @@ object Selection {
       .select(col("compound"), col(idCol), col("cts"),
         graft.functions.FastRound.cents(col("value")).as("vc"))
       .withColumn("tu", unix_micros(col("cts")))
-    val rows = RangeBuckets.assign(k0, "compound", "tu",
-      Seq(count(lit(1)).as("n"), sum(col("vc")).as("sn"))).drop("tu")
+    changepointOf(RangeBuckets.partitioned(RangeBuckets.assign(k0, "compound", "tu",
+      Seq(count(lit(1)).as("n"), sum(col("vc")).as("sn"))).drop("tu"), "compound"), None, idCol)
+  }
+
+  /** The changepoint core over (compound, b, `idCol`, cts, vc) partitioned
+    * on (compound, b), which carry the per-compound totals (n, sn) unless
+    * `totals` is given. */
+  private def changepointOf(rows: DataFrame, totals: Option[DataFrame],
+      idCol: String): DataFrame = {
     val lw = Window.partitionBy("compound", "b").orderBy(col("cts"), col(idCol))
-    val local = RangeBuckets.local(rows, "compound")(_
+    val local = RangeBuckets.local(rows)(_
       .withColumn("li", row_number().over(lw).cast("long"))
       .withColumn("ls", sum(col("vc"))
         .over(lw.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
@@ -1224,7 +1281,8 @@ object Selection {
       .withColumn("ioff", RangeBuckets.offset(col("cb"), "compound"))
       .withColumn("soff", RangeBuckets.offset(col("sb"), "compound"))
       .select("compound", "b", "ioff", "soff")
-    val scored = local.join(census, Seq("compound", "b"))
+    val joined = local.join(census, Seq("compound", "b"))
+    val scored = totals.fold(joined)(RangeBuckets.perKey(joined, _, "compound"))
       .withColumn("i", col("ioff") + col("li"))
       .withColumn("s", col("soff") + col("ls"))
       .filter(col("i") < col("n"))
@@ -1332,7 +1390,7 @@ object Selection {
     // second sort + running `last` is the linear formulation.
     val wDesc = Window.partitionBy("compound", "b").orderBy(col("sec").desc, col("kind").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = RangeBuckets.local(rows, "compound")(_
+    val local = RangeBuckets.local(RangeBuckets.partitioned(rows, "compound"))(_
       .withColumn("lpv", last(col("v"), ignoreNulls = true).over(wAsc))
       .withColumn("lps", last(when(col("kind") === 0, col("sec")), ignoreNulls = true).over(wAsc))
       .withColumn("lnv", last(col("v"), ignoreNulls = true).over(wDesc))
@@ -1583,16 +1641,24 @@ object Selection {
   // op sees the same operands in the same order. Integer headroom: |cents|
   // ≤ 5.7e4 here, so Σv² < n·3.3e9 — the per-compound sums stay under 2^63
   // up to ~2.8e9 rows per compound; beyond that, quantize coarser.
-  // Scale: the consecutive pairs come from RangeBuckets.lag1, and the six
-  // sums are order-free integers, so the final groupBy combines map-side
-  // and shuffles |compounds| rows.
+  // Scale: the consecutive pairs come from RangeBuckets.lags at width 1
+  // over the QC lattice (its (cts, event_id) order is the (ms, event_id)
+  // order), and the six sums are order-free integers, so the final groupBy
+  // combines map-side and shuffles |compounds| rows.
   def dsAutocorr(spark: SparkSession, d: String): DataFrame = {
     val k = keyedQc(spark, d)
-      .select(col("compound"), col("ms"), col("event_id"),
-        graft.functions.FastRound.cents(col("value")).as("vc"))
-    RangeBuckets.lag1(RangeBuckets.assign(k, "compound", "ms"), "compound",
-        Seq("ms", "event_id"), Seq("vc"), PlanStats.atScale(k))
-      .withColumn("pv", col("prev_vc"))
+    val pairs =
+      if (PlanStats.atScale(k))
+        RangeBuckets.lags(qcLattice(spark, d).rows.select("compound", "b", "event_id", "cts", "vc"),
+          "compound", Seq(col("cts"), col("event_id")), Seq("vc"), 1, atScale = true)
+      else {
+        val kc = k.select(col("compound"), col("ms"), col("event_id"),
+          graft.functions.FastRound.cents(col("value")).as("vc"))
+        RangeBuckets.lags(RangeBuckets.assign(kc, "compound", "ms"), "compound",
+          Seq(col("ms"), col("event_id")), Seq("vc"), 1, atScale = false)
+      }
+    pairs
+      .withColumn("pv", col("vc_lag1"))
       .filter(col("pv").isNotNull)
       .groupBy("compound")
       .agg(count(lit(1)).as("n"), sum(col("pv")).as("sx"), sum(col("vc")).as("sy"),
@@ -1830,7 +1896,8 @@ object Selection {
   // order, a data value both engines pick identically (the q_percentiles
   // contract; no interpolation to drift). Robust: a sensor spike corrupts
   // 2 of n slopes, not the mean.
-  // Scale: the consecutive pairs come from RangeBuckets.lag1, and the
+  // Scale: the consecutive pairs come from RangeBuckets.lags at width 1
+  // (over the QC lattice in the registry), and the
   // median is a two-level RADIX SELECTION instead of a per-compound corpus
   // rank window: slopes are range-bucketed, a census (|compounds| ×
   // Buckets rows) locates the bucket holding rank ⌈n/2⌉, the selected
@@ -1839,8 +1906,12 @@ object Selection {
   // reproduction — the VALUE at a rank is invariant to how equal slopes
   // are ordered. The slope stream feeds three consumers (stats + both
   // levels), so it is lazily checkpointed too.
-  def dsTrend(spark: SparkSession, d: String): DataFrame =
-    dsTrendFrom(keyedQc(spark, d))
+  def dsTrend(spark: SparkSession, d: String): DataFrame = {
+    val k = keyedQc(spark, d)
+    if (!PlanStats.atScale(k)) dsTrendFrom(k)
+    else dsTrendOf(qcLattice(spark, d).rows.select("compound", "b", "event_id", "cts", "value")
+      .withColumn("ms", unix_millis(col("cts"))))
+  }
 
   /** Series-in core for [[dsTrend]] (needs compound, ms, event_id, value) —
     * exposed so the robustness property (a spike corrupts the mean slope
@@ -1851,15 +1922,21 @@ object Selection {
     // discrete median is the VALUE at rank ⌈n/2⌉, invariant to equal-slope
     // tie order, the argument the radix form relies on) and skips the
     // radix form's three checkpoints (~1.6 s of constants at sf0.1)
-    if (!PlanStats.atScale(k)) return dsTrendNaive(k0)
+    if (!PlanStats.atScale(k)) dsTrendNaive(k0)
+    else dsTrendOf(RangeBuckets.partitioned(RangeBuckets.assign(k0, "compound", "ms"), "compound"))
+  }
+
+  /** The radix-selection core over (compound, b, ms, event_id, value)
+    * partitioned on (compound, b). */
+  private def dsTrendOf(rows: DataFrame): DataFrame = {
     // slopes checkpoint: three consumers (sstats, level-1 census, level-1
     // join-back) — re-deriving the slope per consumer from the lag's
     // checkpoint measured slower at sf10 (6.4 vs 4.7 s)
-    val slopes = RangeBuckets.lag1(RangeBuckets.assign(k0, "compound", "ms"), "compound",
-        Seq("ms", "event_id"), Seq("ms", "value"), atScale = true)
-      .filter(col("prev_ms").isNotNull && col("ms") > col("prev_ms"))
+    val slopes = RangeBuckets.lags(rows, "compound", Seq(col("ms"), col("event_id")),
+        Seq("ms", "value"), 1, atScale = true)
+      .filter(col("ms_lag1").isNotNull && col("ms") > col("ms_lag1"))
       .select(col("compound"),
-        ((col("value") - col("prev_value")) / (col("ms") - col("prev_ms")).cast("double")
+        ((col("value") - col("value_lag1")) / (col("ms") - col("ms_lag1")).cast("double")
           * lit(1000.0)).as("slope"))
       .localCheckpoint(false)
     // level 1: range-bucket the slope space, census locates the median's
@@ -1971,8 +2048,13 @@ object Selection {
   def dsFlatlineFrom(k: DataFrame): DataFrame = {
     val k0 = k.select(col("compound"), col("ms"), col("event_id"),
       graft.functions.FastRound.cents(col("value")).as("vc"))
-    val rows = RangeBuckets.assign(k0, "compound", "ms")
-    // NO context handoff is needed here, unlike RangeBuckets.lag1: a
+    dsFlatlineOf(RangeBuckets.partitioned(RangeBuckets.assign(k0, "compound", "ms"), "compound"))
+  }
+
+  /** The run-detection core over (compound, b, ms, event_id, vc)
+    * partitioned on (compound, b). */
+  private def dsFlatlineOf(rows: DataFrame): DataFrame = {
+    // NO carry is needed here, unlike RangeBuckets.lags: a
     // run is "consecutive EQUAL values", so whether a bucket's first
     // segment continues the previous bucket's last one is decidable at
     // the chain level by comparing the two segments' values — globally
@@ -1983,7 +2065,7 @@ object Selection {
     val prev = lag(col("vc"), 1).over(lw)
     // the checkpoint comes after the segment collapse below, not after
     // the window: the window's output is still corpus-sized
-    val st = RangeBuckets.partitioned(rows, "compound")
+    val st = rows
       .withColumn("chg", when(prev.isNull || prev =!= col("vc"), 1L).otherwise(0L))
       .withColumn("firstRow", prev.isNull)
       .withColumn("lrun", sum(col("chg"))
@@ -2044,8 +2126,12 @@ object Selection {
       .orderBy("compound", "start_ms")
   }
 
-  def dsFlatline(spark: SparkSession, d: String): DataFrame =
-    dsFlatlineFrom(keyedQc(spark, d))
+  def dsFlatline(spark: SparkSession, d: String): DataFrame = {
+    val k = keyedQc(spark, d)
+    if (!PlanStats.atScale(k)) dsFlatlineFrom(k)
+    else dsFlatlineOf(qcLattice(spark, d).rows.select("compound", "b", "event_id", "cts", "vc")
+      .withColumn("ms", unix_millis(col("cts"))))
+  }
 
   val dsFlatlineSql: String = KeyedCte +
     s""",
@@ -2192,17 +2278,22 @@ object Selection {
   // parallelism; a 2-way side unpivot AFTER the windows, and only points
   // past the band reach the output.
   def dsCusum(spark: SparkSession, d: String): DataFrame =
-    dsCusumFromLattice(qcLattice(spark, d))
+    dsCusumFromLattice(qcLattice(spark, d).rows)
 
-  // --- shared center/spread lattice ----------------------------------------
-  // ds_cusum and ds_spc_rules consume the SAME stream: the keyed series
-  // with exact center t = Σvc div n, spread madx = mean|dev|, and the
-  // (compound, time-bucket) key — and the same (compound, b)-partitioned
-  // exchange in front of their bucket-local windows. Both QC streams below are
+  // --- the QC lattice: one bucketed QC stream ------------------------------
+  // Every registry QC operator that buckets compound by time reads the same
+  // stream at scale: the keyed series on the cents lattice with exact center
+  // t = Σvc div n and spread madx = mean|dev|, keyed by (compound,
+  // time-bucket) and partitioned on that key, so each consumer's
+  // bucket-local windows run without an exchange. Its per-compound
+  // aggregate is the second frame, joined by consumers that need a
+  // per-compound total after their carry. Both QC streams below are
   // Memo frames persisted lazily (blocks pin on the first action), so
   // building a query runs no job; Bench warms them with the other family
   // memos so the shared build is not billed to whichever consumer runs
-  // first.
+  // first. Below the gate the registry's operators keep their keyed-stream
+  // plans, and ds_resample keeps its own bucketing: it buckets the union of
+  // samples and grid marks, which the lattice does not hold.
 
   /** Memo.release(), kept for callers compiled against this object. */
   def releaseCaches(): Unit = Memo.release()
@@ -2211,43 +2302,57 @@ object Selection {
     * keyed projection first (the lattice derives from it). */
   def warmQcCaches(spark: SparkSession, d: String): Unit = {
     keyedQc(spark, d).count()
-    qcLattice(spark, d).count()
+    val l = qcLattice(spark, d)
+    l.rows.count()
+    l.stats.count()
     ()
   }
 
-  /** The keyed-stream memo: every census-decomposed QC operator
-    * (ds_rolling_z / ds_changepoint / ds_flatline / ds_trend /
-    * ds_resample / ds_gaps / ds_interp / ds_outlier_mad, and the
-    * center/spread lattice) consumes this five-column projection of the
-    * keyed events stream, so the scan + epoch correction is paid once per
-    * (session, dir). */
+  /** The keyed-stream memo: every QC operator below the gate, the
+    * registry's ds_outlier_mad and ds_resample, and the QC lattice consume
+    * this five-column projection of the keyed events stream, so the scan +
+    * epoch correction is paid once per (session, dir). */
   private def keyedQc(spark: SparkSession, d: String): DataFrame =
     Memo.frame(spark, d, "qc_keyed", count = false) {
       keyed(spark, d).select("event_id", "compound", "cts", "ms", "value")
     }
 
-  private def qcLattice(spark: SparkSession, d: String): DataFrame =
-    Memo.frame(spark, d, "qc_lattice", count = false) {
-      latticeOf(keyedQc(spark, d).select("event_id", "compound", "cts", "value"))
+  /** The QC lattice. `rows`: (compound, b, event_id, cts, vc, value, t,
+    * madx), b the bucket of unix_micros(cts), partitioned on (compound, b).
+    * `stats`: one row per compound, (compound, n, sv, t, madx, tmin, tmax),
+    * sv = Σvc and tmin/tmax the span of unix_micros(cts). */
+  private[graft] final case class Lattice(rows: DataFrame, stats: DataFrame) {
+    /** The per-compound spacing columns of the gap rule: span in seconds
+      * (whole seconds: the keyed stream's cts is) and n. */
+    def spacing: DataFrame =
+      stats.select(col("compound"), expr("(tmax - tmin) div 1000000").as("span"), col("n"))
+  }
+
+  private def qcLattice(spark: SparkSession, d: String): Lattice =
+    Memo.frames[Lattice](spark, d, "qc_lattice")(l => Seq(l.rows, l.stats)) {
+      latticeOf(keyedQc(spark, d).select("event_id", "compound", "cts", "value"), _.persist())
     }
 
-  /** The un-persisted lattice plan: (compound, b, event_id, cts, vc, t,
-    * madx), partitioned on the bucket keys. */
-  private def latticeOf(kIn: DataFrame): DataFrame = {
+  /** The lattice of `kIn` (event_id, compound, cts: timestamp, value), each
+    * frame passed through `keep` (the memo persists them); the rows read
+    * the kept stats. */
+  private def latticeOf(kIn: DataFrame, keep: DataFrame => DataFrame = identity): Lattice = {
     val k0 = kIn
       .select(col("event_id"), col("compound"), col("cts"),
-        graft.functions.FastRound.cents(col("value")).as("vc"))
+        graft.functions.FastRound.cents(col("value")).as("vc"), col("value"))
       .withColumn("tu", unix_micros(col("cts")))
-    val stats = k0.groupBy("compound").agg(
+    val tot = k0.groupBy("compound").agg(
       count(lit(1)).as("n"), sum(col("vc")).as("sv"),
       min(col("tu")).as("tmin"), max(col("tu")).as("tmax"))
       .withColumn("t", expr("sv div n"))
-    val dev = RangeBuckets.perKey(k0, stats.select("compound", "t", "n", "tmin", "tmax"), "compound")
-      .groupBy("compound").agg(max(col("t")).as("t"),
-        expr("sum(abs(vc - t)) div max(n)").as("madx"),
-        max(col("tmin")).as("tmin"), max(col("tmax")).as("tmax"))
-    RangeBuckets.partitioned(RangeBuckets.bucketed(k0, dev, "compound", "tu")
-      .select("compound", "b", "event_id", "cts", "vc", "t", "madx"), "compound")
+    val stats = keep(RangeBuckets.perKey(k0, tot, "compound")
+      .groupBy("compound").agg(max(col("n")).as("n"), max(col("sv")).as("sv"),
+        max(col("t")).as("t"), expr("sum(abs(vc - t)) div max(n)").as("madx"),
+        max(col("tmin")).as("tmin"), max(col("tmax")).as("tmax")))
+    val rows = keep(RangeBuckets.partitioned(RangeBuckets.bucketed(k0,
+        stats.select("compound", "t", "madx", "tmin", "tmax"), "compound", "tu")
+      .select("compound", "b", "event_id", "cts", "vc", "value", "t", "madx"), "compound"))
+    Lattice(rows, stats)
   }
 
   /** DataFrame-in core for [[dsCusum]] (`kIn` needs event_id, compound,
@@ -2255,7 +2360,7 @@ object Selection {
     * prefix-sum/prefix-min closed form against the direct sequential
     * fold S_i = max(0, S_{i−1} + d_i) on constructed series. */
   def dsCusumFrom(kIn: DataFrame): DataFrame =
-    dsCusumFromLattice(latticeOf(kIn))
+    dsCusumFromLattice(latticeOf(kIn).rows)
 
   private def dsCusumFromLattice(lattice: DataFrame): DataFrame = {
     val rows = lattice
@@ -2317,37 +2422,23 @@ object Selection {
   // COMPLETES a qualifying run (a 9-long run scores twice), the standard
   // per-point alarm semantics. Scale shape: one per-compound aggregate
   // joined back co-partitioned; the three rolling tests are ROWS-bounded
-  // windows (8/6 rows) sharing ONE (compound, cts, event_id) sort with
-  // zero unbounded state; output is the |compounds|-row report.
+  // (8/6 rows), so at scale they read the 7 vc lags the carry
+  // (RangeBuckets.lags) brings across bucket edges, with zero unbounded
+  // state; output is the |compounds|-row report.
   def dsSpcRules(spark: SparkSession, d: String): DataFrame =
-    dsSpcRulesFromLattice(qcLattice(spark, d))
+    dsSpcRulesFromLattice(qcLattice(spark, d).rows)
 
   /** DataFrame-in core for [[dsSpcRules]] (`kIn` needs event_id, compound,
     * cts: timestamp, value) — exposed so the randomized spec can pin the
     * windowed run tests against a direct sequential scan on constructed
     * series (runs across the center, exact-8 vs longer runs, tie values). */
   def dsSpcRulesFrom(kIn: DataFrame): DataFrame =
-    dsSpcRulesFromLattice(latticeOf(kIn))
+    dsSpcRulesFromLattice(latticeOf(kIn).rows)
 
   private def dsSpcRulesFromLattice(lattice: DataFrame): DataFrame = {
-    // Boundary-context decomposition: unlike ds_cusum's unbounded
-    // prefixes, the run tests are ROWS-bounded (8/6/lag-1), so each row's
-    // flags depend on at most its 7 global predecessors, which
-    // RangeBuckets.withContext re-emits into the row's bucket; the run
-    // windows then evaluate per (compound, bucket) over context + own
-    // rows, identical values to the single per-compound sort.
-    val rows = lattice.withColumn("side",
-      when(col("vc") > col("t"), lit(1L))
-        .when(col("vc") < col("t"), lit(-1L)).otherwise(lit(0L)))
-    // the run-rule columns over the rows in `ord` order, and the report
-    def ruleColumns(in: DataFrame, ord: WindowSpec): DataFrame =
-      in.withColumn("prev", lag(col("vc"), 1).over(ord))
-        .withColumn("mv",
-          when(col("prev").isNull, lit(0L))
-            .when(col("vc") > col("prev"), lit(1L))
-            .when(col("vc") < col("prev"), lit(-1L)).otherwise(lit(0L)))
-        .withColumn("s8", sum(col("side")).over(ord.rowsBetween(-7, Window.currentRow)))
-        .withColumn("m6", sum(col("mv")).over(ord.rowsBetween(-5, Window.currentRow)))
+    // the sign of `c` against `ref`, 0 when either is NULL
+    def sign(c: Column, ref: Column): Column =
+      when(c > ref, lit(1L)).when(c < ref, lit(-1L)).otherwise(lit(0L))
     def report(scored: DataFrame): DataFrame =
       scored.groupBy("compound").agg(
           count(lit(1)).as("n_points"),
@@ -2361,24 +2452,27 @@ object Selection {
     // below the gate the run windows are one per-compound sort
     if (!PlanStats.atScale(lattice)) {
       val ord = Window.partitionBy("compound").orderBy("cts", "event_id")
-      return report(ruleColumns(rows.withColumn("i", row_number().over(ord).cast("long")), ord))
+      return report(lattice.withColumn("side", sign(col("vc"), col("t")))
+        .withColumn("i", row_number().over(ord).cast("long"))
+        .withColumn("prev", lag(col("vc"), 1).over(ord))
+        .withColumn("mv",
+          when(col("prev").isNull, lit(0L))
+            .when(col("vc") > col("prev"), lit(1L))
+            .when(col("vc") < col("prev"), lit(-1L)).otherwise(lit(0L)))
+        .withColumn("s8", sum(col("side")).over(ord.rowsBetween(-7, Window.currentRow)))
+        .withColumn("m6", sum(col("mv")).over(ord.rowsBetween(-5, Window.currentRow))))
     }
-    val lw = Window.partitionBy("compound", "b").orderBy("cts", "event_id")
-    // the lattice is already partitioned on (compound, b); both shared
-    // stages (census + join-back, then scoring rows + context candidates)
-    // are checkpointed, since recomputing them per consumer measured 2x
-    // slower than the un-decomposed plan at sf1
-    val local = rows.withColumn("li", row_number().over(lw))
-      .select("compound", "b", "event_id", "vc", "t", "madx", "side", "li")
-      .localCheckpoint(false)
-    val (indexed, census) = RangeBuckets.indexed(local, "compound")
-    val own = indexed
-      .select("compound", "b", "cb", "li", "event_id", "vc", "t", "madx", "side", "i")
-      .localCheckpoint(false)
-    val cols = Seq("compound", "event_id", "vc", "t", "madx", "side", "i").map(col)
-    report(ruleColumns(RangeBuckets.withContext(own, census, "compound", cols, 7),
-        Window.partitionBy("compound", "gb").orderBy("i"))
-      .filter(!col("ctx")))
+    // ROWS-bounded carry: each test reads at most 7 rows back, so the run
+    // sums are written over the raw vc lags that RangeBuckets.lags carries
+    // across bucket edges; the lattice is already partitioned on
+    // (compound, b). A row with i ≥ 8 has all 7 lags, so the guards
+    // in the report see the same sums as the per-compound frames.
+    def v(j: Int): Column = if (j == 0) col("vc") else col(RangeBuckets.lagName("vc", j))
+    val lagged = RangeBuckets.lags(lattice.select("compound", "b", "event_id", "cts", "vc", "t", "madx"),
+      "compound", Seq(col("cts"), col("event_id")), Seq("vc"), 7, atScale = true)
+    report(lagged
+      .withColumn("s8", (0 to 7).map(j => sign(v(j), col("t"))).reduce(_ + _))
+      .withColumn("m6", (0 to 5).map(j => sign(v(j), v(j + 1))).reduce(_ + _)))
   }
 
   val dsSpcRulesSql: String = KeyedCte +

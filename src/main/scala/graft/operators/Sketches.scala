@@ -117,9 +117,9 @@ object Sketches {
 
   // row hashes: idx_i(k) = hex chars [8i+1, 8i+8] of md5(k) mod width —
   // depth independent 32-bit positions CARVED FROM ONE md5 (the
-  // sketch_bloom trick). r17: the old seeded form md5(i||':'||k) computed
-  // depth md5s per row — 40M md5s at sf10 were 57 of the entry's 68
-  // core-seconds; the carve computes one (subexpression elimination
+  // sketch_bloom trick). One md5 per row, never one per hash: a seeded
+  // form md5(i||':'||k) computes depth md5s per row — 40M md5s at sf10
+  // were 57 of the entry's 68 core-seconds; the carve computes one (subexpression elimination
   // shares it across the array elements, unconditional projection), and
   // 4×32 disjoint bits of one md5 are as pairwise-independent as 4
   // seeded md5s for CMS purposes.
@@ -223,8 +223,9 @@ object Sketches {
     val ev = Tables.events(spark, d)
     // md5 hoisted to its own projection before the explode (the cmsCells
     // note: a generator re-evaluates its array argument per element)
-    // r18: a generator re-evaluates its array argument PER ELEMENT (the
-    // r17 md5-hoist lesson, finished): with conv(substring(h,...)) inside
+    // A generator re-evaluates its array argument PER ELEMENT, so nothing
+    // costly may sit inside the explode (the md5 hoist, carried through to
+    // the hex parse): with conv(substring(h,...)) inside
     // the explode the 4-entry array cost 16 string parses per row. The
     // first 12 hex chars now parse ONCE into a 48-bit long in their own
     // projection, and the explode emits shift/mask slices — the re-
@@ -299,7 +300,7 @@ object Sketches {
   // between shuffling 100 TB and shuffling the week's slice. The
   // PRODUCTION entry reports what the filter does to the fact side (lines
   // total / lines passing the bloom); the COMPANION audit entry
-  // sketch_bloom_join_calib (r11 split) joins the true build side back in
+  // sketch_bloom_join_calib (a separate registry entry) joins the true build side back in
   // to grade false positives — the truth join is calibration, not the
   // deployed path. No false negatives by construction — every true key's
   // bits were set — which the calib oracle's n_true ≤ n_pass and the spec
@@ -327,8 +328,8 @@ object Sketches {
     // membership test as one scan-side boolean: foldable literal array +
     // K (word >> bit) & 1 probes. SQL text because the Scala shiftleft
     // wrapper only takes a constant shift; the SQL function takes a column.
-    // r17 (the sf10 look, r16 verdict #7): the K probes each recomputed
-    // md5(key) — 4 md5 evaluations per distinct orderkey were the bulk of
+    // One md5 per key feeds all K probes: probes that each recompute
+    // md5(key) — 4 md5 evaluations per distinct orderkey — were the bulk of
     // a 103 core-second stage at sf10 (15M keys). ONE named md5 column
     // now feeds all K substrings; the oracle's posSql derives all probes
     // from one md5() too, so the grading contract is unchanged.
@@ -493,8 +494,8 @@ object Sketches {
   def sketchHllIntersectionFrom(ev: DataFrame): DataFrame = {
     // |types|×64-row aggregate with THREE consumers (per-type estimates,
     // the type list, the pairwise max-merge) — each recompute was a full
-    // corpus scan + per-row md5 fold (r17 sf10 look: the entry's 9.2×
-    // ratio was 3 register passes, not the merge). Lazy localCheckpoint,
+    // corpus scan + per-row md5 fold (at sf10 the entry's 9.2× ratio to
+    // DuckDB was 3 register passes, not the merge). Lazy localCheckpoint,
     // the dsCusumFrom storage contract.
     val regs = hllRegisters(ev).localCheckpoint(false)
     val perType = hllScaled(regs, Seq("event_type"))
@@ -590,7 +591,7 @@ object Sketches {
   // production path at 100 TB); the cumulative window runs over the
   // 64-row-per-type BIN table, never the corpus. The DISCRETE exact
   // percentile (q_percentiles' rank rule) lives in the COMPANION audit
-  // entry sketch_quantile_calib (r11 split, the dedup_recall pattern):
+  // entry sketch_quantile_calib (a separate entry, the dedup_recall pattern):
   // the exact side pays a per-type corpus sort — that is what truth
   // costs, and it is a cost this production entry no longer carries, so
   // the bench grades the scale path and the calib entry grades the error.
@@ -650,7 +651,8 @@ object Sketches {
   // Companion AUDIT entry: the discrete exact percentiles (q_percentiles'
   // rank rule) joined against the sketch estimates, giving the sketch's
   // error directly. The exact side uses the VALUE-HISTOGRAM decomposition
-  // (r15, the bounded-window audit — the ds_outlier_mad precedent): the
+  // (no corpus-fed per-type window, which the bounded-window audit
+  // forbids — the ds_outlier_mad precedent): the
   // value at rank r is the smallest value whose cumulative histogram
   // count reaches r, so the corpus pays one map-side-combinable groupBy
   // (lattice-capped partials) and the rank scan runs over the
@@ -721,7 +723,7 @@ object Sketches {
     "md5(CAST(user_id AS VARCHAR) || ':' || strftime(CAST(ts AS DATE), '%Y-%m-%d'))"
 
   def sketchTheta(spark: SparkSession, d: String): DataFrame = {
-    // r18 single-pass lowering (guide §2.3/§2.4): the two-branch form paid
+    // One pass over the distinct (type, user, day) set: a two-branch form pays
     // two full scans (md5 over every RAW row on one, countDistinct's
     // two-level expansion on the other) plus two corpus-keyed exchanges.
     // Both outputs are functions of the DISTINCT (type, user, day) set —
@@ -771,7 +773,7 @@ object Sketches {
   // |types|² scaffold keeps empty intersections visible. The exact
   // Jaccard (full distinct-set self-join — the expensive path the sketch
   // exists to avoid) lives in the COMPANION audit entry
-  // sketch_jaccard_calib (r11 split): the bench grades the sketch path
+  // sketch_jaccard_calib (a separate entry): the bench grades the sketch path
   // here and the truth join there.
 
   /** Sketch-side overlap estimate over the |types|² scaffold — shared by
@@ -840,8 +842,8 @@ object Sketches {
   // a sample or never, same stance as dedup_recall's truth join.
   def sketchJaccardCalib(spark: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(spark, d)
-    // r18: the truth sets key on (user_id, day) as INTEGERS — the old
-    // `uid:day` concat built 10M strings only to hash/compare them in
+    // The truth sets key on (user_id, day) as INTEGERS — a `uid:day`
+    // concat builds 10M strings only to hash/compare them in
     // the distinct and the self-join; (user_id, day) is the same
     // identity (cast-int:date is injective) at a fraction of the
     // exchange payload and with primitive-key hash joins throughout.

@@ -129,7 +129,7 @@ object Temporal {
   // the 10 minutes starting at the error — a pure interval join, no
   // equality key. Value sums go through integer cents (exactness contract).
   //
-  // PLAN (r13 verdict #3): every aggregate this query asks for is
+  // PLAN (no candidate-pair stream): every aggregate this query asks for is
   // interval-DECOMPOSABLE into prefix ranks, so the blocked bucket join
   // that emitted ~94M candidate pairs at sf1 (→ 48M true pairs shuffled
   // through countDistinct's two-phase agg) never needs to exist:
@@ -161,9 +161,9 @@ object Temporal {
     // NULL user_ids contribute NOTHING to count(DISTINCT user_id) in the
     // oracle, but lag over partitionBy(user_id) would group all NULLs into
     // one phantom user and count it once — so they are excluded from the
-    // distinct-user stream entirely (r14 advice: the corpus has no NULL
-    // user_ids today, but the decomposition must stay equivalent if one
-    // ever appears)
+    // distinct-user stream entirely (the corpus has no NULL user_ids
+    // today, but the decomposition must stay equivalent if one ever
+    // appears)
     val loVals = e
       .filter(col("user_id").isNotNull)
       .select(col("user_id"), col("t"), col("event_id"))

@@ -14,7 +14,11 @@ import graft.{GraftSession, SparkEntry}
   * ([[graft.operators.PlanStats]]). EXPLAINS.md records the gate-0 plans.
   * The bounded-cardinality window rule applies to the gate-0 plans only:
   * below the gate a per-compound window's input is bounded by the gate
-  * itself. Every other rule applies at both settings.
+  * itself. Every other rule applies at both settings. At gate 0 the plan of
+  * each `localCheckpoint` a query takes while it is built
+  * ([[CheckpointPlans]]) is recorded under the query and audited for
+  * CartesianProducts and bounded-cardinality windows too: a consumer's plan
+  * shows a checkpoint only as a `Scan ExistingRDD`.
   * Run: sbt "runMain graft.tools.ExplainDump /root/testdata/sf0.01"
   */
 object ExplainDump {
@@ -171,7 +175,10 @@ object ExplainDump {
     sb.append("`PushedFilters` non-empty where a filter must reach the parquet scan;\n")
     sb.append("no partition-less Window outside the audited report-sized allowlist;\n")
     sb.append("at gate 0 only, no corpus-fed Window partitioned only by bounded-cardinality\n")
-    sb.append("columns (compound/event_type/strm/source) outside the audited allowlist.\n\n")
+    sb.append("columns (compound/event_type/strm/source) outside the audited allowlist.\n")
+    sb.append("Each query's gate-0 checkpoint plans (the `localCheckpoint`s taken while\n")
+    sb.append("it is built, which its own plan shows as `Scan ExistingRDD`) follow it, under\n")
+    sb.append("the CartesianProduct and bounded-cardinality window gates.\n\n")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     def planOf(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame) = {
       val qe = fn(spark, sfDir).queryExecution
@@ -186,13 +193,35 @@ object ExplainDump {
     val gate = spark.conf.getOption(GateKey)
     spark.conf.set(GateKey, "0")
     try queries.foreach { case (name, fn) =>
-      val (qe, plan) = planOf(fn)
+      val ((qe, plan), checkpoints) = CheckpointPlans.during(spark)(planOf(fn))
       bad ++= audit(name, qe, plan, atScale = true)
       sb.append(s"## $name\n\n")
       sb.append(s"- broadcast joins: ${"BroadcastHashJoin".r.findAllIn(plan).size}\n")
       sb.append(s"- shuffles (Exchange): ${"Exchange ".r.findAllIn(plan).size}\n")
+      sb.append(s"- checkpoints: ${checkpoints.size}\n")
       sb.append("\n```\n").append(normalized(plan).linesIterator.take(60).mkString("\n"))
         .append("\n```\n\n")
+      // what ran inside each checkpoint the query took, under the same
+      // bounded-window rule as the query's own plan
+      checkpoints.zipWithIndex.foreach { case (cq, i) =>
+        val cplan = cq.explainString(org.apache.spark.sql.execution.FormattedMode)
+        val cwins = boundedOnlyCorpusWindows(cq.optimizedPlan)
+        if (cplan.contains("CartesianProduct"))
+          bad ::= s"$name: CartesianProduct in checkpoint ${i + 1}"
+        if (cwins.nonEmpty && !BoundedWindowAllowed.contains(name))
+          bad ::= s"$name: corpus-fed Window partitioned only by bounded-cardinality " +
+            s"columns (${cwins.mkString("; ")}) in checkpoint ${i + 1}"
+        // the exchanges the checkpoint runs; a memo it reads prints its own
+        // build, which ran once for every consumer
+        val runs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+          .collect(cq.executedPlan) {
+            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+          }
+        sb.append(s"### $name: checkpoint ${i + 1}\n\n")
+        sb.append(s"- exchanges it runs (memo builds excluded): ${runs.size}\n")
+        sb.append("\n```\n").append(normalized(cplan).linesIterator.take(40).mkString("\n"))
+          .append("\n```\n\n")
+      }
     } finally gate.fold(spark.conf.unset(GateKey))(spark.conf.set(GateKey, _))
     // The three LSH queries read memoized pipeline-stage outputs, so their
     // own plans are InMemoryTableScans; dump the UN-memoized pipeline plan

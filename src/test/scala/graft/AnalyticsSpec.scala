@@ -109,33 +109,6 @@ class AnalyticsSpec extends SparkSpec {
       "building q_window_running below the gate must run no job")
   }
 
-  /** How many Spark jobs `body` started. */
-  private def jobsDuring(body: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"jobs-${System.nanoTime}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "body")
-      body
-      spark.sparkContext.setJobGroup(s"$group-end", "marker")
-      spark.range(1).count()
-      // listener events arrive in order: once the marker job is seen, every
-      // job the body started has been seen too
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!groups.contains(s"$group-end") && System.nanoTime < deadline) Thread.sleep(20)
-      assert(groups.contains(s"$group-end"))
-      groups.toArray.count(_ == group)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
   test("dau/mau interval sweep equals the direct 30-day-explode formulation") {
     // activity patterns chosen to hit every merge boundary: gaps of
     // exactly 29 days (same interval), exactly 30 (new interval), dense

@@ -140,7 +140,8 @@ class MemoSpec extends SparkSpec {
     // caches the stats it was first read with
     def consumers = Seq(
       Memo.cached[DataFrame](spark, d, "qc_keyed").get.select("event_id", "compound", "value", "cts"),
-      Memo.cached[DataFrame](spark, d, "qc_lattice").get.select("*"))
+      Memo.cached[Selection.Lattice](spark, d, "qc_lattice").get.rows.select("*"),
+      Memo.cached[Selection.Lattice](spark, d, "qc_lattice").get.stats.select("*"))
     def loaded(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.collectLeaves()
       .collect { case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded }
       .reduce(_ && _)

@@ -574,6 +574,57 @@ class RandomizedDecompositionSpec extends SparkSpec {
     }
   }
 
+  test("randomized: RangeBuckets.lags at widths 1, 7 and 15 equals the plain per-key lag and row_number on 10 seeded series") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.RangeBuckets
+    (1 to 10).foreach { seed =>
+      val rnd = new Random(seed + 1100)
+      // NULL values, so a lag that reads the wrong side of the li > j
+      // switch cannot pass by falling back to the other side
+      def value(): java.lang.Double =
+        if (rnd.nextInt(10) == 0) null else (10000 + rnd.nextInt(3000)) / 100.0
+      // span 256·c − 1 seconds puts bucket edges between seconds m·c − 1
+      // and m·c: equal timestamps pile up on both sides of some edges, and
+      // a few dozen scattered seconds leave most buckets empty and the
+      // rest shorter than 7 or 15 rows, so a carry crosses several buckets
+      val c = 1 + rnd.nextInt(3)
+      val edges = Seq.fill(6 + rnd.nextInt(10))(1 + rnd.nextInt(255))
+      val edge = Seq(0L, 256L * c - 1) ++ edges.flatMap { m =>
+        Seq.fill(1 + rnd.nextInt(3))(m * c - 1L) ++ Seq.fill(1 + rnd.nextInt(3))(m.toLong * c)
+      } ++ Seq.fill(20 + rnd.nextInt(40))(rnd.nextInt(256 * c).toLong)
+      // one or two rows per non-empty bucket, every other bucket empty
+      val sparse = (0 until 128).flatMap(m => Seq.fill(1 + rnd.nextInt(2))(2L * m))
+      val clusters = Seq.fill(20 + rnd.nextInt(30))(rnd.nextInt(600).toLong) ++
+        Seq.fill(20 + rnd.nextInt(30))(1000000L + rnd.nextInt(600))
+      val pair = Seq(0L, if (seed % 2 == 0) 0L else 1L + rnd.nextInt(5000))
+      val series = Seq("edge" -> edge, "sparse" -> sparse, "clusters" -> clusters,
+        "pair" -> pair, "solo" -> Seq(7L))
+      val rows = series.zipWithIndex.flatMap { case ((name, secs), ci) =>
+        secs.zipWithIndex.map { case (t, i) => (ci * 1000L + i, name, 1700000000L + t, value()) }
+      }
+      val df = rows.toDF("event_id", "compound", "sec", "value")
+      val ord = Seq(col("sec"), col("event_id"))
+      val w = Window.partitionBy("compound").orderBy(ord: _*)
+      Seq(1, 7, 15).foreach { width =>
+        val lagged = for (c <- Seq("value", "event_id"); j <- 1 to width)
+          yield RangeBuckets.lagName(c, j) -> lag(col(c), j).over(w)
+        val names = lagged.map(_._1)
+        val plain = lagged.foldLeft(df.withColumn("i", row_number().over(w).cast("long"))) {
+          case (acc, (n, e)) => acc.withColumn(n, e)
+        }
+        val carried = RangeBuckets.lags(
+          RangeBuckets.partitioned(RangeBuckets.assign(df, "compound", "sec"), "compound"),
+          "compound", ord, Seq("value", "event_id"), width, atScale = true)
+        assert(decomposed(carried), s"seed=$seed width=$width")
+        def rowsOf(out: org.apache.spark.sql.DataFrame): Seq[String] =
+          out.select((Seq("event_id", "compound", "i") ++ names).map(col): _*)
+            .collect().map(_.toString).toSeq.sorted
+        assert(rowsOf(carried) === rowsOf(plain), s"seed=$seed width=$width")
+      }
+    }
+  }
+
   test("randomized: bounded k-core peel equals the sequential peel on 10 seeded graphs") {
     import spark.implicits._
     def brute(edges: Set[(Long, Long)], rounds: Int):

@@ -354,6 +354,50 @@ class SelectionSpec extends SparkSpec {
     }
   }
 
+  test("at gate 0 over warmed QC memos, building rolling z, gaps and interp runs no job and moves no corpus") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{FormattedMode, LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.operators.Memo
+    import graft.tools.CheckpointPlans
+    val gateKey = "spark.graft.memoSide.minLeafBytes"
+    val names = Seq("ds_rolling_z", "ds_gaps", "ds_interp")
+    def build(n: String) = SparkEntry.queries(n)(spark, sf)
+    val aqe = new AdaptiveSparkPlanHelper {}
+    Memo.release()
+    try {
+      // below the gate: the plain per-compound window, no checkpoint
+      names.foreach { n =>
+        val plan = build(n).queryExecution.optimizedPlan
+        assert(!plan.collectLeaves().exists(_.isInstanceOf[LogicalRDD]), n)
+        val windows = plan.collect { case w: LWindow => w.partitionSpec.map(_.sql) }
+        assert(windows.nonEmpty && windows.forall(_ == Seq("compound")), s"$n: $windows")
+      }
+      spark.conf.set(gateKey, "0")
+      Selection.warmQcCaches(spark, sf)
+      names.foreach { n =>
+        var built: (DataFrame, Seq[QueryExecution]) = null
+        val jobs = jobsDuring { built = CheckpointPlans.during(spark)(build(n)) }
+        val (df, checkpoints) = built
+        assert(jobs === 0, s"$n ran $jobs jobs while it was built")
+        assert(checkpoints.size === 1, n)
+        // the exchanges the plans run, not those that built the memo
+        (df.queryExecution +: checkpoints).foreach { qe =>
+          val exchanges = aqe.collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }
+          assert(!exchanges.exists(_.shuffleOrigin == REPARTITION_BY_NUM),
+            s"$n repartitions the corpus:\n${qe.explainString(FormattedMode)}")
+          assert(!exchanges.exists(_.outputPartitioning.toString.contains("gb#")),
+            s"$n shuffles rows on a context bucket:\n${qe.explainString(FormattedMode)}")
+        }
+      }
+    } finally {
+      spark.conf.unset(gateKey)
+      Memo.release()
+    }
+  }
+
   test("changepoint picks the max cross-multiplied mean-gap split per compound") {
     val series = Selection.dsLoadEpoch(spark, sf).collect()
       .map(r => (r.getString(1), r.getAs[String]("ts_s"), r.getAs[Long]("event_id"),

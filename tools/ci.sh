@@ -75,9 +75,9 @@ echo "== plan audit (CartesianProduct / broadcast / pushdown gates)"
 # (broadcast/shuffle counts) of the CURRENT EXPLAINS.md, regenerate, and
 # fail if they drift — i.e. fail until the regenerated dump is the one
 # being committed, exactly like the testdata fingerprint.
-grep -E '^## |^- (broadcast joins|shuffles|shuffle joins)' EXPLAINS.md > "$OUT/explains_pre.txt" || true
+grep -E '^## |^- (broadcast joins|shuffles|shuffle joins|checkpoints)' EXPLAINS.md > "$OUT/explains_pre.txt" || true
 sbt -batch "runMain graft.tools.ExplainDump $SF"
-grep -E '^## |^- (broadcast joins|shuffles|shuffle joins)' EXPLAINS.md | diff "$OUT/explains_pre.txt" - \
+grep -E '^## |^- (broadcast joins|shuffles|shuffle joins|checkpoints)' EXPLAINS.md | diff "$OUT/explains_pre.txt" - \
   || { echo "EXPLAINS.md was stale (plan-shape drift) — commit the regenerated dump and re-run"; exit 1; }
 
 echo "== QueryTime smoke: one timed QT line per named query"
@@ -121,6 +121,20 @@ if grep -rn "Buckets div" src/main/scala --include='*.scala' \
   exit 1
 fi
 
+echo "== checkpoint audit: localCheckpoint call sites vs audited allowlist"
+# A lazy localCheckpoint pins a copy of its rows until the caller or the
+# session frees it, and a consumer's plan shows it only as a
+# `Scan ExistingRDD` (EXPLAINS.md records each one's own plan under the
+# query). Each call site is audited: the rows it writes and why more than
+# one consumer reads them (RangeBuckets' storage contract). A new or changed
+# site fails here until tools/checkpoint_allowlist.txt is regenerated:
+#   grep -r "localCheckpoint(" src/main/scala/graft/operators \
+#     src/main/scala/graft/streaming --include='*.scala' \
+#     | sed 's/:[[:space:]]*/: /' | sort > tools/checkpoint_allowlist.txt
+grep -r "localCheckpoint(" src/main/scala/graft/operators src/main/scala/graft/streaming \
+    --include='*.scala' | sed 's/:[[:space:]]*/: /' | sort \
+  | diff tools/checkpoint_allowlist.txt - \
+  || { echo "checkpoint allowlist drift — audit the new call site"; exit 1; }
 
 echo "== bench-artifact staleness gate"
 # r17 verdict #1 (and r16 before it): the committed sf10 bench pair twice
