@@ -49,7 +49,7 @@ object Bench {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     val tb = System.nanoTime()
     // The memos are pipeline costs shared by a family (the dedup LSH
-    // stages, the ds_cusum/ds_spc_rules lattice, the per-user windows),
+    // stages, the QC stream, the per-user windows),
     // built here so they are not billed to whichever member runs first.
     // NonFatal only: an OutOfMemoryError or interrupt must not be swallowed.
     val warm =

@@ -50,6 +50,16 @@ import graft.sources.Tables
   * folds a selection's box predicates and flag columns into the rows on
   * the driver instead of compiling them into each job. At or above the
   * gate the loaded frame is a lazy scan of the files.
+  *
+  * A series file whose array holds a `null` element, `[{..}, null]`,
+  * loads as one all-NULL row: that compound's valid records are dropped
+  * without an error, and the load's WARN names the file. Spark's
+  * PERMISSIVE multiLine reader reads such a file as one corrupt record,
+  * and that reader stays the definition of a load at both gates: the lazy
+  * scan at scale is that reader, and below the gate a file the parser does
+  * not read as records goes to the same scan, so the two branches never
+  * load different rows. Salvaging the valid records below the gate would
+  * make a compound's rows depend on the series' size.
   */
 class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
 
@@ -221,7 +231,7 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * Gap endpoints are `sel_key`s, the same keys the selection ops use.
     */
   def gaps(data: DataFrame): DataFrame =
-    Selection.gapsFrom(data.select("sel_key", "compound", "cts"), "sel_key")
+    Selection.gapsFrom(data, "sel_key")
 
   /** Regular-grid (6 h) linear-interpolation resampling of the loaded
     * series — the pre-step for cross-compound comparison of irregular
@@ -241,20 +251,18 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * `sel_key`s, so they compose with `toggle`/`applyFilter`/`exportJson`.
     */
   def rollingZ(data: DataFrame): DataFrame =
-    Selection.rollingZFrom(data.select("sel_key", "compound", "value", "cts"), "sel_key")
+    Selection.rollingZFrom(data, "sel_key")
 
   /** Largest level shift per compound ("where did this sensor jump?") —
     * one binary-segmentation step over the loaded series. */
   def changepoint(data: DataFrame): DataFrame =
-    Selection.changepointFrom(data.select("sel_key", "compound", "value", "cts"), "sel_key")
+    Selection.changepointFrom(data, "sel_key")
 
   /** Stuck-sensor report: runs of ≥2 consecutive IDENTICAL readings per
     * compound — the frozen-transducer signature that range and outlier
     * rules cannot see (the stuck value is usually in-range). */
   def flatline(data: DataFrame): DataFrame =
-    Selection.dsFlatlineFrom(data.select(col("compound"),
-      (unix_timestamp(col("cts")) * 1000).as("ms"),
-      col("sel_key").as("event_id"), col("value")))
+    Selection.dsFlatlineFrom(data, "sel_key")
 
   /** Sensor resolution + truncation screen per compound: effective
     * measurement resolution (smallest gap between distinct readings) and
@@ -267,8 +275,7 @@ class GraftQC(spark: SparkSession, utcOffsetHours: Int = -2) {
     * at each flagged gap's midpoint, linearly interpolated between the
     * bracketing real samples. Bracket endpoints are `sel_key`s. */
   def interp(data: DataFrame): DataFrame =
-    Selection.interpFrom(data.select(col("sel_key"), col("compound"),
-      col("cts"), col("value")), "sel_key")
+    Selection.interpFrom(data, "sel_key")
 
   /** One zoom stack per (compound, plane) with the reference's exact rules:
     * a new limit is pushed only if it differs from the current top

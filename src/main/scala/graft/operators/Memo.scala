@@ -26,7 +26,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Each key is built once: concurrent callers of one key wait for the
   * first builder, different keys build in parallel. A builder may read
-  * other keys (the QC lattice reads the keyed stream, canon reads the LSH
+  * other keys (the QC stream reads the keyed stream, canon reads the LSH
   * stages); keys have their own locks and depend on each other acyclically,
   * so nested builds cannot deadlock. A hit takes no lock: one map lookup
   * and one liveness check per frame.

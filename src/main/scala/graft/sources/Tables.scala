@@ -21,19 +21,17 @@ object Tables {
     * resolved relation is reused. The cache holds the analyzed leaf
     * (LogicalRelation + InMemoryFileIndex) per (session, dir, table) — it
     * caches METADATA only, never data, exactly like `spark.table` against a
-    * catalog. Keyed on the session so a stopped session's relations are
-    * never served to a new one; `invalidate()` drops everything for callers
-    * whose underlying files changed.
+    * catalog. Keyed on the session itself (as `Memo` is), so a stopped
+    * session's relations are never served to a new one; `invalidate()`
+    * drops everything for callers whose underlying files changed.
     */
   private val relationCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
   def invalidate(): Unit = relationCache.clear()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    relationCache.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    relationCache.getOrElseUpdate((spark, sfDir, name), spark.read.parquet(s"$sfDir/$name.parquet"))
 
   def lineitem(spark: SparkSession, d: String): DataFrame = load(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame = load(spark, d, "orders")

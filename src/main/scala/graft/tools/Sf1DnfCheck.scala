@@ -30,7 +30,9 @@ import org.apache.spark.sql.functions._
   *    the exact-duplicate lower bound Σ(normalized-hash group size − 1).
   *
   * Run: sbt "runMain graft.tools.Sf1DnfCheck /tmp/graft-sf1"; exits 1 on
-  * any failed check. Results are recorded in SCALING.md per round.
+  * any failed check. `tools/ci.sh` runs it as its "sf1 DNF invariants"
+  * gate whenever the gate's corpus is an sf1 one. Results are recorded
+  * in SCALING.md per round.
   */
 object Sf1DnfCheck {
   def main(args: Array[String]): Unit = {

@@ -140,8 +140,8 @@ class MemoSpec extends SparkSpec {
     // caches the stats it was first read with
     def consumers = Seq(
       Memo.cached[DataFrame](spark, d, "qc_keyed").get.select("event_id", "compound", "value", "cts"),
-      Memo.cached[Selection.Lattice](spark, d, "qc_lattice").get.rows.select("*"),
-      Memo.cached[Selection.Lattice](spark, d, "qc_lattice").get.stats.select("*"))
+      Memo.cached[Selection.QcStream](spark, d, "qc_stream").get.rows.select("*"),
+      Memo.cached[Selection.QcStream](spark, d, "qc_stream").get.stats.select("*"))
     def loaded(df: DataFrame): Boolean = df.queryExecution.optimizedPlan.collectLeaves()
       .collect { case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded }
       .reduce(_ && _)
@@ -151,7 +151,7 @@ class MemoSpec extends SparkSpec {
       Selection.warmQcCaches(spark, d)
       assert(consumers.forall(loaded))
       assert(consumers.map(PlanStats.leafStatBytes) === cold)
-      // the lattice built over a warm keyed stream, as a warmed pass does
+      // the QC stream built over a warm keyed stream, as a warmed pass does
       Memo.release()
       Selection.warmQcCaches(spark, d)
       assert(consumers.map(PlanStats.leafStatBytes) === cold)

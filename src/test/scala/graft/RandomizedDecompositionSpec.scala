@@ -32,6 +32,31 @@ class RandomizedDecompositionSpec extends SparkSpec {
     df.queryExecution.optimizedPlan.collectLeaves()
       .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
 
+  /** Aggregates in `plan` that compute a per-key span (a min named tmin). */
+  private def spanAggregates(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Min}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists {
+        case al: Alias => al.name == "tmin" && al.child.exists {
+          case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[Min]
+          case _ => false
+        }
+        case _ => false
+      } => a
+    }.size
+  }
+
+  /** Explicit-N repartition exchanges in `plan`. */
+  private def repartitions(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }.size
+  }
+
   test("randomized: quality-tier cuts equal the sort-based derivation on 10 seeded corpora") {
     import spark.implicits._
     (1 to 10).foreach { seed =>
@@ -448,7 +473,7 @@ class RandomizedDecompositionSpec extends SparkSpec {
       val df = rows.toDF("event_id", "compound", "sec", "value")
         .select(col("event_id"), col("compound"),
           timestamp_seconds(col("sec")).as("cts"), col("value"))
-      val cusum = graft.operators.Selection.dsCusumFrom(df)
+      val cusum = graft.operators.Selection.dsCusumFrom(df, "event_id")
       assert(decomposed(cusum) === atScale, s"seed=$seed atScale=$atScale")
       val got = cusum.collect()
         .map(r => (r.getString(0), r.getAs[Long]("event_id"), r.getString(2)) ->
@@ -497,7 +522,7 @@ class RandomizedDecompositionSpec extends SparkSpec {
       val df = rows.toDF("event_id", "compound", "sec", "value")
         .select(col("event_id"), col("compound"),
           timestamp_seconds(col("sec")).as("cts"), col("value"))
-      val spc = graft.operators.Selection.dsSpcRulesFrom(df)
+      val spc = graft.operators.Selection.dsSpcRulesFrom(df, "event_id")
       assert(decomposed(spc) === atScale, s"seed=$seed atScale=$atScale")
       val got = spc.collect()
         .map(r => r.getString(0) -> ((r.getAs[Long]("n_points"),
@@ -543,27 +568,58 @@ class RandomizedDecompositionSpec extends SparkSpec {
         Seq.fill(20 + rnd.nextInt(30))(1000000L + rnd.nextInt(600))
       val pair = Seq(0L, if (seed % 2 == 0) 0L else 1L + rnd.nextInt(5000))
       val series = Seq("edge" -> edge, "clusters" -> clusters, "pair" -> pair, "solo" -> Seq(7L))
-      val rows = series.zipWithIndex.flatMap { case ((name, secs), ci) =>
-        secs.zipWithIndex.map { case (t, i) => (ci * 1000L + i, name, 1700000000L + t, value()) }
+        .map { case (name, secs) => name -> secs.map(_ * 1000000L) } :+
+        // sub-second samples: whole seconds 0..10 give span 10 and leave
+        // the last gap (5 s, 9 samples) unflagged, 5·8 = 4·10, while the
+        // micros span (9.2 s) would flag it
+        ("subsec" -> Seq(900000L, 1200000L, 2300000L, 3100000L, 3500000L, 4200000L,
+          4800000L, 5000000L, 10100000L))
+      val rows = series.zipWithIndex.flatMap { case ((name, micros), ci) =>
+        micros.zipWithIndex.map { case (t, i) =>
+          (ci * 1000L + i, name, 1700000000L * 1000000L + t, value())
+        }
       }
-      val df = rows.toDF("event_id", "compound", "sec", "value")
-        .select(col("event_id"), col("compound"), timestamp_seconds(col("sec")).as("cts"),
-          (col("sec") * 1000L).as("ms"), col("value"))
+      val df = rows.toDF("event_id", "compound", "micros", "value")
+        .select(col("event_id"), col("compound"), timestamp_micros(col("micros")).as("cts"),
+          col("value"))
+      // the gap rule on whole epoch seconds, sequentially
+      val expectedGaps = rows.groupBy(_._2).toSeq.flatMap { case (c, g) =>
+        val o = g.sortBy(e => (e._3, e._1))
+        val secs = o.map(e => Math.floorDiv(e._3, 1000000L))
+        val span = secs.max - secs.min
+        o.indices.drop(1).collect {
+          case i if (secs(i) - secs(i - 1)) * (o.size - 1) > 4 * span =>
+            s"[$c,${o(i - 1)._1},${o(i)._1},${secs(i) - secs(i - 1)}]"
+        }
+      }.sorted
+      val Selection = graft.operators.Selection
       val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "gapsFrom" -> (() => graft.operators.Selection.gapsFrom(
-          df.select("event_id", "compound", "cts"), "event_id")),
-        "interpFrom" -> (() => graft.operators.Selection.interpFrom(
-          df.select("event_id", "compound", "cts", "value"), "event_id")),
-        "rollingZFrom" -> (() => graft.operators.Selection.rollingZFrom(
-          df.select("event_id", "compound", "value", "cts"), "event_id")),
-        "dsTrendFrom" -> (() => graft.operators.Selection.dsTrendFrom(df)))
+        "gapsFrom" -> (() => Selection.gapsFrom(df, "event_id")),
+        "interpFrom" -> (() => Selection.interpFrom(df, "event_id")),
+        "rollingZFrom" -> (() => Selection.rollingZFrom(df, "event_id")),
+        "changepointFrom" -> (() => Selection.changepointFrom(df, "event_id")),
+        "dsTrendFrom" -> (() => Selection.dsTrendFrom(df, "event_id")),
+        "dsFlatlineFrom" -> (() => Selection.dsFlatlineFrom(df, "event_id")),
+        // a compound with one pair has no r (zero variance divides by 0)
+        "autocorrFrom" -> (() => Selection.autocorrFrom(df.filter(col("compound") =!= "pair"),
+          "event_id")),
+        "dsCusumFrom" -> (() => Selection.dsCusumFrom(df, "event_id")),
+        "dsSpcRulesFrom" -> (() => Selection.dsSpcRulesFrom(df, "event_id")))
       val byGate = scala.collection.mutable.Map.empty[(String, Boolean), Seq[String]]
       atBothGates { atScale =>
         ops.foreach { case (name, op) =>
-          val out = op()
+          val (out, checkpoints) = graft.tools.CheckpointPlans.during(spark)(op())
           assert(decomposed(out) === atScale, s"$name seed=$seed atScale=$atScale")
+          if (atScale) {
+            // the library stream: one per-compound span aggregate and one
+            // explicit-N exchange, wherever the entry's plans hold them
+            val plans = out.queryExecution +: checkpoints
+            assert(plans.map(qe => spanAggregates(qe.optimizedPlan)).sum === 1, s"$name seed=$seed")
+            assert(plans.map(qe => repartitions(qe.executedPlan)).sum === 1, s"$name seed=$seed")
+          }
           byGate((name, atScale)) = out.collect().map(_.toString).toSeq.sorted
         }
+        assert(byGate(("gapsFrom", atScale)) === expectedGaps, s"seed=$seed atScale=$atScale")
       }
       ops.foreach { case (name, _) =>
         assert(byGate((name, true)) === byGate((name, false)), s"$name seed=$seed")
@@ -572,6 +628,68 @@ class RandomizedDecompositionSpec extends SparkSpec {
       assert(byGate(("gapsFrom", false)).nonEmpty && byGate(("rollingZFrom", false)).nonEmpty,
         s"seed=$seed")
     }
+  }
+
+  test("randomized: changepoint and flatline equal the direct sequential scan at both gates on 10 seeded series") {
+    import spark.implicits._
+    atBothGates { atScale => (1 to 10).foreach { seed =>
+      val rnd = new Random(seed + 1300)
+      // level shifts, stuck stretches (exact repeats, some across bucket
+      // edges), runs of equal timestamps, and a one-sample compound
+      val rows = Seq("a", "b", "c", "solo").zipWithIndex.flatMap { case (c, ci) =>
+        var lvl = 1000 + rnd.nextInt(500)
+        var stuck = 0
+        var sec = 0L
+        (0 until (if (c == "solo") 1 else 20 + rnd.nextInt(200))).map { i =>
+          if (rnd.nextInt(40) == 0) lvl += rnd.nextInt(400) - 200
+          if (stuck == 0 && rnd.nextInt(15) == 0) stuck = 2 + rnd.nextInt(30)
+          val cents = if (stuck > 0) { stuck -= 1; lvl } else lvl + rnd.nextInt(50) - 25
+          if (rnd.nextInt(4) != 0) sec += 1 + rnd.nextInt(600)
+          (ci * 10000L + i, c, 1700000000L + sec, cents / 100.0)
+        }
+      }
+      val df = rows.toDF("event_id", "compound", "sec", "value")
+        .select(col("event_id"), col("compound"), timestamp_seconds(col("sec")).as("cts"),
+          col("value"))
+      val series = rows.groupBy(_._2).view
+        .mapValues(g => g.sortBy(e => (e._3, e._1)).map(e => (e._1, e._3, math.round(e._4 * 100))))
+        .toMap
+      // the best split: max score, then the earliest i
+      val expectedSplits = series.collect { case (c, o) if o.size > 1 =>
+        val n = o.size.toLong
+        val sn = o.map(_._3).sum
+        var best: (Long, Long, Double, Double, Double) = null
+        var s = 0L
+        (1L until n).foreach { i =>
+          s += o((i - 1).toInt)._3
+          val score = math.abs(s * (n - i) - (sn - s) * i).toDouble / (i * (n - i)).toDouble
+          if (best == null || score > best._3)
+            best = (i, o((i - 1).toInt)._1, score, (s.toDouble / 100.0) / i.toDouble,
+              ((sn - s).toDouble / 100.0) / (n - i).toDouble)
+        }
+        c -> best
+      }
+      val cp = graft.operators.Selection.changepointFrom(df, "event_id")
+      assert(decomposed(cp) === atScale, s"seed=$seed atScale=$atScale")
+      val gotSplits = cp.collect().map(r => r.getString(0) -> ((r.getAs[Long]("split_i"),
+        r.getAs[Long]("boundary_event_id"), r.getAs[Double]("score"),
+        r.getAs[Double]("mean_left"), r.getAs[Double]("mean_right")))).toMap
+      assert(gotSplits === expectedSplits, s"seed=$seed atScale=$atScale")
+      // maximal runs of equal cents, at least two samples long
+      val expectedRuns = series.toSeq.flatMap { case (c, o) =>
+        val runs = o.foldLeft(List.empty[List[(Long, Long, Long)]]) {
+          case (run :: done, e) if run.head._3 == e._3 => (e :: run) :: done
+          case (done, e) => List(e) :: done
+        }
+        runs.filter(_.size >= 2).map(r => (c, r.last._2 * 1000L, r.size.toLong, r.head._3 / 100.0))
+      }.sorted
+      val fl = graft.operators.Selection.dsFlatlineFrom(df, "event_id")
+      assert(decomposed(fl) === atScale, s"seed=$seed atScale=$atScale")
+      val gotRuns = fl.collect().map(r => (r.getString(0), r.getAs[Long]("start_ms"),
+        r.getAs[Long]("n_samples"), r.getAs[Double]("value"))).toSeq.sorted
+      assert(gotRuns === expectedRuns, s"seed=$seed atScale=$atScale")
+      assert(expectedRuns.nonEmpty, s"seed=$seed produced no runs")
+    }}
   }
 
   test("randomized: RangeBuckets.lags at widths 1, 7 and 15 equals the plain per-key lag and row_number on 10 seeded series") {

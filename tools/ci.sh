@@ -120,6 +120,25 @@ if grep -rn "Buckets div" src/main/scala --include='*.scala' \
   echo "range-bucket id outside RangeBuckets — call RangeBuckets.assign"
   exit 1
 fi
+# In Selection.scala the time-ordered QC rules read one QC stream, whose
+# constructor (QcStream) is the only place they are bucketed; ds_resample
+# (samples and grid marks) and the zoom prune (firstActions) bucket their
+# own rows. A bucketing call in any other member of Selection is a second
+# bucketed input for a rule that should take the stream.
+if awk '
+  /^  ((private|protected)(\[[a-z]+\])? )?(final case class|object|def|val|lazy val) / {
+    m = $0
+    sub(/^  ((private|protected)(\[[a-z]+\])? )?(final case class|object|def|val|lazy val) /, "", m)
+    sub(/[^A-Za-z0-9_].*/, "", m)
+  }
+  /RangeBuckets\.(assign|bucketed|partitioned)\(/ &&
+      m != "QcStream" && m != "resampleFrom" && m != "firstActions" {
+    print FILENAME ":" FNR ": " m ": " $0; bad = 1
+  }
+  END { exit !bad }' src/main/scala/graft/operators/Selection.scala; then
+  echo "bucketing in Selection outside QcStream, resampleFrom and firstActions — read the QC stream"
+  exit 1
+fi
 
 echo "== checkpoint audit: localCheckpoint call sites vs audited allowlist"
 # A lazy localCheckpoint pins a copy of its rows until the caller or the
